@@ -25,8 +25,8 @@ object OraclesStreams {
 
   val streams: Map[String, String] = Map(
     // This table is Broker.WireApis — the catalog claims exactly what
-    // the wire decodes, no more (the engine derives SupportedApis from
-    // WireApis; this literal is the independent restatement).
+    // the wire decodes, no more (the engine derives it from
+    // WireServer.Apis; this literal is the independent restatement).
     "broker_api_versions" ->
       """SELECT * FROM (VALUES
         |  (0,'Produce',0,9),(1,'Fetch',0,16),(2,'ListOffsets',0,9),

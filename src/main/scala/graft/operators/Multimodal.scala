@@ -653,7 +653,7 @@ object Multimodal {
         // AudioFileReader per call, and for a WAV the Aiff/Au/SoftMidi
         // providers each reject by THROWING a stack-trace-filling
         // UnsupportedAudioFileException — measured 38 µs/doc, 7× the
-        // actual demux work (DebugWav16: 200k docs 7.7 s → 1.1 s
+        // actual demux work (200k docs 7.7 s → 1.1 s
         // single-thread once the succeeding provider is cached; the
         // provider LOOKUP itself is JDK-cached and was not the cost).
         // Every doc here is the same RIFF/WAVE container and exactly

@@ -318,9 +318,9 @@ object Streams {
     * roadmaps the rest; graft serves the full core set). */
   def brokerApiVersions(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // single source of truth with the Broker facade (its wire-honest
-    // sibling is Broker.WireApis) — the oracle mirrors this catalog
-    graft.streaming.Broker.SupportedApis
+    // the wire catalog itself (derived from WireServer.Apis) — the
+    // oracle restates it as a literal
+    graft.streaming.Broker.WireApis
       .toDF("api_key", "api_name", "min_version", "max_version")
       .orderBy("api_key")
   }

@@ -266,7 +266,7 @@ class Broker(spark: SparkSession, root: String) {
     * prototype serves key 18 only; graft serves the full core set). */
   def apiVersions: DataFrame = {
     import spark.implicits._
-    Broker.SupportedApis.toDF("api_key", "api_name", "min_version", "max_version")
+    Broker.WireApis.toDF("api_key", "api_name", "min_version", "max_version")
   }
 
   /** Export a topic to a text-format sink (Kafka-Connect file-sink
@@ -3939,10 +3939,6 @@ object Broker {
     * every supported operation is authorized. */
   val GroupAuthorizedOperations: Int = (1 << 3) | (1 << 6) | (1 << 8)
 
-  // SupportedApis (the catalog the oracle-checked broker_api_versions
-  // query serves) is defined BELOW WireApis, which it derives from —
-  // object vals initialize in declaration order.
-
   val DefaultMaxMessageBytes: Int = 64 * 1024 * 1024
 
   /** The `compression.type` value set, mapped to wire codec ids;
@@ -4026,108 +4022,9 @@ object Broker {
     }.orNull
   }
 
-  /** What the TCP [[WireServer]] actually speaks: ONLY dispatchable
-    * keys, at ONLY their implemented versions. A conformant client
-    * picks the highest mutually supported version from this response
-    * — advertising the broader [[SupportedApis]] (library-analog
-    * surface, versions we never decode) would steer every client
-    * straight into a version we reject. Produce spans 0–9 and Fetch
-    * 0–12 — contiguous through the flexible (KIP-482) encodings, so
-    * a modern client negotiates its preferred version and gets
-    * magic-2 batches (headers included) end-to-end, with KIP-227
-    * incremental fetch sessions served at v7+. */
-  val WireApis: Seq[(Int, String, Int, Int)] = Seq(
-    (0, "Produce", 0, KafkaWire.ProduceMaxVersion),
-    (1, "Fetch", 0, KafkaWire.FetchMaxVersion),
-    (2, "ListOffsets", 0, KafkaWire.ListOffsetsMaxVersion),
-    (3, "Metadata", 0, KafkaWire.MetadataMaxVersion),
-    (8, "OffsetCommit", 0, KafkaWire.OffsetCommitMaxVersion),
-    (9, "OffsetFetch", 0, KafkaWire.OffsetFetchMaxVersion),
-    (10, "FindCoordinator", 0, KafkaWire.FindCoordinatorMaxVersion),
-    (11, "JoinGroup", 0, KafkaWire.JoinGroupMaxVersion),
-    (12, "Heartbeat", 0, KafkaWire.HeartbeatMaxVersion),
-    (13, "LeaveGroup", 0, KafkaWire.LeaveGroupMaxVersion),
-    (14, "SyncGroup", 0, KafkaWire.SyncGroupMaxVersion),
-    (15, "DescribeGroups", 0, KafkaWire.DescribeGroupsMaxVersion),
-    (16, "ListGroups", 0, KafkaWire.ListGroupsMaxVersion),
-    (17, "SaslHandshake", 0, KafkaWire.SaslHandshakeMaxVersion),
-    (18, "ApiVersions", 0, KafkaWire.ApiVersionsMaxVersion),
-    (19, "CreateTopics", 0, KafkaWire.CreateTopicsMaxVersion),
-    (20, "DeleteTopics", 0, KafkaWire.DeleteTopicsMaxVersion),
-    (21, "DeleteRecords", 0, KafkaWire.DeleteRecordsMaxVersion),
-    (22, "InitProducerId", 0, KafkaWire.InitProducerIdMaxVersion),
-    (23, "OffsetForLeaderEpoch", 0, KafkaWire.OffsetForLeaderEpochMaxVersion),
-    (24, "AddPartitionsToTxn", 0, KafkaWire.AddPartitionsToTxnMaxVersion),
-    (25, "AddOffsetsToTxn", 0, KafkaWire.AddOffsetsToTxnMaxVersion),
-    (26, "EndTxn", 0, KafkaWire.EndTxnMaxVersion),
-    (28, "TxnOffsetCommit", 0, KafkaWire.TxnOffsetCommitMaxVersion),
-    (29, "DescribeAcls", 0, KafkaWire.DescribeAclsMaxVersion),
-    (30, "CreateAcls", 0, KafkaWire.CreateAclsMaxVersion),
-    (31, "DeleteAcls", 0, KafkaWire.DeleteAclsMaxVersion),
-    (32, "DescribeConfigs", 0, KafkaWire.DescribeConfigsMaxVersion),
-    (33, "AlterConfigs", 0, KafkaWire.AlterConfigsMaxVersion),
-    (35, "DescribeLogDirs", 0, KafkaWire.DescribeLogDirsMaxVersion),
-    (36, "SaslAuthenticate", 0, KafkaWire.SaslAuthenticateMaxVersion),
-    (37, "CreatePartitions", 0, KafkaWire.CreatePartitionsMaxVersion),
-    (38, "CreateDelegationToken", 0,
-      KafkaWire.CreateDelegationTokenMaxVersion),
-    (39, "RenewDelegationToken", 0,
-      KafkaWire.RenewDelegationTokenMaxVersion),
-    (40, "ExpireDelegationToken", 0,
-      KafkaWire.ExpireDelegationTokenMaxVersion),
-    (41, "DescribeDelegationToken", 0,
-      KafkaWire.DescribeDelegationTokenMaxVersion),
-    (42, "DeleteGroups", 0, KafkaWire.DeleteGroupsMaxVersion),
-    (43, "ElectLeaders", 0, KafkaWire.ElectLeadersMaxVersion),
-    (44, "IncrementalAlterConfigs", 0,
-      KafkaWire.IncrementalAlterConfigsMaxVersion),
-    (45, "AlterPartitionReassignments", 0,
-      KafkaWire.AlterPartitionReassignmentsMaxVersion),
-    (46, "ListPartitionReassignments", 0,
-      KafkaWire.ListPartitionReassignmentsMaxVersion),
-    (47, "OffsetDelete", 0, KafkaWire.OffsetDeleteMaxVersion),
-    (48, "DescribeClientQuotas", 0,
-      KafkaWire.DescribeClientQuotasMaxVersion),
-    (49, "AlterClientQuotas", 0, KafkaWire.AlterClientQuotasMaxVersion),
-    (50, "DescribeUserScramCredentials", 0,
-      KafkaWire.DescribeUserScramCredentialsMaxVersion),
-    (51, "AlterUserScramCredentials", 0,
-      KafkaWire.AlterUserScramCredentialsMaxVersion),
-    (55, "DescribeQuorum", 0, KafkaWire.DescribeQuorumMaxVersion),
-    (57, "UpdateFeatures", 0, KafkaWire.UpdateFeaturesMaxVersion),
-    (60, "DescribeCluster", 0, KafkaWire.DescribeClusterMaxVersion),
-    (61, "DescribeProducers", 0, KafkaWire.DescribeProducersMaxVersion),
-    (65, "DescribeTransactions", 0,
-      KafkaWire.DescribeTransactionsMaxVersion),
-    (66, "ListTransactions", 0, KafkaWire.ListTransactionsMaxVersion),
-    (68, "ConsumerGroupHeartbeat", 0,
-      KafkaWire.ConsumerGroupHeartbeatMaxVersion),
-    (69, "ConsumerGroupDescribe", 0,
-      KafkaWire.ConsumerGroupDescribeMaxVersion),
-    (71, "GetTelemetrySubscriptions", 0,
-      KafkaWire.GetTelemetrySubscriptionsMaxVersion),
-    (72, "PushTelemetry", 0, KafkaWire.PushTelemetryMaxVersion),
-    (74, "ListClientMetricsResources", 0,
-      KafkaWire.ListClientMetricsResourcesMaxVersion),
-    (75, "DescribeTopicPartitions", 0,
-      KafkaWire.DescribeTopicPartitionsMaxVersion),
-    (76, "ShareGroupHeartbeat", 0, KafkaWire.ShareGroupHeartbeatMaxVersion),
-    (77, "ShareGroupDescribe", 0, KafkaWire.ShareGroupDescribeMaxVersion),
-    (78, "ShareFetch", 0, KafkaWire.ShareFetchMaxVersion),
-    (79, "ShareAcknowledge", 0, KafkaWire.ShareAcknowledgeMaxVersion),
-    (90, "DescribeShareGroupOffsets", 0,
-      KafkaWire.DescribeShareGroupOffsetsMaxVersion),
-    (91, "AlterShareGroupOffsets", 0,
-      KafkaWire.AlterShareGroupOffsetsMaxVersion),
-    (92, "DeleteShareGroupOffsets", 0,
-      KafkaWire.DeleteShareGroupOffsetsMaxVersion))
-
-  /** The ApiVersions-analog catalog the oracle-checked
-    * `broker_api_versions` query serves. IDENTICAL to [[WireApis]] by
-    * construction: the catalog must never claim a version no code path
-    * decodes (it used to advertise Fetch ≤ 13 while the wire decoder
-    * required ≤ 12 — a reader planning against the catalog would pick
-    * versions the engine rejects). Every graft API is wire-served, so
-    * there is no library-only remainder to union in. */
-  val SupportedApis: Seq[(Int, String, Int, Int)] = WireApis
+  /** The (api_key, name, min_version, max_version) view of
+    * [[WireServer.Apis]]: what ApiVersions advertises and the
+    * oracle-checked `broker_api_versions` query serves. */
+  val WireApis: Seq[(Int, String, Int, Int)] =
+    WireServer.Apis.map(a => (a.key, a.name, WireServer.MinVersion, a.maxVersion))
 }

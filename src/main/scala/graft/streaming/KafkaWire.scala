@@ -691,14 +691,6 @@ object KafkaWire {
 
   case class WireRecord(key: Array[Byte], value: Array[Byte])
 
-  case class ProduceRequestV0(correlationId: Int, clientId: String,
-      acks: Int, timeoutMs: Int,
-      topics: Seq[(String, Seq[(Int, Seq[WireRecord])])])
-
-  case class FetchRequestV0(correlationId: Int, clientId: String,
-      maxWaitMs: Int, minBytes: Int,
-      topics: Seq[(String, Seq[(Int, Long, Int)])])
-
   private def writeInt64(out: ByteArrayOutputStream, v: Long): Unit = {
     var i = 56
     while (i >= 0) { out.write(((v >>> i) & 0xff).toInt); i -= 8 }
@@ -815,42 +807,6 @@ object KafkaWire {
     frame(out.toByteArray)
   }
 
-  def decodeProduceRequestV0(bytes: Array[Byte]): ProduceRequestV0 = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == ProduceApiKey, "not a Produce request")
-    require(buf.getShort.toInt == 0, "only Produce v0 supported")
-    val correlationId = buf.getInt
-    val clientId = readNullableString(buf)
-    val acks = buf.getShort.toInt
-    val timeout = buf.getInt
-    val topics = (0 until buf.getInt).map { _ =>
-      val name = readNullableString(buf)
-      val parts = (0 until buf.getInt).map { _ =>
-        val p = buf.getInt
-        val size = buf.getInt
-        val ms = new Array[Byte](size); buf.get(ms)
-        (p, decodeMessageSetV0(ms).map(_._2))
-      }
-      (name, parts.toSeq)
-    }
-    ProduceRequestV0(correlationId, clientId, acks, timeout, topics.toSeq)
-  }
-
-  def encodeProduceResponseV0(correlationId: Int,
-      results: Seq[(String, Seq[(Int, Int, Long)])]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    writeInt32(out, correlationId)
-    writeInt32(out, results.length)
-    results.foreach { case (name, parts) =>
-      writeNullableString(out, name)
-      writeInt32(out, parts.length)
-      parts.foreach { case (p, err, base) =>
-        writeInt32(out, p); writeInt16(out, err); writeInt64(out, base)
-      }
-    }
-    frame(out.toByteArray)
-  }
-
   def decodeProduceResponseV0(
       bytes: Array[Byte]): (Int, Seq[(String, Seq[(Int, Int, Long)])]) = {
     val buf = unframe(bytes)
@@ -882,43 +838,6 @@ object KafkaWire {
       writeInt32(out, parts.length)
       parts.foreach { case (p, off, maxBytes) =>
         writeInt32(out, p); writeInt64(out, off); writeInt32(out, maxBytes)
-      }
-    }
-    frame(out.toByteArray)
-  }
-
-  def decodeFetchRequestV0(bytes: Array[Byte]): FetchRequestV0 = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == FetchApiKey, "not a Fetch request")
-    require(buf.getShort.toInt == 0, "only Fetch v0 supported")
-    val correlationId = buf.getInt
-    val clientId = readNullableString(buf)
-    buf.getInt // replica_id
-    val maxWait = buf.getInt
-    val minBytes = buf.getInt
-    val topics = (0 until buf.getInt).map { _ =>
-      val name = readNullableString(buf)
-      val parts = (0 until buf.getInt).map { _ =>
-        (buf.getInt, buf.getLong, buf.getInt)
-      }
-      (name, parts.toSeq)
-    }
-    FetchRequestV0(correlationId, clientId, maxWait, minBytes, topics.toSeq)
-  }
-
-  def encodeFetchResponseV0(correlationId: Int,
-      topics: Seq[(String, Seq[(Int, Int, Long, Seq[(Long, WireRecord)])])]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    writeInt32(out, correlationId)
-    writeInt32(out, topics.length)
-    topics.foreach { case (name, parts) =>
-      writeNullableString(out, name)
-      writeInt32(out, parts.length)
-      parts.foreach { case (p, err, hw, records) =>
-        writeInt32(out, p); writeInt16(out, err); writeInt64(out, hw)
-        val ms = encodeMessageSetV0(records)
-        writeInt32(out, ms.length)
-        out.write(ms, 0, ms.length)
       }
     }
     frame(out.toByteArray)
@@ -2716,27 +2635,6 @@ object KafkaWire {
     frame(out.toByteArray)
   }
 
-  def decodeListGroupsRequestV0(bytes: Array[Byte]): Int = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == ListGroupsApiKey, "not a ListGroups request")
-    require(buf.getShort.toInt == 0, "only ListGroups v0 supported")
-    val correlationId = buf.getInt
-    readNullableString(buf) // client_id
-    correlationId
-  }
-
-  def encodeListGroupsResponseV0(correlationId: Int, errorCode: Int,
-      groups: Seq[(String, String)]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    writeInt32(out, correlationId)
-    writeInt16(out, errorCode)
-    writeInt32(out, groups.length)
-    groups.foreach { case (g, pt) =>
-      writeNullableString(out, g); writeNullableString(out, pt)
-    }
-    frame(out.toByteArray)
-  }
-
   def decodeListGroupsResponseV0(bytes: Array[Byte]): (Int, Int, Seq[(String, String)]) = {
     val buf = unframe(bytes)
     val correlationId = buf.getInt
@@ -2758,39 +2656,6 @@ object KafkaWire {
     writeInt32(out, correlationId); writeNullableString(out, clientId)
     writeInt32(out, groups.length)
     groups.foreach(writeNullableString(out, _))
-    frame(out.toByteArray)
-  }
-
-  def decodeDescribeGroupsRequestV0(bytes: Array[Byte]): (Int, Seq[String]) = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == DescribeGroupsApiKey, "not a DescribeGroups request")
-    require(buf.getShort.toInt == 0, "only DescribeGroups v0 supported")
-    val correlationId = buf.getInt
-    readNullableString(buf) // client_id
-    val groups = (0 until buf.getInt).map(_ => readNullableString(buf))
-    (correlationId, groups.toSeq)
-  }
-
-  def encodeDescribeGroupsResponseV0(correlationId: Int,
-      groups: Seq[DescribedGroup]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    writeInt32(out, correlationId)
-    writeInt32(out, groups.length)
-    groups.foreach { g =>
-      writeInt16(out, g.errorCode)
-      writeNullableString(out, g.group)
-      writeNullableString(out, g.state)
-      writeNullableString(out, g.protocolType)
-      writeNullableString(out, g.protocol)
-      writeInt32(out, g.members.length)
-      g.members.foreach { case (id, clientId, host, meta, assignment) =>
-        writeNullableString(out, id)
-        writeNullableString(out, clientId)
-        writeNullableString(out, host)
-        writeBytesField(out, meta)
-        writeBytesField(out, assignment)
-      }
-    }
     frame(out.toByteArray)
   }
 
@@ -2816,7 +2681,8 @@ object KafkaWire {
   // types at v5; flexible v3+) and DescribeGroups v0–v5 (throttle v1+,
   // authorized_operations v3+, group_instance_id v4+, flexible v5) —
   // the versions kafka-clients 3.x/4.x AdminClient actually sends.
-  // The *V0 codecs above remain for the golden-frame specs. ---
+  // These serve v0 too; the *V0 client codecs above drive the
+  // golden-frame specs. ---
 
   val ListGroupsMaxVersion = 5
   val DescribeGroupsMaxVersion = 5
@@ -3015,7 +2881,8 @@ object KafkaWire {
   // — the versions AdminClient and kafka-topics.sh actually send
   // (CreateTopics flexible v5+ with response configs, topic_id v7;
   // DeleteTopics flexible v4+, topic-id keying v6; DeleteRecords
-  // flexible v2). The *V0 codecs above stay for the golden specs. ---
+  // flexible v2). These serve v0 too; the *V0 client codecs above
+  // drive the golden specs. ---
 
   val CreateTopicsMaxVersion = 7
   val DeleteTopicsMaxVersion = 6
@@ -3366,41 +3233,6 @@ object KafkaWire {
     frame(out.toByteArray)
   }
 
-  def decodeCreateTopicsRequestV0(bytes: Array[Byte]): (Int, Seq[(String, Int, Int)]) = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == CreateTopicsApiKey, "not a CreateTopics request")
-    require(buf.getShort.toInt == 0, "only CreateTopics v0 supported")
-    val correlationId = buf.getInt
-    readNullableString(buf) // client_id
-    val topics = (0 until buf.getInt).map { _ =>
-      val name = readNullableString(buf)
-      val parts = buf.getInt
-      val repl = buf.getShort.toInt
-      (0 until buf.getInt).foreach { _ => // replica_assignment
-        buf.getInt; (0 until buf.getInt).foreach(_ => buf.getInt)
-      }
-      (0 until buf.getInt).foreach { _ => // config_entries
-        readNullableString(buf); readNullableString(buf)
-      }
-      (name, parts, repl)
-    }
-    buf.getInt // timeout
-    (correlationId, topics.toSeq)
-  }
-
-  /** CreateTopics / DeleteTopics v0 responses share one shape:
-    * ARRAY<(topic, error_code)>. */
-  def encodeTopicErrorsResponseV0(correlationId: Int,
-      topics: Seq[(String, Int)]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    writeInt32(out, correlationId)
-    writeInt32(out, topics.length)
-    topics.foreach { case (name, err) =>
-      writeNullableString(out, name); writeInt16(out, err)
-    }
-    frame(out.toByteArray)
-  }
-
   def decodeTopicErrorsResponseV0(bytes: Array[Byte]): (Int, Seq[(String, Int)]) = {
     val buf = unframe(bytes)
     val correlationId = buf.getInt
@@ -3421,17 +3253,6 @@ object KafkaWire {
     frame(out.toByteArray)
   }
 
-  def decodeDeleteTopicsRequestV0(bytes: Array[Byte]): (Int, Seq[String]) = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == DeleteTopicsApiKey, "not a DeleteTopics request")
-    require(buf.getShort.toInt == 0, "only DeleteTopics v0 supported")
-    val correlationId = buf.getInt
-    readNullableString(buf) // client_id
-    val topics = (0 until buf.getInt).map(_ => readNullableString(buf))
-    buf.getInt // timeout
-    (correlationId, topics.toSeq)
-  }
-
   def encodeDeleteRecordsRequestV0(correlationId: Int, clientId: String,
       topics: Seq[(String, Seq[(Int, Long)])], timeoutMs: Int): Array[Byte] = {
     val out = new ByteArrayOutputStream()
@@ -3444,38 +3265,6 @@ object KafkaWire {
       parts.foreach { case (p, off) => writeInt32(out, p); writeInt64(out, off) }
     }
     writeInt32(out, timeoutMs)
-    frame(out.toByteArray)
-  }
-
-  def decodeDeleteRecordsRequestV0(bytes: Array[Byte])
-      : (Int, Seq[(String, Seq[(Int, Long)])]) = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == DeleteRecordsApiKey, "not a DeleteRecords request")
-    require(buf.getShort.toInt == 0, "only DeleteRecords v0 supported")
-    val correlationId = buf.getInt
-    readNullableString(buf) // client_id
-    val topics = (0 until buf.getInt).map { _ =>
-      val name = readNullableString(buf)
-      val parts = (0 until buf.getInt).map(_ => (buf.getInt, buf.getLong))
-      (name, parts.toSeq)
-    }
-    buf.getInt // timeout
-    (correlationId, topics.toSeq)
-  }
-
-  def encodeDeleteRecordsResponseV0(correlationId: Int,
-      topics: Seq[(String, Seq[(Int, Long, Int)])]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    writeInt32(out, correlationId)
-    writeInt32(out, 0) // throttle_time_ms
-    writeInt32(out, topics.length)
-    topics.foreach { case (name, parts) =>
-      writeNullableString(out, name)
-      writeInt32(out, parts.length)
-      parts.foreach { case (p, lowWatermark, err) =>
-        writeInt32(out, p); writeInt64(out, lowWatermark); writeInt16(out, err)
-      }
-    }
     frame(out.toByteArray)
   }
 

@@ -18,7 +18,8 @@ import java.util.concurrent.Executors
   * is bounded by the driver, exactly like the single-broker
   * reference. Scale path is partition-parallel inside each request,
   * not connection count. */
-class WireServer(broker: Broker, advertisedHost: String = "127.0.0.1",
+class WireServer(private val broker: Broker,
+    private val advertisedHost: String = "127.0.0.1",
     port: Int = 0,
     /** user → password; non-empty makes this a SASL_PLAINTEXT-style
       * listener: every connection must complete a PLAIN handshake
@@ -395,126 +396,32 @@ class WireServer(broker: Broker, advertisedHost: String = "127.0.0.1",
     try Thread.sleep(WireServer.AuthFailureDelayMs)
     catch { case _: InterruptedException => Thread.currentThread().interrupt() }
 
-  /** Route one framed request by api_key — the reference's dispatch
-    * table (ref: pkg/kafka/kafka_api.go:85). */
-  private def dispatch(apiKey: Int, framed: Array[Byte]): Array[Byte] =
-    apiKey match {
-      case KafkaWire.ApiVersionsApiKey =>
-        val (epoch, finalized) = broker.features.current
-        KafkaWire.handleApiVersions(framed, Broker.WireApis,
-          supportedFeatures = Features.Supported,
-          finalizedEpoch = epoch,
-          // finalized tag order is (maxVersionLevel, minVersionLevel);
-          // a finalized level pins both ends to itself
-          finalizedFeatures = finalized.map { case (n, l) => (n, l, l) })
-      case KafkaWire.DescribeQuorumApiKey =>
-        broker.handleDescribeQuorum(framed)
-      case KafkaWire.UpdateFeaturesApiKey =>
-        broker.handleUpdateFeatures(framed)
-      case KafkaWire.MetadataApiKey =>
-        val topics = broker.listTopics()
-          .map(t => t -> broker.topic(t).numPartitions).toMap
-        KafkaWire.handleMetadata(framed, advertisedHost, boundPort, topics,
-          describeAuth =
-            name => broker.authz(Acls.OpDescribe, Acls.ResTopic, name))
-      case KafkaWire.ProduceApiKey => broker.handleProduce(framed)
-      case KafkaWire.ListOffsetsApiKey => broker.handleListOffsets(framed)
-      case KafkaWire.FetchApiKey => broker.handleFetch(framed)
-      case KafkaWire.OffsetCommitApiKey => broker.handleOffsetCommit(framed)
-      case KafkaWire.OffsetFetchApiKey => broker.handleOffsetFetch(framed)
-      case KafkaWire.FindCoordinatorApiKey =>
-        // single-broker: every key's coordinator is this server
-        broker.handleFindCoordinator(framed, advertisedHost, boundPort)
-      case KafkaWire.JoinGroupApiKey => broker.handleJoinGroup(framed)
-      case KafkaWire.HeartbeatApiKey => broker.handleHeartbeat(framed)
-      case KafkaWire.LeaveGroupApiKey => broker.handleLeaveGroup(framed)
-      case KafkaWire.SyncGroupApiKey => broker.handleSyncGroup(framed)
-      case KafkaWire.DescribeGroupsApiKey => broker.handleDescribeGroups(framed)
-      case KafkaWire.ListGroupsApiKey => broker.handleListGroups(framed)
-      case KafkaWire.CreateTopicsApiKey => broker.handleCreateTopics(framed)
-      case KafkaWire.DeleteTopicsApiKey => broker.handleDeleteTopics(framed)
-      case KafkaWire.DeleteRecordsApiKey => broker.handleDeleteRecords(framed)
-      case KafkaWire.InitProducerIdApiKey => broker.handleInitProducerId(framed)
-      case KafkaWire.DescribeConfigsApiKey =>
-        broker.handleDescribeConfigs(framed, advertisedHost, boundPort)
-      case KafkaWire.OffsetForLeaderEpochApiKey =>
-        broker.handleOffsetForLeaderEpoch(framed)
-      case KafkaWire.AlterConfigsApiKey => broker.handleAlterConfigs(framed)
-      case KafkaWire.IncrementalAlterConfigsApiKey =>
-        broker.handleIncrementalAlterConfigs(framed)
-      case KafkaWire.CreatePartitionsApiKey =>
-        broker.handleCreatePartitions(framed)
-      case KafkaWire.DeleteGroupsApiKey => broker.handleDeleteGroups(framed)
-      case KafkaWire.OffsetDeleteApiKey => broker.handleOffsetDelete(framed)
-      case KafkaWire.DescribeClusterApiKey =>
-        broker.handleDescribeCluster(framed, advertisedHost, boundPort)
-      case KafkaWire.AddPartitionsToTxnApiKey =>
-        broker.handleAddPartitionsToTxn(framed)
-      case KafkaWire.AddOffsetsToTxnApiKey =>
-        broker.handleAddOffsetsToTxn(framed)
-      case KafkaWire.EndTxnApiKey => broker.handleEndTxn(framed)
-      case KafkaWire.TxnOffsetCommitApiKey => broker.handleTxnOffsetCommit(framed)
-      case KafkaWire.DescribeProducersApiKey =>
-        broker.handleDescribeProducers(framed)
-      case KafkaWire.DescribeTransactionsApiKey =>
-        broker.handleDescribeTransactions(framed)
-      case KafkaWire.ListTransactionsApiKey =>
-        broker.handleListTransactions(framed)
-      case KafkaWire.DescribeLogDirsApiKey =>
-        broker.handleDescribeLogDirs(framed)
-      case KafkaWire.DescribeAclsApiKey => broker.handleDescribeAcls(framed)
-      case KafkaWire.CreateAclsApiKey => broker.handleCreateAcls(framed)
-      case KafkaWire.DeleteAclsApiKey => broker.handleDeleteAcls(framed)
-      case KafkaWire.ElectLeadersApiKey => broker.handleElectLeaders(framed)
-      case KafkaWire.AlterPartitionReassignmentsApiKey =>
-        broker.handleAlterPartitionReassignments(framed)
-      case KafkaWire.ListPartitionReassignmentsApiKey =>
-        broker.handleListPartitionReassignments(framed)
-      case KafkaWire.ConsumerGroupHeartbeatApiKey =>
-        broker.handleConsumerGroupHeartbeat(framed)
-      case KafkaWire.ConsumerGroupDescribeApiKey =>
-        broker.handleConsumerGroupDescribe(framed)
-      case KafkaWire.GetTelemetrySubscriptionsApiKey =>
-        broker.handleGetTelemetrySubscriptions(framed)
-      case KafkaWire.PushTelemetryApiKey =>
-        broker.handlePushTelemetry(framed)
-      case KafkaWire.ListClientMetricsResourcesApiKey =>
-        broker.handleListClientMetricsResources(framed)
-      case KafkaWire.DescribeTopicPartitionsApiKey =>
-        broker.handleDescribeTopicPartitions(framed)
-      case KafkaWire.ShareGroupHeartbeatApiKey =>
-        broker.handleShareGroupHeartbeat(framed)
-      case KafkaWire.ShareGroupDescribeApiKey =>
-        broker.handleShareGroupDescribe(framed)
-      case KafkaWire.ShareFetchApiKey =>
-        broker.handleShareFetch(framed, advertisedHost, boundPort)
-      case KafkaWire.ShareAcknowledgeApiKey =>
-        broker.handleShareAcknowledge(framed, advertisedHost, boundPort)
-      case KafkaWire.DescribeShareGroupOffsetsApiKey =>
-        broker.handleDescribeShareGroupOffsets(framed)
-      case KafkaWire.AlterShareGroupOffsetsApiKey =>
-        broker.handleAlterShareGroupOffsets(framed)
-      case KafkaWire.DeleteShareGroupOffsetsApiKey =>
-        broker.handleDeleteShareGroupOffsets(framed)
-      case KafkaWire.CreateDelegationTokenApiKey =>
-        broker.handleCreateDelegationToken(framed)
-      case KafkaWire.RenewDelegationTokenApiKey =>
-        broker.handleRenewDelegationToken(framed)
-      case KafkaWire.ExpireDelegationTokenApiKey =>
-        broker.handleExpireDelegationToken(framed)
-      case KafkaWire.DescribeDelegationTokenApiKey =>
-        broker.handleDescribeDelegationToken(framed)
-      case KafkaWire.DescribeClientQuotasApiKey =>
-        broker.handleDescribeClientQuotas(framed)
-      case KafkaWire.AlterClientQuotasApiKey =>
-        broker.handleAlterClientQuotas(framed)
-      case KafkaWire.DescribeUserScramCredentialsApiKey =>
-        handleDescribeUserScram(framed)
-      case KafkaWire.AlterUserScramCredentialsApiKey =>
-        handleAlterUserScram(framed)
-      case other =>
-        throw new IllegalArgumentException(s"unsupported api_key $other")
-    }
+  /** Route one framed request by api_key through the lookup built
+    * once from [[WireServer.Apis]] — the reference's dispatch table
+    * (ref: pkg/kafka/kafka_api.go:85). */
+  private def dispatch(apiKey: Int, framed: Array[Byte]): Array[Byte] = {
+    val handlers = WireServer.Handlers
+    val h = if (apiKey < handlers.length) handlers(apiKey) else null
+    if (h == null) throw new IllegalArgumentException(s"unsupported api_key $apiKey")
+    h(this, framed)
+  }
+
+  private def handleApiVersions(framed: Array[Byte]): Array[Byte] = {
+    val (epoch, finalized) = broker.features.current
+    KafkaWire.handleApiVersions(framed, Broker.WireApis,
+      supportedFeatures = Features.Supported,
+      finalizedEpoch = epoch,
+      // finalized tag order is (maxVersionLevel, minVersionLevel);
+      // a finalized level pins both ends to itself
+      finalizedFeatures = finalized.map { case (n, l) => (n, l, l) })
+  }
+
+  private def handleMetadata(framed: Array[Byte]): Array[Byte] = {
+    val topics = broker.listTopics()
+      .map(t => t -> broker.topic(t).numPartitions).toMap
+    KafkaWire.handleMetadata(framed, advertisedHost, boundPort, topics,
+      describeAuth = name => broker.authz(Acls.OpDescribe, Acls.ResTopic, name))
+  }
 
   /** DescribeUserScramCredentials (key 50, v0) against the live
     * credential store (these two handlers live on the server, not the
@@ -642,6 +549,147 @@ object WireServer {
     * compat; the SCRAM pair keeps the password off the wire. */
   val Mechanisms: Seq[String] =
     Seq("PLAIN", Scram.Sha256.mechanism, Scram.Sha512.mechanism)
+
+  /** Every API starts at version 0. */
+  val MinVersion = 0
+
+  /** A request handler: the listener serving the connection and the
+    * framed request in, the framed response out. */
+  type Handler = (WireServer, Array[Byte]) => Array[Byte]
+
+  /** One served Kafka API; `handler` is None only for the SASL pair,
+    * which the connection loop answers from its own SASL state. */
+  final case class ApiSpec(key: Int, name: String, maxVersion: Int,
+      handler: Option[Handler])
+
+  private def api(key: Int, name: String, maxVersion: Int)(h: Handler) =
+    ApiSpec(key, name, maxVersion, Some(h))
+
+  /** What the listener speaks, in api-key order: only dispatchable
+    * keys, at only their implemented versions, so a client that picks
+    * the highest mutually supported version always lands on one the
+    * codecs decode. Adding an API is one row here plus its codec in
+    * [[KafkaWire]]; ApiVersions, [[Broker.WireApis]] (and through it
+    * `broker_api_versions`) and [[Handlers]] all derive from it. */
+  val Apis: IndexedSeq[ApiSpec] = {
+    import KafkaWire._
+    IndexedSeq(
+      api(0, "Produce", ProduceMaxVersion)(_.broker.handleProduce(_)),
+      api(1, "Fetch", FetchMaxVersion)(_.broker.handleFetch(_)),
+      api(2, "ListOffsets", ListOffsetsMaxVersion)(_.broker.handleListOffsets(_)),
+      api(3, "Metadata", MetadataMaxVersion)(_.handleMetadata(_)),
+      api(8, "OffsetCommit", OffsetCommitMaxVersion)(_.broker.handleOffsetCommit(_)),
+      api(9, "OffsetFetch", OffsetFetchMaxVersion)(_.broker.handleOffsetFetch(_)),
+      // single-broker: every key's coordinator is this server
+      api(10, "FindCoordinator", FindCoordinatorMaxVersion)((s, f) =>
+        s.broker.handleFindCoordinator(f, s.advertisedHost, s.boundPort)),
+      api(11, "JoinGroup", JoinGroupMaxVersion)(_.broker.handleJoinGroup(_)),
+      api(12, "Heartbeat", HeartbeatMaxVersion)(_.broker.handleHeartbeat(_)),
+      api(13, "LeaveGroup", LeaveGroupMaxVersion)(_.broker.handleLeaveGroup(_)),
+      api(14, "SyncGroup", SyncGroupMaxVersion)(_.broker.handleSyncGroup(_)),
+      api(15, "DescribeGroups", DescribeGroupsMaxVersion)(
+        _.broker.handleDescribeGroups(_)),
+      api(16, "ListGroups", ListGroupsMaxVersion)(_.broker.handleListGroups(_)),
+      ApiSpec(17, "SaslHandshake", SaslHandshakeMaxVersion, None),
+      api(18, "ApiVersions", ApiVersionsMaxVersion)(_.handleApiVersions(_)),
+      api(19, "CreateTopics", CreateTopicsMaxVersion)(_.broker.handleCreateTopics(_)),
+      api(20, "DeleteTopics", DeleteTopicsMaxVersion)(_.broker.handleDeleteTopics(_)),
+      api(21, "DeleteRecords", DeleteRecordsMaxVersion)(
+        _.broker.handleDeleteRecords(_)),
+      api(22, "InitProducerId", InitProducerIdMaxVersion)(
+        _.broker.handleInitProducerId(_)),
+      api(23, "OffsetForLeaderEpoch", OffsetForLeaderEpochMaxVersion)(
+        _.broker.handleOffsetForLeaderEpoch(_)),
+      api(24, "AddPartitionsToTxn", AddPartitionsToTxnMaxVersion)(
+        _.broker.handleAddPartitionsToTxn(_)),
+      api(25, "AddOffsetsToTxn", AddOffsetsToTxnMaxVersion)(
+        _.broker.handleAddOffsetsToTxn(_)),
+      api(26, "EndTxn", EndTxnMaxVersion)(_.broker.handleEndTxn(_)),
+      api(28, "TxnOffsetCommit", TxnOffsetCommitMaxVersion)(
+        _.broker.handleTxnOffsetCommit(_)),
+      api(29, "DescribeAcls", DescribeAclsMaxVersion)(_.broker.handleDescribeAcls(_)),
+      api(30, "CreateAcls", CreateAclsMaxVersion)(_.broker.handleCreateAcls(_)),
+      api(31, "DeleteAcls", DeleteAclsMaxVersion)(_.broker.handleDeleteAcls(_)),
+      api(32, "DescribeConfigs", DescribeConfigsMaxVersion)((s, f) =>
+        s.broker.handleDescribeConfigs(f, s.advertisedHost, s.boundPort)),
+      api(33, "AlterConfigs", AlterConfigsMaxVersion)(_.broker.handleAlterConfigs(_)),
+      api(35, "DescribeLogDirs", DescribeLogDirsMaxVersion)(
+        _.broker.handleDescribeLogDirs(_)),
+      ApiSpec(36, "SaslAuthenticate", SaslAuthenticateMaxVersion, None),
+      api(37, "CreatePartitions", CreatePartitionsMaxVersion)(
+        _.broker.handleCreatePartitions(_)),
+      api(38, "CreateDelegationToken", CreateDelegationTokenMaxVersion)(
+        _.broker.handleCreateDelegationToken(_)),
+      api(39, "RenewDelegationToken", RenewDelegationTokenMaxVersion)(
+        _.broker.handleRenewDelegationToken(_)),
+      api(40, "ExpireDelegationToken", ExpireDelegationTokenMaxVersion)(
+        _.broker.handleExpireDelegationToken(_)),
+      api(41, "DescribeDelegationToken", DescribeDelegationTokenMaxVersion)(
+        _.broker.handleDescribeDelegationToken(_)),
+      api(42, "DeleteGroups", DeleteGroupsMaxVersion)(_.broker.handleDeleteGroups(_)),
+      api(43, "ElectLeaders", ElectLeadersMaxVersion)(_.broker.handleElectLeaders(_)),
+      api(44, "IncrementalAlterConfigs", IncrementalAlterConfigsMaxVersion)(
+        _.broker.handleIncrementalAlterConfigs(_)),
+      api(45, "AlterPartitionReassignments",
+        AlterPartitionReassignmentsMaxVersion)(
+        _.broker.handleAlterPartitionReassignments(_)),
+      api(46, "ListPartitionReassignments", ListPartitionReassignmentsMaxVersion)(
+        _.broker.handleListPartitionReassignments(_)),
+      api(47, "OffsetDelete", OffsetDeleteMaxVersion)(_.broker.handleOffsetDelete(_)),
+      api(48, "DescribeClientQuotas", DescribeClientQuotasMaxVersion)(
+        _.broker.handleDescribeClientQuotas(_)),
+      api(49, "AlterClientQuotas", AlterClientQuotasMaxVersion)(
+        _.broker.handleAlterClientQuotas(_)),
+      api(50, "DescribeUserScramCredentials",
+        DescribeUserScramCredentialsMaxVersion)(_.handleDescribeUserScram(_)),
+      api(51, "AlterUserScramCredentials", AlterUserScramCredentialsMaxVersion)(
+        _.handleAlterUserScram(_)),
+      api(55, "DescribeQuorum", DescribeQuorumMaxVersion)(
+        _.broker.handleDescribeQuorum(_)),
+      api(57, "UpdateFeatures", UpdateFeaturesMaxVersion)(
+        _.broker.handleUpdateFeatures(_)),
+      api(60, "DescribeCluster", DescribeClusterMaxVersion)((s, f) =>
+        s.broker.handleDescribeCluster(f, s.advertisedHost, s.boundPort)),
+      api(61, "DescribeProducers", DescribeProducersMaxVersion)(
+        _.broker.handleDescribeProducers(_)),
+      api(65, "DescribeTransactions", DescribeTransactionsMaxVersion)(
+        _.broker.handleDescribeTransactions(_)),
+      api(66, "ListTransactions", ListTransactionsMaxVersion)(
+        _.broker.handleListTransactions(_)),
+      api(68, "ConsumerGroupHeartbeat", ConsumerGroupHeartbeatMaxVersion)(
+        _.broker.handleConsumerGroupHeartbeat(_)),
+      api(69, "ConsumerGroupDescribe", ConsumerGroupDescribeMaxVersion)(
+        _.broker.handleConsumerGroupDescribe(_)),
+      api(71, "GetTelemetrySubscriptions", GetTelemetrySubscriptionsMaxVersion)(
+        _.broker.handleGetTelemetrySubscriptions(_)),
+      api(72, "PushTelemetry", PushTelemetryMaxVersion)(
+        _.broker.handlePushTelemetry(_)),
+      api(74, "ListClientMetricsResources", ListClientMetricsResourcesMaxVersion)(
+        _.broker.handleListClientMetricsResources(_)),
+      api(75, "DescribeTopicPartitions", DescribeTopicPartitionsMaxVersion)(
+        _.broker.handleDescribeTopicPartitions(_)),
+      api(76, "ShareGroupHeartbeat", ShareGroupHeartbeatMaxVersion)(
+        _.broker.handleShareGroupHeartbeat(_)),
+      api(77, "ShareGroupDescribe", ShareGroupDescribeMaxVersion)(
+        _.broker.handleShareGroupDescribe(_)),
+      api(78, "ShareFetch", ShareFetchMaxVersion)((s, f) =>
+        s.broker.handleShareFetch(f, s.advertisedHost, s.boundPort)),
+      api(79, "ShareAcknowledge", ShareAcknowledgeMaxVersion)((s, f) =>
+        s.broker.handleShareAcknowledge(f, s.advertisedHost, s.boundPort)),
+      api(90, "DescribeShareGroupOffsets", DescribeShareGroupOffsetsMaxVersion)(
+        _.broker.handleDescribeShareGroupOffsets(_)),
+      api(91, "AlterShareGroupOffsets", AlterShareGroupOffsetsMaxVersion)(
+        _.broker.handleAlterShareGroupOffsets(_)),
+      api(92, "DeleteShareGroupOffsets", DeleteShareGroupOffsetsMaxVersion)(
+        _.broker.handleDeleteShareGroupOffsets(_)))
+  }
+
+  /** The dispatch lookup, indexed by api key: null where no handler. */
+  private[streaming] val Handlers: Array[Handler] = {
+    val a = new Array[Handler](Apis.map(_.key).max + 1)
+    Apis.foreach(s => s.handler.foreach(a(s.key) = _))
+    a
+  }
 
   private def loadPkcs12(path: String,
       password: Array[Char]): java.security.KeyStore = {

@@ -58,12 +58,12 @@ class KafkaWireSpec extends AnyFunSuite {
   }
 
   test("full exchange: request in, catalog response out, round-trips") {
-    val respBytes = handleApiVersions(goldenRequest, Broker.SupportedApis)
+    val respBytes = handleApiVersions(goldenRequest, Broker.WireApis)
     val resp = decodeApiVersionsResponseV3(respBytes)
     assert(resp.correlationId === 1, "response echoes the request correlation id")
     assert(resp.errorCode === 0)
     assert(resp.throttleTimeMs === 0)
-    assert(resp.apiKeys === Broker.SupportedApis.map(t => (t._1, t._3, t._4)))
+    assert(resp.apiKeys === Broker.WireApis.map(t => (t._1, t._3, t._4)))
     // the catalog includes ApiVersions itself (the reference's one key)
     assert(resp.apiKeys.exists(_._1 === 18))
   }

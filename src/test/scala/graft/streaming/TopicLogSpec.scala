@@ -129,7 +129,7 @@ class TopicLogSpec extends AnyFunSuite {
     assert(md.filter(_._1 == "alpha").map(_._3).sum === 10)
     assert(md.count(_._1 == "beta") === 4)
     // the catalog is the single source of truth — count tracks it
-    assert(b.apiVersions.count() === Broker.SupportedApis.size.toLong)
+    assert(b.apiVersions.count() === Broker.WireApis.size.toLong)
     assert(b.apiVersions.filter(col("api_key") === 18).count() === 1)
     b.deleteTopic("beta")
     assert(b.listTopics() === Seq("alpha"))

@@ -690,6 +690,15 @@ class WireServerSpec extends AnyFunSuite {
         encodeApiVersionsRequest(0, 1, "old-cli")))
       assert(r0.errorCode === 0)
       assert(r0.apiKeys === Broker.WireApis.map(t => (t._1, t._3, t._4)))
+      // one table feeds the catalog and dispatch: its keys are unique,
+      // and every advertised key but the SASL pair (answered by the
+      // connection loop itself) has a handler
+      val keys = WireServer.Apis.map(_.key)
+      assert(keys.distinct === keys)
+      val sasl = Set(SaslHandshakeApiKey, SaslAuthenticateApiKey)
+      r0.apiKeys.map(_._1).foreach { k =>
+        assert((WireServer.Handlers(k) != null) === !sasl(k), s"api_key $k")
+      }
 
       // a FUTURE client probes at v9: the broker answers the KIP-511
       // v0-shaped 35 naming its range instead of dropping the socket

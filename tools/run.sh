@@ -2,7 +2,11 @@
 # Fast runner for graft mains without sbt overhead.
 # Usage: tools/run.sh graft.Verify /root/testdata/sf0.01 /tmp/verify_out
 set -e
-CP="/root/repo/target/scala-2.13/classes:/opt/spark/jars/*"
+# classes of the checkout this script lives in, whatever the cwd, and
+# the Spark jars build.sbt compiles against (its unmanagedBase)
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
+JARS="$(sed -n 's/^unmanagedBase := file("\(.*\)")$/\1/p' "$ROOT/build.sbt")"
+CP="$ROOT/target/scala-2.13/classes:$JARS/*"
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic \
