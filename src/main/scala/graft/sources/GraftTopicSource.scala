@@ -7,12 +7,9 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.example.data.Group
-import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.api.ReadSupport
-import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType}
 import org.apache.parquet.schema.LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
@@ -464,11 +461,10 @@ object GraftTopicStreamOffset {
 class GraftTopicFileReader(part: GraftTopicInputPartition, required: StructType,
     bounds: OffsetBounds) extends PartitionReader[InternalRow] {
 
-  private val conf = new Configuration()
   private val hpath = new HPath(part.file)
 
   private val fileSchema: MessageType = {
-    val fr = ParquetFileReader.open(HadoopInputFile.fromPath(hpath, conf))
+    val fr = graft.streaming.TopicLog.openFooter(hpath)
     try fr.getFooter.getFileMetaData.getSchema finally fr.close()
   }
 
@@ -486,10 +482,9 @@ class GraftTopicFileReader(part: GraftTopicInputPartition, required: StructType,
   }
 
   private val reader: ParquetReader[Group] = {
+    val conf = new Configuration(graft.streaming.TopicLog.sharedConf)
     conf.set(ReadSupport.PARQUET_READ_SCHEMA, projection.toString)
-    val b = ParquetReader.builder(new GroupReadSupport(), hpath).withConf(conf)
-    offsetPredicate.foreach(p => b.withFilter(FilterCompat.get(p)))
-    b.build()
+    graft.streaming.TopicLog.openGroups(hpath, conf, offsetPredicate)
   }
 
   private def offsetPredicate: Option[FilterPredicate] = {

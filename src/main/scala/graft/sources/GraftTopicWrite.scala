@@ -154,7 +154,7 @@ class GraftTopicDataWriter(file: String, schema: StructType)
 
   private val writer: ParquetWriter[Group] = {
     Files.createDirectories(Paths.get(file).getParent)
-    val conf = new Configuration()
+    val conf = new Configuration(graft.streaming.TopicLog.sharedConf)
     GroupWriteSupport.setSchema(messageType, conf)
     ExampleParquetWriter.builder(new HPath(file)).withConf(conf).build()
   }

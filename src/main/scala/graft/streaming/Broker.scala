@@ -381,7 +381,7 @@ class Broker(spark: SparkSession, root: String) {
   // --- wire-level Produce/Fetch: framed Kafka bytes in, framed bytes
   // out, with the Spark-native TopicLog as the storage engine — the
   // full producer/consumer path a client would drive. Produce speaks
-  // v0–v9 and Fetch v0–v12: v3+/v4+ bodies carry RecordBatch v2
+  // v0–v9 and Fetch v0–v16: v3+/v4+ bodies carry RecordBatch v2
   // (magic 2), so HEADERS, client timestamps, and producer
   // idempotence coordinates survive the socket — the graft record
   // model round-trips losslessly at those versions.
@@ -490,9 +490,10 @@ class Broker(spark: SparkSession, root: String) {
           }
         }
         // Phase 1.5 — reserve the LSO floor BEFORE any row lands: the
-        // append is a Spark job, and a concurrent read_committed
-        // fetch landing between its commit and the exact range
-        // registration below must not see this transaction's records.
+        // append (TopicLog.produceDirect, no Spark job) commits its
+        // manifest before the exact range registration below, and a
+        // concurrent read_committed fetch landing in between must not
+        // see this transaction's records.
         // The floor (the pre-produce log end) is ≤ the eventual base
         // offset, so the reservation is conservative; recordTxnAppend
         // replaces it with the exact first offset, and reservations
@@ -1617,7 +1618,7 @@ class Broker(spark: SparkSession, root: String) {
       }
     }
 
-  /** Fetch exchange (v0–v12; flexible at v12): bounded reads from
+  /** Fetch exchange (v0–v16; flexible from v12): bounded reads from
     * (partition, offset) with BOTH byte limits honored — the
     * per-partition max_bytes and, at v3+, the request-level max_bytes
     * as one running budget across every partition of the response

@@ -1431,7 +1431,7 @@ object KafkaWire {
       sessionId, sessionEpoch, topics.toSeq, forgotten, isolationLevel)
   }
 
-  /** Encode a fetch response at any version 0–12; records are
+  /** Encode a fetch response at any version 0–16; records are
     * (absoluteOffset, record) pairs. v4+ ships them as ONE magic-2
     * batch per partition (headers survive); v0–v3 fall back to a
     * MessageSet v0, which by construction drops headers and

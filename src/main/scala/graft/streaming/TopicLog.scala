@@ -3,6 +3,16 @@ package graft.streaming
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.Comparator
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.conf.HadoopParquetConfiguration
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.parquet.filter2.predicate.FilterPredicate
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -223,8 +233,7 @@ class TopicLog private (
       }.toSeq
     deleteRecursively(staging)
     // footer reads are independent per file — read them concurrently
-    // (serial reads cost a produce ~20-40 ms PER FILE of commit
-    // latency; one produce can stage one file per partition)
+    // (one produce can stage one file per partition)
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
@@ -376,7 +385,7 @@ class TopicLog private (
     * covering file, with the offset bounds compiled to a parquet
     * FilterPredicate (row-group stats skip + record-level filter, the
     * same mechanism the DSv2 reader pushes down,
-    * sources/GraftTopicSource.scala:408). This is the wire fetch
+    * `GraftTopicFileReader.offsetPredicate`). This is the wire fetch
     * path's read: a ShareFetch/Fetch of a committed range costs file
     * I/O proportional to the range, not a ~0.4 s Spark job per
     * (partition × window). None when the manifest is absent or any
@@ -1208,19 +1217,51 @@ object TopicLog {
   private[graft] def manifestRanges(topicDir: String): Map[String, (Long, Long)] =
     latestManifest(topicDir).map(_.fileRanges).getOrElse(Map.empty)
 
-  /** One shared Hadoop conf for footer reads: constructing a
-    * Configuration parses XML resources (~tens of ms) — per-file
-    * construction cost a produce ~1.5 s for 32 partitions. */
-  private lazy val footerConf = new org.apache.hadoop.conf.Configuration()
+  /** The Hadoop conf handed to every parquet-mr reader and writer
+    * graft opens directly, its default resources (core-default.xml,
+    * core-site.xml) parsed once, here. A parquet open that is handed
+    * no conf builds a default one and parses that XML again, which
+    * costs more CPU than a small wire request's records; so every
+    * open goes through [[openFooter]], [[openGroups]] or a writer's
+    * `.withConf`. Read-only after init: callers that set per-file
+    * keys (a read schema, a write schema) take
+    * `new Configuration(sharedConf)`, which clones the parsed
+    * properties without reading the XML again. Reads go through
+    * Hadoop's checksummed LocalFileSystem, which verifies a file's
+    * `.crc` sidecar where one exists. */
+  private[graft] lazy val sharedConf: Configuration = {
+    val c = new Configuration()
+    c.size() // parse the default resources now, not on first use
+    c
+  }
+
+  /** Open a parquet file's footer. The read options are built per
+    * open: closing the reader releases their codec factory, so one
+    * options object must not be shared by concurrent readers. */
+  private[graft] def openFooter(file: HPath): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromPath(file, sharedConf),
+      HadoopReadOptions.builder(sharedConf, file).build())
+
+  /** A parquet-mr Group reader over one file under `conf`, with an
+    * optional row filter (row-group stats skipping + record
+    * filtering). */
+  private[graft] def openGroups(file: HPath, conf: Configuration,
+      filter: Option[FilterPredicate]): ParquetReader[Group] = {
+    val b = new ParquetReader.Builder[Group](
+        HadoopInputFile.fromPath(file, conf),
+        new HadoopParquetConfiguration(conf)) {
+      override protected def getReadSupport() = new GroupReadSupport()
+    }
+    filter.foreach(p => b.withFilter(FilterCompat.get(p)))
+    b.build()
+  }
 
   /** Read a parquet file's offset column min/max from its footer
     * (row-group statistics) — one footer read at produce time buys
     * planning-time pruning forever after. */
   private[graft] def offsetRangeOf(file: Path): (Long, Long) = {
     import scala.jdk.CollectionConverters._
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(file.toString), footerConf)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    val r = openFooter(new HPath(file.toString))
     try {
       var lo = Long.MaxValue
       var hi = Long.MinValue
@@ -1270,14 +1311,10 @@ object TopicLog {
         |  required int64 offset;
         |}""".stripMargin)
 
-  /** One shared read conf (Configuration construction parses the
-    * Hadoop default XMLs — per-call instances cost milliseconds the
-    * per-request wire path would pay on every file open) and one
-    * shared write conf carrying the constant [[directWriteSchema]].
-    * Both are effectively read-only after init. */
-  private lazy val directReadConf = new org.apache.hadoop.conf.Configuration()
+  /** [[sharedConf]] plus the constant [[directWriteSchema]], for
+    * [[writeDirect]]; read-only after init. */
   private lazy val directWriteConf = {
-    val c = new org.apache.hadoop.conf.Configuration()
+    val c = new Configuration(sharedConf)
     org.apache.parquet.hadoop.example.GroupWriteSupport
       .setSchema(directWriteSchema, c)
     c
@@ -1294,7 +1331,7 @@ object TopicLog {
     import org.apache.parquet.io.api.Binary
 
     val writer = ExampleParquetWriter
-      .builder(new org.apache.hadoop.fs.Path(file.toString))
+      .builder(new HPath(file.toString))
       .withConf(directWriteConf)
       .withType(directWriteSchema)
       .withCompressionCodec(
@@ -1324,31 +1361,23 @@ object TopicLog {
     * no Spark job. The bounds ride as a FilterPredicate so row groups
     * outside the span are skipped from their stats (the same
     * pushdown the DSv2 reader compiles,
-    * sources/GraftTopicSource.scala:416). Timestamp decode handles
-    * INT96 and INT64 millis/micros/nanos like the DSv2 reader's
-    * (GraftTopicSource.scala:463). */
+    * `GraftTopicFileReader.offsetPredicate`). Timestamp decode
+    * handles INT96 and INT64 millis/micros/nanos like the DSv2
+    * reader's `GraftTopicFileReader.decodeTimestamp`. */
   private[streaming] def readDirect(file: Path, fromOffset: Long,
       toOffset: Long): Seq[DirectRecord] = {
-    import org.apache.parquet.example.data.Group
-    import org.apache.parquet.filter2.compat.FilterCompat
     import org.apache.parquet.filter2.predicate.FilterApi
-    import org.apache.parquet.hadoop.ParquetReader
-    import org.apache.parquet.hadoop.example.GroupReadSupport
     import org.apache.parquet.schema.LogicalTypeAnnotation
     import org.apache.parquet.schema.LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 
     val c = FilterApi.longColumn("offset")
     var pred = FilterApi.gtEq(c, java.lang.Long.valueOf(fromOffset))
-      .asInstanceOf[org.apache.parquet.filter2.predicate.FilterPredicate]
+      .asInstanceOf[FilterPredicate]
     if (toOffset != Long.MaxValue)
       pred = FilterApi.and(pred,
         FilterApi.ltEq(c, java.lang.Long.valueOf(toOffset)))
-    val reader = ParquetReader.builder(new GroupReadSupport(),
-        new org.apache.hadoop.fs.Path(file.toString))
-      .withConf(directReadConf)
-      .withFilter(FilterCompat.get(pred))
-      .build()
+    val reader = openGroups(new HPath(file.toString), sharedConf, Some(pred))
 
     def tsMillis(g: Group, idx: Int): Long = {
       val prim = g.getType.getType(idx).asPrimitiveType()

@@ -1,6 +1,9 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -21,6 +24,14 @@ class DirectPathSpec extends AnyFunSuite {
 
   private def tmpRoot(): String =
     Files.createTempDirectory("graft-direct").toString
+
+  /** The one data file a single-partition, single-produce topic holds. */
+  private def onlyDataFile(root: String): Path = {
+    val files = Files.walk(Paths.get(root)).iterator.asScala
+      .filter(_.getFileName.toString.endsWith(".parquet")).toList
+    assert(files.size === 1, files)
+    files.head
+  }
 
   private def directRows(ids: Range, p: Int = 0)
       : Seq[(Int, Array[Byte], Array[Byte], Map[String, Array[Byte]], Long)] =
@@ -204,5 +215,74 @@ class DirectPathSpec extends AnyFunSuite {
     }
     assert(log.logEndOffsets().getOrElse(0, 0L) === 0L)
     assert(log.read().count() === 0L)
+  }
+
+  test("direct reads and footer reads parse no Hadoop default XML") {
+    val root = tmpRoot()
+    val log = TopicLog.create(spark, root, "d8", 1)
+    log.produceDirect(directRows(0 until 10))
+    val file = onlyDataFile(root)
+    // warm: load the shared conf before the counted reads
+    TopicLog.readDirect(file, 0L, Long.MaxValue)
+    TopicLog.offsetRangeOf(file)
+
+    // a new Configuration finds its default resources through the
+    // constructing thread's context loader: count those lookups
+    val lookups = new AtomicInteger
+    val counting = new ClassLoader(Thread.currentThread.getContextClassLoader) {
+      override def getResource(name: String): java.net.URL = {
+        if (name == "core-default.xml") lookups.incrementAndGet()
+        super.getResource(name)
+      }
+    }
+    var readLookups = -1
+    var failure: Throwable = null
+    val t = new Thread(() =>
+      try {
+        (0 until 20).foreach { _ =>
+          assert(TopicLog.readDirect(file, 0L, Long.MaxValue).map(_.offset) ===
+            (0L until 10L))
+          assert(TopicLog.offsetRangeOf(file) === ((0L, 9L)))
+        }
+        readLookups = lookups.get
+        // control: a default conf built on this thread IS counted
+        new org.apache.hadoop.conf.Configuration().size()
+      } catch { case e: Throwable => failure = e })
+    t.setContextClassLoader(counting)
+    t.start()
+    t.join()
+    if (failure != null) throw failure
+    assert(readLookups === 0)
+    assert(lookups.get > 0)
+  }
+
+  test("reads verify a data file's .crc sidecar: corruption raises, not records") {
+    val root = tmpRoot()
+    val log = TopicLog.create(spark, root, "d9", 1)
+    log.produceDirect(directRows(0 until 10))
+    val file = onlyDataFile(root)
+    // rewrite the committed file through Hadoop's checksummed local
+    // filesystem so it carries a sidecar; reads must check it
+    val bytes = Files.readAllBytes(file)
+    val out = org.apache.hadoop.fs.FileSystem
+      .getLocal(new org.apache.hadoop.conf.Configuration())
+      .create(new org.apache.hadoop.fs.Path(file.toString), true)
+    try out.write(bytes) finally out.close()
+    assert(Files.exists(file.resolveSibling(s".${file.getFileName}.crc")))
+    assert(log.consumeForWire(0, 0, 100).map(_.offset) === (0L until 10L))
+
+    // flip one byte just past the leading "PAR1" magic (column data),
+    // leaving the sidecar as it was
+    bytes(4) = (bytes(4) ^ 0xff).toByte
+    Files.write(file, bytes)
+
+    def chain(t: Throwable): List[Throwable] =
+      if (t == null) Nil else t :: chain(t.getCause)
+    def failsChecksum(t: Throwable): Boolean =
+      chain(t).exists(_.isInstanceOf[org.apache.hadoop.fs.ChecksumException])
+    val viaWire = intercept[Exception] { log.consumeForWire(0, 0, 100) }
+    assert(failsChecksum(viaWire), viaWire)
+    val direct = intercept[Exception] { TopicLog.readDirect(file, 0L, Long.MaxValue) }
+    assert(failsChecksum(direct), direct)
   }
 }
