@@ -135,11 +135,13 @@ class TopicLog private (
           s"(topic $topic has $numPartitions)")
       val countsByPart = counts.map { case (part, n, _) => part -> n }.toMap
       val staging = Paths.get(s"$topicDir/_staging/${java.util.UUID.randomUUID()}")
-      assigned
-        .drop("base")
-        .sortWithinPartitions("offset") // offset-sorted files → row-group skipping
-        .write.partitionBy("partition").parquet(staging.toString)
-      val moved = moveStagedFiles(staging)
+      val moved = try {
+        assigned
+          .drop("base")
+          .sortWithinPartitions("offset") // offset-sorted files → row-group skipping
+          .write.partitionBy("partition").parquet(staging.toString)
+        moveStagedFiles(staging)
+      } finally deleteRecursively(staging)
       if (failpointBeforeCommit)
         throw new IllegalStateException("failpoint: crash before manifest commit")
       interleaveHook()
@@ -180,28 +182,34 @@ class TopicLog private (
     val base = m0.ends
     val staging = Paths.get(s"$topicDir/_staging/${java.util.UUID.randomUUID()}")
     // groupBy preserves encounter order within each group, so a
-    // request listing a partition twice appends in request order;
-    // per-partition files are independent — write them concurrently
-    // (the moveStagedFiles footer-read idiom)
+    // request listing a partition twice appends in request order; the
+    // writer assigns offsets base..base+n-1, so each file's range is
+    // known here and needs no footer read after the write
     val byPart = rows.groupBy(_._1)
-    locally {
+    val files = byPart.toSeq.map { case (p, rs) =>
+      (s"partition=$p/part-direct-${java.util.UUID.randomUUID()}.parquet",
+        base.getOrElse(p, 0L), rs)
+    }
+    val moved = try {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
       import scala.concurrent.ExecutionContext.Implicits.global
-      Await.result(Future.traverse(byPart.toSeq) { case (p, rs) =>
+      // per-partition files are independent — write them concurrently,
+      // and let every write end before the staging dir is removed
+      val writes = files.map { case (rel, b, rs) =>
         Future {
-          val dir = staging.resolve(s"partition=$p")
-          Files.createDirectories(dir)
-          val b = base.getOrElse(p, 0L)
-          TopicLog.writeDirect(
-            dir.resolve(s"part-direct-${java.util.UUID.randomUUID()}.parquet"),
+          val f = staging.resolve(rel)
+          Files.createDirectories(f.getParent)
+          TopicLog.writeDirect(f,
             rs.iterator.zipWithIndex.map { case ((_, k, v, h, ts), i) =>
               (b + i, k, v, h, ts)
             })
         }
-      }, Duration.Inf)
-    }
-    val moved = moveStagedFiles(staging)
+      }
+      writes.map(w => Await.ready(w, Duration.Inf).value.get).foreach(_.get)
+      moveStagedFiles(staging,
+        files.map { case (rel, b, rs) => rel -> (b, b + rs.size - 1) }.toMap)
+    } finally deleteRecursively(staging)
     if (failpointBeforeCommit)
       throw new IllegalStateException("failpoint: crash before manifest commit")
     val counts = byPart.map { case (p, rs) => p -> rs.size.toLong }
@@ -213,10 +221,13 @@ class TopicLog private (
 
   /** Move every staged parquet file (per partition=N subdir) into the
     * live tree under a unique name; returns manifest-relative paths
-    * with each file's [min,max] offset range (read once from its
-    * footer here, at produce time, so every future PLANNING pass can
-    * prune by offset without opening any file). */
-  private def moveStagedFiles(staging: Path): Seq[(String, Long, Long)] = {
+    * with each file's [min,max] offset range, so every future PLANNING
+    * pass can prune by offset without opening any file. A range the
+    * caller already knows (`knownRanges`, by manifest-relative path)
+    * is taken as given; any other is read once from the file's footer
+    * here, at produce time. The caller removes the staging dir. */
+  private def moveStagedFiles(staging: Path,
+      knownRanges: Map[String, (Long, Long)] = Map.empty): Seq[(String, Long, Long)] = {
     val moved = TopicLog.listDir(staging).iterator
       .filter(_.getFileName.toString.startsWith("partition="))
       .flatMap { d =>
@@ -231,7 +242,6 @@ class TopicLog private (
             (rel, dest)
           }
       }.toSeq
-    deleteRecursively(staging)
     // footer reads are independent per file — read them concurrently
     // (one produce can stage one file per partition)
     import scala.concurrent.{Await, Future}
@@ -239,7 +249,11 @@ class TopicLog private (
     import scala.concurrent.ExecutionContext.Implicits.global
     Await.result(
       Future.traverse(moved) { case (rel, dest) =>
-        Future { val (lo, hi) = TopicLog.offsetRangeOf(dest); (rel, lo, hi) }
+        knownRanges.get(rel) match {
+          case Some((lo, hi)) => Future.successful((rel, lo, hi))
+          case None =>
+            Future { val (lo, hi) = TopicLog.offsetRangeOf(dest); (rel, lo, hi) }
+        }
       }, Duration.Inf)
   }
 
@@ -320,11 +334,7 @@ class TopicLog private (
     // `keepManifests` — but NEVER at or above the anchor snapshot the
     // current state resolves from (deltas above it would dangle)
     checkpoint()
-    val versions = TopicLog.listDir(manifestsDir).iterator
-      .map(_.getFileName.toString)
-      .collect { case s if s.startsWith("v") && s.endsWith(".json") =>
-        s.stripPrefix("v").stripSuffix(".json").toLong }
-      .toSeq.sorted
+    val versions = TopicLog.listVersions(manifestsDir).sorted
     val anchor = versions.reverse
       .find(v => TopicLog.isSnapshotVersion(manifestsDir, v)).getOrElse(0L)
     versions.dropRight(math.max(keepManifests, 1))
@@ -355,9 +365,11 @@ class TopicLog private (
     try {
       val newEndsRows = df.groupBy("partition").agg(max("offset").as("m")).collect()
         .map(r => r.getInt(0) -> (r.getLong(1) + 1L)).toMap
-      df.sortWithinPartitions("offset")
-        .write.partitionBy("partition").parquet(staging.toString)
-      val moved = moveStagedFiles(staging)
+      val moved = try {
+        df.sortWithinPartitions("offset")
+          .write.partitionBy("partition").parquet(staging.toString)
+        moveStagedFiles(staging)
+      } finally deleteRecursively(staging)
       // only the written partitions' ends — commitWithRetry max-merges
       // them into whatever manifest is current at commit time
       val newEnds = newEndsRows.map { case (p, e) =>
@@ -470,14 +482,9 @@ class TopicLog private (
 
   /** Committed manifest versions still on disk, ascending — the
     * time-travel catalog ([[readAt]] accepts any of these). */
-  def manifestVersions(): Seq[Long] = {
-    if (!Files.exists(manifestsDir)) return Seq.empty
-    TopicLog.listDir(manifestsDir).iterator
-      .map(_.getFileName.toString)
-      .collect { case s if s.startsWith("v") && s.endsWith(".json") =>
-        s.stripPrefix("v").stripSuffix(".json").toLong }
-      .toSeq.sorted
-  }
+  def manifestVersions(): Seq[Long] =
+    if (!Files.exists(manifestsDir)) Seq.empty
+    else TopicLog.listVersions(manifestsDir).sorted
 
   /** Read the whole log (all partitions) as a DataFrame — only files
     * the current manifest references (uncommitted/orphaned files are
@@ -1137,10 +1144,9 @@ object TopicLog {
     Files.exists(f) && parseVersion(Files.readString(f)).files.isDefined
   }
 
-  /** Resolve the current manifest: walk back from the newest version
-    * to its anchor snapshot, replaying deltas forward. Ends and batch
-    * id always come from the newest version (every version carries the
-    * full, small maps). */
+  /** Resolve the current manifest: the last resolve of `dir` carried
+    * forward over the versions committed since, else the full walk
+    * back from the newest version ([[walkManifest]]). */
   private[graft] def resolveManifest(dir: Path): Option[Manifest] = {
     // a concurrent vacuum may retire a delta file between our listing
     // and the walk — re-resolve from a fresh listing (the new anchor
@@ -1162,36 +1168,114 @@ object TopicLog {
     else resolveManifestOnce(dir, atVersion)
   }
 
-  private def resolveManifestOnce(dir: Path,
-      cap: Long = Long.MaxValue): Option[Manifest] = {
-    import scala.jdk.CollectionConverters._
-    if (!Files.exists(dir)) return None
-    val versions = listDir(dir).iterator
+  /** The version numbers of the `v<N>.json` files in `dir`, unordered. */
+  private[graft] def listVersions(dir: Path): Seq[Long] =
+    listDir(dir).iterator
       .map(_.getFileName.toString)
       .collect { case s if s.startsWith("v") && s.endsWith(".json") =>
         s.stripPrefix("v").stripSuffix(".json").toLong }
-      .toSeq.filter(_ <= cap)
-    versions.maxOption.map { newest =>
-      var v = newest
-      var head: VersionRec = null
-      var deltas = List.empty[Seq[String]]
-      var base = Seq.empty[String]
-      var ranges = Map.empty[String, (Long, Long)]
-      var resolved = false
-      while (!resolved) {
-        val rec = parseVersion(Files.readString(dir.resolve(s"v$v.json")))
-        if (head == null) head = rec
-        ranges = rec.fileRanges ++ ranges // newer versions win
-        rec.files match {
-          case Some(fs) => base = fs; resolved = true
+      .toSeq
+
+  /** A resolved manifest with the bytes of the version file it was
+    * resolved at (`version`, its newest). */
+  private final class Resolved(val version: Long, val bytes: Array[Byte],
+      val manifest: Manifest)
+
+  /** The last [[Resolved]] manifest per `_manifests` dir (absolute,
+    * normalized), so a resolve replays only the versions committed
+    * since — a broker resolves on every request, and a full walk
+    * re-parses up to [[CheckpointInterval]] versions, a whole file
+    * list among them. Entries are immutable; [[drop]] evicts. */
+  private val resolvedManifests =
+    new java.util.concurrent.ConcurrentHashMap[Path, Resolved]()
+
+  private def cacheKey(dir: Path): Path = dir.toAbsolutePath.normalize
+
+  private def resolveManifestOnce(dir: Path, cap: Long = Long.MaxValue,
+      cached: Boolean = true): Option[Manifest] = {
+    if (!Files.exists(dir)) {
+      resolvedManifests.remove(cacheKey(dir))
+      return None
+    }
+    listVersions(dir).filter(_ <= cap).maxOption.map { newest =>
+      if (cap != Long.MaxValue || !cached) walkManifest(dir, newest).manifest
+      else {
+        val key = cacheKey(dir)
+        Option(resolvedManifests.get(key)).flatMap(advanceManifest(dir, _, newest)) match {
+          case Some(r) =>
+            // concurrent resolves finish in any order: keep the newest
+            resolvedManifests.merge(key, r,
+              (a: Resolved, b: Resolved) => if (b.version >= a.version) b else a)
+            r.manifest
           case None =>
-            deltas = rec.adds :: deltas
-            if (v == 0) resolved = true // degenerate: delta with no anchor
-            else v -= 1
+            val r = walkManifest(dir, newest)
+            resolvedManifests.put(key, r)
+            r.manifest
         }
       }
-      Manifest(head.version, base ++ deltas.flatten, head.ends,
-        head.lastBatchId, head.writerEpochs, ranges)
+    }
+  }
+
+  /** The full resolve, bypassing (and leaving alone) the cache of
+    * resolved manifests: what [[resolveManifest]] must always equal. */
+  private[graft] def resolveManifestFull(dir: Path): Option[Manifest] =
+    resolveManifestOnce(dir, cached = false)
+
+  private def readVersion(dir: Path, v: Long): (Array[Byte], VersionRec) = {
+    val bytes = Files.readAllBytes(dir.resolve(s"v$v.json"))
+    (bytes, parseVersion(new String(bytes, "UTF-8")))
+  }
+
+  /** `from` carried forward over version records `recs`, oldest
+    * first: a snapshot resets the file list and ranges, a delta
+    * appends its adds (newer ranges win). Ends and batch id come from
+    * the newest record (every version carries the full, small maps). */
+  private def replay(from: Manifest, recs: Seq[VersionRec]): Manifest = {
+    var files = from.files.toVector
+    var ranges = from.fileRanges
+    recs.foreach { rec =>
+      rec.files match {
+        case Some(fs) => files = fs.toVector; ranges = rec.fileRanges
+        case None => files ++= rec.adds; ranges ++= rec.fileRanges
+      }
+    }
+    val head = recs.last
+    Manifest(head.version, files, head.ends, head.lastBatchId,
+      head.writerEpochs, ranges)
+  }
+
+  /** Walk back from version `newest` to its anchor snapshot (or to v0:
+    * a degenerate delta with no anchor), then replay forward. */
+  private def walkManifest(dir: Path, newest: Long): Resolved = {
+    val (bytes, head) = readVersion(dir, newest)
+    var recs = List(head)
+    var v = newest
+    while (recs.head.files.isEmpty && v > 0) {
+      v -= 1
+      recs = readVersion(dir, v)._2 :: recs
+    }
+    new Resolved(newest, bytes, replay(Manifest(0L, Seq.empty, Map.empty, None), recs))
+  }
+
+  /** `c` carried forward to version `newest` by replaying only the
+    * versions above it. None — fall back to the full walk — unless
+    * `c`'s version file is still on disk byte for byte: versions are
+    * immutable once linked, so a difference means the history changed
+    * under the cache (a vacuum retired the version, or the topic was
+    * deleted and re-created). A listing older than `c` (a concurrent
+    * resolve listed later) answers `c`: its version is committed and
+    * on disk, so it is at least as current as the listing. */
+  private def advanceManifest(dir: Path, c: Resolved,
+      newest: Long): Option[Resolved] = {
+    val unchanged =
+      try java.util.Arrays.equals(
+        Files.readAllBytes(dir.resolve(s"v${c.version}.json")), c.bytes)
+      catch { case _: java.nio.file.NoSuchFileException => false }
+    if (!unchanged) None
+    else if (newest <= c.version) Some(c)
+    else {
+      val read = (c.version + 1 to newest).map(readVersion(dir, _))
+      Some(new Resolved(newest, read.last._1, replay(c.manifest, read.map(_._2))))
     }
   }
 
@@ -1228,7 +1312,7 @@ object TopicLog {
     * `new Configuration(sharedConf)`, which clones the parsed
     * properties without reading the XML again. Reads go through
     * Hadoop's checksummed LocalFileSystem, which verifies a file's
-    * `.crc` sidecar where one exists. */
+    * `.crc` sidecar where one exists; [[writeDirect]] writes none. */
   private[graft] lazy val sharedConf: Configuration = {
     val c = new Configuration()
     c.size() // parse the default resources now, not on first use
@@ -1322,7 +1406,12 @@ object TopicLog {
 
   /** Write ONE offset-sorted record file with parquet-hadoop on the
     * driver — [[produceDirect]]'s writer. Snappy like Spark's
-    * default, so direct and Spark-written files are uniform. */
+    * default, so direct and Spark-written files are uniform. The file
+    * is written straight through java.nio, not through Hadoop's local
+    * filesystem: that would add a `.crc` sidecar (which the staging
+    * move leaves behind) and fork `chmod` for the file and for the
+    * sidecar. The parquet bytes are the same either way, and reads
+    * still verify a sidecar where one exists ([[sharedConf]]). */
   private[streaming] def writeDirect(file: Path,
       rows: Iterator[(Long, Array[Byte], Array[Byte],
         Map[String, Array[Byte]], Long)]): Unit = {
@@ -1331,7 +1420,7 @@ object TopicLog {
     import org.apache.parquet.io.api.Binary
 
     val writer = ExampleParquetWriter
-      .builder(new HPath(file.toString))
+      .builder(new org.apache.parquet.io.LocalOutputFile(file))
       .withConf(directWriteConf)
       .withType(directWriteSchema)
       .withCompressionCodec(
@@ -1539,8 +1628,10 @@ object TopicLog {
     }
   }
 
-  def drop(root: String, topic: String): Unit =
+  def drop(root: String, topic: String): Unit = {
     deleteRecursively(Paths.get(s"$root/$topic"))
+    resolvedManifests.remove(cacheKey(Paths.get(s"$root/$topic/_manifests")))
+  }
 
   // flat {"<int>":<long>,...} maps — hand-rolled to avoid deps
   private def writeOffsetMap(path: Path, m: Map[Int, Long]): Unit = {

@@ -217,6 +217,65 @@ class DirectPathSpec extends AnyFunSuite {
     assert(log.read().count() === 0L)
   }
 
+  test("produceDirect writes no .crc sidecar and records each file's exact range") {
+    val root = tmpRoot()
+    val log = TopicLog.create(spark, root, "d10", 3)
+    log.produceDirect(directRows(0 until 4, p = 0) ++ directRows(0 until 3, p = 2))
+    // one request lists partition 0 twice, around partition 1
+    log.produceDirect(directRows(0 until 2, p = 0) ++ directRows(0 until 5, p = 1) ++
+      directRows(2 until 6, p = 0))
+    assert(log.logEndOffsets() === Map(0 -> 10L, 1 -> 5L, 2 -> 3L))
+
+    val topicDir = Paths.get(log.topicDir)
+    val all = Files.walk(topicDir).iterator.asScala.toList
+    val sidecars = all.filter(_.getFileName.toString.endsWith(".crc"))
+      .filter(f => f.startsWith(topicDir.resolve("data")) ||
+        f.startsWith(topicDir.resolve("_staging")))
+    assert(sidecars.isEmpty, sidecars)
+    // the staging move drops stray files, so check the writer itself
+    val dir = Files.createTempDirectory("graft-direct-write")
+    TopicLog.writeDirect(dir.resolve("f.parquet"),
+      Iterator((0L, "k".getBytes, "v".getBytes, null, 1L)))
+    assert(Files.list(dir).iterator.asScala.map(_.getFileName.toString).toList ===
+      List("f.parquet"))
+
+    val m = log.currentManifest().get
+    assert(m.files.size === 4)
+    m.files.foreach { f =>
+      assert(m.fileRanges.get(f) ===
+        Some(TopicLog.offsetRangeOf(Paths.get(log.dataDir).resolve(f))), f)
+    }
+    assert(m.files.filter(_.startsWith("partition=0/")).map(m.fileRanges).sorted ===
+      Seq((0L, 3L), (4L, 9L)))
+  }
+
+  test("a produceDirect whose write throws leaves no staging and commits nothing") {
+    val root = tmpRoot()
+    val log = TopicLog.create(spark, root, "d11", 2)
+    log.produceDirect(directRows(0 until 4, p = 0))
+    val endsBefore = log.logEndOffsets()
+    val versionsBefore = log.manifestVersions()
+
+    // a null header name fails partition 1's write; partition 0's
+    // write in the same request succeeds and is staged beside it
+    val nullName: Map[String, Array[Byte]] = Map((null: String) -> "x".getBytes)
+    intercept[NullPointerException] {
+      log.produceDirect(directRows(4 until 8, p = 0) ++
+        Seq((1, "k".getBytes, "v".getBytes, nullName, 1L)))
+    }
+
+    val staging = Paths.get(log.topicDir).resolve("_staging")
+    val left =
+      if (Files.exists(staging)) Files.walk(staging).iterator.asScala.toList.tail
+      else Nil
+    assert(left.isEmpty, left)
+    assert(log.manifestVersions() === versionsBefore)
+    assert(log.logEndOffsets() === endsBefore)
+    assert(log.vacuum(minAgeMs = 0) === 0, "a failed write must leave no orphans")
+    log.produceDirect(directRows(4 until 8, p = 0))
+    assert(log.consumeDirect(0, 0, 100).get.map(_.offset) === (0L until 8L))
+  }
+
   test("direct reads and footer reads parse no Hadoop default XML") {
     val root = tmpRoot()
     val log = TopicLog.create(spark, root, "d8", 1)

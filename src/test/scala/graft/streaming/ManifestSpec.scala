@@ -249,6 +249,68 @@ class ManifestSpec extends AnyFunSuite {
     assert(reopened.logEndOffsets() === log.logEndOffsets())
   }
 
+  test("incremental manifest resolve equals a cold resolve after every commit") {
+    import java.nio.file.Paths
+    import scala.jdk.CollectionConverters._
+    val root = Files.createTempDirectory("graft-manifest").toString
+    val a = TopicLog.create(spark, root, "t", 4)
+    val b = TopicLog.open(spark, root, "t")
+    val dir = Paths.get(s"${a.topicDir}/_manifests")
+    // the cached resolve against the full walk, which leaves the cache alone
+    def same(step: String): Unit = {
+      val cold = TopicLog.resolveManifestFull(dir)
+      assert(cold.isDefined, step)
+      assert(TopicLog.resolveManifest(dir) === cold, step)
+    }
+    def direct(ids: Range) = ids.map { i =>
+      (i % 4, s"k$i".getBytes, s"v$i".getBytes, null: Map[String, Array[Byte]],
+        1700000000000L + i)
+    }
+    def rawDelete(d: String): Unit =
+      Files.walk(Paths.get(d)).iterator.asScala.toList.reverse.foreach(Files.delete(_))
+
+    // two writers on one topic, both produce paths, across a checkpoint
+    // interval (its snapshot resets the file list mid-replay)
+    (0 until TopicLog.CheckpointInterval.toInt + 3).foreach { i =>
+      if (i % 3 == 0) a.produce(records(i * 4 until i * 4 + 4), part)
+      else (if (i % 2 == 0) a else b).produceDirect(direct(i * 4 until i * 4 + 4))
+      same(s"produce $i")
+    }
+    a.checkpoint(); same("checkpoint")
+    b.produceDirect(direct(200 until 204)); same("produce after checkpoint")
+    a.vacuum(keepManifests = 3, minAgeMs = 0); same("vacuum, keep 3")
+    b.produceDirect(direct(204 until 208)); same("produce after vacuum")
+    // keeping one version retires the version the cache was resolved at
+    val cachedAt = TopicLog.resolveManifest(dir).get.version
+    a.vacuum(keepManifests = 1, minAgeMs = 0)
+    assert(!Files.exists(dir.resolve(s"v$cachedAt.json")))
+    same("vacuum, keep 1")
+    a.compactFiles(); same("compactFiles")
+    b.produceDirect(direct(208 until 212)); same("produce after compactFiles")
+    assert(a.read().count() === 4L * (TopicLog.CheckpointInterval + 3) + 12)
+
+    // raw delete (not TopicLog.drop, which evicts) and re-create
+    rawDelete(a.topicDir)
+    val c = TopicLog.create(spark, root, "t", 4)
+    c.produceDirect(direct(0 until 4)); same("re-created")
+
+    // a topic of the same name moved into place with a longer, then a
+    // shorter history than the cached one: the cached version file is
+    // there but holds other bytes, then it is not there at all
+    def replaceWith(produces: Int): Unit = {
+      val side = Files.createTempDirectory("graft-manifest-side").toString
+      val other = TopicLog.create(spark, side, "t", 4)
+      (0 until produces).foreach(i => other.produceDirect(direct(i * 4 until i * 4 + 4)))
+      rawDelete(c.topicDir)
+      Files.move(Paths.get(other.topicDir), Paths.get(c.topicDir))
+      same(s"replaced by a topic of $produces produces")
+      assert(c.logEndOffsets() === Map(0 -> produces.toLong, 1 -> produces.toLong,
+        2 -> produces.toLong, 3 -> produces.toLong))
+    }
+    replaceWith(4)
+    replaceWith(2)
+  }
+
   test("file compaction coalesces small produce files, content-identical") {
     val log = newLog()
     (0 until 12).foreach(i => log.produce(records(i * 5 until i * 5 + 5), part))
