@@ -169,7 +169,10 @@ class TopicLog private (
     * [[TopicLog.ConcurrentProduceException]] for the caller to retry.
     * Rows arrive in REQUEST order as (partition, key, value, headers,
     * timestampMs); offsets assign per partition in that order.
-    * Returns the committed log-end offsets. */
+    * Once the commit lands, each written file's records also enter
+    * the in-memory log tail ([[TopicLog.readDirect]]), which keeps
+    * the key, value and header arrays given here: callers must not
+    * mutate them afterwards. Returns the committed log-end offsets. */
   def produceDirect(rows: Seq[(Int, Array[Byte], Array[Byte],
       Map[String, Array[Byte]], Long)]): Map[Int, Long] = {
     val m0 = ensureManifest()
@@ -212,11 +215,22 @@ class TopicLog private (
     } finally deleteRecursively(staging)
     if (failpointBeforeCommit)
       throw new IllegalStateException("failpoint: crash before manifest commit")
+    interleaveHook()
     val counts = byPart.map { case (p, rs) => p -> rs.size.toLong }
     val newEnds = counts.map { case (p, n) => p -> (base.getOrElse(p, 0L) + n) }
-    commitWithRetry(m0, moved.map(_._1),
+    val ends = commitWithRetry(m0, moved.map(_._1),
       moved.map { case (rel, lo, hi) => rel -> (lo, hi) }.toMap,
       counts, newEnds, None).ends
+    // committed files are immutable and uniquely named, so their
+    // records may be served from memory from here on
+    files.foreach { case (rel, b, rs) =>
+      TopicLog.fillTail(Paths.get(dataDir).resolve(rel),
+        rs.iterator.zipWithIndex.map { case ((_, k, v, h, ts), i) =>
+          DirectRecord(b + i, ts, k, v,
+            if (h == null) Seq.empty else h.toSeq.sortBy(_._1))
+        }.toArray)
+    }
+    ends
   }
 
   /** Move every staged parquet file (per partition=N subdir) into the
@@ -392,9 +406,11 @@ class TopicLog private (
 
   /** Driver-direct range read: up to `maxRecords` records of
     * `partition` with offset in [fromOffset, toOffset], hydrated by
-    * DIRECT parquet reads of the manifest files whose recorded offset
-    * ranges cover the span — ZERO Spark jobs. One footer + scan per
-    * covering file, with the offset bounds compiled to a parquet
+    * DIRECT reads of the manifest files whose recorded offset ranges
+    * cover the span — ZERO Spark jobs. A covering file this process's
+    * [[produceDirect]] committed is served from the in-memory log
+    * tail ([[TopicLog.readDirect]]) with no file I/O; any other costs
+    * one footer + scan, with the offset bounds compiled to a parquet
     * FilterPredicate (row-group stats skip + record-level filter, the
     * same mechanism the DSv2 reader pushes down,
     * `GraftTopicFileReader.offsetPredicate`). This is the wire fetch
@@ -875,7 +891,8 @@ class TopicLog private (
     * swap the whole data dir; they assume a single maintenance owner
     * with no CONCURRENT PRODUCERS during the swap (Kafka's log cleaner
     * holds the same role). Concurrent producers are safe against each
-    * other (manifest CAS), but not against a simultaneous dir swap. */
+    * other (manifest CAS), but not against a simultaneous dir swap.
+    * Every file is replaced, so the topic's log-tail entries go too. */
   private def rewrite(f: DataFrame => DataFrame): Unit = {
     import scala.jdk.CollectionConverters._
     val m0 = ensureManifest()
@@ -883,6 +900,7 @@ class TopicLog private (
     f(read())
       .sortWithinPartitions("offset")
       .write.mode("overwrite").partitionBy("partition").parquet(tmp)
+    TopicLog.evictTail(topicDir)
     deleteRecursively(Paths.get(dataDir))
     Files.move(Paths.get(tmp), Paths.get(dataDir), StandardCopyOption.ATOMIC_MOVE)
     // re-point the manifest at the rewritten file set; log-end offsets
@@ -1369,7 +1387,10 @@ object TopicLog {
 
   /** One wire-servable record hydrated WITHOUT a Spark job: the Kafka
     * record model with the timestamp already in epoch millis (−1 =
-    * absent) and headers name-sorted. */
+    * absent) and headers name-sorted (empty when the record has
+    * none). A record served from the log tail shares its key, value
+    * and header arrays with the tail and with other reads of it:
+    * treat them as read-only. */
   case class DirectRecord(offset: Long, timestampMs: Long,
       key: Array[Byte], value: Array[Byte],
       headers: Seq[(String, Array[Byte])])
@@ -1445,15 +1466,107 @@ object TopicLog {
     } finally writer.close()
   }
 
+  /** A log-tail entry: one committed file's records in offset order
+    * and an estimate of the heap they hold. */
+  private final class TailEntry(val records: Array[DirectRecord], val bytes: Long)
+
+  /** The log tail: the records of the data files this process's
+    * [[TopicLog.produceDirect]] committed, so that a fetch of records
+    * produced moments earlier (the common consumer read) skips the
+    * parquet re-read — Kafka's page-cache hit. Least recently used
+    * first out, keyed by the file's absolute, normalized path, all
+    * access under the map's own lock. Sound because committed files
+    * are immutable and uniquely named; [[drop]] and maintenance
+    * rewrites evict the topic all the same, so the heap falls back
+    * once a topic is gone. */
+  private val tail =
+    new java.util.LinkedHashMap[Path, TailEntry](16, 0.75f, true)
+  private var tailHeld = 0L
+
+  /** The tail's byte budget; a file estimated above it is not held.
+    * var: a spec shrinks it. */
+  private[streaming] var TailBudgetBytes: Long = Runtime.getRuntime.maxMemory / 32
+
+  /** Heap estimate of one record: object and array headers plus the
+    * payload bytes (header names as UTF-16 strings). */
+  private def heldBytes(r: DirectRecord): Long = {
+    def len(a: Array[Byte]) = if (a == null) 0L else a.length.toLong
+    var n = 96L + len(r.key) + len(r.value)
+    r.headers.foreach { case (k, v) => n += 64L + 2L * k.length + len(v) }
+    n
+  }
+
+  /** Hold a just-committed file's records (offset order), evicting
+    * the least recently used files past the budget. */
+  private def fillTail(file: Path, records: Array[DirectRecord]): Unit = {
+    val bytes = records.iterator.map(heldBytes).sum
+    tail.synchronized {
+      if (bytes <= TailBudgetBytes) {
+        val old = tail.put(cacheKey(file), new TailEntry(records, bytes))
+        tailHeld += bytes - (if (old == null) 0L else old.bytes)
+      }
+      val it = tail.values.iterator
+      while (tailHeld > TailBudgetBytes && it.hasNext) {
+        tailHeld -= it.next().bytes
+        it.remove()
+      }
+    }
+  }
+
+  /** Drop every tail entry under `topicDir`. */
+  private[streaming] def evictTail(topicDir: String): Unit = {
+    val dir = cacheKey(Paths.get(topicDir))
+    tail.synchronized {
+      val it = tail.entrySet.iterator
+      while (it.hasNext) {
+        val e = it.next()
+        if (e.getKey.startsWith(dir)) { tailHeld -= e.getValue.bytes; it.remove() }
+      }
+    }
+  }
+
+  /** Estimated bytes the tail holds, in all or under `topicDir`. */
+  private[streaming] def tailBytes(topicDir: Option[String] = None): Long = {
+    val dir = topicDir.map(d => cacheKey(Paths.get(d)))
+    tail.synchronized {
+      if (dir.isEmpty) tailHeld
+      else {
+        var n = 0L
+        tail.forEach((k, v) => if (k.startsWith(dir.get)) n += v.bytes)
+        n
+      }
+    }
+  }
+
+  /** Records of ONE committed file with offset in [fromOffset,
+    * toOffset]: from the log tail when it holds the file, with no
+    * file I/O, else [[readDirectFile]]. A miss does not fill the
+    * tail, so Spark-written files, files evicted for size and
+    * another process's files are read from parquet every time. */
+  private[streaming] def readDirect(file: Path, fromOffset: Long,
+      toOffset: Long): Seq[DirectRecord] = {
+    val held = tail.synchronized(tail.get(cacheKey(file)))
+    if (held == null) readDirectFile(file, fromOffset, toOffset)
+    else {
+      // binary search: offsets ascend, one record each
+      val offsets = held.records.view.map(_.offset)
+      val from = offsets.search(fromOffset).insertionPoint
+      val until =
+        if (toOffset == Long.MaxValue) offsets.length
+        else offsets.search(toOffset + 1).insertionPoint
+      scala.collection.immutable.ArraySeq.unsafeWrapArray(held.records.slice(from, until))
+    }
+  }
+
   /** Scan ONE committed parquet file for records with offset in
     * [fromOffset, toOffset] — parquet-hadoop directly on the driver,
-    * no Spark job. The bounds ride as a FilterPredicate so row groups
-    * outside the span are skipped from their stats (the same
-    * pushdown the DSv2 reader compiles,
+    * no Spark job, no log tail. The bounds ride as a FilterPredicate
+    * so row groups outside the span are skipped from their stats
+    * (the same pushdown the DSv2 reader compiles,
     * `GraftTopicFileReader.offsetPredicate`). Timestamp decode
     * handles INT96 and INT64 millis/micros/nanos like the DSv2
     * reader's `GraftTopicFileReader.decodeTimestamp`. */
-  private[streaming] def readDirect(file: Path, fromOffset: Long,
+  private[streaming] def readDirectFile(file: Path, fromOffset: Long,
       toOffset: Long): Seq[DirectRecord] = {
     import org.apache.parquet.filter2.predicate.FilterApi
     import org.apache.parquet.schema.LogicalTypeAnnotation
@@ -1488,7 +1601,7 @@ object TopicLog {
             case _ => v / 1000L // micros
           }
         case other => throw new UnsupportedOperationException(
-          s"TopicLog.readDirect: timestamp stored as $other")
+          s"TopicLog.readDirectFile: timestamp stored as $other")
       }
     }
     def headersOf(g: Group, idx: Int): Seq[(String, Array[Byte])] = {
@@ -1631,6 +1744,7 @@ object TopicLog {
   def drop(root: String, topic: String): Unit = {
     deleteRecursively(Paths.get(s"$root/$topic"))
     resolvedManifests.remove(cacheKey(Paths.get(s"$root/$topic/_manifests")))
+    evictTail(s"$root/$topic")
   }
 
   // flat {"<int>":<long>,...} maps — hand-rolled to avoid deps

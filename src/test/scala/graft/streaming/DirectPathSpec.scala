@@ -280,6 +280,8 @@ class DirectPathSpec extends AnyFunSuite {
     val root = tmpRoot()
     val log = TopicLog.create(spark, root, "d8", 1)
     log.produceDirect(directRows(0 until 10))
+    // this test is about the parquet read path: empty the log tail
+    TopicLog.evictTail(log.topicDir)
     val file = onlyDataFile(root)
     // warm: load the shared conf before the counted reads
     TopicLog.readDirect(file, 0L, Long.MaxValue)
@@ -319,6 +321,9 @@ class DirectPathSpec extends AnyFunSuite {
     val root = tmpRoot()
     val log = TopicLog.create(spark, root, "d9", 1)
     log.produceDirect(directRows(0 until 10))
+    assert(log.consumeForWire(0, 0, 100).map(_.offset) === (0L until 10L))
+    // this test is about the parquet read path: empty the log tail
+    TopicLog.evictTail(log.topicDir)
     val file = onlyDataFile(root)
     // rewrite the committed file through Hadoop's checksummed local
     // filesystem so it carries a sidecar; reads must check it
@@ -343,5 +348,176 @@ class DirectPathSpec extends AnyFunSuite {
     assert(failsChecksum(viaWire), viaWire)
     val direct = intercept[Exception] { TopicLog.readDirect(file, 0L, Long.MaxValue) }
     assert(failsChecksum(direct), direct)
+  }
+
+  /** A record as comparable values: byte arrays by content, null kept
+    * apart from empty. */
+  private def canon(rs: Seq[TopicLog.DirectRecord]) =
+    rs.map(r => (r.offset, r.timestampMs, Option(r.key).map(_.toSeq),
+      Option(r.value).map(_.toSeq),
+      r.headers.map { case (k, v) => (k, Option(v).map(_.toSeq)) }))
+
+  /** Requests whose records cover every shape a record can take. */
+  private def tailProduces(log: TopicLog): Unit = {
+    val unsorted: Map[String, Array[Byte]] =
+      Map("zeta" -> "z".getBytes,
+        "\u00e4-\u043a\u043b\u044e\u0447" -> "\u00fc".getBytes("UTF-8"),
+        "alpha" -> null)
+    log.produceDirect(Seq(
+      (0, null, Array.emptyByteArray, null, 0L),
+      (0, "k".getBytes, "v".getBytes, unsorted, -1L),
+      (0, Array.emptyByteArray, null, Map.empty[String, Array[Byte]], 1700000000000L),
+      (1, null, "only".getBytes, unsorted, 0L)))
+    // one request lists partition 0 twice, around partition 1
+    log.produceDirect(directRows(0 until 4, p = 0) ++ directRows(0 until 3, p = 1) ++
+      directRows(4 until 7, p = 0))
+    log.produceDirect(directRows(7 until 12, p = 0))
+  }
+
+  test("the log tail serves exactly what a cold parquet read returns") {
+    val root = tmpRoot()
+    val log = TopicLog.create(spark, root, "d12", 2)
+    tailProduces(log)
+    assert(log.logEndOffsets() === Map(0 -> 15L, 1 -> 4L))
+    assert(TopicLog.tailBytes(Some(log.topicDir)) > 0)
+
+    val m = log.currentManifest().get
+    assert(m.files.size === 5)
+    val whole = m.files.map { f =>
+      val file = Paths.get(log.dataDir).resolve(f)
+      val (lo, hi) = m.fileRanges(f)
+      val windows = Seq(
+        (lo, hi), (lo, Long.MaxValue), // the whole file
+        (lo + (hi - lo) / 2, lo + (hi - lo) / 2), (hi, hi), // one offset
+        (lo + 1, lo), // empty
+        (hi + 1, hi + 5), (hi + 1, Long.MaxValue)) // past the end
+      windows.foreach { case (from, to) =>
+        val cold = TopicLog.readDirectFile(file, from, to)
+        assert(canon(TopicLog.readDirect(file, from, to)) === canon(cold),
+          s"$f [$from, $to]")
+      }
+      file -> canon(TopicLog.readDirectFile(file, lo, hi))
+    }
+    assert(whole.map(_._2.size).sum === 19)
+
+    // the wire read equals the Spark consume() path
+    def viaSpark(p: Int, from: Long, max: Int, to: Long) =
+      log.consume(p, from, max).filter(col("offset") <= to)
+        .select("offset", "key", "value", "headers", "ts").collect().toSeq
+        .map { r =>
+          TopicLog.DirectRecord(r.getAs[Long]("offset"),
+            r.getAs[java.sql.Timestamp]("ts").getTime,
+            r.getAs[Array[Byte]]("key"), r.getAs[Array[Byte]]("value"),
+            Option(r.getAs[Map[String, Array[Byte]]]("headers"))
+              .map(_.toSeq.sortBy(_._1)).getOrElse(Seq.empty))
+        }
+    for {
+      (p, end) <- Seq(0 -> 15L, 1 -> 4L)
+      (from, max, to) <- Seq((0L, 100, Long.MaxValue), (2L, 100, end - 2), // whole, inner
+        (1L, 1, Long.MaxValue), (end - 1, 100, end - 1), // one offset
+        (1L, 0, Long.MaxValue), (3L, 100, 2L), // empty
+        (end, 100, Long.MaxValue)) // past the end
+    } assert(canon(log.consumeForWire(p, from, max, to)) ===
+      canon(viaSpark(p, from, max, to)), s"$p [$from, $to] max $max")
+
+    // with the files gone only the tail can answer: every read above
+    // that a cold read matched was served from memory
+    whole.foreach { case (file, expected) =>
+      Files.delete(file)
+      assert(canon(TopicLog.readDirect(file, 0L, Long.MaxValue)) === expected)
+    }
+  }
+
+  test("the log tail is evicted when the topic is dropped") {
+    val root = tmpRoot()
+    val log = TopicLog.create(spark, root, "d13", 2)
+    val other = TopicLog.create(spark, root, "d13x", 1)
+    tailProduces(log)
+    other.produceDirect(directRows(0 until 3))
+    val otherHeld = TopicLog.tailBytes(Some(other.topicDir))
+    assert(TopicLog.tailBytes(Some(log.topicDir)) > 0)
+    assert(otherHeld > 0)
+    TopicLog.drop(root, "d13")
+    assert(TopicLog.tailBytes(Some(log.topicDir)) === 0L)
+    // a topic whose name extends the dropped one's keeps its entries
+    assert(TopicLog.tailBytes(Some(other.topicDir)) === otherHeld)
+  }
+
+  test("maintenance rewrites evict the topic's log tail") {
+    val root = tmpRoot()
+    val log = TopicLog.create(spark, root, "d14", 2)
+    tailProduces(log)
+    val before = canon(log.consumeForWire(0, 0, 100))
+    assert(before.map(_._1) === (0L until 15L))
+    log.compactFiles()
+    assert(TopicLog.tailBytes(Some(log.topicDir)) === 0L)
+    assert(canon(log.consumeForWire(0, 0, 100)) === before)
+
+    log.produceDirect(directRows(15 until 20, p = 0))
+    assert(TopicLog.tailBytes(Some(log.topicDir)) > 0)
+    log.truncateBefore(0, 5)
+    assert(TopicLog.tailBytes(Some(log.topicDir)) === 0L)
+    val after = log.consumeForWire(0, 0, 100)
+    assert(canon(after) === before.drop(5) ++ canon(directRows(15 until 20, p = 0)
+      .zipWithIndex.map { case ((_, k, v, h, ts), i) =>
+        TopicLog.DirectRecord(15L + i, ts, k, v,
+          Option(h).map(_.toSeq.sortBy(_._1)).getOrElse(Seq.empty))
+      }))
+    assert(canon(log.consumeForWire(1, 0, 100)).map(_._1) === (0L until 4L))
+  }
+
+  test("a produceDirect that does not commit adds nothing to the log tail") {
+    val root = tmpRoot()
+    val log = TopicLog.create(spark, root, "d15", 1)
+    val dir = Some(log.topicDir)
+    log.produceDirect(directRows(0 until 4))
+    val held = TopicLog.tailBytes(dir)
+    assert(held > 0)
+
+    log.failpointBeforeCommit = true
+    intercept[IllegalStateException] { log.produceDirect(directRows(4 until 8)) }
+    log.failpointBeforeCommit = false
+    assert(TopicLog.tailBytes(dir) === held)
+
+    // lose the CAS to a competing producer on the same partition
+    val rival = TopicLog.open(spark, root, "d15")
+    var afterRival = -1L
+    log.interleaveHook = () => {
+      log.interleaveHook = () => ()
+      rival.produceDirect(directRows(4 until 6))
+      afterRival = TopicLog.tailBytes(dir)
+    }
+    intercept[TopicLog.ConcurrentProduceException] {
+      log.produceDirect(directRows(4 until 9))
+    }
+    assert(afterRival > held)
+    assert(TopicLog.tailBytes(dir) === afterRival)
+    assert(log.consumeForWire(0, 0, 100).map(_.offset) === (0L until 6L))
+  }
+
+  test("the log tail stays within its byte budget") {
+    val root = tmpRoot()
+    val log = TopicLog.create(spark, root, "d16", 1)
+    val dir = Some(log.topicDir)
+    // records of one size, so every 10-record file holds the same bytes
+    def rows(n: Int) = Seq.fill(n)((0, "key".getBytes, "value".getBytes,
+      Map("h" -> "x".getBytes), 1L))
+    val saved = TopicLog.TailBudgetBytes
+    try {
+      log.produceDirect(rows(10))
+      val perFile = TopicLog.tailBytes(dir)
+      TopicLog.TailBudgetBytes = perFile * 3 + perFile / 2
+      (1 until 8).foreach { _ =>
+        log.produceDirect(rows(10))
+        assert(TopicLog.tailBytes() <= TopicLog.TailBudgetBytes)
+      }
+      // the three newest files are held, the rest evicted
+      assert(TopicLog.tailBytes(dir) === perFile * 3)
+      // a file over the budget is not held at all
+      log.produceDirect(rows(40))
+      assert(TopicLog.tailBytes(dir) === perFile * 3)
+      assert(TopicLog.tailBytes() <= TopicLog.TailBudgetBytes)
+      assert(log.consumeForWire(0, 0, 200).map(_.offset) === (0L until 120L))
+    } finally TopicLog.TailBudgetBytes = saved
   }
 }
