@@ -1726,7 +1726,8 @@ class Broker(spark: SparkSession, root: String) {
           (p, 3, -1L, Seq.empty[(Long, WireRecordV2)]) })
       else {
         val log = topic(name)
-        val ends = log.logEndOffsets()
+        val manifest = log.currentManifest()
+        val ends = manifest.map(_.ends).getOrElse(log.logEndOffsets())
         (name, parts.map { case (p, off, maxBytes) =>
           val end = ends.getOrElse(p, 0L)
           // read_committed (isolation 1, v4+): nothing at or past the
@@ -1775,8 +1776,8 @@ class Broker(spark: SparkSession, root: String) {
             while (!full && taken == 0 && morePasses) {
             // direct parquet range read — no Spark job per fetch
             // (manifest file ranges prune; legacy topics fall back)
-            val rows = log.consumeForWire(p, fromOff,
-              (collectCap / 12 + 1).toInt)
+            val rows = log.consumeForWireIn(manifest, p, fromOff,
+              (collectCap / 12 + 1).toInt, Long.MaxValue)
             morePasses = rows.nonEmpty
             if (rows.nonEmpty)
               fromOff = rows.last.offset + 1
@@ -2360,6 +2361,24 @@ class Broker(spark: SparkSession, root: String) {
     }.map { name => topic(name).compact(); name }
     finally wl.unlock()
   }
+
+  /** Retire every topic's manifest history with
+    * [[TopicLog.retireHistory]] (keeping its default newest versions).
+    * Without it a topic's `_manifests` grows by one version per
+    * produce for its whole life and every resolve lists them all. It
+    * deletes no data files — orphan cleanup stays with an explicit
+    * [[TopicLog.vacuum]] — so it needs no maintenance lock. A topic
+    * that fails (say, deleted meanwhile) is reported and skipped; the
+    * rest still run. Returns the topics retired. */
+  def retireManifestHistory(): Seq[String] =
+    listTopics().filter { name =>
+      try { topic(name).retireHistory(); true }
+      catch {
+        case e: Exception =>
+          System.err.println(s"graft manifest retirement of topic $name failed: $e")
+          false
+      }
+    }
 
   /** CreatePartitions v0–v3: grow a topic's partition count — what
     * kafka-topics.sh --alter --partitions N sends. Kafka semantics
@@ -3043,7 +3062,6 @@ class Broker(spark: SparkSession, root: String) {
         Broker.MaxShareAckRange)
       return (42, s"acknowledgement batches expand past " +
         s"${Broker.MaxShareAckRange} offsets in one partition entry")
-    val expanded = Seq.newBuilder[(Long, ShareGroup.AckType)]
     acks.foreach { b =>
       val n = b.lastOffset - b.firstOffset + 1
       if (b.firstOffset < 0 || n <= 0 || n > Broker.MaxShareAckRange)
@@ -3053,22 +3071,26 @@ class Broker(spark: SparkSession, root: String) {
         return (42, "acknowledge_types must carry one entry or one per offset")
       if (b.ackTypes.exists(t => t < 0 || t > 3))
         return (42, s"unknown acknowledge type ${b.ackTypes.find(t => t < 0 || t > 3).get}")
-      (0L until n).foreach { i =>
-        val t = if (b.ackTypes.length == 1) b.ackTypes.head
-          else b.ackTypes(i.toInt)
-        // 0 = gap (client confirming an undeliverable hole) and 3 =
-        // reject both land terminal-archived; 1 accepts, 2 releases
-        val ack: ShareGroup.AckType = t match {
-          case 1 => ShareGroup.Accept
-          case 2 => ShareGroup.Release
-          case _ => ShareGroup.Reject
-        }
-        expanded += ((b.firstOffset + i, ack))
-      }
     }
-    val results = sg.acknowledge(partition, expanded.result(), now, memberId)
-    if (results.forall(_._2)) (0, null)
-    else (121, s"${results.count(!_._2)} offset(s) not in an " +
+    // 0 = gap (client confirming an undeliverable hole) and 3 = reject
+    // both land terminal-archived; 1 accepts, 2 releases
+    def ackOf(t: Int): ShareGroup.AckType = t match {
+      case 1 => ShareGroup.Accept
+      case 2 => ShareGroup.Release
+      case _ => ShareGroup.Reject
+    }
+    val ranges = acks.map { b =>
+      val ackAt: Long => ShareGroup.AckType =
+        if (b.ackTypes.length == 1) { val t = ackOf(b.ackTypes.head); _ => t }
+        else {
+          val ts = b.ackTypes.map(ackOf).toArray
+          o => ts((o - b.firstOffset).toInt)
+        }
+      (b.firstOffset, b.lastOffset, ackAt)
+    }
+    val failed = sg.acknowledgeRanges(partition, ranges, now, memberId)
+    if (failed == 0) (0, null)
+    else (121, s"$failed offset(s) not in an " +
       "acquirable-by-you state (never acquired, lock lapsed, or terminal)")
   }
 
@@ -3185,6 +3207,12 @@ class Broker(spark: SparkSession, root: String) {
       else {
         val log = topic(name)
         val sg = shareGroup(name, group)
+        // one manifest resolve serves the pass: every partition's
+        // acquisition window and range reads come from it. Both must:
+        // an offset acquired past this manifest's end would read as a
+        // hole and be archived undelivered
+        val manifest = log.currentManifest()
+        val ends = manifest.map(_.ends).getOrElse(log.logEndOffsets())
         // phase 1 — METADATA: every partition's acknowledgements and
         // acquisitions land as ONE durability unit (a single CAS
         // snapshot per request, the per-request share-state write a
@@ -3217,7 +3245,8 @@ class Broker(spark: SparkSession, root: String) {
                         math.min(req.batchSize, recordBudget)))
                     else math.max(1, math.min(
                       sg.maxInFlightRecords, p.partitionMaxBytes / 12))
-                  val acq = sg.acquire(p.partition, maxRecs, now, member)
+                  val acq = sg.acquireBelow(p.partition,
+                    ends.getOrElse(p.partition, 0L), maxRecs, now, member)
                   if (req.version >= 1) recordBudget -= acq.size
                   Right((p.partition, ackErr, ackMsg, acq))
                 }
@@ -3231,33 +3260,14 @@ class Broker(spark: SparkSession, root: String) {
         (name, phase1.map {
           case Left(resp) => resp
           case Right((partition, ackErr, ackMsg, acq)) =>
-            // direct parquet range read over the acquired span — no
-            // Spark job per (partition × window); the span is bounded
-            // by maxInFlightRecords so the scan is window-sized
-            val rows =
-              if (acq.isEmpty) Seq.empty[TopicLog.DirectRecord]
-              else {
-                val offs = acq.map(_.offset)
-                val lo = offs.min; val hi = offs.max
-                val contiguous =
-                  hi - lo + 1 == offs.distinct.size
-                val span = log.consumeForWire(partition, lo,
-                  math.min(hi - lo + 1, Int.MaxValue.toLong).toInt, hi)
-                if (contiguous) span
-                else { val want = offs.toSet; span.filter(r => want(r.offset)) }
-              }
-            val present = rows.map(_.offset).toSet
-            val gaps = acq.map(_.offset).filterNot(present)
+            val (records, runs, gaps) =
+              readAcquired(log, manifest, partition, acq.toArray)
             if (gaps.nonEmpty)
               sg.acknowledge(partition,
                 gaps.map(_ -> (ShareGroup.Reject: ShareGroup.AckType)),
                 now, member)
-            val records = rows.sortBy(_.offset).map { r =>
-              (r.offset, WireRecordV2(r.timestampMs, r.key, r.value,
-                r.headers))
-            }
             ShareFetchPartResp(partition, 0, null, ackErr, ackMsg,
-              records, Broker.acquiredRuns(acq.filter(a => present(a.offset))))
+              records, runs)
         })
       }
     }
@@ -3273,6 +3283,52 @@ class Broker(spark: SparkSession, root: String) {
       0, advertisedHost, advertisedPort,
       version = req.version, acquisitionLockTimeoutMs = lockMs),
       acquiredCount)
+  }
+
+  /** The records of one partition's acquisitions (ascending by
+    * offset, as [[ShareGroup.acquire]] hands them out): each run of
+    * consecutive offsets is one direct range read — no Spark job per
+    * (partition × window), and the span is bounded by
+    * maxInFlightRecords. Walking each run against the records it
+    * returned yields the response's records, its (first, last,
+    * delivery count) runs over the offsets served, and the offsets the
+    * log could not serve. */
+  private def readAcquired(log: TopicLog, manifest: Option[TopicLog.Manifest],
+      partition: Int, acq: Array[ShareGroup.AcquiredRecord])
+      : (Seq[(Long, KafkaWire.WireRecordV2)], Seq[KafkaWire.ShareAcquired],
+         Seq[Long]) = {
+    val records = Vector.newBuilder[(Long, KafkaWire.WireRecordV2)]
+    val runs = Vector.newBuilder[KafkaWire.ShareAcquired]
+    val gaps = List.newBuilder[Long]
+    var run: KafkaWire.ShareAcquired = null
+    var i = 0
+    while (i < acq.length) {
+      var j = i
+      while (j + 1 < acq.length && acq(j + 1).offset == acq(j).offset + 1) j += 1
+      val lo = acq(i).offset
+      val hi = acq(j).offset
+      val rows = log.consumeForWireIn(manifest, partition, lo, j - i + 1, hi)
+        .iterator.buffered
+      while (i <= j) {
+        val a = acq(i)
+        while (rows.hasNext && rows.head.offset < a.offset) rows.next()
+        if (rows.hasNext && rows.head.offset == a.offset) {
+          val r = rows.next()
+          records += ((r.offset, KafkaWire.WireRecordV2(r.timestampMs, r.key,
+            r.value, r.headers)))
+          if (run != null && a.offset == run.lastOffset + 1 &&
+              a.deliveryCount == run.deliveryCount)
+            run = run.copy(lastOffset = a.offset)
+          else {
+            if (run != null) runs += run
+            run = KafkaWire.ShareAcquired(a.offset, a.offset, a.deliveryCount)
+          }
+        } else gaps += a.offset
+        i += 1
+      }
+    }
+    if (run != null) runs += run
+    (records.result(), runs.result(), gaps.result())
   }
 
   /** ShareAcknowledge (key 79, v0): acknowledge without fetching.
@@ -3847,26 +3903,6 @@ object Broker {
     * MaxFetchSessions discipline): oldest-first eviction; an evicted
     * client sees SHARE_SESSION_NOT_FOUND and reopens at epoch 0. */
   val MaxShareSessions = 256
-
-  /** Compress ascending acquisitions into the response's
-    * (first, last, delivery_count) runs: consecutive offsets at one
-    * delivery count collapse to a single entry. */
-  private[streaming] def acquiredRuns(
-      acq: Seq[ShareGroup.AcquiredRecord]): Seq[KafkaWire.ShareAcquired] = {
-    val out = Seq.newBuilder[KafkaWire.ShareAcquired]
-    var run: KafkaWire.ShareAcquired = null
-    acq.sortBy(_.offset).foreach { a =>
-      if (run != null && a.offset == run.lastOffset + 1 &&
-          a.deliveryCount == run.deliveryCount)
-        run = run.copy(lastOffset = a.offset)
-      else {
-        if (run != null) out += run
-        run = KafkaWire.ShareAcquired(a.offset, a.offset, a.deliveryCount)
-      }
-    }
-    if (run != null) out += run
-    out.result()
-  }
 
   /** Cap on remembered (producer_id, topic, partition) sequence
     * states — oldest-first eviction; an evicted producer's next send

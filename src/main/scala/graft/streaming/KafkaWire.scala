@@ -118,6 +118,25 @@ object KafkaWire {
     out.toByteArray
   }
 
+  /** A response body writer with its size prefix reserved, sized for
+    * per-partition record payloads (null = none) plus their partitions'
+    * fixed fields: the record-carrying responses write their batches
+    * into it once and [[closeFrame]] fills the prefix in, so a fetch's
+    * records are not copied again by [[frame]]. */
+  private def openFrame(payloads: Seq[Seq[Array[Byte]]]): ByteArrayOutputStream = {
+    val hint = 128L + payloads.iterator.flatMap(_.iterator)
+      .map(b => 64L + (if (b == null) 0 else b.length)).sum
+    val out = new ByteArrayOutputStream(math.min(hint, Int.MaxValue - 64L).toInt)
+    writeInt32(out, 0)
+    out
+  }
+
+  private def closeFrame(out: ByteArrayOutputStream): Array[Byte] = {
+    val b = out.toByteArray
+    ByteBuffer.wrap(b).putInt(0, b.length - 4)
+    b
+  }
+
   private def unframe(bytes: Array[Byte]): ByteBuffer = {
     val buf = ByteBuffer.wrap(bytes)
     val size = buf.getInt
@@ -1452,19 +1471,32 @@ object KafkaWire {
       s"unsupported Fetch version $version")
     val flexible = version >= 12
     val byId = version >= 13
-    val out = new ByteArrayOutputStream()
+    val payloads = topics.map { case (name, parts) =>
+      parts.map { case (_, _, _, records) =>
+        if (records.isEmpty) Array.empty[Byte]
+        else if (version >= 4)
+          // compression applies only to the magic-2 path — legacy
+          // message sets would need the nested-wrapper form no
+          // modern client expects back
+          encodeRecordBatchV2WithOffsets(records.head._2.timestampMs,
+            records, compressionByTopic.getOrElse(name, compression))
+        else encodeMessageSetV0(
+          records.map { case (off, rec) => (off, WireRecord(rec.key, rec.value)) })
+      }
+    }
+    val out = openFrame(payloads)
     writeInt32(out, correlationId)
     if (flexible) writeUVarInt(out, 0) // response header v1 tag buffer
     val w = new WR(out, flexible)
     if (version >= 1) w.i32(throttleTimeMs)
     if (version >= 7) { w.i16(errorCode); w.i32(sessionId) }
     w.count(topics.length)
-    topics.foreach { case (name, parts) =>
+    topics.iterator.zip(payloads.iterator).foreach { case ((name, parts), tPayloads) =>
       // v13: the id — for an unresolved marker name this recovers and
       // echoes the REQUEST's original topic_id, per the protocol
       if (byId) w.uuid(idOfName(name)) else w.str(name)
       w.count(parts.length)
-      parts.foreach { case (p, err, hw, records) =>
+      parts.iterator.zip(tPayloads.iterator).foreach { case ((p, err, hw, _), payload) =>
         w.i32(p); w.i16(err); w.i64(hw)
         if (version >= 4) {
           w.i64(lso.getOrElse((name, p), hw)) // last_stable_offset
@@ -1477,23 +1509,13 @@ object KafkaWire {
           w.count(0)
           if (version >= 11) w.i32(-1) // preferred_read_replica
         }
-        val payload =
-          if (records.isEmpty) Array.empty[Byte]
-          else if (version >= 4)
-            // compression applies only to the magic-2 path — legacy
-            // message sets would need the nested-wrapper form no
-            // modern client expects back
-            encodeRecordBatchV2WithOffsets(records.head._2.timestampMs,
-              records, compressionByTopic.getOrElse(name, compression))
-          else encodeMessageSetV0(
-            records.map { case (off, rec) => (off, WireRecord(rec.key, rec.value)) })
         w.bytes(payload)
         w.tags()
       }
       w.tags()
     }
     w.tags()
-    frame(out.toByteArray)
+    closeFrame(out)
   }
 
   def decodeFetchResponse(version: Int, bytes: Array[Byte],
@@ -5809,7 +5831,8 @@ object KafkaWire {
   final case class UnsupportedCompressionException(codec: Int)
     extends RuntimeException(s"unsupported compression codec $codec")
 
-  private def compress(codec: Int, bytes: Array[Byte]): Array[Byte] = {
+  private def compress(codec: Int, bytes: Array[Byte], off: Int,
+      len: Int): Array[Byte] = {
     val out = new ByteArrayOutputStream()
     val cs: java.io.OutputStream = codec match {
       case CompressionGzip   => new java.util.zip.GZIPOutputStream(out)
@@ -5818,7 +5841,7 @@ object KafkaWire {
       case CompressionZstd   => new com.github.luben.zstd.ZstdOutputStream(out)
       case other             => throw UnsupportedCompressionException(other)
     }
-    cs.write(bytes); cs.close()
+    cs.write(bytes, off, len); cs.close()
     out.toByteArray
   }
 
@@ -5856,15 +5879,6 @@ object KafkaWire {
       baseSequence: Int, records: Seq[WireRecordV2],
       transactional: Boolean = false)
 
-  private def writeZigZagVarLong(out: ByteArrayOutputStream, value: Long): Unit = {
-    var v = (value << 1) ^ (value >> 63)
-    while ((v & ~0x7fL) != 0L) {
-      out.write(((v & 0x7f) | 0x80).toInt)
-      v >>>= 7
-    }
-    out.write(v.toInt)
-  }
-
   private def readZigZagVarLong(buf: ByteBuffer): Long = {
     var value = 0L
     var shift = 0
@@ -5877,84 +5891,143 @@ object KafkaWire {
     (value >>> 1) ^ -(value & 1)
   }
 
-  private def writeVarBytes(out: ByteArrayOutputStream, b: Array[Byte]): Unit =
-    if (b == null) writeZigZagVarLong(out, -1)
-    else {
-      writeZigZagVarLong(out, b.length)
-      out.write(b, 0, b.length)
-    }
-
   private def readVarBytes(buf: ByteBuffer): Array[Byte] = {
     val n = readZigZagVarLong(buf).toInt
     if (n < 0) null
     else { val b = new Array[Byte](n); buf.get(b); b }
   }
 
-  private def encodeRecordV2(offsetDelta: Int, tsDelta: Long,
-      r: WireRecordV2): Array[Byte] = {
-    val body = new ByteArrayOutputStream()
-    body.write(0) // record attributes
-    writeZigZagVarLong(body, tsDelta)
-    writeZigZagVarLong(body, offsetDelta)
-    writeVarBytes(body, r.key)
-    writeVarBytes(body, r.value)
-    writeZigZagVarLong(body, r.headers.length)
-    r.headers.foreach { case (k, v) =>
-      writeVarBytes(body, k.getBytes(UTF_8))
-      writeVarBytes(body, v)
-    }
-    val bytes = body.toByteArray
-    val out = new ByteArrayOutputStream()
-    writeZigZagVarLong(out, bytes.length)
-    out.write(bytes, 0, bytes.length)
-    out.toByteArray
+  /** Bytes of `value` as a zigzag varint. */
+  private def zigZagSize(value: Long): Int = {
+    var v = (value << 1) ^ (value >> 63)
+    var n = 1
+    while ((v & ~0x7fL) != 0L) { n += 1; v >>>= 7 }
+    n
   }
+
+  /** Bytes of a varint-length-prefixed byte field (−1 = null). */
+  private def varBytesSize(b: Array[Byte]): Int =
+    if (b == null) 1 else zigZagSize(b.length) + b.length
+
+  /** A write cursor over an exact-size array: the record encoder's
+    * only sink, so each record byte is copied once, into place. */
+  private final class Cursor(val buf: Array[Byte], var pos: Int) {
+    def byte(v: Int): Unit = { buf(pos) = v.toByte; pos += 1 }
+    def zigZag(value: Long): Unit = {
+      var v = (value << 1) ^ (value >> 63)
+      while ((v & ~0x7fL) != 0L) {
+        buf(pos) = ((v & 0x7f) | 0x80).toByte
+        pos += 1
+        v >>>= 7
+      }
+      buf(pos) = v.toByte
+      pos += 1
+    }
+    def varBytes(b: Array[Byte]): Unit =
+      if (b == null) zigZag(-1)
+      else {
+        zigZag(b.length)
+        System.arraycopy(b, 0, buf, pos, b.length)
+        pos += b.length
+      }
+  }
+
+  /** Bytes before the first record of a magic-2 batch. */
+  private val BatchHeaderSize = 61
 
   /** Batch encoder core over EXPLICIT offset deltas — a fetch of a
     * compacted log legitimately carries gaps, so deltas are data, not
-    * indexes. */
+    * indexes. One pass sizes every record from its varint lengths,
+    * a second writes the records into an exact-size array after the
+    * 61-byte header, and the header and its CRC32C are written in
+    * place last. A compressed batch compresses that same records
+    * section and copies it once behind the header. */
   private def encodeBatchV2Core(baseOffset: Long, baseTimestampMs: Long,
-      recs: Seq[(Int, WireRecordV2)], producerId: Long = -1L,
-      producerEpoch: Int = -1, baseSequence: Int = -1,
+      n: Int, offsetDelta: Int => Int, record: Int => WireRecordV2,
+      producerId: Long = -1L, producerEpoch: Int = -1, baseSequence: Int = -1,
       compression: Int = CompressionNone,
       transactional: Boolean = false): Array[Byte] = {
     require(compression >= CompressionNone && compression <= CompressionZstd,
       s"encoder supports codecs none/gzip/snappy/lz4/zstd, not $compression")
-    val recsOut = new ByteArrayOutputStream()
+    // pass 1: each record's body size; header names are UTF-8 encoded
+    // once here and written from this list, in record order, below
+    val bodySizes = new Array[Int](n)
+    var headerNames: scala.collection.mutable.ArrayBuffer[Array[Byte]] = null
+    var recordsLen = 0L
     // spec: maxTimestamp is the max RECORD timestamp (-1 if none) —
     // seeding from the base would name a timestamp no record carries
     // whenever every record predates the base
     var maxTs = -1L
-    recs.foreach { case (delta, r) =>
+    var i = 0
+    while (i < n) {
+      val r = record(i)
       maxTs = math.max(maxTs, r.timestampMs)
-      val enc = encodeRecordV2(delta, r.timestampMs - baseTimestampMs, r)
-      recsOut.write(enc, 0, enc.size)
+      var body = 1 + zigZagSize(r.timestampMs - baseTimestampMs) +
+        zigZagSize(offsetDelta(i)) + varBytesSize(r.key) + varBytesSize(r.value)
+      if (r.headers.isEmpty) body += 1
+      else {
+        if (headerNames == null) headerNames = scala.collection.mutable.ArrayBuffer.empty
+        body += zigZagSize(r.headers.length)
+        r.headers.foreach { case (k, v) =>
+          val kb = k.getBytes(UTF_8)
+          headerNames += kb
+          body += varBytesSize(kb) + varBytesSize(v)
+        }
+      }
+      bodySizes(i) = body
+      recordsLen += zigZagSize(body) + body
+      i += 1
     }
-    val afterCrc = new ByteArrayOutputStream()
+    require(BatchHeaderSize + recordsLen <= Int.MaxValue,
+      s"record batch of $recordsLen bytes exceeds the array limit")
+    // pass 2: the records, straight into place
+    val plain = new Array[Byte](BatchHeaderSize + recordsLen.toInt)
+    val c = new Cursor(plain, BatchHeaderSize)
+    var h = 0
+    i = 0
+    while (i < n) {
+      val r = record(i)
+      c.zigZag(bodySizes(i))
+      c.byte(0) // record attributes
+      c.zigZag(r.timestampMs - baseTimestampMs)
+      c.zigZag(offsetDelta(i))
+      c.varBytes(r.key)
+      c.varBytes(r.value)
+      c.zigZag(r.headers.length)
+      r.headers.foreach { case (_, v) =>
+        c.varBytes(headerNames(h)); h += 1
+        c.varBytes(v)
+      }
+      i += 1
+    }
+    val out =
+      if (compression == CompressionNone) plain
+      else {
+        val packed = compress(compression, plain, BatchHeaderSize,
+          recordsLen.toInt)
+        val o = new Array[Byte](BatchHeaderSize + packed.length)
+        System.arraycopy(packed, 0, o, BatchHeaderSize, packed.length)
+        o
+      }
+    val bb = ByteBuffer.wrap(out)
+    bb.putLong(0, baseOffset)
+    bb.putInt(8, out.length - 12) // batchLength: the bytes after itself
+    bb.putInt(12, -1) // partitionLeaderEpoch
+    bb.put(16, 2.toByte) // magic
     // attributes: codec bits 0–2, create time, bit 4 = transactional
-    writeInt16(afterCrc, compression | (if (transactional) 0x10 else 0))
-    writeInt32(afterCrc, recs.lastOption.map(_._1).getOrElse(-1)) // lastOffsetDelta
-    writeInt64(afterCrc, baseTimestampMs)
-    writeInt64(afterCrc, maxTs)
-    writeInt64(afterCrc, producerId)
-    writeInt16(afterCrc, producerEpoch)
-    writeInt32(afterCrc, baseSequence)
-    writeInt32(afterCrc, recs.length)
-    val recBytes =
-      if (compression == CompressionNone) recsOut.toByteArray
-      else compress(compression, recsOut.toByteArray)
-    afterCrc.write(recBytes, 0, recBytes.length)
-    val protectedBytes = afterCrc.toByteArray
+    bb.putShort(21, (compression | (if (transactional) 0x10 else 0)).toShort)
+    bb.putInt(23, if (n == 0) -1 else offsetDelta(n - 1)) // lastOffsetDelta
+    bb.putLong(27, baseTimestampMs)
+    bb.putLong(35, maxTs)
+    bb.putLong(43, producerId)
+    bb.putShort(51, producerEpoch.toShort)
+    bb.putInt(53, baseSequence)
+    bb.putInt(57, n)
+    // the CRC covers attributes through the end of the records
     val crc = new java.util.zip.CRC32C()
-    crc.update(protectedBytes)
-    val out = new ByteArrayOutputStream()
-    writeInt64(out, baseOffset)
-    writeInt32(out, 4 + 1 + 4 + protectedBytes.length) // batchLength: epoch+magic+crc+rest
-    writeInt32(out, -1) // partitionLeaderEpoch
-    out.write(2) // magic
-    writeInt32(out, crc.getValue.toInt)
-    out.write(protectedBytes, 0, protectedBytes.length)
-    out.toByteArray
+    crc.update(out, 21, out.length - 21)
+    bb.putInt(17, crc.getValue.toInt)
+    out
   }
 
   /** Encode one record batch (offsets contiguous from baseOffset;
@@ -5962,11 +6035,13 @@ object KafkaWire {
     * producer's batch carries its producerId/epoch/baseSequence; the
     * default (-1,-1,-1) is the non-idempotent form. */
   def encodeRecordBatchV2(batch: RecordBatchV2,
-      compression: Int = CompressionNone): Array[Byte] =
+      compression: Int = CompressionNone): Array[Byte] = {
+    val recs = batch.records.toArray
     encodeBatchV2Core(batch.baseOffset, batch.baseTimestampMs,
-      batch.records.zipWithIndex.map { case (r, i) => (i, r) },
+      recs.length, i => i, recs(_),
       batch.producerId, batch.producerEpoch, batch.baseSequence, compression,
       batch.transactional)
+  }
 
   /** Encode one batch of (absoluteOffset, record) pairs — the
     * broker-side fetch form, where compaction gaps survive as
@@ -5975,10 +6050,10 @@ object KafkaWire {
       records: Seq[(Long, WireRecordV2)],
       compression: Int = CompressionNone): Array[Byte] = {
     require(records.nonEmpty, "empty batch has no base offset")
-    val base = records.head._1
-    encodeBatchV2Core(base, baseTimestampMs,
-      records.map { case (off, r) => ((off - base).toInt, r) },
-      compression = compression)
+    val recs = records.toArray
+    val base = recs(0)._1
+    encodeBatchV2Core(base, baseTimestampMs, recs.length,
+      i => (recs(i)._1 - base).toInt, recs(_)._2, compression = compression)
   }
 
   private def decodeBatchV2Core(bytes: Array[Byte])
@@ -7193,7 +7268,14 @@ object KafkaWire {
       nodeId: Int = 0, host: String = null, port: Int = 0,
       compression: Int = CompressionNone, version: Int = 0,
       acquisitionLockTimeoutMs: Int = 0): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
+    val payloads = topics.map { case (_, parts) =>
+      parts.map { p =>
+        if (p.records.isEmpty) null
+        else encodeRecordBatchV2WithOffsets(p.records.head._2.timestampMs,
+          p.records, compression)
+      }
+    }
+    val out = openFrame(payloads)
     responseHeader(out, correlationId, flexible = true)
     val w = new WR(out, flexible = true)
     w.i32(0) // throttle_time_ms
@@ -7205,20 +7287,16 @@ object KafkaWire {
     // ShareFetchResponse schema
     if (version >= 1) w.i32(acquisitionLockTimeoutMs)
     w.count(topics.length)
-    topics.foreach { case (name, parts) =>
+    topics.iterator.zip(payloads.iterator).foreach { case ((name, parts), ps) =>
       w.uuid(idOfName(name))
       w.count(parts.length)
-      parts.foreach { p =>
+      parts.iterator.zip(ps.iterator).foreach { case (p, payload) =>
         w.i32(p.partition)
         w.i16(p.errorCode)
         w.str(p.errorMessage)
         w.i16(p.ackErrorCode)
         w.str(p.ackErrorMessage)
         w.i32(nodeId); w.i32(0); w.tags() // current_leader (epoch 0)
-        val payload =
-          if (p.records.isEmpty) null
-          else encodeRecordBatchV2WithOffsets(p.records.head._2.timestampMs,
-            p.records, compression)
         w.bytes(payload)
         w.count(p.acquired.length)
         p.acquired.foreach { a =>
@@ -7236,7 +7314,7 @@ object KafkaWire {
       w.i32(nodeId); w.str(host); w.i32(port); w.str(null); w.tags()
     }
     w.tags()
-    frame(out.toByteArray)
+    closeFrame(out)
   }
 
   /** The v1 response's top-level acquisition_lock_timeout_ms, for

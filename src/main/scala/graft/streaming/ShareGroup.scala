@@ -36,11 +36,13 @@ import org.apache.spark.sql.functions.col
   *    is capped at `maxInFlightRecords` past the SPSO, which BOUNDS
   *    every state map (the delivery window is metadata a real broker
   *    also holds in memory — same class as fetch-session state).
-  *  - Every mutation write-throughs a full-state snapshot
-  *    (`<topicDir>/_share/<group>/v{N}.json`, the TxnStore/manifest
-  *    hard-link CAS), so acquisition locks, delivery counts, and the
-  *    SPSO survive a restart: a reopened group redelivers exactly the
-  *    un-acked records, never the acked ones.
+  *  - Every operation that changes state write-throughs a full-state
+  *    snapshot (`<topicDir>/_share/<group>/v{N}.json`, the
+  *    TxnStore/manifest hard-link CAS), so acquisition locks, delivery
+  *    counts, and the SPSO survive a restart: a reopened group
+  *    redelivers exactly the un-acked records, never the acked ones.
+  *    An operation that changes nothing (a long-poll retry on a
+  *    caught-up partition) writes nothing.
   *
   * Time is an explicit `now` parameter throughout (the coordinator
   * idiom): deterministic, testable, and replayable.
@@ -130,8 +132,7 @@ final class ShareGroup(log: TopicLog, val groupId: String,
     if (deferPersist) { dirtyDeferred = true; return }
     version += 1
     val body = ShareStore.render(version, log.numPartitions, i =>
-      ShareStore.PState(i, spso(i), acquired(i).toSeq.sortBy(_._1),
-        available(i).toSeq.sortBy(_._1), terminal(i).toSeq.sortBy(_._1)))
+      ShareStore.PState(i, spso(i), acquired(i), available(i), terminal(i)))
     try {
       ShareStore.commit(stateDir, version, body)
       // each snapshot is FULL state, so only the newest matters; keep
@@ -164,15 +165,17 @@ final class ShareGroup(log: TopicLog, val groupId: String,
       if (dc >= maxDeliveryAttempts) terminal(p)(off) = 'x'
       else available(p)(off) = dc
     }
-    advanceSpso(p)
-    dead.nonEmpty
+    advanceSpso(p) | dead.nonEmpty
   }
 
-  private def advanceSpso(p: Int): Unit = {
+  /** Moves the SPSO past terminal records; true when it moved. */
+  private def advanceSpso(p: Int): Boolean = {
+    val from = spso(p)
     while (terminal(p).contains(spso(p))) {
       terminal(p).remove(spso(p))
       spso(p) += 1
     }
+    spso(p) != from
   }
 
   /** Acquire up to `maxRecords` of the earliest Available records in
@@ -181,10 +184,19 @@ final class ShareGroup(log: TopicLog, val groupId: String,
     * archived in passing (and never returned). The scan is bounded by
     * the in-flight window, so state stays O(maxInFlightRecords). */
   def acquire(partition: Int, maxRecords: Int, now: Long,
-      consumerId: String = ""): Seq[AcquiredRecord] = synchronized {
+      consumerId: String = ""): Seq[AcquiredRecord] =
+    acquireBelow(partition, log.logEndOffsets().getOrElse(partition, 0L),
+      maxRecords, now, consumerId)
+
+  /** [[acquire]] below `end`, the partition's log end in the manifest
+    * the caller will read the acquired records from. The end must come
+    * from that same manifest: an end resolved later can acquire records
+    * an older manifest does not hold, and a reader that finds no
+    * record for an acquired offset archives it as a hole. */
+  def acquireBelow(partition: Int, end: Long, maxRecords: Int, now: Long,
+      consumerId: String): Seq[AcquiredRecord] = synchronized {
     val p = partition
-    expireLocks(p, now)
-    val end = log.logEndOffsets().getOrElse(p, 0L)
+    var changed = expireLocks(p, now)
     val windowEnd = math.min(end, spso(p) + maxInFlightRecords)
     val out = Seq.newBuilder[AcquiredRecord]
     var got = 0
@@ -195,6 +207,7 @@ final class ShareGroup(log: TopicLog, val groupId: String,
         if (dc >= maxDeliveryAttempts) { // poison: archive, skip
           available(p).remove(off)
           terminal(p)(off) = 'x'
+          changed = true
         } else {
           available(p).remove(off)
           acquired(p)(off) = (now + acquisitionLockMs, dc + 1, consumerId)
@@ -204,8 +217,7 @@ final class ShareGroup(log: TopicLog, val groupId: String,
       }
       off += 1
     }
-    advanceSpso(p)
-    persist()
+    if (advanceSpso(p) | changed | got > 0) persist()
     out.result()
   }
 
@@ -217,30 +229,64 @@ final class ShareGroup(log: TopicLog, val groupId: String,
     * INVALID_RECORD_STATE, in-band per record. */
   def acknowledge(partition: Int, acks: Seq[(Long, AckType)],
       now: Long, consumerId: String = ""): Seq[(Long, Boolean)] = synchronized {
-    val p = partition
-    expireLocks(p, now)
-    val results = acks.map { case (off, ack) =>
-      acquired(p).get(off) match {
-        case None => off -> false
-        case Some((_, _, holder)) if holder != consumerId =>
-          off -> false // not this consumer's acquisition (re-acquired
-                       // after a lapse, or never theirs)
-        case Some((_, dc, _)) =>
-          acquired(p).remove(off)
-          ack match {
-            case Accept => terminal(p)(off) = 'a'
-            case Reject => terminal(p)(off) = 'x'
-            case Release =>
-              if (dc >= maxDeliveryAttempts) terminal(p)(off) = 'x'
-              else available(p)(off) = dc
-          }
-          off -> true
+    val results = Seq.newBuilder[(Long, Boolean)]
+    ackRanges(partition, acks.map { case (off, ack) =>
+      (off, off, (_: Long) => ack) }, now, consumerId)(
+      (off, ok) => results += off -> ok)
+    results.result()
+  }
+
+  /** [[acknowledge]] over offset RANGES: each `(first, last, ackAt)`
+    * acknowledges offsets first..last, offset `o` as `ackAt(o)` — the
+    * wire's acknowledgement batches, applied without a per-offset
+    * list. Returns how many offsets failed. */
+  def acknowledgeRanges(partition: Int,
+      ranges: Seq[(Long, Long, Long => AckType)], now: Long,
+      consumerId: String = ""): Long = synchronized {
+    var failed = 0L
+    ackRanges(partition, ranges, now, consumerId)((_, ok) =>
+      if (!ok) failed += 1)
+    failed
+  }
+
+  /** The one acknowledgement pass both entry points share: expire
+    * lapsed locks, apply every range in order (each offset's outcome
+    * to `result`), advance the SPSO, and persist only when something
+    * changed. */
+  private def ackRanges(p: Int, ranges: Seq[(Long, Long, Long => AckType)],
+      now: Long, consumerId: String)(result: (Long, Boolean) => Unit)
+      : Unit = {
+    var changed = expireLocks(p, now)
+    ranges.foreach { case (first, last, ackAt) =>
+      var off = first
+      while (off <= last) {
+        val ok = ackOne(p, off, ackAt(off), consumerId)
+        changed |= ok
+        result(off, ok)
+        off += 1
       }
     }
-    advanceSpso(p)
-    persist()
-    results
+    if (advanceSpso(p) | changed) persist()
   }
+
+  /** One acknowledgement; false unless `off` is acquired by
+    * `consumerId` (never acquired, lapsed and re-acquired elsewhere,
+    * or terminal). */
+  private def ackOne(p: Int, off: Long, ack: AckType,
+      consumerId: String): Boolean =
+    acquired(p).get(off) match {
+      case Some((_, dc, holder)) if holder == consumerId =>
+        acquired(p).remove(off)
+        ack match {
+          case Accept => terminal(p)(off) = 'a'
+          case Reject => terminal(p)(off) = 'x'
+          case Release =>
+            if (dc >= maxDeliveryAttempts) terminal(p)(off) = 'x'
+            else available(p)(off) = dc
+        }
+        true
+      case _ => false
+    }
 
   /** The data for a set of acquired offsets — partition-pruned,
     * range-bounded read of the backing log. Acquisitions are almost
@@ -341,13 +387,22 @@ object ShareGroup {
 /** Versioned full-state snapshots for [[ShareGroup]] — the
   * TxnStore/ScramStore hard-link CAS idiom. All-numeric payload
   * (offsets, expiries, counts, 'a'/'x' flags), rendered per
-  * partition as compact colon/semicolon strings. */
+  * partition as compact colon/semicolon strings.
+  *
+  * Each state list is a run list: consecutive offsets with equal
+  * values render as one `first-last:<value>` entry (acquired
+  * `first-last:expiry:count:holder`, available `first-last:count`,
+  * terminal `first-last:flag`), so a snapshot costs O(runs), not
+  * O(records in flight). A one-offset run renders as `offset:<value>`,
+  * the per-offset form earlier snapshots hold throughout, so those
+  * still load. */
 private[streaming] object ShareStore {
 
+  /** One partition's state, one map entry per offset. */
   case class PState(partition: Int, spso: Long,
-      acquired: Seq[(Long, (Long, Int, String))],
-      available: Seq[(Long, Int)],
-      terminal: Seq[(Long, Char)])
+      acquired: collection.Map[Long, (Long, Int, String)],
+      available: collection.Map[Long, Int],
+      terminal: collection.Map[Long, Char])
 
   // consumer ids are caller-chosen strings: base64-armored in the
   // snapshot (the TxnStore idiom) so the regex parser never meets a
@@ -357,39 +412,70 @@ private[streaming] object ShareStore {
   private def unb64(s: String): String =
     new String(Base64.getUrlDecoder.decode(s), "UTF-8")
 
+  /** `m` as `;`-separated runs in offset order, each value written by
+    * `value`. */
+  private def renderRuns[V](sb: StringBuilder, m: collection.Map[Long, V],
+      value: V => String): Unit = {
+    val offs = m.keysIterator.toArray
+    java.util.Arrays.sort(offs)
+    var i = 0
+    while (i < offs.length) {
+      val v = m(offs(i))
+      var j = i
+      while (j + 1 < offs.length && offs(j + 1) == offs(j) + 1 &&
+          m(offs(j + 1)) == v) j += 1
+      if (i > 0) sb += ';'
+      sb.append(offs(i))
+      if (j > i) sb.append('-').append(offs(j))
+      sb.append(':').append(value(v))
+      i = j + 1
+    }
+  }
+
   private[streaming] def render(version: Long, nPartitions: Int,
       state: Int => PState): String = {
-    val parts = (0 until nPartitions).map { i =>
+    val sb = new StringBuilder(s"""{"version":$version,"partitions":[""")
+    (0 until nPartitions).foreach { i =>
       val p = state(i)
-      val acq = p.acquired.map { case (o, (e, d, h)) =>
-        s"$o:$e:$d:${b64(h)}" }.mkString(";")
-      val av = p.available.map { case (o, d) => s"$o:$d" }.mkString(";")
-      val tm = p.terminal.map { case (o, c) => s"$o:$c" }.mkString(";")
-      s"""{"p":${p.partition},"spso":${p.spso},"acq":"$acq","avail":"$av","term":"$tm"}"""
-    }.mkString(",")
-    s"""{"version":$version,"partitions":[$parts]}"""
+      if (i > 0) sb += ','
+      sb.append(s"""{"p":${p.partition},"spso":${p.spso},"acq":"""")
+      renderRuns[(Long, Int, String)](sb, p.acquired,
+        { case (e, d, h) => s"$e:$d:${b64(h)}" })
+      sb.append("\",\"avail\":\"")
+      renderRuns[Int](sb, p.available, _.toString)
+      sb.append("\",\"term\":\"")
+      renderRuns[Char](sb, p.terminal, _.toString)
+      sb.append("\"}")
+    }
+    sb.append("]}").toString
   }
 
   private val PartRe =
     ("""\{"p":(\d+),"spso":(\d+),"acq":"([^"]*)","avail":"([^"]*)",""" +
       """"term":"([^"]*)"\}""").r
 
+  /** A run list expanded to one entry per offset, each run's value
+    * parsed from its fields after the offsets by `value`. */
+  private def parseRuns[V](list: String)(value: Array[String] => V)
+      : Map[Long, V] =
+    list.split(';').iterator.filter(_.nonEmpty).flatMap { t =>
+      val f = t.split(':')
+      val v = value(f.tail)
+      val dash = f(0).indexOf('-')
+      val (lo, hi) =
+        if (dash < 0) (f(0).toLong, f(0).toLong)
+        else (f(0).take(dash).toLong, f(0).drop(dash + 1).toLong)
+      (lo to hi).iterator.map(_ -> v)
+    }.toMap
+
   private[streaming] def parse(s: String): Seq[PState] =
     PartRe.findAllMatchIn(s).map { m =>
-      val acq = m.group(3).split(';').toSeq.filter(_.nonEmpty).map { t =>
-        t.split(':') match {
-          case Array(o, e, d, h) => o.toLong -> ((e.toLong, d.toInt, unb64(h)))
-          case Array(o, e, d) => o.toLong -> ((e.toLong, d.toInt, ""))
-        }
+      val acq = parseRuns(m.group(3)) {
+        case Array(e, d, h) => (e.toLong, d.toInt, unb64(h))
+        case Array(e, d) => (e.toLong, d.toInt, "")
       }
-      val av = m.group(4).split(';').toSeq.filter(_.nonEmpty).map { t =>
-        val Array(o, d) = t.split(':')
-        o.toLong -> d.toInt
-      }
-      val tm = m.group(5).split(';').toSeq.filter(_.nonEmpty).map { t =>
-        val Array(o, c) = t.split(':')
-        o.toLong -> c.head
-      }
+      val av = parseRuns(m.group(4))(f => f(0).toInt)
+      val tm = parseRuns(m.group(5))(f => f(0).head)
       PState(m.group(1).toInt, m.group(2).toLong, acq, av, tm)
     }.toSeq
 

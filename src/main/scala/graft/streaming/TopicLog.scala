@@ -343,18 +343,27 @@ class TopicLog private (
       .filter(f => Files.getLastModifiedTime(f).toMillis <= cutoff)
       .toList
     orphans.foreach(Files.delete)
-    // retire history: checkpoint first so the newest version is a full
-    // snapshot, then delete versions older than the newest
-    // `keepManifests` — but NEVER at or above the anchor snapshot the
-    // current state resolves from (deltas above it would dangle)
+    retireHistory(keepManifests)
+    orphans.size
+  }
+
+  /** The manifest half of [[vacuum]]: checkpoint first so the newest
+    * version is a full snapshot, then delete versions older than the
+    * newest `keepManifests` — but NEVER at or above the anchor
+    * snapshot the current state resolves from (deltas above it would
+    * dangle). Touches only `_manifests`, never the data dir, so it is
+    * safe beside produces (the checkpoint is a CAS commit) and beside
+    * rewrites; a resolve racing it re-lists. Returns the versions
+    * deleted. */
+  def retireHistory(keepManifests: Int = 10): Int = {
     checkpoint()
     val versions = TopicLog.listVersions(manifestsDir).sorted
     val anchor = versions.reverse
       .find(v => TopicLog.isSnapshotVersion(manifestsDir, v)).getOrElse(0L)
-    versions.dropRight(math.max(keepManifests, 1))
+    val retired = versions.dropRight(math.max(keepManifests, 1))
       .filter(_ < anchor)
-      .foreach(v => Files.deleteIfExists(manifestsDir.resolve(s"v$v.json")))
-    orphans.size
+    retired.foreach(v => Files.deleteIfExists(manifestsDir.resolve(s"v$v.json")))
+    retired.size
   }
 
   /** Replica/follower append path: records that ALREADY carry
@@ -423,10 +432,18 @@ class TopicLog private (
     * maintenance read-lock) so compaction cannot rewrite files
     * mid-read. */
   def consumeDirect(partition: Int, fromOffset: Long, maxRecords: Int,
-      toOffset: Long = Long.MaxValue): Option[Seq[TopicLog.DirectRecord]] = {
+      toOffset: Long = Long.MaxValue): Option[Seq[TopicLog.DirectRecord]] =
+    consumeDirectIn(currentManifest(), partition, fromOffset, maxRecords,
+      toOffset)
+
+  /** [[consumeDirect]] against a manifest the caller already resolved:
+    * a wire request resolves once and reads every partition from it. */
+  private[streaming] def consumeDirectIn(manifest: Option[TopicLog.Manifest],
+      partition: Int, fromOffset: Long, maxRecords: Int,
+      toOffset: Long): Option[Seq[TopicLog.DirectRecord]] = {
     if (maxRecords <= 0 || toOffset < fromOffset)
-      return if (currentManifest().isDefined) Some(Seq.empty) else None
-    currentManifest().flatMap { m =>
+      return if (manifest.isDefined) Some(Seq.empty) else None
+    manifest.flatMap { m =>
       val prefix = s"partition=$partition/"
       val mine = m.files.filter(_.startsWith(prefix))
       val ranged = mine.map(f => m.fileRanges.get(f).map(r => (f, r._1, r._2)))
@@ -436,6 +453,14 @@ class TopicLog private (
           .filter { case (_, lo, hi) => hi >= fromOffset && lo <= toOffset }
           .sortBy(_._2)
         val out = scala.collection.mutable.ArrayBuffer.empty[TopicLog.DirectRecord]
+        // candidates ascend by first offset and produce files do not
+        // overlap, so the records usually arrive in offset order: sort
+        // only when they did not
+        def sortOut(): Unit = {
+          var i = 1
+          while (i < out.length && out(i - 1).offset <= out(i).offset) i += 1
+          if (i < out.length) out.sortInPlaceBy(_.offset)
+        }
         // once maxRecords are in hand, files starting past the k-th
         // smallest collected offset cannot improve the answer — with
         // the usual non-overlapping produce files this stops after
@@ -447,12 +472,14 @@ class TopicLog private (
               Paths.get(dataDir).resolve(f), fromOffset,
               math.min(toOffset, kth))
             if (out.size >= maxRecords) {
-              val sorted = out.sortInPlaceBy(_.offset)
-              kth = sorted(maxRecords - 1).offset
+              sortOut()
+              kth = out(maxRecords - 1).offset
             }
           }
         }
-        Some(out.sortBy(_.offset).take(maxRecords).toSeq)
+        sortOut()
+        if (out.length > maxRecords) out.dropRightInPlace(out.length - maxRecords)
+        Some(scala.collection.immutable.ArraySeq.unsafeWrapArray(out.toArray))
       }
     }
   }
@@ -462,19 +489,28 @@ class TopicLog private (
     * shape (legacy pre-range topics only). */
   def consumeForWire(partition: Int, fromOffset: Long, maxRecords: Int,
       toOffset: Long = Long.MaxValue): Seq[TopicLog.DirectRecord] =
-    consumeDirect(partition, fromOffset, maxRecords, toOffset).getOrElse {
-      consume(partition, fromOffset, maxRecords)
-        .filter(col("offset") <= toOffset)
-        .select("offset", "key", "value", "headers", "ts").collect().toSeq
-        .map { r =>
-          TopicLog.DirectRecord(r.getAs[Long]("offset"),
-            Option(r.getAs[java.sql.Timestamp]("ts")).map(_.getTime)
-              .getOrElse(-1L),
-            r.getAs[Array[Byte]]("key"), r.getAs[Array[Byte]]("value"),
-            Option(r.getAs[Map[String, Array[Byte]]]("headers"))
-              .map(_.toSeq.sortBy(_._1)).getOrElse(Seq.empty))
-        }
-    }
+    consumeForWireIn(currentManifest(), partition, fromOffset, maxRecords,
+      toOffset)
+
+  /** [[consumeForWire]] against a manifest the caller already resolved
+    * ([[consumeDirectIn]]). */
+  private[streaming] def consumeForWireIn(manifest: Option[TopicLog.Manifest],
+      partition: Int, fromOffset: Long, maxRecords: Int,
+      toOffset: Long): Seq[TopicLog.DirectRecord] =
+    consumeDirectIn(manifest, partition, fromOffset, maxRecords, toOffset)
+      .getOrElse {
+        consume(partition, fromOffset, maxRecords)
+          .filter(col("offset") <= toOffset)
+          .select("offset", "key", "value", "headers", "ts").collect().toSeq
+          .map { r =>
+            TopicLog.DirectRecord(r.getAs[Long]("offset"),
+              Option(r.getAs[java.sql.Timestamp]("ts")).map(_.getTime)
+                .getOrElse(-1L),
+              r.getAs[Array[Byte]]("key"), r.getAs[Array[Byte]]("value"),
+              Option(r.getAs[Map[String, Array[Byte]]]("headers"))
+                .map(_.toSeq.sortBy(_._1)).getOrElse(Seq.empty))
+          }
+      }
 
   /** TIME-TRAVEL read: the topic AS OF manifest version `version` —
     * exactly the files that committed snapshot listed (every manifest
@@ -1159,8 +1195,12 @@ object TopicLog {
 
   private[graft] def isSnapshotVersion(dir: Path, v: Long): Boolean = {
     val f = dir.resolve(s"v$v.json")
-    Files.exists(f) && parseVersion(Files.readString(f)).files.isDefined
+    // the key alone tells a snapshot from a delta; parsing a whole
+    // snapshot's file list costs O(files) for nothing
+    Files.exists(f) && SnapshotKey.findFirstIn(Files.readString(f)).isDefined
   }
+
+  private val SnapshotKey = "\"files\"\\s*:\\s*\\[".r
 
   /** Resolve the current manifest: the last resolve of `dir` carried
     * forward over the versions committed since, else the full walk
@@ -1446,6 +1486,13 @@ object TopicLog {
       .withType(directWriteSchema)
       .withCompressionCodec(
         org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
+      // offsets are unique and values and header values are opaque
+      // payloads: a dictionary over them is built only to be dropped
+      // for plain encoding. Keys (repeated on keyed topics) and ts (one
+      // per request) keep theirs.
+      .withDictionaryEncoding("offset", false)
+      .withDictionaryEncoding("value", false)
+      .withDictionaryEncoding("headers.key_value.value", false)
       .build()
     val factory = new SimpleGroupFactory(directWriteSchema)
     try rows.foreach { case (offset, key, value, headers, tsMillis) =>

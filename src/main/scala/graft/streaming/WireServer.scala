@@ -29,7 +29,8 @@ class WireServer(private val broker: Broker,
     /** > 0 enables the maintenance tick: at most every this many ms,
       * the accept loop schedules `broker.applyRetention` on the pool —
       * so a long-lived listener ENFORCES each topic's `retention.ms`
-      * instead of accepting the config and never applying it. The
+      * instead of accepting the config and never applying it — then
+      * compaction and `broker.retireManifestHistory`. The
       * default 0 keeps the engine's no-background-work contract for
       * embedded/test use; rewrites are serialized against wire
       * produces by [[Broker.maintenanceLock]], so the tick is safe
@@ -140,6 +141,7 @@ class WireServer(private val broker: Broker,
             // override, else the 0.5 Kafka default) so a quiet topic
             // never pays the whole-topic rewrite
             broker.applyCompaction(WireServer.DefaultMinDirtyRatio)
+            broker.retireManifestHistory()
           } catch {
             case e: Exception if running =>
               System.err.println(s"graft WireServer maintenance tick error: $e")

@@ -249,6 +249,29 @@ class DirectPathSpec extends AnyFunSuite {
       Seq((0L, 3L), (4L, 9L)))
   }
 
+  test("writeDirect writes offsets, values and header values without a dictionary") {
+    import org.apache.parquet.column.Encoding
+    val file = Files.createTempDirectory("graft-direct-dict").resolve("f.parquet")
+    // every column repeats a few values, so a dictionary would pay off
+    // on each: only the writer's per-column setting decides (unique
+    // values would fall back to PLAIN with the dictionary on, too)
+    TopicLog.writeDirect(file, (0 until 500).iterator.map { i =>
+      ((i / 125).toLong, s"k${i % 4}".getBytes("UTF-8"),
+        s"value-${i % 4}".getBytes("UTF-8"),
+        Map("h" -> s"h${i % 4}".getBytes("UTF-8")), 1700000000000L)
+    })
+    val r = TopicLog.openFooter(new org.apache.hadoop.fs.Path(file.toString))
+    val encodings = try r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala)
+      .map(c => c.getPath.toDotString -> c.getEncodings.asScala.toSet).toMap
+    finally r.close()
+    def dictionary(col: String) = encodings(col).exists(_.usesDictionary)
+    Seq("offset", "value", "headers.key_value.value").foreach { col =>
+      assert(!dictionary(col) && encodings(col).contains(Encoding.PLAIN),
+        s"$col: ${encodings(col)}")
+    }
+    Seq("key", "ts").foreach(col => assert(dictionary(col), s"$col: ${encodings(col)}"))
+  }
+
   test("a produceDirect whose write throws leaves no staging and commits nothing") {
     val root = tmpRoot()
     val log = TopicLog.create(spark, root, "d11", 2)

@@ -265,4 +265,124 @@ class RetentionTickSpec extends AnyFunSuite {
         "the active-file rule: a cap below one file keeps the newest file")
     } finally { sock.close(); server.close() }
   }
+
+  /** 300 one-record wire produces to `name`, alternating partitions. */
+  private def produce300(sock: Socket, name: String): Unit =
+    (1 to 300).foreach { i =>
+      val (_, res) = decodeProduceResponse(9, exchange(sock,
+        encodeProduceRequest(9, i, "cli", null, 1, 30000,
+          Seq((name, Seq((i % 2, Seq(recAt(System.currentTimeMillis(), s"r$i")))))))))
+      assert(res.head._2.head._2 === 0, s"produce $i errored")
+    }
+
+  test("the tick retires manifest history; a cold resolve equals the manifest before") {
+    val root = Files.createTempDirectory("graft-tickvac").toString
+    val broker = new Broker(spark, root)
+    broker.createTopic("hist", 2)
+    val server = new WireServer(broker, retentionTickMs = 200L).start()
+    val sock = new Socket("127.0.0.1", server.boundPort)
+    try {
+      produce300(sock, "hist")
+      val log = broker.topic("hist")
+      val before = log.currentManifest().get
+      // once produces stop, the next tick leaves the newest
+      // keepManifests (10) versions
+      val deadline = System.currentTimeMillis() + 30000
+      while (log.manifestVersions().size > 10 &&
+          System.currentTimeMillis() < deadline) Thread.sleep(100)
+      assert(log.manifestVersions().size <= 10,
+        s"${log.manifestVersions().size} versions after 300 produces")
+      val cold = TopicLog.resolveManifestFull(
+        java.nio.file.Paths.get(log.topicDir, "_manifests")).get
+      assert((cold.files, cold.ends, cold.fileRanges) ===
+        ((before.files, before.ends, before.fileRanges)))
+      assert(cold.ends.values.sum === 300L)
+    } finally { sock.close(); server.close() }
+  }
+
+  test("with the tick off, manifest history is left alone") {
+    val root = Files.createTempDirectory("graft-notick").toString
+    val broker = new Broker(spark, root)
+    broker.createTopic("kept", 2)
+    val server = new WireServer(broker).start()
+    val sock = new Socket("127.0.0.1", server.boundPort)
+    try {
+      val log = broker.topic("kept")
+      produce300(sock, "kept")
+      Thread.sleep(1500)
+      // v0 (the first produce's empty manifest), then one per produce
+      assert(log.manifestVersions() === (0L to 300L))
+    } finally { sock.close(); server.close() }
+  }
+
+  /** `n` records to partition 0 of `name`, one wire produce. */
+  private def produceWire(broker: Broker, corr: Int, name: String,
+      n: Int): Unit = {
+    val recs = (1 to n).map(i => recAt(System.currentTimeMillis(), s"c$corr-$i"))
+    val (_, res) = decodeProduceResponse(9, broker.handleProduce(
+      encodeProduceRequest(9, corr, "cli", null, 1, 30000,
+        Seq((name, Seq((0, recs)))))))
+    assert(res.head._2.head._2 === 0, s"produce $corr errored")
+  }
+
+  /** Copies of a live data file, aged past vacuum's `minAgeMs`: to a
+    * vacuum they are crash orphans to delete. */
+  private def plantAgedOrphans(log: TopicLog, n: Int): Seq[java.nio.file.Path] = {
+    val dd = java.nio.file.Paths.get(log.dataDir)
+    val live = dd.resolve(log.currentManifest().get.files.head)
+    val old = java.nio.file.attribute.FileTime.fromMillis(
+      System.currentTimeMillis() - 2 * TopicLog.DefaultVacuumMinAgeMs)
+    (1 to n).map { i =>
+      val f = live.resolveSibling(s"orphan-$i.parquet")
+      Files.copy(live, f)
+      Files.setLastModifiedTime(f, old)
+      f
+    }
+  }
+
+  test("history retirement deletes no data file and runs beside a DeleteRecords rewrite") {
+    val root = Files.createTempDirectory("graft-retire").toString
+    val broker = new Broker(spark, root)
+    broker.createTopic("trunc", 1)
+    (1 to 3).foreach(c => produceWire(broker, c, "trunc", 10))
+    val log = broker.topic("trunc")
+    val orphans = plantAgedOrphans(log, 20)
+    assert(broker.retireManifestHistory() === Seq("trunc"))
+    assert(orphans.forall(Files.exists(_)),
+      "only an explicit vacuum deletes data files")
+    // DeleteRecords lists the data dir and deletes every file in it:
+    // a retirement deleting files in between would fail it half-done
+    val retired = new ConcurrentLinkedQueue[Seq[String]]()
+    val truncating = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val retirer = new Thread(() =>
+      while (truncating.get) retired.add(broker.retireManifestHistory()))
+    retirer.start()
+    val (_, res) = try decodeDeleteRecordsResponse(2, broker.handleDeleteRecords(
+      encodeDeleteRecordsRequest(2, 9, "adm", Seq(("trunc", Seq((0, 12L)))),
+        30000)))
+    finally { truncating.set(false); retirer.join(60000) }
+    assert(res.head._2.head === ((0, 12L, 0)))
+    assert(!retired.isEmpty)
+    retired.forEach(r => assert(r === Seq("trunc")))
+    val m = log.currentManifest().get
+    assert(m.files.forall(f =>
+      Files.exists(java.nio.file.Paths.get(log.dataDir, f))))
+    assert(log.consumeForWire(0, 0L, 100).map(_.offset) === (12L until 30L))
+  }
+
+  test("a topic whose history retirement fails does not stop the others") {
+    val root = Files.createTempDirectory("graft-retire-err").toString
+    val broker = new Broker(spark, root)
+    broker.createTopic("a-broken", 1)
+    broker.createTopic("b-fine", 1)
+    (1 to 12).foreach { c =>
+      produceWire(broker, c, "a-broken", 1)
+      produceWire(broker, c, "b-fine", 1)
+    }
+    // a version "file" that is a directory: resolving the topic fails
+    Files.createDirectories(java.nio.file.Paths.get(
+      broker.topic("a-broken").topicDir, "_manifests", "v999.json"))
+    assert(broker.retireManifestHistory() === Seq("b-fine"))
+    assert(broker.topic("b-fine").manifestVersions().size <= 10)
+  }
 }

@@ -177,6 +177,83 @@ class ShareWireSpec extends AnyFunSuite {
     } finally { sock.close(); server.close() }
   }
 
+  test("a hole the log no longer holds inside the acquired window archives; the SPSO passes it") {
+    val root = Files.createTempDirectory("graft-sharewire").toString
+    val broker = new Broker(spark, root)
+    val log = broker.createTopic("h", 1)
+    // k1 twice: compaction drops offset 1, a hole between 0 and 2
+    log.produceDirect(Seq("k0", "k1", "k1", "k2").map(k =>
+      (0, k.getBytes("UTF-8"), s"v-$k".getBytes("UTF-8"),
+        Map.empty[String, Array[Byte]], 1700000000000L)))
+    log.compact()
+    val server = new WireServer(broker).start()
+    val sock = new Socket("127.0.0.1", server.boundPort)
+    try {
+      val r1 = decodeShareFetchResponse(exchange(sock,
+        encodeShareFetchRequest(1, "cli", "hg", "m1", 0,
+          Seq("h" -> Seq(ShareFetchPartition(0, 1 << 20, Seq.empty))),
+          version = 1, maxRecords = 10, batchSize = 10)),
+        topicIdResolverFor(Seq("h")), version = 1)
+      val p1 = r1._4.head._2.head
+      assert(p1.records.map(_._1) === Seq(0L, 2L, 3L))
+      assert(p1.acquired === Seq(ShareAcquired(0L, 0L, 1), ShareAcquired(2L, 3L, 1)))
+      // accepting what was served moves the SPSO past the archived hole
+      val r2 = decodeShareFetchResponse(exchange(sock,
+        encodeShareFetchRequest(2, "cli", "hg", "m1", -1,
+          Seq("h" -> Seq(ShareFetchPartition(0, 1 << 20,
+            Seq(ShareAckBatch(0L, 0L, Seq(1)), ShareAckBatch(2L, 3L, Seq(1)))))),
+          version = 1)),
+        topicIdResolverFor(Seq("h")), version = 1)
+      assert(r2._4.head._2.head.ackErrorCode === 0)
+      assert(broker.shareGroup("h", "hg").startOffset(0) === 4L)
+    } finally { sock.close(); server.close() }
+  }
+
+  test("ShareFetch racing produces delivers every record: acquisition stops at the manifest it reads") {
+    val root = Files.createTempDirectory("graft-sharerace").toString
+    val broker = new Broker(spark, root)
+    val log = broker.createTopic("race", 4)
+    val server = new WireServer(broker).start()
+    val sock = new Socket("127.0.0.1", server.boundPort)
+    val perPartition = 150
+    @volatile var producing = true
+    // one record per partition per commit, so commits land between a
+    // pass's manifest resolve and its later partitions' acquisitions
+    val producer = new Thread(() =>
+      try (0 until perPartition).foreach { i =>
+        log.produceDirect((0 until 4).map(p => (p, s"k$i".getBytes("UTF-8"),
+          s"v$i".getBytes("UTF-8"), Map.empty[String, Array[Byte]],
+          1700000000000L)))
+      } finally producing = false)
+    val got = Array.fill(4)(scala.collection.mutable.ArrayBuffer.empty[Long])
+    try {
+      producer.start()
+      var acks = Map.empty[Int, Seq[ShareAckBatch]]
+      var epoch = 0
+      val deadline = System.currentTimeMillis() + 60000
+      while ((producing || got.map(_.size).sum < 4 * perPartition) &&
+          System.currentTimeMillis() < deadline) {
+        val (_, err, _, topics) = decodeShareFetchResponse(exchange(sock,
+          encodeShareFetchRequest(epoch + 1, "cli", "rg", "m1", epoch,
+            Seq("race" -> (0 until 4).map(p =>
+              ShareFetchPartition(p, 1 << 20, acks.getOrElse(p, Seq.empty)))),
+            maxWaitMs = 20, version = 1, maxRecords = 40, batchSize = 40)),
+          topicIdResolverFor(Seq("race")), version = 1)
+        assert(err === 0)
+        val parts = topics.flatMap(_._2)
+        parts.foreach(pr => got(pr.partition) ++= pr.records.map(_._1))
+        acks = parts.map(pr => pr.partition -> pr.acquired.map(a =>
+          ShareAckBatch(a.firstOffset, a.lastOffset, Seq(1)))).toMap
+        epoch += 1
+      }
+      producer.join()
+      // an offset acquired past the pass's manifest would have read as
+      // a hole and been archived, never delivered
+      (0 until 4).foreach(p =>
+        assert(got(p).sorted === (0L until perPartition.toLong), s"partition $p"))
+    } finally { sock.close(); server.close() }
+  }
+
   test("ShareFetch v1 response carries acquisition_lock_timeout_ms; max_records 0 is ack-only") {
     val (broker, _) = mkBroker(6)
     val server = new WireServer(broker).start()
