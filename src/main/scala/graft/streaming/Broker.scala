@@ -219,6 +219,7 @@ class Broker(spark: SparkSession, root: String) {
     * the coordinator store started persisting them). */
   def deleteTopic(name: String): Unit = {
     TopicLog.drop(root, name)
+    commitQueues.remove(name)
     val changed = txnLock.synchronized {
       val keys = (abortedRanges.keys ++ openTxnFirsts.keys)
         .filter(_._1 == name).toSet
@@ -520,17 +521,16 @@ class Broker(spark: SparkSession, root: String) {
         def produceWithRetry(): Option[Map[Int, Long]] = {
           val deadline = System.nanoTime() +
             math.max(req.timeoutMs, 1000).toLong * 1000000L
+          val direct = rows.map { case (k, v, h, ts, p) => (p, k, v, h, ts.getTime) }
           var attempt = 0
           var result: Option[Map[Int, Long]] = None
           var retrying = true
           while (retrying)
             try {
-              // driver-direct append (no Spark job): request-sized
-              // batches through the same staging + CAS commit as the
-              // DataFrame path — see TopicLog.produceDirect
-              result = Some(log.produceDirect(rows.map {
-                case (k, v, h, ts, p) => (p, k, v, h, ts.getTime)
-              }))
+              // driver-direct append (no Spark job), committed together
+              // with the topic's other in-flight wire produces — see
+              // appendGrouped
+              result = Some(appendGrouped(name, log, direct))
               retrying = false
             } catch {
               case _: TopicLog.ConcurrentProduceException =>
@@ -610,6 +610,86 @@ class Broker(spark: SparkSession, root: String) {
     if (req.acks == 0) (Array.empty[Byte], throttleMs)
     else (encodeProduceResponse(req.version, req.correlationId, results,
       throttleMs), throttleMs)
+  }
+
+  /** Per-topic queues of wire produces waiting to commit. */
+  private val commitQueues =
+    new java.util.concurrent.ConcurrentHashMap[String, Broker.CommitQueue]()
+
+  /** Group commit (DeWitt et al., SIGMOD 1984) of one wire produce's
+    * rows to topic `name`: the rows join the topic's queue; a request
+    * that finds no commit in flight takes every queued request and
+    * commits them as ONE [[TopicLog.produceDirect]] (one file per
+    * partition, one manifest version), the others wait for its answer.
+    * Rows keep queue order, so each request's records of a partition
+    * are contiguous, and each request gets the per-partition log ends
+    * its own rows reached — exactly what committing it alone at that
+    * point would return. A group of one is the plain produce. A lost
+    * CAS fails every member with
+    * [[TopicLog.ConcurrentProduceException]], for each to retry; any
+    * other failure of a group retries each member alone, through its
+    * own handle, so only the request at fault fails. */
+  private[streaming] def appendGrouped(name: String, log: TopicLog,
+      rows: Seq[Broker.DirectRow]): Map[Int, Long] = {
+    val me = new Broker.GroupMember(log, rows)
+    val q = commitQueues.computeIfAbsent(name, _ => new Broker.CommitQueue)
+    var interrupted = false
+    val group = q.synchronized {
+      q.pending += me
+      // uninterruptible: once queued, a leader may commit these rows,
+      // so the request must stay to hear the outcome
+      while (me.outcome == null && q.committing)
+        try q.wait() catch { case _: InterruptedException => interrupted = true }
+      if (me.outcome != null) Nil
+      else {
+        q.committing = true
+        val g = q.pending.toList
+        q.pending.clear()
+        g
+      }
+    }
+    if (group.nonEmpty)
+      try commitGroup(group)
+      finally q.synchronized { q.committing = false; q.notifyAll() }
+    if (interrupted) Thread.currentThread().interrupt()
+    me.outcome.get
+  }
+
+  /** Wire produces of topic `name` queued behind an in-flight commit. */
+  private[streaming] def queuedProduces(name: String): Int =
+    Option(commitQueues.get(name)).fold(0)(q => q.synchronized(q.pending.size))
+
+  /** Commit `group` and give every member its outcome, whatever is
+    * thrown: a member left without one would wait forever. */
+  private def commitGroup(group: List[Broker.GroupMember]): Unit = {
+    import scala.util.{Failure, Success, Try}
+    def alone(m: Broker.GroupMember) = m.outcome = Try(m.log.produceDirect(m.rows))
+    try group match {
+      case only :: Nil => alone(only)
+      case leader :: _ =>
+        val all = group.flatMap(_.rows)
+        Try(leader.log.produceDirect(all)) match {
+          case Success(ends) =>
+            // the group's rows of partition p hold offsets
+            // [ends(p) − total(p), ends(p)), in queue order
+            val total = all.groupMapReduce(_._1)(_ => 1L)(_ + _)
+            val through = scala.collection.mutable.Map.empty[Int, Long]
+            group.foreach { m =>
+              m.rows.foreach(r => through(r._1) = through.getOrElse(r._1, 0L) + 1)
+              val own = m.rows.iterator.map(_._1).toSet
+              m.outcome = Success(ends ++ own.iterator.map { p =>
+                p -> (ends(p) - total(p) + through(p))
+              })
+            }
+          case Failure(e: TopicLog.ConcurrentProduceException) =>
+            group.foreach(_.outcome = Failure(e))
+          case Failure(_) => group.foreach(alone)
+        }
+      case Nil => ()
+    } catch {
+      case t: Throwable =>
+        group.foreach(m => if (m.outcome == null) m.outcome = Failure(t))
+    }
   }
 
   // --- idempotent producer (InitProducerId, key 22): the broker
@@ -3915,6 +3995,26 @@ object Broker {
     * (max.in.flight.requests.per.connection ≤ 5 is what keeps
     * idempotent ordering). */
   val MaxRecentBatchesPerProducer = 5
+
+  /** One wire-produce row as [[TopicLog.produceDirect]] takes it:
+    * (partition, key, value, headers, timestampMs). */
+  private[streaming] type DirectRow =
+    (Int, Array[Byte], Array[Byte], Map[String, Array[Byte]], Long)
+
+  /** One request's rows in a topic's group commit; `outcome` is set
+    * once, by the request that commits the group, before it notifies
+    * the queue's monitor (the waiters read it under that monitor). */
+  private[streaming] final class GroupMember(val log: TopicLog,
+      val rows: Seq[DirectRow]) {
+    var outcome: scala.util.Try[Map[Int, Long]] = null
+  }
+
+  /** A topic's wire produces waiting to commit, and whether a commit
+    * is in flight; guarded by its own monitor. */
+  private[streaming] final class CommitQueue {
+    val pending = scala.collection.mutable.ArrayBuffer.empty[GroupMember]
+    var committing = false
+  }
 
   /** Outcome of the produce idempotence gate for one partition entry. */
   private[streaming] sealed trait ProduceDecision

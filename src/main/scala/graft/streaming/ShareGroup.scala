@@ -75,6 +75,10 @@ final class ShareGroup(log: TopicLog, val groupId: String,
   private val terminal =
     Array.fill(log.numPartitions)(mutable.Map.empty[Long, Char])
   private val spso = Array.fill(log.numPartitions)(0L)
+  /** Per partition, a lower bound on the earliest lock expiry among
+    * its acquired offsets: no lock lapses before it, so lock expiry
+    * skips its scan until then. Long.MinValue = unknown (scan). */
+  private val expiryBound = Array.fill(log.numPartitions)(Long.MinValue)
   private var version = 0L
 
   private val stateDir: Path = Paths.get(log.topicDir, "_share",
@@ -154,11 +158,18 @@ final class ShareGroup(log: TopicLog, val groupId: String,
   }
 
   /** Lazy lock expiry: an expired acquisition returns to Available
-    * (count kept); exhausted counts archive right away. */
+    * (count kept); exhausted counts archive right away. The scan of
+    * the partition's acquired offsets runs only once `now` reaches
+    * [[expiryBound]], and leaves the bound at the earliest lock that
+    * stays. */
   private def expireLocks(p: Int, now: Long): Boolean = {
-    val dead = acquired(p).collect {
-      case (off, (exp, _, _)) if exp <= now => off
-    }.toSeq
+    if (now < expiryBound(p)) return advanceSpso(p)
+    val dead = mutable.ArrayBuffer.empty[Long]
+    var earliest = Long.MaxValue
+    acquired(p).foreach { case (off, (exp, _, _)) =>
+      if (exp <= now) dead += off else earliest = math.min(earliest, exp)
+    }
+    expiryBound(p) = earliest
     dead.foreach { off =>
       val dc = acquired(p)(off)._2
       acquired(p).remove(off)
@@ -211,6 +222,7 @@ final class ShareGroup(log: TopicLog, val groupId: String,
         } else {
           available(p).remove(off)
           acquired(p)(off) = (now + acquisitionLockMs, dc + 1, consumerId)
+          expiryBound(p) = math.min(expiryBound(p), now + acquisitionLockMs)
           out += AcquiredRecord(off, dc + 1, now + acquisitionLockMs)
           got += 1
         }

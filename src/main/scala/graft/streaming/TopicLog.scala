@@ -70,8 +70,9 @@ class TopicLog private (
     * protocol exists to make safe). */
   private[graft] var failpointBeforeCommit: Boolean = false
 
-  /** Test hook: runs between staging-move and manifest commit —
-    * lets a spec interleave a competing producer deterministically. */
+  /** Test hook: runs between the data files landing in the live tree
+    * and the manifest commit — lets a spec interleave a competing
+    * producer deterministically. */
   private[graft] var interleaveHook: () => Unit = () => ()
 
   /** Produce: route records to partitions, assign per-partition
@@ -163,10 +164,13 @@ class TopicLog private (
     * path's write, where a request carries a few thousand rows and a
     * Spark job is pure scheduling overhead. One offset-sorted parquet
     * file per partition is written with parquet-hadoop ON THE DRIVER
-    * (no Spark job), then the append rides the SAME staging-move +
-    * CAS manifest commit as [[produce]] — identical durability and
-    * concurrency semantics, including losing a conflicting race with
-    * [[TopicLog.ConcurrentProduceException]] for the caller to retry.
+    * (no Spark job), straight into `data/partition=N/` under a unique
+    * name (there is no Spark output directory to stage and move), then
+    * the append rides the SAME CAS manifest commit as [[produce]] —
+    * identical durability and concurrency semantics, including losing
+    * a conflicting race with [[TopicLog.ConcurrentProduceException]]
+    * for the caller to retry. A write that fails deletes the request's
+    * files.
     * Rows arrive in REQUEST order as (partition, key, value, headers,
     * timestampMs); offsets assign per partition in that order.
     * Once the commit lands, each written file's records also enter
@@ -183,7 +187,6 @@ class TopicLog private (
       s"produceDirect routed to nonexistent partition(s) " +
         s"${bad.sorted.mkString(",")} (topic $topic has $numPartitions)")
     val base = m0.ends
-    val staging = Paths.get(s"$topicDir/_staging/${java.util.UUID.randomUUID()}")
     // groupBy preserves encounter order within each group, so a
     // request listing a partition twice appends in request order; the
     // writer assigns offsets base..base+n-1, so each file's range is
@@ -193,15 +196,18 @@ class TopicLog private (
       (s"partition=$p/part-direct-${java.util.UUID.randomUUID()}.parquet",
         base.getOrElse(p, 0L), rs)
     }
-    val moved = try {
+    // each file goes straight to its final, uniquely named place:
+    // no manifest lists it yet, so readers cannot see it
+    val dd = Paths.get(dataDir)
+    locally {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
       import scala.concurrent.ExecutionContext.Implicits.global
       // per-partition files are independent — write them concurrently,
-      // and let every write end before the staging dir is removed
+      // and let every write end before a failure removes them
       val writes = files.map { case (rel, b, rs) =>
         Future {
-          val f = staging.resolve(rel)
+          val f = dd.resolve(rel)
           Files.createDirectories(f.getParent)
           TopicLog.writeDirect(f,
             rs.iterator.zipWithIndex.map { case ((_, k, v, h, ts), i) =>
@@ -209,17 +215,22 @@ class TopicLog private (
             })
         }
       }
-      writes.map(w => Await.ready(w, Duration.Inf).value.get).foreach(_.get)
-      moveStagedFiles(staging,
-        files.map { case (rel, b, rs) => rel -> (b, b + rs.size - 1) }.toMap)
-    } finally deleteRecursively(staging)
+      val outcomes = writes.map(w => Await.ready(w, Duration.Inf).value.get)
+      outcomes.collectFirst { case scala.util.Failure(e) => e }.foreach { e =>
+        files.foreach { case (rel, _, _) =>
+          try Files.deleteIfExists(dd.resolve(rel))
+          catch { case c: java.io.IOException => e.addSuppressed(c) }
+        }
+        throw e
+      }
+    }
     if (failpointBeforeCommit)
       throw new IllegalStateException("failpoint: crash before manifest commit")
     interleaveHook()
     val counts = byPart.map { case (p, rs) => p -> rs.size.toLong }
     val newEnds = counts.map { case (p, n) => p -> (base.getOrElse(p, 0L) + n) }
-    val ends = commitWithRetry(m0, moved.map(_._1),
-      moved.map { case (rel, lo, hi) => rel -> (lo, hi) }.toMap,
+    val ends = commitWithRetry(m0, files.map(_._1),
+      files.map { case (rel, b, rs) => rel -> (b, b + rs.size - 1) }.toMap,
       counts, newEnds, None).ends
     // committed files are immutable and uniquely named, so their
     // records may be served from memory from here on
@@ -233,15 +244,13 @@ class TopicLog private (
     ends
   }
 
-  /** Move every staged parquet file (per partition=N subdir) into the
-    * live tree under a unique name; returns manifest-relative paths
-    * with each file's [min,max] offset range, so every future PLANNING
-    * pass can prune by offset without opening any file. A range the
-    * caller already knows (`knownRanges`, by manifest-relative path)
-    * is taken as given; any other is read once from the file's footer
-    * here, at produce time. The caller removes the staging dir. */
-  private def moveStagedFiles(staging: Path,
-      knownRanges: Map[String, (Long, Long)] = Map.empty): Seq[(String, Long, Long)] = {
+  /** Move every staged parquet file (per partition=N subdir) that a
+    * Spark write left under `staging` into the live tree under a
+    * unique name; returns manifest-relative paths with each file's
+    * [min,max] offset range, read once from its footer here at produce
+    * time, so every future PLANNING pass can prune by offset without
+    * opening any file. The caller removes the staging dir. */
+  private def moveStagedFiles(staging: Path): Seq[(String, Long, Long)] = {
     val moved = TopicLog.listDir(staging).iterator
       .filter(_.getFileName.toString.startsWith("partition="))
       .flatMap { d =>
@@ -263,11 +272,7 @@ class TopicLog private (
     import scala.concurrent.ExecutionContext.Implicits.global
     Await.result(
       Future.traverse(moved) { case (rel, dest) =>
-        knownRanges.get(rel) match {
-          case Some((lo, hi)) => Future.successful((rel, lo, hi))
-          case None =>
-            Future { val (lo, hi) = TopicLog.offsetRangeOf(dest); (rel, lo, hi) }
-        }
+        Future { val (lo, hi) = TopicLog.offsetRangeOf(dest); (rel, lo, hi) }
       }, Duration.Inf)
   }
 
@@ -300,13 +305,27 @@ class TopicLog private (
       val next = Manifest(cur.version + 1, cur.files ++ newFiles,
         mergedEnds, batchId.orElse(cur.lastBatchId), writers,
         cur.fileRanges ++ newRanges)
+      // Delta commit: O(batch) bytes, not O(topic). Every
+      // CheckpointInterval-th version is a full snapshot so readers
+      // resolve at most that many deltas and vacuum can retire
+      // history behind it.
+      val snapshot = next.version % TopicLog.CheckpointInterval == 0
+      val body =
+        if (snapshot) TopicLog.renderManifest(next)
+        else TopicLog.renderDelta(next, newFiles, newRanges)
       try {
-        // Delta commit: O(batch) bytes, not O(topic). Every
-        // CheckpointInterval-th version is a full snapshot so readers
-        // resolve at most that many deltas and vacuum can retire
-        // history behind it.
-        if (next.version % TopicLog.CheckpointInterval == 0) commitManifest(next)
-        else commitDelta(next, newFiles, newRanges)
+        commitVersion(next.version, body)
+        // the next resolve starts from the version just linked, exactly
+        // as a cold resolve reads it back: a snapshot keeps only the
+        // ranges of its listed files
+        val landed =
+          if (!snapshot) next
+          else {
+            val live = next.files.toSet
+            next.copy(fileRanges = next.fileRanges.filter(kv => live(kv._1)))
+          }
+        TopicLog.remember(manifestsDir, new TopicLog.Resolved(next.version,
+          body.getBytes(java.nio.charset.StandardCharsets.UTF_8), landed))
         return next
       } catch {
         case _: java.nio.file.FileAlreadyExistsException =>
@@ -325,9 +344,10 @@ class TopicLog private (
     *
     * `minAgeMs` (Delta-VACUUM-style): only unreferenced files whose
     * mtime is at least this old are deleted. An in-flight produce
-    * moves its staged files into the live tree BEFORE the manifest
-    * commit — to a concurrent vacuum those look exactly like crash
-    * orphans, and deleting them would let the producer commit a
+    * puts its files in the live tree BEFORE the manifest commit
+    * ([[produceDirect]] writes them there, the Spark paths move them
+    * in from staging) — to a concurrent vacuum those look exactly like
+    * crash orphans, and deleting them would let the producer commit a
     * manifest pointing at missing files. Fresh files are therefore
     * presumed in-flight; pass 0 only when no producer can be active
     * (tests, cold cleanup). */
@@ -640,13 +660,6 @@ class TopicLog private (
     * that version already exists (another writer won). */
   private def commitManifest(m: Manifest): Unit =
     commitVersion(m.version, TopicLog.renderManifest(m))
-
-  /** CAS-publish a DELTA version: only the added files (with their
-    * offset ranges) plus the full (small: one entry per partition)
-    * end-offset map. */
-  private def commitDelta(m: Manifest, adds: Seq[String],
-      addRanges: Map[String, (Long, Long)]): Unit =
-    commitVersion(m.version, TopicLog.renderDelta(m, adds, addRanges))
 
   private def commitVersion(version: Long, body: String): Unit = {
     Files.createDirectories(manifestsDir)
@@ -1072,7 +1085,8 @@ object TopicLog {
 
   /** Default safety window for [[TopicLog.vacuum]]: unreferenced data
     * files younger than this are presumed to belong to an in-flight
-    * produce (staged-move happens before the manifest commit). */
+    * produce (its files land in the live tree before the manifest
+    * commit). */
   val DefaultVacuumMinAgeMs: Long = 15L * 60 * 1000
 
   /** Versions between full snapshots. Commit cost for a produce is
@@ -1154,10 +1168,11 @@ object TopicLog {
     // network FS) and silently drop the commitTsMs field off the head
     val n = try in.readNBytes(head, 0, head.length) finally in.close()
     if (n <= 0) None
-    else "\"commitTsMs\"\\s*:\\s*(\\d+)".r
-      .findFirstMatchIn(new String(head, 0, n, "UTF-8"))
+    else CommitTsField.findFirstMatchIn(new String(head, 0, n, "UTF-8"))
       .map(_.group(1).toLong)
   }
+
+  private val CommitTsField = "\"commitTsMs\"\\s*:\\s*(\\d+)".r
 
   /** One version file on disk: a full snapshot (`files`) or a delta
     * (`adds` relative to the previous version). */
@@ -1166,31 +1181,39 @@ object TopicLog {
       writerEpochs: Map[String, WriterState],
       fileRanges: Map[String, (Long, Long)])
 
+  // the manifest JSON's fields, compiled once: a broker parses
+  // version files on every resolve that finds new ones
+  private val VersionField = "\"version\"\\s*:\\s*(\\d+)".r
+  private val EndsBlock = "\"ends\"\\s*:\\s*\\{([^}]*)\\}".r
+  /** One `"<int>":<long>` entry of a flat offset map. */
+  private val OffsetEntry = "\"(\\d+)\"\\s*:\\s*(\\d+)".r
+  private val FilesBlock = "\"files\"\\s*:\\s*\\[([^\\]]*)\\]".r
+  private val AddsBlock = "\"adds\"\\s*:\\s*\\[([^\\]]*)\\]".r
+  private val QuotedName = "\"([^\"]+)\"".r
+  private val LastBatchField = "\"lastBatchId\"\\s*:\\s*(-?\\d+)".r
+  private val WritersBlock = "\"writers\"\\s*:\\s*\\{([^}]*)\\}".r
+  private val WriterEntry = "\"([^\"]+)\"\\s*:\\s*\"(-?\\d+)@(\\d+)\"".r
+  private val RangesBlock = "\"ranges\"\\s*:\\s*\\{([^}]*)\\}".r
+  private val RangeEntry = "\"([^\"]+)\"\\s*:\\s*\"(-?\\d+),(-?\\d+)\"".r
+
   private def parseVersion(s: String): VersionRec = {
-    val version = "\"version\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(s)
+    val version = VersionField.findFirstMatchIn(s)
       .map(_.group(1).toLong).getOrElse(0L)
-    val endsBlock = "\"ends\"\\s*:\\s*\\{([^}]*)\\}".r.findFirstMatchIn(s)
-      .map(_.group(1)).getOrElse("")
-    val ends = "\"(\\d+)\"\\s*:\\s*(\\d+)".r.findAllMatchIn(endsBlock)
+    val endsBlock = EndsBlock.findFirstMatchIn(s).map(_.group(1)).getOrElse("")
+    val ends = OffsetEntry.findAllMatchIn(endsBlock)
       .map(m => m.group(1).toInt -> m.group(2).toLong).toMap
-    def block(key: String): Option[String] =
-      ("\"" + key + "\"\\s*:\\s*\\[([^\\]]*)\\]").r.findFirstMatchIn(s).map(_.group(1))
-    def names(b: String): Seq[String] =
-      "\"([^\"]+)\"".r.findAllMatchIn(b).map(_.group(1)).toSeq
-    val lastBatch = "\"lastBatchId\"\\s*:\\s*(-?\\d+)".r.findFirstMatchIn(s)
-      .map(_.group(1).toLong)
-    val writersBlock = "\"writers\"\\s*:\\s*\\{([^}]*)\\}".r.findFirstMatchIn(s)
-      .map(_.group(1)).getOrElse("")
-    val writers = "\"([^\"]+)\"\\s*:\\s*\"(-?\\d+)@(\\d+)\"".r
-      .findAllMatchIn(writersBlock)
+    def names(block: scala.util.matching.Regex): Option[Seq[String]] =
+      block.findFirstMatchIn(s).map(b =>
+        QuotedName.findAllMatchIn(b.group(1)).map(_.group(1)).toSeq)
+    val lastBatch = LastBatchField.findFirstMatchIn(s).map(_.group(1).toLong)
+    val writersBlock = WritersBlock.findFirstMatchIn(s).map(_.group(1)).getOrElse("")
+    val writers = WriterEntry.findAllMatchIn(writersBlock)
       .map(m => m.group(1) -> WriterState(m.group(2).toLong, m.group(3).toLong)).toMap
-    val rangesBlock = "\"ranges\"\\s*:\\s*\\{([^}]*)\\}".r.findFirstMatchIn(s)
-      .map(_.group(1)).getOrElse("")
-    val ranges = "\"([^\"]+)\"\\s*:\\s*\"(-?\\d+),(-?\\d+)\"".r
-      .findAllMatchIn(rangesBlock)
+    val rangesBlock = RangesBlock.findFirstMatchIn(s).map(_.group(1)).getOrElse("")
+    val ranges = RangeEntry.findAllMatchIn(rangesBlock)
       .map(m => m.group(1) -> (m.group(2).toLong, m.group(3).toLong)).toMap
-    VersionRec(version, block("files").map(names),
-      block("adds").map(names).getOrElse(Seq.empty), ends, lastBatch, writers, ranges)
+    VersionRec(version, names(FilesBlock),
+      names(AddsBlock).getOrElse(Seq.empty), ends, lastBatch, writers, ranges)
   }
 
   private[graft] def isSnapshotVersion(dir: Path, v: Long): Boolean = {
@@ -1203,8 +1226,9 @@ object TopicLog {
   private val SnapshotKey = "\"files\"\\s*:\\s*\\[".r
 
   /** Resolve the current manifest: the last resolve of `dir` carried
-    * forward over the versions committed since, else the full walk
-    * back from the newest version ([[walkManifest]]). */
+    * forward over the versions committed since ([[probeManifest]]),
+    * else the full walk back from the newest listed version
+    * ([[walkManifest]]). */
   private[graft] def resolveManifest(dir: Path): Option[Manifest] = {
     // a concurrent vacuum may retire a delta file between our listing
     // and the walk — re-resolve from a fresh listing (the new anchor
@@ -1240,37 +1264,41 @@ object TopicLog {
       val manifest: Manifest)
 
   /** The last [[Resolved]] manifest per `_manifests` dir (absolute,
-    * normalized), so a resolve replays only the versions committed
-    * since — a broker resolves on every request, and a full walk
-    * re-parses up to [[CheckpointInterval]] versions, a whole file
-    * list among them. Entries are immutable; [[drop]] evicts. */
+    * normalized), so a resolve reads only the versions committed
+    * since, and lists nothing — a broker resolves on every request,
+    * a listing costs O(history), and a full walk re-parses up to
+    * [[CheckpointInterval]] versions, a whole file list among them.
+    * Entries are immutable; [[drop]] evicts. */
   private val resolvedManifests =
     new java.util.concurrent.ConcurrentHashMap[Path, Resolved]()
 
   private def cacheKey(dir: Path): Path = dir.toAbsolutePath.normalize
 
+  /** Keep `r` for `dir` unless a newer version is already kept:
+    * concurrent resolves and commits finish in any order. */
+  private def remember(dir: Path, r: Resolved): Unit =
+    resolvedManifests.merge(cacheKey(dir), r,
+      (a: Resolved, b: Resolved) => if (b.version >= a.version) b else a)
+
   private def resolveManifestOnce(dir: Path, cap: Long = Long.MaxValue,
       cached: Boolean = true): Option[Manifest] = {
-    if (!Files.exists(dir)) {
-      resolvedManifests.remove(cacheKey(dir))
-      return None
-    }
-    listVersions(dir).filter(_ <= cap).maxOption.map { newest =>
-      if (cap != Long.MaxValue || !cached) walkManifest(dir, newest).manifest
-      else {
-        val key = cacheKey(dir)
-        Option(resolvedManifests.get(key)).flatMap(advanceManifest(dir, _, newest)) match {
-          case Some(r) =>
-            // concurrent resolves finish in any order: keep the newest
-            resolvedManifests.merge(key, r,
-              (a: Resolved, b: Resolved) => if (b.version >= a.version) b else a)
-            r.manifest
-          case None =>
-            val r = walkManifest(dir, newest)
-            resolvedManifests.put(key, r)
-            r.manifest
+    val warm = cap == Long.MaxValue && cached
+    val probed =
+      if (!warm) None
+      else Option(resolvedManifests.get(cacheKey(dir))).flatMap(probeManifest(dir, _))
+    probed match {
+      case Some(r) =>
+        remember(dir, r)
+        Some(r.manifest)
+      case None =>
+        if (!Files.exists(dir)) {
+          resolvedManifests.remove(cacheKey(dir))
+          None
+        } else listVersions(dir).filter(_ <= cap).maxOption.map { newest =>
+          val r = walkManifest(dir, newest)
+          if (warm) resolvedManifests.put(cacheKey(dir), r)
+          r.manifest
         }
-      }
     }
   }
 
@@ -1315,26 +1343,33 @@ object TopicLog {
     new Resolved(newest, bytes, replay(Manifest(0L, Seq.empty, Map.empty, None), recs))
   }
 
-  /** `c` carried forward to version `newest` by replaying only the
-    * versions above it. None — fall back to the full walk — unless
-    * `c`'s version file is still on disk byte for byte: versions are
+  /** `c` carried forward over the versions above it, found by
+    * reading `v<c+1>`, `v<c+2>`, … until one is missing — no listing.
+    * None — fall back to the listing and the full walk — unless `c`'s
+    * version file is still on disk byte for byte (versions are
     * immutable once linked, so a difference means the history changed
-    * under the cache (a vacuum retired the version, or the topic was
-    * deleted and re-created). A listing older than `c` (a concurrent
-    * resolve listed later) answers `c`: its version is committed and
-    * on disk, so it is at least as current as the listing. */
-  private def advanceManifest(dir: Path, c: Resolved,
-      newest: Long): Option[Resolved] = {
+    * under the cache: a vacuum retired the version, or the topic was
+    * deleted and re-created), and unless the last version read is
+    * still on disk after the miss (else the miss may be the topic
+    * going away, not the head). Versions are linked one above the
+    * other, and retirement deletes the oldest first and never at or
+    * above the anchor snapshot, so the first missing version above a
+    * present one is the head. */
+  private def probeManifest(dir: Path, c: Resolved): Option[Resolved] = {
     val unchanged =
       try java.util.Arrays.equals(
         Files.readAllBytes(dir.resolve(s"v${c.version}.json")), c.bytes)
       catch { case _: java.nio.file.NoSuchFileException => false }
-    if (!unchanged) None
-    else if (newest <= c.version) Some(c)
-    else {
-      val read = (c.version + 1 to newest).map(readVersion(dir, _))
-      Some(new Resolved(newest, read.last._1, replay(c.manifest, read.map(_._2))))
-    }
+    if (!unchanged) return None
+    val read = scala.collection.mutable.ArrayBuffer.empty[(Array[Byte], VersionRec)]
+    var next = c.version + 1
+    var probing = true
+    while (probing)
+      try { read += readVersion(dir, next); next += 1 }
+      catch { case _: java.nio.file.NoSuchFileException => probing = false }
+    if (!Files.exists(dir.resolve(s"v${next - 1}.json"))) None
+    else if (read.isEmpty) Some(c)
+    else Some(new Resolved(next - 1, read.last._1, replay(c.manifest, read.map(_._2).toSeq)))
   }
 
   /** Latest committed manifest of a topic by path, for manifest-aware
@@ -1469,9 +1504,8 @@ object TopicLog {
     * driver — [[produceDirect]]'s writer. Snappy like Spark's
     * default, so direct and Spark-written files are uniform. The file
     * is written straight through java.nio, not through Hadoop's local
-    * filesystem: that would add a `.crc` sidecar (which the staging
-    * move leaves behind) and fork `chmod` for the file and for the
-    * sidecar. The parquet bytes are the same either way, and reads
+    * filesystem: that would add a `.crc` sidecar beside it in the data
+    * dir and fork `chmod` for the file and for the sidecar. The parquet bytes are the same either way, and reads
     * still verify a sidecar where one exists ([[sharedConf]]). */
   private[streaming] def writeDirect(file: Path,
       rows: Iterator[(Long, Array[Byte], Array[Byte],
@@ -1726,11 +1760,16 @@ object TopicLog {
 
   def open(spark: SparkSession, root: String, topic: String): TopicLog = {
     val meta = Files.readString(Paths.get(s"$root/$topic/_meta.json"))
-    val n = "\"numPartitions\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(meta)
+    val n = NumPartitionsField.findFirstMatchIn(meta)
       .map(_.group(1).toInt)
       .getOrElse(throw new IllegalStateException(s"bad _meta.json for $topic"))
     new TopicLog(spark, root, topic, n)
   }
+
+  // `_meta.json` and `_config.json` fields, compiled once: a wire
+  // produce opens its topic and reads its overrides on every request
+  private val NumPartitionsField = "\"numPartitions\"\\s*:\\s*(\\d+)".r
+  private val ConfigEntry = "\"([^\"\\\\]*)\"\\s*:\\s*\"([^\"\\\\]*)\"".r
 
   def exists(root: String, topic: String): Boolean =
     Files.exists(Paths.get(s"$root/$topic/_meta.json"))
@@ -1747,7 +1786,7 @@ object TopicLog {
   def expandPartitions(root: String, topic: String, newCount: Int): Unit = {
     val dir = Paths.get(s"$root/$topic")
     val meta = Files.readString(dir.resolve("_meta.json"))
-    val cur = "\"numPartitions\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(meta)
+    val cur = NumPartitionsField.findFirstMatchIn(meta)
       .map(_.group(1).toInt)
       .getOrElse(throw new IllegalStateException(s"bad _meta.json for $topic"))
     require(newCount > cur,
@@ -1766,8 +1805,7 @@ object TopicLog {
   def configOverrides(root: String, topic: String): Map[String, String] = {
     val p = Paths.get(s"$root/$topic/_config.json")
     if (!Files.exists(p)) Map.empty
-    else "\"([^\"\\\\]*)\"\\s*:\\s*\"([^\"\\\\]*)\"".r
-      .findAllMatchIn(Files.readString(p))
+    else ConfigEntry.findAllMatchIn(Files.readString(p))
       .map(m => m.group(1) -> m.group(2)).toMap
   }
 
@@ -1805,7 +1843,7 @@ object TopicLog {
     if (!Files.exists(path)) None
     else {
       val s = Files.readString(path)
-      Some("\"(\\d+)\"\\s*:\\s*(\\d+)".r.findAllMatchIn(s)
+      Some(OffsetEntry.findAllMatchIn(s)
         .map(m => m.group(1).toInt -> m.group(2).toLong).toMap)
     }
 

@@ -232,7 +232,8 @@ class DirectPathSpec extends AnyFunSuite {
       .filter(f => f.startsWith(topicDir.resolve("data")) ||
         f.startsWith(topicDir.resolve("_staging")))
     assert(sidecars.isEmpty, sidecars)
-    // the staging move drops stray files, so check the writer itself
+    // produceDirect writes in place, so a sidecar would show above;
+    // check the writer on its own too
     val dir = Files.createTempDirectory("graft-direct-write")
     TopicLog.writeDirect(dir.resolve("f.parquet"),
       Iterator((0L, "k".getBytes, "v".getBytes, null, 1L)))

@@ -311,6 +311,58 @@ class ManifestSpec extends AnyFunSuite {
     replaceWith(2)
   }
 
+  test("a probing resolve equals the full resolve after outside commits, retirement and re-creation") {
+    import java.nio.file.Paths
+    val root = Files.createTempDirectory("graft-manifest")
+    // the same topic seen through a symlinked root: resolves and
+    // commits there use their own cache entry, so to this process's
+    // view of `root` they are another process's
+    val linked = Files.createSymbolicLink(
+      Files.createTempDirectory("graft-manifest-link").resolve("root"), root)
+    val a = TopicLog.create(spark, root.toString, "t", 2)
+    val b = TopicLog.open(spark, linked.toString, "t")
+    val dir = Paths.get(s"${a.topicDir}/_manifests")
+    def same(step: String): Unit = {
+      val full = TopicLog.resolveManifestFull(dir)
+      assert(full.isDefined, step)
+      assert(TopicLog.resolveManifest(dir) === full, step)
+    }
+    def direct(ids: Range) = ids.map { i =>
+      (i % 2, s"k$i".getBytes, s"v$i".getBytes, null: Map[String, Array[Byte]],
+        1700000000000L + i)
+    }
+
+    a.produceDirect(direct(0 until 4)); same("own commit")
+    (1 to 5).foreach(i => b.produceDirect(direct(i * 4 until i * 4 + 4)))
+    same("commits by a second handle")
+
+    // the cached head goes stale while the other side commits past
+    // it and retires history beyond it
+    val stale = TopicLog.resolveManifest(dir).get.version
+    (6 until 40).foreach(i => b.produceDirect(direct(i * 4 until i * 4 + 4)))
+    b.retireHistory(keepManifests = 3)
+    assert(!Files.exists(dir.resolve(s"v$stale.json")))
+    same("retireHistory past a stale cached head")
+    a.produceDirect(direct(160 until 164)); same("own commit after retirement")
+    assert(a.read().count() === 164L)
+
+    // dropped and re-created on the other side: a version of the
+    // cached head's number holds other bytes, then it is gone
+    def recreate(produces: Int): Unit = {
+      TopicLog.drop(linked.toString, "t")
+      val c = TopicLog.create(spark, linked.toString, "t", 2)
+      (0 until produces).foreach(i => c.produceDirect(direct(i * 4 until i * 4 + 4)))
+    }
+    val head = TopicLog.resolveManifest(dir).get.version
+    recreate(head.toInt + 1)
+    assert(Files.exists(dir.resolve(s"v$head.json")))
+    same("re-created past the cached head")
+    assert(a.logEndOffsets() === Map(0 -> 2L * (head + 1), 1 -> 2L * (head + 1)))
+    recreate(1)
+    same("re-created below the cached head")
+    assert(a.logEndOffsets() === Map(0 -> 2L, 1 -> 2L))
+  }
+
   test("file compaction coalesces small produce files, content-identical") {
     val log = newLog()
     (0 until 12).foreach(i => log.produce(records(i * 5 until i * 5 + 5), part))

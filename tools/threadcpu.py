@@ -20,6 +20,15 @@ JFR execution samples leave GC threads out and mix threads together;
 this split shows which connection's handler the broker spends its CPU
 on.
 
+Wire produces to one topic commit in groups: the connection thread that
+finds no commit in flight leads, and commits its own request together
+with every request queued behind it (`Broker.appendGrouped`). A
+producer connection's line therefore also holds the commit work of
+other connections' requests whenever it led a group, and is no longer
+that connection's own cost; the connections' lines summed still are.
+JFR likewise puts a group's `produceDirect` under the leader's
+`handleProduce`.
+
 The measured window is taken as the summed `round_s` of the run's
 record, ending when the load-generator JVM exits, so the warm pass and
 the traced replay stay outside it. The record's `cpu_s` also counts the
