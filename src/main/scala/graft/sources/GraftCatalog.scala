@@ -93,18 +93,13 @@ class GraftCatalog extends TableCatalog {
         (ident.namespace() :+ ident.name()).toSeq)
     val mdir = Paths.get(s"$root/${ident.name}/_manifests")
     val tsMs = timestampMicros / 1000L
-    val v =
-      if (!Files.exists(mdir)) -1L
-      else graft.streaming.TopicLog.listDir(mdir).iterator
-        .map(_.getFileName.toString)
-        .collect { case n if n.startsWith("v") && n.endsWith(".json") =>
-          n.stripPrefix("v").stripSuffix(".json").toLong }
-        .filter { ver =>
-          graft.streaming.TopicLog.manifestCommitTsMs(mdir, ver)
-            .getOrElse(Files.getLastModifiedTime(
-              mdir.resolve(s"v$ver.json")).toMillis) <= tsMs
-        }
-        .foldLeft(-1L)(math.max)
+    val manifests = new graft.streaming.VersionedDir(mdir)
+    val v = manifests.versions
+      .filter { ver =>
+        graft.streaming.TopicLog.manifestCommitTsMs(mdir, ver)
+          .getOrElse(Files.getLastModifiedTime(manifests.file(ver)).toMillis) <= tsMs
+      }
+      .foldLeft(-1L)(math.max)
     new GraftTopicTable(s"$root/${ident.name}", Some(v))
   }
 

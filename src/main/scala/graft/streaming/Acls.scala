@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Path
 import java.util.Base64
 
 /** Kafka's ACL model and authorizer, served behind keys 29/30/31 —
@@ -121,17 +121,18 @@ object Acls {
     else null
 
   /** The live authorizer: an in-memory ACL set with write-through CAS
-    * persistence under `<logRoot>/_acls` (the [[ScramStore]] snapshot
-    * protocol — full state per version, atomic hard-link, newest wins,
-    * pruned behind the newest). One instance per broker; handler
+    * persistence under `<logRoot>/_acls` (a [[VersionedDir]] — full
+    * state per version, atomic hard-link, newest wins, pruned behind
+    * the newest). One instance per broker; handler
     * threads read under the monitor, mutations persist before they
     * return, so an ACL acknowledged to kafka-acls.sh survives a
     * restart exactly like an administered SCRAM credential. */
   final class Authorizer(storeDir: Path, val superUsers: Set[String]) {
     private var version = 0L
     private var acls: Vector[AclBinding] = Vector.empty
+    private val store = new VersionedDir(storeDir)
     locally {
-      AclStore.load(storeDir).foreach { case (v, persisted) =>
+      store.readLatest(AclStore.parse).foreach { case (v, persisted) =>
         version = v
         acls = persisted.toVector
       }
@@ -196,27 +197,13 @@ object Acls {
       acls.filter(b => filterMatches(filter, b))
     }
 
-    private def persist(): Unit = {
-      var done = false
-      while (!done) {
-        val v = version + 1
-        try {
-          AclStore.commit(storeDir, v, AclStore.render(v, acls))
-          version = v
-          AclStore.prune(storeDir, v - 2)
-          done = true
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException =>
-            version = math.max(version + 1,
-              AclStore.maxVersion(storeDir).getOrElse(0L))
-        }
-      }
-    }
+    private def persist(): Unit =
+      version = store.publish(version, 2)(AclStore.render(_, acls))
   }
 
   /** Durable snapshot of the ACL set — `_acls/v{N}.json` under the log
-    * root, the [[ScramStore]] CAS protocol. Strings are base64-armored
-    * so principals and resource names never meet the regex parser
+    * root, a [[VersionedDir]]. Strings are base64-armored so
+    * principals and resource names never meet the regex parser
     * un-escaped. */
   private[streaming] object AclStore {
 
@@ -244,44 +231,5 @@ object Acls {
           unb64(m.group(4)), unb64(m.group(5)), m.group(6).toInt,
           m.group(7).toInt)
       }.toSeq
-
-    private[streaming] def commit(dir: Path, version: Long, body: String): Unit = {
-      Files.createDirectories(dir)
-      val tmp = Files.createTempFile(dir, ".tmp", ".json")
-      Files.writeString(tmp, body)
-      try Files.createLink(dir.resolve(s"v$version.json"), tmp)
-      finally Files.deleteIfExists(tmp)
-    }
-
-    private[streaming] def maxVersion(dir: Path): Option[Long] = {
-      if (!Files.exists(dir)) return None
-      TopicLog.listDir(dir).iterator.map(_.getFileName.toString)
-        .collect { case s if s.startsWith("v") && s.endsWith(".json") =>
-          s.stripPrefix("v").stripSuffix(".json").toLong }
-        .maxOption
-    }
-
-    private[streaming] def load(dir: Path): Option[(Long, Seq[AclBinding])] = {
-      var attempts = 0
-      while (attempts < 5) {
-        maxVersion(dir) match {
-          case None => return None
-          case Some(v) =>
-            try return Some((v, parse(Files.readString(dir.resolve(s"v$v.json")))))
-            catch { case _: java.nio.file.NoSuchFileException => attempts += 1 }
-        }
-      }
-      None
-    }
-
-    private[streaming] def prune(dir: Path, keepFrom: Long): Unit =
-      if (Files.exists(dir))
-        TopicLog.listDir(dir).foreach { p =>
-          val n = p.getFileName.toString
-          if (n.startsWith("v") && n.endsWith(".json")) {
-            val v = n.stripPrefix("v").stripSuffix(".json").toLongOption
-            if (v.exists(_ < keepFrom)) Files.deleteIfExists(p)
-          }
-        }
   }
 }

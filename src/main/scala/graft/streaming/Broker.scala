@@ -28,8 +28,8 @@ class Broker(spark: SparkSession, root: String) {
     * errors — the standard broker authorization matrix). */
   @volatile private[streaming] var authorizerOpt: Option[Acls.Authorizer] = None
 
-  /** Turn on authorization: load `_acls` (durable CAS snapshots, the
-    * ScramStore protocol) and enforce on every subsequent request.
+  /** Turn on authorization: load `_acls` (durable CAS snapshots in a
+    * [[VersionedDir]]) and enforce on every subsequent request.
     * `superUsers` entries (e.g. "User:admin") bypass every check —
     * Kafka's super.users, and the practical bootstrap: SOMEONE must
     * be able to create the first ACL on a deny-by-default broker.
@@ -517,20 +517,22 @@ class Broker(spark: SparkSession, root: String) {
         // never sees the storage-layer race — so the broker IS that
         // caller: retry with capped backoff until the request's own
         // timeout, then answer REQUEST_TIMED_OUT (7) per partition
-        // instead of failing the connection.
-        def produceWithRetry(): Option[Map[Int, Long]] = {
+        // instead of failing the connection. Any other append failure
+        // answers KAFKA_STORAGE_ERROR (56), as Kafka does for a log
+        // directory it cannot write.
+        def produceWithRetry(): Either[Int, Map[Int, Long]] = {
           val deadline = System.nanoTime() +
             math.max(req.timeoutMs, 1000).toLong * 1000000L
           val direct = rows.map { case (k, v, h, ts, p) => (p, k, v, h, ts.getTime) }
           var attempt = 0
-          var result: Option[Map[Int, Long]] = None
+          var result: Either[Int, Map[Int, Long]] = Left(7)
           var retrying = true
           while (retrying)
             try {
               // driver-direct append (no Spark job), committed together
               // with the topic's other in-flight wire produces — see
               // appendGrouped
-              result = Some(appendGrouped(name, log, direct))
+              result = Right(appendGrouped(name, log, direct))
               retrying = false
             } catch {
               case _: TopicLog.ConcurrentProduceException =>
@@ -539,13 +541,17 @@ class Broker(spark: SparkSession, root: String) {
                   Thread.sleep(math.min(200L, 2L << math.min(attempt, 6)))
                   attempt += 1
                 }
+              case scala.util.control.NonFatal(e) =>
+                System.err.println(s"graft produce to topic $name failed: $e")
+                result = Left(56)
+                retrying = false
             }
           result
         }
-        val afterOpt: Option[Map[Int, Long]] =
-          if (rows.isEmpty) Some(log.logEndOffsets())
+        val appended: Either[Int, Map[Int, Long]] =
+          if (rows.isEmpty) Right(log.logEndOffsets())
           else produceWithRetry()
-        val after: Map[Int, Long] = afterOpt.getOrElse(Map.empty)
+        val after: Map[Int, Long] = appended.getOrElse(Map.empty)
         // Base offsets derive from the COMMITTED ends the produce
         // returned, not a pre-produce snapshot: a snapshot is stale
         // under concurrent producers and wrong when one request lists
@@ -574,11 +580,12 @@ class Broker(spark: SparkSession, root: String) {
               (p, req.decodeErrors((name, idx)), -1L)
             case ((((p, _), Broker.Reject(err)), _), _) => (p, err, -1L)
             case ((((p, _), Broker.Duplicate(base)), _), _) => (p, 0, base)
-            // the CAS never won within the request timeout: nothing
-            // appended, no sequence state advanced — the client's
-            // retry (same sequences) is exactly a fresh attempt
-            case ((((p, _), Broker.Append), _), _) if afterOpt.isEmpty =>
-              (p, 7, -1L)
+            // the append never landed (7: the CAS never won within the
+            // request timeout; 56: storage error): nothing appended,
+            // no sequence state advanced — the client's retry (same
+            // sequences) is exactly a fresh attempt
+            case ((((p, _), Broker.Append), _), _) if appended.isLeft =>
+              (p, appended.swap.getOrElse(7), -1L)
             case ((((p, batches), Broker.Append), _), _) =>
               val nRecs = batches.iterator.map(_.records.length.toLong).sum
               val firstBase = after.getOrElse(p, 0L) - written.getOrElse(p, 0L)
@@ -592,7 +599,7 @@ class Broker(spark: SparkSession, root: String) {
               (p, 0, base)
           })
         // release LSO reservations the append never turned into exact
-        // ranges (timed out, or the txn was fenced mid-request)
+        // ranges (timed out, failed, or the txn was fenced mid-request)
         txnPids.foreach { case (p, pid) =>
           txnReleaseUnmaterialized(name, p, pid)
         }
@@ -862,7 +869,7 @@ class Broker(spark: SparkSession, root: String) {
   // window by rebuilding producer state from pid-stamped log segments,
   // which a parquet log does not carry). ---
 
-  private val txnStoreDir = Paths.get(root, "_txn")
+  private val txnStore = new VersionedDir(Paths.get(root, "_txn"))
   /** Guarded by txnLock; assigned at render time so version order is
     * render order even though links land outside the lock. */
   private var txnStoreVersion = 0L
@@ -870,7 +877,7 @@ class Broker(spark: SparkSession, root: String) {
   loadTxnStore()
 
   private def loadTxnStore(): Unit = txnLock.synchronized {
-    TxnStore.load(txnStoreDir).foreach { case (v, st) =>
+    txnStore.readLatest(TxnStore.parse).foreach { case (v, st) =>
       txnStoreVersion = v
       // never re-issue a pid from before the restart
       var cur = nextProducerId.get()
@@ -923,14 +930,13 @@ class Broker(spark: SparkSession, root: String) {
         (txnStoreVersion, TxnStore.render(txnStoreVersion, txnSnapshotLocked()))
       }
       try {
-        TxnStore.commit(txnStoreDir, v, body)
-        TxnStore.prune(txnStoreDir, v - 8)
+        txnStore.link(v, body)
+        txnStore.prune(v - 8)
         done = true
       } catch {
         case _: java.nio.file.FileAlreadyExistsException =>
           txnLock.synchronized {
-            txnStoreVersion = math.max(txnStoreVersion,
-              TxnStore.maxVersion(txnStoreDir).getOrElse(0L))
+            txnStoreVersion = math.max(txnStoreVersion, txnStore.latest.getOrElse(0L))
           }
       }
     }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Path
 import java.util.Base64
 
 /** Delegation tokens (keys 38–41, KIP-48) — the
@@ -24,8 +24,8 @@ import java.util.Base64
   * describe (Kafka keeps them until the cleanup scan) but fail
   * authentication and renewal.
   *
-  * Tokens persist as `_tokens/v{N}.json` CAS snapshots (the
-  * ScramStore protocol), so issued credentials survive restart —
+  * Tokens persist as `_tokens/v{N}.json` CAS snapshots (a
+  * [[VersionedDir]]), so issued credentials survive restart —
   * losing them on a bounce would strand every token-authenticated
   * client.
   */
@@ -62,8 +62,9 @@ object DelegationTokens {
   final class Manager(storeDir: Path) {
     private var version = 0L
     private var tokens: Map[String, Token] = Map.empty
+    private val store = new VersionedDir(storeDir)
     locally {
-      TokenStore.load(storeDir).foreach { case (v, persisted) =>
+      store.readLatest(TokenStore.parse).foreach { case (v, persisted) =>
         version = v
         tokens = persisted.map(t => t.tokenId -> t).toMap
       }
@@ -177,27 +178,13 @@ object DelegationTokens {
         .flatMap(_.scram.get(mechanismCode))
     }
 
-    private def persist(): Unit = {
-      var done = false
-      while (!done) {
-        val v = version + 1
-        try {
-          TokenStore.commit(storeDir, v,
-            TokenStore.render(v, tokens.values.toSeq.sortBy(_.tokenId)))
-          version = v
-          TokenStore.prune(storeDir, v - 2)
-          done = true
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException =>
-            version = math.max(version + 1,
-              TokenStore.maxVersion(storeDir).getOrElse(0L))
-        }
-      }
-    }
+    private def persist(): Unit =
+      version = store.publish(version, 2)(
+        TokenStore.render(_, tokens.values.toSeq.sortBy(_.tokenId)))
   }
 
-  /** Durable token snapshots — `_tokens/v{N}.json`, the ScramStore
-    * CAS protocol, base64-armored strings. */
+  /** Durable token snapshots — `_tokens/v{N}.json`, a
+    * [[VersionedDir]], base64-armored strings. */
   private[streaming] object TokenStore {
 
     private def b64s(s: String): String =
@@ -262,44 +249,5 @@ object DelegationTokens {
           }.toMap)
       }.toSeq
     }
-
-    private[streaming] def commit(dir: Path, version: Long, body: String): Unit = {
-      Files.createDirectories(dir)
-      val tmp = Files.createTempFile(dir, ".tmp", ".json")
-      Files.writeString(tmp, body)
-      try Files.createLink(dir.resolve(s"v$version.json"), tmp)
-      finally Files.deleteIfExists(tmp)
-    }
-
-    private[streaming] def maxVersion(dir: Path): Option[Long] = {
-      if (!Files.exists(dir)) return None
-      TopicLog.listDir(dir).iterator.map(_.getFileName.toString)
-        .collect { case s if s.startsWith("v") && s.endsWith(".json") =>
-          s.stripPrefix("v").stripSuffix(".json").toLong }
-        .maxOption
-    }
-
-    private[streaming] def load(dir: Path): Option[(Long, Seq[Token])] = {
-      var attempts = 0
-      while (attempts < 5) {
-        maxVersion(dir) match {
-          case None => return None
-          case Some(v) =>
-            try return Some((v, parse(Files.readString(dir.resolve(s"v$v.json")))))
-            catch { case _: java.nio.file.NoSuchFileException => attempts += 1 }
-        }
-      }
-      None
-    }
-
-    private[streaming] def prune(dir: Path, keepFrom: Long): Unit =
-      if (Files.exists(dir))
-        TopicLog.listDir(dir).foreach { p =>
-          val n = p.getFileName.toString
-          if (n.startsWith("v") && n.endsWith(".json")) {
-            val v = n.stripPrefix("v").stripSuffix(".json").toLongOption
-            if (v.exists(_ < keepFrom)) Files.deleteIfExists(p)
-          }
-        }
   }
 }

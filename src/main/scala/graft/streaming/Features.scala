@@ -10,8 +10,8 @@ import java.nio.file.Path
   * ApiVersions (ref pkg/kafka/versions.go:19–25 is a static table);
   * graft serves the full feature machinery: bootstrap-finalized
   * levels, validated transitions, and a CAS-persisted store
-  * (`_features/v{N}.json`, same protocol as [[ScramStore]]) so an
-  * administered level survives restart.
+  * (`_features/v{N}.json`, a [[VersionedDir]]) so an administered
+  * level survives restart.
   *
   * The names mirror Kafka 4.0's public production features; the
   * LEVELS are this engine's own capability declarations (what its
@@ -45,8 +45,9 @@ object Features {
   final class Manager(storeDir: Path) {
     private var finalized: Map[String, Int] = BootstrapFinalized
     private var epoch: Long = 0L
+    private val store = new VersionedDir(storeDir)
 
-    FeatureStore.load(storeDir).foreach { case (v, levels) =>
+    store.readLatest(FeatureStore.parse).foreach { case (v, levels) =>
       epoch = v
       finalized = levels
     }
@@ -92,14 +93,15 @@ object Features {
       }
       val allValid = results.forall(_._2 == 0)
       if (allValid && !validateOnly) {
-        updates.foreach { case (name, level, _) =>
-          finalized =
-            if (level == 0) finalized - name else finalized + (name -> level)
+        val next = updates.foldLeft(finalized) { case (f, (name, level, _)) =>
+          if (level == 0) f - name else f + (name -> level)
         }
-        epoch += 1
-        FeatureStore.commit(storeDir, epoch,
-          FeatureStore.render(epoch, finalized.toSeq.sortBy(_._1)))
-        FeatureStore.prune(storeDir, epoch)
+        // the epoch is the version actually linked (a rival manager on
+        // this root may hold the next one), and memory moves only once
+        // the new levels are on disk
+        epoch = store.publish(epoch, 0)(
+          FeatureStore.render(_, next.toSeq.sortBy(_._1)))
+        finalized = next
       }
       // one invalid member fails the batch: valid members report
       // that nothing was attempted (Kafka's OPERATION_NOT_ATTEMPTED)
@@ -112,7 +114,7 @@ object Features {
   }
 }
 
-/** `_features/v{N}.json` CAS snapshots — [[ScramStore]]'s protocol. */
+/** The codec of the `_features/v{N}.json` snapshots. */
 private[streaming] object FeatureStore {
 
   private[streaming] def render(version: Long,
@@ -127,46 +129,4 @@ private[streaming] object FeatureStore {
 
   private[streaming] def parse(s: String): Map[String, Int] =
     RowRe.findAllMatchIn(s).map(m => m.group(1) -> m.group(2).toInt).toMap
-
-  private[streaming] def commit(dir: Path, version: Long, body: String): Unit = {
-    java.nio.file.Files.createDirectories(dir)
-    val tmp = java.nio.file.Files.createTempFile(dir, ".tmp", ".json")
-    java.nio.file.Files.writeString(tmp, body)
-    try java.nio.file.Files.createLink(dir.resolve(s"v$version.json"), tmp)
-    finally java.nio.file.Files.deleteIfExists(tmp)
-  }
-
-  private[streaming] def load(dir: Path): Option[(Long, Map[String, Int])] = {
-    var attempts = 0
-    while (attempts < 5) {
-      maxVersion(dir) match {
-        case None => return None
-        case Some(v) =>
-          try return Some((v, parse(
-            java.nio.file.Files.readString(dir.resolve(s"v$v.json")))))
-          catch {
-            case _: java.nio.file.NoSuchFileException => attempts += 1
-          }
-      }
-    }
-    None
-  }
-
-  private def maxVersion(dir: Path): Option[Long] = {
-    if (!java.nio.file.Files.exists(dir)) return None
-    TopicLog.listDir(dir).iterator.map(_.getFileName.toString)
-      .collect { case s if s.startsWith("v") && s.endsWith(".json") =>
-        s.stripPrefix("v").stripSuffix(".json").toLong }
-      .maxOption
-  }
-
-  private[streaming] def prune(dir: Path, keepFrom: Long): Unit =
-    if (java.nio.file.Files.exists(dir))
-      TopicLog.listDir(dir).foreach { p =>
-        val n = p.getFileName.toString
-        if (n.startsWith("v") && n.endsWith(".json")) {
-          val v = n.stripPrefix("v").stripSuffix(".json").toLongOption
-          if (v.exists(_ < keepFrom)) java.nio.file.Files.deleteIfExists(p)
-        }
-      }
 }

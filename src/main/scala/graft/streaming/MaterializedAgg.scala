@@ -21,8 +21,8 @@ import org.apache.spark.sql.types._
   *
   * Exactly-once across crashes, by construction rather than by
   * protocol: the consumed-through offsets and the state they produce
-  * commit in ONE atomic hard-link CAS (`_views/<name>/v{N}.json`, the
-  * manifest/TxnStore idiom — the state parquet is written first, the
+  * commit in ONE atomic hard-link CAS (`_views/<name>/v{N}.json`, a
+  * [[VersionedDir]] — the state parquet is written first, the
   * versioned json naming it and the offsets links last). A crash
   * anywhere before the link leaves the previous snapshot fully
   * intact (the half-written state dir is invisible — nothing names
@@ -42,6 +42,7 @@ class MaterializedAgg(spark: SparkSession, topic: TopicLog, name: String,
     keyExpr: Column, valueExpr: Column) {
 
   private def viewDir = Paths.get(s"${topic.topicDir}/_views/$name")
+  private def snapshots = new VersionedDir(viewDir)
 
   // count / sum / min / max — each a commutative monoid, so the
   // incremental merge (sum of sums, min of mins, max of maxes) is
@@ -79,31 +80,8 @@ class MaterializedAgg(spark: SparkSession, topic: TopicLog, name: String,
     (offs, state)
   }
 
-  private def maxVersion: Option[Long] = {
-    if (!Files.exists(viewDir)) return None
-    TopicLog.listDir(viewDir).iterator.map(_.getFileName.toString)
-      .collect { case s if s.startsWith("v") && s.endsWith(".json") =>
-        s.stripPrefix("v").stripSuffix(".json").toLong }
-      .maxOption
-  }
-
-  private def loadSnapshot: Option[(Long, Map[Int, Long], String)] = {
-    var attempts = 0
-    while (attempts < 5) {
-      maxVersion match {
-        case None => return None
-        case Some(v) =>
-          try {
-            val (offs, state) =
-              parse(Files.readString(viewDir.resolve(s"v$v.json")))
-            return Some((v, offs, state))
-          } catch {
-            case _: java.nio.file.NoSuchFileException => attempts += 1
-          }
-      }
-    }
-    None
-  }
+  private def loadSnapshot: Option[(Long, Map[Int, Long], String)] =
+    snapshots.readLatest(parse).map { case (v, (offs, state)) => (v, offs, state) }
 
   /** The materialized table as of the last committed refresh. */
   def state(): DataFrame = loadSnapshot match {
@@ -161,12 +139,8 @@ class MaterializedAgg(spark: SparkSession, topic: TopicLog, name: String,
       // attempt overwrites), then the atomic offsets+state link
       merged.write.mode("overwrite")
         .parquet(viewDir.resolve(stateRel).toString)
-      val body = render(nextVersion, end, stateRel)
-      val tmp = Files.createTempFile(
-        { Files.createDirectories(viewDir); viewDir }, ".tmp", ".json")
-      Files.writeString(tmp, body)
       try {
-        Files.createLink(viewDir.resolve(s"v$nextVersion.json"), tmp)
+        snapshots.link(nextVersion, render(nextVersion, end, stateRel))
         prune(nextVersion)
         return folded
       } catch {
@@ -175,7 +149,7 @@ class MaterializedAgg(spark: SparkSession, topic: TopicLog, name: String,
           if (attempt >= 5) throw new IllegalStateException(
             s"materialized view $name: lost the snapshot CAS 5 times " +
               "(two concurrent refreshers? the view is single-writer)")
-      } finally Files.deleteIfExists(tmp)
+      }
     }
     0L // unreachable
   }
@@ -183,20 +157,15 @@ class MaterializedAgg(spark: SparkSession, topic: TopicLog, name: String,
   /** Retire snapshots (and their state dirs) older than the previous
     * version — every snapshot is full state, only the newest matters;
     * one older version is kept for readers racing the link. */
-  private def prune(current: Long): Unit =
+  private def prune(current: Long): Unit = {
+    snapshots.prune(current - 1)
     TopicLog.listDir(viewDir).foreach { p =>
       val n = p.getFileName.toString
-      val v: Option[Long] =
-        if (n.startsWith("v") && n.endsWith(".json"))
-          n.stripPrefix("v").stripSuffix(".json").toLongOption
-        else if (n.startsWith("state-v")) n.stripPrefix("state-v").toLongOption
-        else None
-      if (v.exists(_ < current - 1)) {
-        if (Files.isDirectory(p))
-          // deepest-first so directories empty before their delete
-          TopicLog.walkPaths(p).sortBy(-_.getNameCount)
-            .foreach(Files.deleteIfExists)
-        Files.deleteIfExists(p)
-      }
+      if (n.startsWith("state-v") &&
+          n.stripPrefix("state-v").toLongOption.exists(_ < current - 1))
+        // deepest-first so directories empty before their delete
+        TopicLog.walkPaths(p).sortBy(-_.getNameCount)
+          .foreach(Files.deleteIfExists)
     }
+  }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Path
 import java.util.Base64
 
 /** Client quotas (keys 48/49, KIP-546) — the `kafka-configs
@@ -29,9 +29,8 @@ import java.util.Base64
   * connection makes the handler's elapsed time one clock read per
   * side, so a quota of N — N% of one handler thread — allows N×10 ms
   * of handler time per second, enforced by the same window + hold).
-  * Values persist as `_quotas/v{N}.json` CAS snapshots (the
-  * ScramStore protocol), so an acknowledged alteration survives
-  * restart.
+  * Values persist as `_quotas/v{N}.json` CAS snapshots (a
+  * [[VersionedDir]]), so an acknowledged alteration survives restart.
   */
 object Quotas {
 
@@ -99,8 +98,9 @@ object Quotas {
     // concrete name, "<default>", or absent from the tuple via null
     private var version = 0L
     private var configs: Map[Entity, Map[String, Double]] = Map.empty
+    private val store = new VersionedDir(storeDir)
     locally {
-      QuotaStore.load(storeDir).foreach { case (v, persisted) =>
+      store.readLatest(QuotaStore.parse).foreach { case (v, persisted) =>
         version = v
         configs = persisted
       }
@@ -202,26 +202,12 @@ object Quotas {
       e.user.map(_.getOrElse("<default>")).getOrElse("") + "\u0000" +
         e.clientId.map(_.getOrElse("<default>")).getOrElse("")
 
-    private def persist(): Unit = {
-      var done = false
-      while (!done) {
-        val v = version + 1
-        try {
-          QuotaStore.commit(storeDir, v, QuotaStore.render(v, configs))
-          version = v
-          QuotaStore.prune(storeDir, v - 2)
-          done = true
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException =>
-            version = math.max(version + 1,
-              QuotaStore.maxVersion(storeDir).getOrElse(0L))
-        }
-      }
-    }
+    private def persist(): Unit =
+      version = store.publish(version, 2)(QuotaStore.render(_, configs))
   }
 
-  /** Durable quota snapshots — `_quotas/v{N}.json`, the ScramStore
-    * CAS protocol. Entity parts are base64-armored; the two Option
+  /** Durable quota snapshots — `_quotas/v{N}.json`, a
+    * [[VersionedDir]]. Entity parts are base64-armored; the two Option
     * layers encode as a marker char: 'a' absent, 'd' default,
     * 'n:<b64>' named. */
   private[streaming] object QuotaStore {
@@ -265,45 +251,5 @@ object Quotas {
             unb64(vm.group(1)) -> vm.group(2).toDouble
           }.toMap
       }.toMap
-
-    private[streaming] def commit(dir: Path, version: Long, body: String): Unit = {
-      Files.createDirectories(dir)
-      val tmp = Files.createTempFile(dir, ".tmp", ".json")
-      Files.writeString(tmp, body)
-      try Files.createLink(dir.resolve(s"v$version.json"), tmp)
-      finally Files.deleteIfExists(tmp)
-    }
-
-    private[streaming] def maxVersion(dir: Path): Option[Long] = {
-      if (!Files.exists(dir)) return None
-      TopicLog.listDir(dir).iterator.map(_.getFileName.toString)
-        .collect { case s if s.startsWith("v") && s.endsWith(".json") =>
-          s.stripPrefix("v").stripSuffix(".json").toLong }
-        .maxOption
-    }
-
-    private[streaming] def load(dir: Path)
-        : Option[(Long, Map[Entity, Map[String, Double]])] = {
-      var attempts = 0
-      while (attempts < 5) {
-        maxVersion(dir) match {
-          case None => return None
-          case Some(v) =>
-            try return Some((v, parse(Files.readString(dir.resolve(s"v$v.json")))))
-            catch { case _: java.nio.file.NoSuchFileException => attempts += 1 }
-        }
-      }
-      None
-    }
-
-    private[streaming] def prune(dir: Path, keepFrom: Long): Unit =
-      if (Files.exists(dir))
-        TopicLog.listDir(dir).foreach { p =>
-          val n = p.getFileName.toString
-          if (n.startsWith("v") && n.endsWith(".json")) {
-            val v = n.stripPrefix("v").stripSuffix(".json").toLongOption
-            if (v.exists(_ < keepFrom)) Files.deleteIfExists(p)
-          }
-        }
   }
 }

@@ -1,15 +1,13 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path}
 import java.util.Base64
 
 /** Durable snapshot of the live SCRAM credential store — what makes
   * `kafka-configs`-style credential administration (key 51) survive a
   * listener restart, the same guarantee Kafka gets from persisting
-  * SCRAM records in cluster metadata (KIP-554). Same versioned
-  * hard-link CAS protocol as [[TxnStore]]/the topic manifest:
-  * `_scram/v{N}.json` under the log root, full state per version,
-  * atomic link, newest wins.
+  * SCRAM records in cluster metadata (KIP-554). A [[VersionedDir]]
+  * like the topic manifest: `_scram/v{N}.json` under the log root,
+  * full state per version, atomic link, newest wins.
   *
   * Only live ALTERATIONS are persisted — a listener that never
   * receives key 51 writes nothing (the static constructor credential
@@ -50,44 +48,4 @@ private[streaming] object ScramStore {
         Scram.StoredCreds(unb64(m.group(3)), m.group(4).toInt,
           unb64(m.group(5)), unb64(m.group(6)))
     }.toSeq
-
-  private[streaming] def commit(dir: Path, version: Long, body: String): Unit = {
-    Files.createDirectories(dir)
-    val tmp = Files.createTempFile(dir, ".tmp", ".json")
-    Files.writeString(tmp, body)
-    try Files.createLink(dir.resolve(s"v$version.json"), tmp)
-    finally Files.deleteIfExists(tmp)
-  }
-
-  private[streaming] def maxVersion(dir: Path): Option[Long] = {
-    if (!Files.exists(dir)) return None
-    TopicLog.listDir(dir).iterator.map(_.getFileName.toString)
-      .collect { case s if s.startsWith("v") && s.endsWith(".json") =>
-        s.stripPrefix("v").stripSuffix(".json").toLong }
-      .maxOption
-  }
-
-  private[streaming] def load(dir: Path)
-      : Option[(Long, Seq[((String, Int), Scram.StoredCreds)])] = {
-    var attempts = 0
-    while (attempts < 5) {
-      maxVersion(dir) match {
-        case None => return None
-        case Some(v) =>
-          try return Some((v, parse(Files.readString(dir.resolve(s"v$v.json")))))
-          catch { case _: java.nio.file.NoSuchFileException => attempts += 1 }
-      }
-    }
-    None
-  }
-
-  private[streaming] def prune(dir: Path, keepFrom: Long): Unit =
-    if (Files.exists(dir))
-      TopicLog.listDir(dir).foreach { p =>
-        val n = p.getFileName.toString
-        if (n.startsWith("v") && n.endsWith(".json")) {
-          val v = n.stripPrefix("v").stripSuffix(".json").toLongOption
-          if (v.exists(_ < keepFrom)) Files.deleteIfExists(p)
-        }
-      }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.Paths
 import java.util.Base64
 
 import scala.collection.mutable
@@ -81,15 +81,15 @@ final class ShareGroup(log: TopicLog, val groupId: String,
   private val expiryBound = Array.fill(log.numPartitions)(Long.MinValue)
   private var version = 0L
 
-  private val stateDir: Path = Paths.get(log.topicDir, "_share",
+  private val stateDir = new VersionedDir(Paths.get(log.topicDir, "_share",
     Base64.getUrlEncoder.withoutPadding.encodeToString(
-      groupId.getBytes("UTF-8")))
+      groupId.getBytes("UTF-8"))))
 
   // reload the newest snapshot — a reopened group continues exactly;
   // a FRESH group honors share.auto.offset.reset (latest = SPSOs at
   // the log end as of creation, persisted immediately so the choice
   // is durable and a restart can't re-run the reset over new data)
-  ShareStore.load(stateDir) match {
+  stateDir.readLatest(ShareStore.parse) match {
     case Some((v, st)) =>
       version = v
       st.foreach { p =>
@@ -138,12 +138,12 @@ final class ShareGroup(log: TopicLog, val groupId: String,
     val body = ShareStore.render(version, log.numPartitions, i =>
       ShareStore.PState(i, spso(i), acquired(i), available(i), terminal(i)))
     try {
-      ShareStore.commit(stateDir, version, body)
+      stateDir.link(version, body)
       // each snapshot is FULL state, so only the newest matters; keep
       // a one-version window behind it (a reader resolving the old max
       // mid-commit) and drop the rest — without this a long-running
       // group leaks one file per acquire/acknowledge forever
-      ShareStore.prune(stateDir, version - 1)
+      stateDir.prune(version - 1)
     } catch {
       case _: java.nio.file.FileAlreadyExistsException =>
         // a second live writer claimed this version: the share-group
@@ -396,8 +396,8 @@ object ShareGroup {
   case object Reject extends AckType
 }
 
-/** Versioned full-state snapshots for [[ShareGroup]] — the
-  * TxnStore/ScramStore hard-link CAS idiom. All-numeric payload
+/** The codec of [[ShareGroup]]'s full-state snapshots, linked into a
+  * [[VersionedDir]]. All-numeric payload
   * (offsets, expiries, counts, 'a'/'x' flags), rendered per
   * partition as compact colon/semicolon strings.
   *
@@ -490,34 +490,4 @@ private[streaming] object ShareStore {
       val tm = parseRuns(m.group(5))(f => f(0).head)
       PState(m.group(1).toInt, m.group(2).toLong, acq, av, tm)
     }.toSeq
-
-  private[streaming] def commit(dir: Path, version: Long, body: String): Unit = {
-    Files.createDirectories(dir)
-    val tmp = Files.createTempFile(dir, ".tmp", ".json")
-    Files.writeString(tmp, body)
-    try Files.createLink(dir.resolve(s"v$version.json"), tmp)
-    finally Files.deleteIfExists(tmp)
-  }
-
-  /** Drop snapshot versions below `keepFrom` (full-state snapshots:
-    * only the newest is ever read back). */
-  private[streaming] def prune(dir: Path, keepFrom: Long): Unit =
-    if (Files.exists(dir))
-      TopicLog.listDir(dir).foreach { p =>
-        val n = p.getFileName.toString
-        if (n.startsWith("v") && n.endsWith(".json")) {
-          val v = n.stripPrefix("v").stripSuffix(".json").toLongOption
-          if (v.exists(_ < keepFrom)) Files.deleteIfExists(p)
-        }
-      }
-
-  private[streaming] def load(dir: Path): Option[(Long, Seq[PState])] = {
-    if (!Files.exists(dir)) return None
-    val v = TopicLog.listDir(dir).iterator.map(_.getFileName.toString)
-      .collect { case s if s.startsWith("v") && s.endsWith(".json") =>
-        s.stripPrefix("v").stripSuffix(".json").toLong }
-      .maxOption
-    v.map(ver =>
-      (ver, parse(Files.readString(dir.resolve(s"v$ver.json")))))
-  }
 }

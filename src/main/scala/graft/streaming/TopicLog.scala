@@ -314,7 +314,7 @@ class TopicLog private (
         if (snapshot) TopicLog.renderManifest(next)
         else TopicLog.renderDelta(next, newFiles, newRanges)
       try {
-        commitVersion(next.version, body)
+        manifests.link(next.version, body)
         // the next resolve starts from the version just linked, exactly
         // as a cold resolve reads it back: a snapshot keeps only the
         // ranges of its listed files
@@ -377,12 +377,12 @@ class TopicLog private (
     * deleted. */
   def retireHistory(keepManifests: Int = 10): Int = {
     checkpoint()
-    val versions = TopicLog.listVersions(manifestsDir).sorted
+    val versions = manifests.versions.sorted
     val anchor = versions.reverse
       .find(v => TopicLog.isSnapshotVersion(manifestsDir, v)).getOrElse(0L)
     val retired = versions.dropRight(math.max(keepManifests, 1))
       .filter(_ < anchor)
-    retired.foreach(v => Files.deleteIfExists(manifestsDir.resolve(s"v$v.json")))
+    retired.foreach(v => Files.deleteIfExists(manifests.file(v)))
     retired.size
   }
 
@@ -554,9 +554,7 @@ class TopicLog private (
 
   /** Committed manifest versions still on disk, ascending — the
     * time-travel catalog ([[readAt]] accepts any of these). */
-  def manifestVersions(): Seq[Long] =
-    if (!Files.exists(manifestsDir)) Seq.empty
-    else TopicLog.listVersions(manifestsDir).sorted
+  def manifestVersions(): Seq[Long] = manifests.versions.sorted
 
   /** Read the whole log (all partitions) as a DataFrame — only files
     * the current manifest references (uncommitted/orphaned files are
@@ -629,6 +627,7 @@ class TopicLog private (
   import TopicLog.Manifest
 
   private def manifestsDir = Paths.get(s"$topicDir/_manifests")
+  private def manifests = new VersionedDir(manifestsDir)
 
   private[streaming] def currentManifest(): Option[Manifest] =
     TopicLog.resolveManifest(manifestsDir)
@@ -655,19 +654,10 @@ class TopicLog private (
     currentManifest().get
   }
 
-  /** CAS-publish one manifest version: write a temp file, then
-    * atomically hard-link it to its version name — creation fails if
-    * that version already exists (another writer won). */
+  /** CAS-publish one manifest version — fails if that version already
+    * exists (another writer won). */
   private def commitManifest(m: Manifest): Unit =
-    commitVersion(m.version, TopicLog.renderManifest(m))
-
-  private def commitVersion(version: Long, body: String): Unit = {
-    Files.createDirectories(manifestsDir)
-    val tmp = Files.createTempFile(manifestsDir, ".tmp", ".json")
-    Files.writeString(tmp, body)
-    try Files.createLink(manifestsDir.resolve(s"v$version.json"), tmp)
-    finally Files.deleteIfExists(tmp)
-  }
+    manifests.link(m.version, TopicLog.renderManifest(m))
 
   /** Materialize the current state as a full-snapshot version (a
     * CHECKPOINT) if the newest version is a delta: bounds how far back
@@ -702,25 +692,19 @@ class TopicLog private (
     * semantics — a commit may rewind), other partitions are preserved
     * from whatever version is current at link time. */
   def commit(group: String, offsets: Map[Int, Long]): Unit = {
+    val dir = groupDir(group)
     var done = false
     while (!done) {
       val (v, cur) = committedVersioned(group)
-      val merged = cur ++ offsets
-      val dir = groupDir(group)
-      Files.createDirectories(dir)
-      val tmp = Files.createTempFile(dir, ".tmp", ".json")
-      Files.writeString(tmp,
-        merged.toSeq.sorted.map { case (k, o) => s""""$k":$o""" }.mkString("{", ",", "}"))
       try {
-        Files.createLink(dir.resolve(s"v${v + 1}.json"), tmp)
+        dir.link(v + 1, renderOffsetMap(cur ++ offsets))
         done = true
       } catch {
         case _: java.nio.file.FileAlreadyExistsException => () // lost the race; re-merge
-      } finally Files.deleteIfExists(tmp)
+      }
     }
     // retire old versions best-effort; readers only ever read the max
-    groupVersions(group).sorted.dropRight(10)
-      .foreach(old => Files.deleteIfExists(groupDir(group).resolve(s"v$old.json")))
+    dir.versions.sorted.dropRight(10).foreach(old => Files.deleteIfExists(dir.file(old)))
   }
 
   def committed(group: String): Map[Int, Long] = committedVersioned(group)._2
@@ -735,19 +719,13 @@ class TopicLog private (
       val (v, cur) = committedVersioned(group)
       val remaining = cur -- partitions
       if (remaining == cur) done = true // nothing committed for these
-      else {
-        val dir = groupDir(group)
-        Files.createDirectories(dir)
-        val tmp = Files.createTempFile(dir, ".tmp", ".json")
-        Files.writeString(tmp,
-          remaining.toSeq.sorted.map { case (k, o) => s""""$k":$o""" }.mkString("{", ",", "}"))
+      else
         try {
-          Files.createLink(dir.resolve(s"v${v + 1}.json"), tmp)
+          groupDir(group).link(v + 1, renderOffsetMap(remaining))
           done = true
         } catch {
           case _: java.nio.file.FileAlreadyExistsException => () // lost the race
-        } finally Files.deleteIfExists(tmp)
-      }
+        }
     }
   }
 
@@ -758,7 +736,7 @@ class TopicLog private (
     * [[deleteOffsets]] needs the CAS loop; a commit racing anyway
     * simply recreates the group, which is also Kafka's outcome. */
   def deleteGroup(group: String): Unit = {
-    val dir = groupDir(group)
+    val dir = groupDir(group).dir
     if (Files.exists(dir)) {
       TopicLog.listDir(dir).foreach(Files.deleteIfExists(_))
       Files.deleteIfExists(dir)
@@ -766,27 +744,20 @@ class TopicLog private (
     Files.deleteIfExists(groupFile(group))
   }
 
-  private def groupDir(group: String) = Paths.get(s"$topicDir/_groups/$group")
-
-  private def groupVersions(group: String): Seq[Long] = {
-    import scala.jdk.CollectionConverters._
-    if (!Files.exists(groupDir(group))) Seq.empty
-    else TopicLog.listDir(groupDir(group)).iterator
-      .map(_.getFileName.toString)
-      .collect { case s if s.startsWith("v") && s.endsWith(".json") =>
-        s.stripPrefix("v").stripSuffix(".json").toLong }
-      .toSeq
-  }
+  private def groupDir(group: String) =
+    new VersionedDir(Paths.get(s"$topicDir/_groups/$group"))
 
   /** (current version, offsets); version -1 with the legacy flat-file
     * (or empty) content for pre-versioned groups. */
-  private def committedVersioned(group: String): (Long, Map[Int, Long]) =
-    groupVersions(group).maxOption match {
+  private def committedVersioned(group: String): (Long, Map[Int, Long]) = {
+    val dir = groupDir(group)
+    dir.latest match {
       case Some(v) =>
-        (v, readOffsetMap(groupDir(group).resolve(s"v$v.json")).getOrElse(Map.empty))
+        (v, readOffsetMap(dir.file(v)).getOrElse(Map.empty))
       case None =>
         (-1L, readOffsetMap(groupFile(group)).getOrElse(Map.empty))
     }
+  }
 
   /** Per-partition lag of a group vs the log end. */
   def lag(group: String): Map[Int, Long] = {
@@ -1250,14 +1221,6 @@ object TopicLog {
     else resolveManifestOnce(dir, atVersion)
   }
 
-  /** The version numbers of the `v<N>.json` files in `dir`, unordered. */
-  private[graft] def listVersions(dir: Path): Seq[Long] =
-    listDir(dir).iterator
-      .map(_.getFileName.toString)
-      .collect { case s if s.startsWith("v") && s.endsWith(".json") =>
-        s.stripPrefix("v").stripSuffix(".json").toLong }
-      .toSeq
-
   /** A resolved manifest with the bytes of the version file it was
     * resolved at (`version`, its newest). */
   private final class Resolved(val version: Long, val bytes: Array[Byte],
@@ -1291,10 +1254,11 @@ object TopicLog {
         remember(dir, r)
         Some(r.manifest)
       case None =>
-        if (!Files.exists(dir)) {
+        val versions = new VersionedDir(dir).versions
+        if (versions.isEmpty) {
           resolvedManifests.remove(cacheKey(dir))
           None
-        } else listVersions(dir).filter(_ <= cap).maxOption.map { newest =>
+        } else versions.filter(_ <= cap).maxOption.map { newest =>
           val r = walkManifest(dir, newest)
           if (warm) resolvedManifests.put(cacheKey(dir), r)
           r.manifest
@@ -1833,10 +1797,12 @@ object TopicLog {
   }
 
   // flat {"<int>":<long>,...} maps — hand-rolled to avoid deps
+  private def renderOffsetMap(m: Map[Int, Long]): String =
+    m.toSeq.sorted.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+
   private def writeOffsetMap(path: Path, m: Map[Int, Long]): Unit = {
     Files.createDirectories(path.getParent)
-    val json = m.toSeq.sorted.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-    Files.writeString(path, json)
+    Files.writeString(path, renderOffsetMap(m))
   }
 
   private def readOffsetMap(path: Path): Option[Map[Int, Long]] =

@@ -1,17 +1,16 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path}
 import java.util.Base64
 
 /** Durable snapshot of the transaction coordinator — what makes
   * read_committed semantics survive a broker restart (SURVEY §4).
   *
   * Kafka persists this state in the __transaction_state log plus
-  * per-segment .txnindex files; graft's analog is the same versioned
-  * hard-link CAS protocol the topic manifest uses (TopicLog
-  * `commitVersion`): each coordinator mutation renders the FULL state
-  * (bounded: MaxTxnStates transactions, MaxAbortedRangesPerPartition
-  * ranges per partition — both LRU/pruned) and links it as
+  * per-segment .txnindex files; graft's analog is a [[VersionedDir]],
+  * as for the topic manifest: each coordinator mutation renders the
+  * FULL state (bounded: MaxTxnStates transactions,
+  * MaxAbortedRangesPerPartition ranges per partition — both
+  * LRU/pruned) and links it as
   * `_txn/v{N}.json` under the log root. Readers resolve the max
   * version; the link is atomic, so a crash can never expose a torn
   * snapshot. A restarted broker reloads: aborted ranges keep
@@ -126,52 +125,4 @@ private[streaming] object TxnStore {
       }.toMap
     State(nextPid, txns, aborted)
   }
-
-  /** CAS-publish one version: temp file + atomic hard link, the
-    * manifest protocol. Throws FileAlreadyExistsException if this
-    * version was already published (caller re-reads and re-renders). */
-  private[streaming] def commit(dir: Path, version: Long,
-      body: String): Unit = {
-    Files.createDirectories(dir)
-    val tmp = Files.createTempFile(dir, ".tmp", ".json")
-    Files.writeString(tmp, body)
-    try Files.createLink(dir.resolve(s"v$version.json"), tmp)
-    finally Files.deleteIfExists(tmp)
-  }
-
-  private[streaming] def maxVersion(dir: Path): Option[Long] = {
-    if (!Files.exists(dir)) return None
-    TopicLog.listDir(dir).iterator.map(_.getFileName.toString)
-      .collect { case s if s.startsWith("v") && s.endsWith(".json") =>
-        s.stripPrefix("v").stripSuffix(".json").toLong }
-      .maxOption
-  }
-
-  /** Load the newest snapshot. A version racing deletion by another
-    * writer's prune re-resolves from a fresh listing. */
-  private[streaming] def load(dir: Path): Option[(Long, State)] = {
-    var attempts = 0
-    while (attempts < 5) {
-      maxVersion(dir) match {
-        case None => return None
-        case Some(v) =>
-          try return Some((v, parse(Files.readString(dir.resolve(s"v$v.json")))))
-          catch { case _: java.nio.file.NoSuchFileException => attempts += 1 }
-      }
-    }
-    None
-  }
-
-  /** Retire versions strictly below `keepFrom` — every snapshot is
-    * full state, so only the newest matters; a small window is kept
-    * for readers resolving concurrently with a write. */
-  private[streaming] def prune(dir: Path, keepFrom: Long): Unit =
-    if (Files.exists(dir))
-      TopicLog.listDir(dir).foreach { p =>
-        val n = p.getFileName.toString
-        if (n.startsWith("v") && n.endsWith(".json")) {
-          val v = n.stripPrefix("v").stripSuffix(".json").toLongOption
-          if (v.exists(_ < keepFrom)) Files.deleteIfExists(p)
-        }
-      }
 }

@@ -72,10 +72,10 @@ class WireServer(private val broker: Broker,
     * path accepts the static map directly regardless). */
   private val scramStore =
     scala.collection.concurrent.TrieMap.empty[(String, Int), Scram.StoredCreds]
-  private val scramStoreDir = java.nio.file.Paths.get(broker.logRoot, "_scram")
+  private val scramDir = new VersionedDir(java.nio.file.Paths.get(broker.logRoot, "_scram"))
   @volatile private var scramStoreVersion = 0L
   private lazy val scramSeeded: Unit = {
-    ScramStore.load(scramStoreDir).foreach { case (v, persisted) =>
+    scramDir.readLatest(ScramStore.parse).foreach { case (v, persisted) =>
       scramStoreVersion = v
       persisted.foreach { case (k, c) => scramStore.put(k, c) }
     }
@@ -93,25 +93,13 @@ class WireServer(private val broker: Broker,
   }
 
   /** Publish the full credential store as the next snapshot version
-    * (TxnStore's single-writer CAS: a version collision means another
-    * process raced this root — skip past its version and republish,
-    * latest state wins). Called only on successful key-51 mutations,
-    * so a listener that never administers credentials writes nothing. */
+    * (a version collision means another process raced this root —
+    * skip past its version and republish, latest state wins). Called
+    * only on successful key-51 mutations, so a listener that never
+    * administers credentials writes nothing. */
   private def persistScram(): Unit = synchronized {
-    var done = false
-    while (!done) {
-      val v = scramStoreVersion + 1
-      try {
-        ScramStore.commit(scramStoreDir, v, ScramStore.render(v, scramStore.toSeq))
-        scramStoreVersion = v
-        ScramStore.prune(scramStoreDir, v - 2)
-        done = true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          scramStoreVersion =
-            math.max(scramStoreVersion + 1, ScramStore.maxVersion(scramStoreDir).getOrElse(0L))
-      }
-    }
+    scramStoreVersion =
+      scramDir.publish(scramStoreVersion, 2)(ScramStore.render(_, scramStore.toSeq))
   }
   private def scramLookup(algo: Scram.Algo)(
       user: String): Option[Scram.StoredCreds] = {

@@ -122,6 +122,21 @@ class FeatureSpec extends AnyFunSuite {
     assert(!finalized.exists(_._1 == "share.version"))
   }
 
+  test("two managers on one store each apply an update; the later state loads") {
+    val dir = Files.createTempDirectory("graft-features-rival").resolve("_features")
+    val a = new Features.Manager(dir)
+    val b = new Features.Manager(dir)
+    assert(a.update(Seq(("metadata.version", 20, Features.SafeDowngrade)),
+      validateOnly = false) === Seq(("metadata.version", 0, null)))
+    // b still holds epoch 0, so v1 is taken: it skips past a's version
+    assert(b.update(Seq(("kraft.version", 0, Features.UnsafeDowngrade)),
+      validateOnly = false) === Seq(("kraft.version", 0, null)))
+    assert(a.current._1 === 1L)
+    assert(b.current._1 === 2L)
+    assert(!b.current._2.exists(_._1 == "kraft.version"))
+    assert(new Features.Manager(dir).current === b.current)
+  }
+
   test("DescribeQuorum codec round-trips at v0 and v1") {
     for (v <- 0 to DescribeQuorumMaxVersion) {
       val (reqV, _, topics) = decodeDescribeQuorumRequest(
