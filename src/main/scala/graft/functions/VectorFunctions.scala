@@ -31,8 +31,4 @@ object VectorFunctions {
   def l2Norm(a: Column): Column = sqrt(dot(a, a))
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (l2Norm(a) * l2Norm(b))
-
-  /** Cosine rounded to 6 dp — the comparison/ordering form used by
-    * oracle-checked queries. */
-  def cosineR(a: Column, b: Column): Column = round(cosine(a, b), 6)
 }

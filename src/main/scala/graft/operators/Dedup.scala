@@ -192,21 +192,6 @@ object Dedup {
       .select("d1", "d2", "jaccard")
   }
 
-  /** MinHash signatures as k min-agg columns: explode shingles once,
-    * hash each against k seeds columnar-wise, map-side-combine the
-    * mins. Beats the nested higher-order-function form ~10× (no
-    * per-seed array materialization; everything stays in whole-stage
-    * codegen + partial aggregation). */
-  private[operators] def minhashDocs(spark: SparkSession, dir: String, k: Int = 64): DataFrame = {
-    // min() over duplicate shingles equals min() over the distinct
-    // set, so gram rows feed the signature directly — one pass via
-    // the native MinHashAgg imperative aggregate (bit-equal to the
-    // k-column min formulation; see MinHashAggSpec).
-    val exploded = gramRows(spark, dir, lowercase = true).select("doc_id", "sh")
-    exploded.groupBy("doc_id")
-      .agg(graft.functions.MinHashAgg(col("sh"), k).as("sig"))
-  }
-
   /** MinHash + LSH near-dup detection (shingle → minhash → band →
     * bucket-join → Jaccard verify). Per-doc output: its candidate
     * count and best verified match (never empty — the pair list is a

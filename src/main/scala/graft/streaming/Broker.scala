@@ -2647,12 +2647,13 @@ class Broker(spark: SparkSession, root: String) {
     import KafkaWire._
     val (version, corr, hmac, periodMs) =
       decodeExpireDelegationTokenRequest(requestBytes)
-    if (authKindCtx.get() != 1)
-      return encodeTokenExpiryResponse(version, corr, 64, -1L)
+    def answer(err: Int, expiry: Long) =
+      encodeTokenExpiryResponse(version, corr, err, expiry, ExpireDelegationToken)
+    if (authKindCtx.get() != 1) return answer(64, -1L)
     delegationTokens.expire(hmac, authCtx.get()._1, periodMs,
       System.currentTimeMillis()) match {
-      case Left(err) => encodeTokenExpiryResponse(version, corr, err, -1L)
-      case Right(expiry) => encodeTokenExpiryResponse(version, corr, 0, expiry)
+      case Left(err) => answer(err, -1L)
+      case Right(expiry) => answer(0, expiry)
     }
   }
 

@@ -26,7 +26,109 @@ import java.nio.charset.StandardCharsets.UTF_8
   */
 object KafkaWire {
 
-  val ApiVersionsApiKey = 18
+  /** One served Kafka API, declared once: its key, its name, the newest
+    * version this listener speaks, and the first flexible (KIP-482)
+    * version — where the request header gains its tag buffer (header
+    * v2), the response header its own (header v1), and the body goes
+    * compact. `flexibleFrom` is Kafka's published `flexibleVersions`;
+    * 0 = flexible at every version, [[NeverFlexible]] = "none". Every
+    * codec's header, version check and flexible switch derive from
+    * this declaration ([[readRequest]], [[writeRequest]],
+    * [[writeResponse]], [[readResponse]]); [[WireServer.Apis]] lists
+    * the served ones. */
+  final case class Api(key: Int, name: String, maxVersion: Int, flexibleFrom: Int) {
+    def flexible(version: Int): Boolean = version >= flexibleFrom
+  }
+
+  val NeverFlexible = Int.MaxValue
+
+  val Produce = Api(0, "Produce", 9, 9)
+  /** v13 = KIP-516 topic-id keying: request/response address topics by
+    * the 16-byte topic_id (graft's deterministic [[topicUuid]]) instead
+    * of name; unknown ids answer UNKNOWN_TOPIC_ID (100) per partition.
+    * v14 = KIP-405 (adds only the tiered-storage error code; no tiered
+    * reads here, so the code is never answered); v15 = KIP-903: the
+    * top-level replica_id field is REMOVED — followers identify via
+    * the tagged ReplicaState (consumers, graft's only callers, carry
+    * neither); v16 = KIP-951: the response MAY carry tagged
+    * NodeEndpoints / CurrentLeader redirects — optional, and a
+    * single-broker engine never redirects, so they are simply not
+    * emitted. */
+  val Fetch = Api(1, "Fetch", 16, 12)
+  /** v7 = KIP-734 MAX_TIMESTAMP (-3); v8/v9 = KIP-405/KIP-1005
+    * EARLIEST_LOCAL (-4) / LATEST_TIERED (-5) sentinel timestamps —
+    * no schema change at either. */
+  val ListOffsets = Api(2, "ListOffsets", 9, 6)
+  val Metadata = Api(3, "Metadata", 12, 9)
+  val OffsetCommit = Api(8, "OffsetCommit", 8, 8)
+  val OffsetFetch = Api(9, "OffsetFetch", 9, 6)
+  val FindCoordinator = Api(10, "FindCoordinator", 4, 3)
+  val JoinGroup = Api(11, "JoinGroup", 9, 6)
+  val Heartbeat = Api(12, "Heartbeat", 4, 4)
+  val LeaveGroup = Api(13, "LeaveGroup", 5, 4)
+  val SyncGroup = Api(14, "SyncGroup", 5, 4)
+  val DescribeGroups = Api(15, "DescribeGroups", 5, 5)
+  val ListGroups = Api(16, "ListGroups", 5, 3)
+  val SaslHandshake = Api(17, "SaslHandshake", 1, NeverFlexible)
+  val ApiVersions = Api(18, "ApiVersions", 3, 3)
+  val CreateTopics = Api(19, "CreateTopics", 7, 5)
+  val DeleteTopics = Api(20, "DeleteTopics", 6, 4)
+  val DeleteRecords = Api(21, "DeleteRecords", 2, 2)
+  val InitProducerId = Api(22, "InitProducerId", 4, 2)
+  val OffsetForLeaderEpoch = Api(23, "OffsetForLeaderEpoch", 4, 4)
+  val AddPartitionsToTxn = Api(24, "AddPartitionsToTxn", 3, 3)
+  val AddOffsetsToTxn = Api(25, "AddOffsetsToTxn", 3, 3)
+  val EndTxn = Api(26, "EndTxn", 3, 3)
+  val TxnOffsetCommit = Api(28, "TxnOffsetCommit", 3, 3)
+  val DescribeAcls = Api(29, "DescribeAcls", 3, 2)
+  val CreateAcls = Api(30, "CreateAcls", 3, 2)
+  val DeleteAcls = Api(31, "DeleteAcls", 3, 2)
+  val DescribeConfigs = Api(32, "DescribeConfigs", 4, 4)
+  val AlterConfigs = Api(33, "AlterConfigs", 2, 2)
+  val DescribeLogDirs = Api(35, "DescribeLogDirs", 0, 2)
+  val SaslAuthenticate = Api(36, "SaslAuthenticate", 2, 2)
+  val CreatePartitions = Api(37, "CreatePartitions", 3, 2)
+  val CreateDelegationToken = Api(38, "CreateDelegationToken", 3, 2)
+  val RenewDelegationToken = Api(39, "RenewDelegationToken", 2, 2)
+  val ExpireDelegationToken = Api(40, "ExpireDelegationToken", 2, 2)
+  val DescribeDelegationToken = Api(41, "DescribeDelegationToken", 3, 2)
+  val DeleteGroups = Api(42, "DeleteGroups", 2, 2)
+  val ElectLeaders = Api(43, "ElectLeaders", 0, 2)
+  val IncrementalAlterConfigs = Api(44, "IncrementalAlterConfigs", 1, 1)
+  val AlterPartitionReassignments = Api(45, "AlterPartitionReassignments", 0, 0)
+  val ListPartitionReassignments = Api(46, "ListPartitionReassignments", 0, 0)
+  val OffsetDelete = Api(47, "OffsetDelete", 0, NeverFlexible)
+  val DescribeClientQuotas = Api(48, "DescribeClientQuotas", 1, 1)
+  val AlterClientQuotas = Api(49, "AlterClientQuotas", 1, 1)
+  val DescribeUserScramCredentials = Api(50, "DescribeUserScramCredentials", 0, 0)
+  val AlterUserScramCredentials = Api(51, "AlterUserScramCredentials", 0, 0)
+  val DescribeQuorum = Api(55, "DescribeQuorum", 1, 0)
+  val UpdateFeatures = Api(57, "UpdateFeatures", 1, 0)
+  val DescribeCluster = Api(60, "DescribeCluster", 0, 0)
+  val DescribeProducers = Api(61, "DescribeProducers", 0, 0)
+  val DescribeTransactions = Api(65, "DescribeTransactions", 0, 0)
+  val ListTransactions = Api(66, "ListTransactions", 0, 0)
+  /** v1 (AK 4.0): SubscribedTopicRegex — the broker-side regex
+    * subscription KIP-848 completes the consumer API with. Max held
+    * at 1: a v2 existed only as an unverified wire-identical-to-v1
+    * assumption (Kafka's schema JSON for v2 was not checked), and a
+    * broker advertising max=2 GUARANTEES clients pick v2 — if v2
+    * added any non-tagged field, every modern client would misparse.
+    * Advertising the verified maximum is the safe contract; raise
+    * only after checking Apache Kafka's ConsumerGroupHeartbeat.json. */
+  val ConsumerGroupHeartbeat = Api(68, "ConsumerGroupHeartbeat", 1, 0)
+  val ConsumerGroupDescribe = Api(69, "ConsumerGroupDescribe", 0, 0)
+  val GetTelemetrySubscriptions = Api(71, "GetTelemetrySubscriptions", 0, 0)
+  val PushTelemetry = Api(72, "PushTelemetry", 0, 0)
+  val ListClientMetricsResources = Api(74, "ListClientMetricsResources", 0, 0)
+  val DescribeTopicPartitions = Api(75, "DescribeTopicPartitions", 0, 0)
+  val ShareGroupHeartbeat = Api(76, "ShareGroupHeartbeat", 0, 0)
+  val ShareGroupDescribe = Api(77, "ShareGroupDescribe", 0, 0)
+  val ShareFetch = Api(78, "ShareFetch", 1, 0)
+  val ShareAcknowledge = Api(79, "ShareAcknowledge", 1, 0)
+  val DescribeShareGroupOffsets = Api(90, "DescribeShareGroupOffsets", 0, 0)
+  val AlterShareGroupOffsets = Api(91, "AlterShareGroupOffsets", 0, 0)
+  val DeleteShareGroupOffsets = Api(92, "DeleteShareGroupOffsets", 0, 0)
 
   case class ApiVersionsRequest(apiVersion: Int, correlationId: Int,
       clientId: String, softwareName: String, softwareVersion: String)
@@ -118,17 +220,14 @@ object KafkaWire {
     out.toByteArray
   }
 
-  /** A response body writer with its size prefix reserved, sized for
-    * per-partition record payloads (null = none) plus their partitions'
-    * fixed fields: the record-carrying responses write their batches
-    * into it once and [[closeFrame]] fills the prefix in, so a fetch's
-    * records are not copied again by [[frame]]. */
-  private def openFrame(payloads: Seq[Seq[Array[Byte]]]): ByteArrayOutputStream = {
+  /** A response buffer size for per-partition record payloads (null =
+    * none) plus their partitions' fixed fields: the record-carrying
+    * responses write their batches into it once, so a fetch's records
+    * are not copied again as the buffer grows. */
+  private def frameCapacity(payloads: Seq[Seq[Array[Byte]]]): Int = {
     val hint = 128L + payloads.iterator.flatMap(_.iterator)
       .map(b => 64L + (if (b == null) 0 else b.length)).sum
-    val out = new ByteArrayOutputStream(math.min(hint, Int.MaxValue - 64L).toInt)
-    writeInt32(out, 0)
-    out
+    math.min(hint, Int.MaxValue - 64L).toInt
   }
 
   private def closeFrame(out: ByteArrayOutputStream): Array[Byte] = {
@@ -147,41 +246,26 @@ object KafkaWire {
 
   // --- ApiVersions v0–v3 ---
 
-  val ApiVersionsMaxVersion = 3
-
   /** Client-side encode at any v0–v3: v0–v2 carry header v1 and an
     * EMPTY body (the pre-KIP-511 probe every older client opens
     * with); v3 is flexible and adds client_software_name/version. */
   def encodeApiVersionsRequest(version: Int, correlationId: Int,
       clientId: String, softwareName: String = "graft",
-      softwareVersion: String = "0"): Array[Byte] = {
-    require(version >= 0 && version <= ApiVersionsMaxVersion,
-      s"unsupported ApiVersions version $version")
+      softwareVersion: String = "0"): Array[Byte] =
     if (version == 3)
-      return encodeApiVersionsRequestV3(correlationId, clientId,
-        softwareName, softwareVersion)
-    val out = new ByteArrayOutputStream()
-    writeInt16(out, ApiVersionsApiKey) // header v1
-    writeInt16(out, version)
-    writeInt32(out, correlationId)
-    writeNullableString(out, clientId)
-    frame(out.toByteArray) // v0–v2 body is empty
-  }
+      encodeApiVersionsRequestV3(correlationId, clientId, softwareName,
+        softwareVersion)
+    else // v0–v2 body is empty
+      writeRequest(ApiVersions, version, correlationId, clientId)(_ => ())
 
   /** Client-side encode (what a Kafka client puts on the wire). */
   def encodeApiVersionsRequestV3(correlationId: Int, clientId: String,
-      softwareName: String, softwareVersion: String): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    writeInt16(out, ApiVersionsApiKey) // header v2
-    writeInt16(out, 3)
-    writeInt32(out, correlationId)
-    writeNullableString(out, clientId)
-    writeUVarInt(out, 0) // header tags
-    writeCompactString(out, softwareName) // body
-    writeCompactString(out, softwareVersion)
-    writeUVarInt(out, 0) // body tags
-    frame(out.toByteArray)
-  }
+      softwareName: String, softwareVersion: String): Array[Byte] =
+    writeRequest(ApiVersions, 3, correlationId, clientId) { w =>
+      writeCompactString(w.out, softwareName)
+      writeCompactString(w.out, softwareVersion)
+      w.tags()
+    }
 
   /** Server-side decode at ANY client version. api_key, api_version,
     * and correlation_id lead every request header version, so an
@@ -191,21 +275,21 @@ object KafkaWire {
   def decodeApiVersionsRequest(bytes: Array[Byte]): ApiVersionsRequest = {
     val buf = unframe(bytes)
     val apiKey = buf.getShort.toInt
-    require(apiKey == ApiVersionsApiKey, s"api key $apiKey is not ApiVersions")
+    require(apiKey == ApiVersions.key, s"api key $apiKey is not ApiVersions")
     val apiVersion = buf.getShort.toInt
-    val correlationId = buf.getInt
-    if (apiVersion >= 0 && apiVersion < 3) {
-      val clientId = readNullableString(buf)
+    if (apiVersion < 0 || apiVersion > ApiVersions.maxVersion)
+      // future version: body shape unknown, coordinates suffice
+      return ApiVersionsRequest(apiVersion, buf.getInt, null, null, null)
+    val (RequestHeader(_, correlationId, clientId), r) =
+      readRequest(bytes, ApiVersions)
+    if (apiVersion < 3)
       ApiVersionsRequest(apiVersion, correlationId, clientId, null, null)
-    } else if (apiVersion == 3) {
-      val clientId = readNullableString(buf)
-      readTags(buf)
-      val name = readCompactString(buf)
-      val version = readCompactString(buf)
-      readTags(buf)
+    else {
+      val name = readCompactString(r.buf)
+      val version = readCompactString(r.buf)
+      r.tags()
       ApiVersionsRequest(apiVersion, correlationId, clientId, name, version)
-    } else // future version: body shape unknown, coordinates suffice
-      ApiVersionsRequest(apiVersion, correlationId, null, null, null)
+    }
   }
 
   /** Server-side decode of a framed ApiVersions v3 request. */
@@ -222,32 +306,25 @@ object KafkaWire {
     * (key, min, max) INT16 triplets; v1–v2 add trailing throttle;
     * v3 goes compact with tag buffers. */
   def encodeApiVersionsResponse(version: Int, correlationId: Int,
-      apiKeys: Seq[(Int, Int, Int)], errorCode: Int = 0): Array[Byte] = {
-    require(version >= 0 && version <= ApiVersionsMaxVersion,
-      s"unsupported ApiVersions version $version")
+      apiKeys: Seq[(Int, Int, Int)], errorCode: Int = 0): Array[Byte] =
     if (version == 3)
-      return encodeApiVersionsResponseV3(correlationId, apiKeys, errorCode)
-    val out = new ByteArrayOutputStream()
-    writeInt32(out, correlationId)
-    writeInt16(out, errorCode)
-    writeInt32(out, apiKeys.length)
-    apiKeys.foreach { case (key, min, max) =>
-      writeInt16(out, key); writeInt16(out, min); writeInt16(out, max)
+      encodeApiVersionsResponseV3(correlationId, apiKeys, errorCode)
+    else writeResponse(ApiVersions, version, correlationId) { w =>
+      w.i16(errorCode)
+      w.count(apiKeys.length)
+      apiKeys.foreach { case (key, min, max) => w.i16(key); w.i16(min); w.i16(max) }
+      if (version >= 1) w.i32(0) // throttle_time_ms
     }
-    if (version >= 1) writeInt32(out, 0) // throttle_time_ms
-    frame(out.toByteArray)
-  }
 
   /** Client-side decode of a v0–v2 (non-flexible) response. */
   def decodeApiVersionsResponsePreV3(version: Int,
       bytes: Array[Byte]): ApiVersionsResponse = {
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    val errorCode = buf.getShort.toInt
-    val keys = (0 until buf.getInt).map { _ =>
-      (buf.getShort.toInt, buf.getShort.toInt, buf.getShort.toInt)
+    val (correlationId, r) = readResponse(ApiVersions, version, bytes)
+    val errorCode = r.buf.getShort.toInt
+    val keys = (0 until r.buf.getInt).map { _ =>
+      (r.buf.getShort.toInt, r.buf.getShort.toInt, r.buf.getShort.toInt)
     }
-    val throttle = if (version >= 1) buf.getInt else 0
+    val throttle = if (version >= 1) r.buf.getInt else 0
     ApiVersionsResponse(correlationId, errorCode, keys, throttle)
   }
 
@@ -262,75 +339,73 @@ object KafkaWire {
       throttleTimeMs: Int = 0,
       supportedFeatures: Seq[(String, Int, Int)] = Seq.empty,
       finalizedEpoch: Long = -1L,
-      finalizedFeatures: Seq[(String, Int, Int)] = Seq.empty): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    writeInt32(out, correlationId) // response header v0 (special case)
-    writeInt16(out, errorCode)
-    writeUVarInt(out, apiKeys.length + 1) // compact array
-    apiKeys.foreach { case (key, min, max) =>
-      writeInt16(out, key); writeInt16(out, min); writeInt16(out, max)
-      writeUVarInt(out, 0) // entry tags
-    }
-    writeInt32(out, throttleTimeMs)
-    def featureArray(fs: Seq[(String, Int, Int)]): Array[Byte] = {
-      val b = new ByteArrayOutputStream()
-      writeUVarInt(b, fs.length + 1)
-      fs.foreach { case (name, a, c) =>
-        writeCompactString(b, name)
-        writeInt16(b, a); writeInt16(b, c)
-        writeUVarInt(b, 0) // entry tags
+      finalizedFeatures: Seq[(String, Int, Int)] = Seq.empty): Array[Byte] =
+    writeResponse(ApiVersions, 3, correlationId) { w =>
+      val out = w.out
+      writeInt16(out, errorCode)
+      writeUVarInt(out, apiKeys.length + 1) // compact array
+      apiKeys.foreach { case (key, min, max) =>
+        writeInt16(out, key); writeInt16(out, min); writeInt16(out, max)
+        writeUVarInt(out, 0) // entry tags
       }
-      b.toByteArray
+      writeInt32(out, throttleTimeMs)
+      def featureArray(fs: Seq[(String, Int, Int)]): Array[Byte] = {
+        val b = new ByteArrayOutputStream()
+        writeUVarInt(b, fs.length + 1)
+        fs.foreach { case (name, a, c) =>
+          writeCompactString(b, name)
+          writeInt16(b, a); writeInt16(b, c)
+          writeUVarInt(b, 0) // entry tags
+        }
+        b.toByteArray
+      }
+      val tags = Seq.newBuilder[(Int, Array[Byte])]
+      if (supportedFeatures.nonEmpty) tags += 0 -> featureArray(supportedFeatures)
+      if (finalizedEpoch >= 0) {
+        val e = new ByteArrayOutputStream()
+        writeInt64(e, finalizedEpoch)
+        tags += 1 -> e.toByteArray
+        tags += 2 -> featureArray(finalizedFeatures)
+      }
+      val built = tags.result()
+      writeUVarInt(out, built.length) // body tags
+      built.foreach { case (tag, payload) =>
+        writeUVarInt(out, tag)
+        writeUVarInt(out, payload.length)
+        out.write(payload, 0, payload.length)
+      }
     }
-    val tags = Seq.newBuilder[(Int, Array[Byte])]
-    if (supportedFeatures.nonEmpty) tags += 0 -> featureArray(supportedFeatures)
-    if (finalizedEpoch >= 0) {
-      val e = new ByteArrayOutputStream()
-      writeInt64(e, finalizedEpoch)
-      tags += 1 -> e.toByteArray
-      tags += 2 -> featureArray(finalizedFeatures)
-    }
-    val built = tags.result()
-    writeUVarInt(out, built.length) // body tags
-    built.foreach { case (tag, payload) =>
-      writeUVarInt(out, tag)
-      writeUVarInt(out, payload.length)
-      out.write(payload, 0, payload.length)
-    }
-    frame(out.toByteArray)
-  }
 
   /** Client-side decode (round-trip check). */
   def decodeApiVersionsResponseV3(bytes: Array[Byte]): ApiVersionsResponse = {
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    val errorCode = buf.getShort.toInt
-    val n = readUVarInt(buf) - 1
+    val (correlationId, r) = readResponse(ApiVersions, 3, bytes)
+    val errorCode = r.buf.getShort.toInt
+    val n = readUVarInt(r.buf) - 1
     val keys = (0 until n).map { _ =>
-      val k = (buf.getShort.toInt, buf.getShort.toInt, buf.getShort.toInt)
-      readTags(buf)
+      val k = (r.buf.getShort.toInt, r.buf.getShort.toInt, r.buf.getShort.toInt)
+      readTags(r.buf)
       k
     }
-    val throttle = buf.getInt
+    val throttle = r.buf.getInt
     // the KIP-584 feature tags; unknown tags skip per the tag protocol
     var supported = Seq.empty[(String, Int, Int)]
     var finalizedEpoch = -1L
     var finalized = Seq.empty[(String, Int, Int)]
     def readFeatureArray(): Seq[(String, Int, Int)] =
-      (0 until readUVarInt(buf) - 1).map { _ =>
-        val f = (readCompactString(buf), buf.getShort.toInt, buf.getShort.toInt)
-        readTags(buf)
+      (0 until readUVarInt(r.buf) - 1).map { _ =>
+        val f = (readCompactString(r.buf), r.buf.getShort.toInt, r.buf.getShort.toInt)
+        readTags(r.buf)
         f
       }
-    val tagCount = readUVarInt(buf)
+    val tagCount = readUVarInt(r.buf)
     (0 until tagCount).foreach { _ =>
-      val tag = readUVarInt(buf)
-      val size = readUVarInt(buf)
+      val tag = readUVarInt(r.buf)
+      val size = readUVarInt(r.buf)
       tag match {
         case 0 => supported = readFeatureArray()
-        case 1 => finalizedEpoch = buf.getLong
+        case 1 => finalizedEpoch = r.buf.getLong
         case 2 => finalized = readFeatureArray()
-        case _ => buf.position(buf.position() + size)
+        case _ => r.buf.position(r.buf.position() + size)
       }
     }
     ApiVersionsResponse(correlationId, errorCode, keys, throttle,
@@ -357,13 +432,13 @@ object KafkaWire {
         supportedFeatures = supportedFeatures,
         finalizedEpoch = finalizedEpoch,
         finalizedFeatures = finalizedFeatures)
-    else if (req.apiVersion >= 0 && req.apiVersion <= ApiVersionsMaxVersion)
+    else if (req.apiVersion >= 0 && req.apiVersion <= ApiVersions.maxVersion)
       encodeApiVersionsResponse(req.apiVersion, req.correlationId,
         catalog.map(t => (t._1, t._3, t._4)))
     else
       encodeApiVersionsResponse(0, req.correlationId,
-        catalog.collect { case (ApiVersionsApiKey, _, min, max) =>
-          (ApiVersionsApiKey, min, max) },
+        catalog.collect { case (ApiVersions.key, _, min, max) =>
+          (ApiVersions.key, min, max) },
         errorCode = 35)
   }
 
@@ -377,8 +452,6 @@ object KafkaWire {
   //               partitions ARRAY<error INT16, index INT32,
   //                 leader INT32, replicas ARRAY<INT32>,
   //                 isr ARRAY<INT32>>>
-
-  val MetadataApiKey = 3
 
   case class MetadataRequest(correlationId: Int, clientId: String,
       topics: Option[Seq[String]])
@@ -406,7 +479,7 @@ object KafkaWire {
   def encodeMetadataRequestV0(correlationId: Int, clientId: String,
       topics: Option[Seq[String]]): Array[Byte] = {
     val out = new ByteArrayOutputStream()
-    writeInt16(out, MetadataApiKey) // header v1
+    writeInt16(out, Metadata.key) // header v1
     writeInt16(out, 0)
     writeInt32(out, correlationId)
     writeNullableString(out, clientId)
@@ -423,7 +496,7 @@ object KafkaWire {
   def decodeMetadataRequestV0(bytes: Array[Byte]): MetadataRequest = {
     val buf = unframe(bytes)
     val apiKey = buf.getShort.toInt
-    require(apiKey == MetadataApiKey, s"api key $apiKey is not Metadata")
+    require(apiKey == Metadata.key, s"api key $apiKey is not Metadata")
     require(buf.getShort.toInt == 0, "only Metadata v0 supported")
     val correlationId = buf.getInt
     val clientId = readNullableString(buf)
@@ -493,8 +566,6 @@ object KafkaWire {
   //     partitions gain leader_epoch (v7+) and offline_replicas
   //     (v5+); cluster_authorized_operations rides v8–v10 only.
 
-  val MetadataMaxVersion = 12
-
   /** Deterministic per-topic UUID (the v10+ topic_id): graft topics
     * are name-addressed, so the id is a stable digest of the name —
     * never the zero UUID, which the protocol reserves for "unknown". */
@@ -506,46 +577,27 @@ object KafkaWire {
   }
 
   def encodeMetadataRequest(version: Int, correlationId: Int, clientId: String,
-      topics: Option[Seq[String]]): Array[Byte] = {
-    require(version >= 0 && version <= MetadataMaxVersion,
-      s"unsupported Metadata version $version")
-    val flexible = version >= 9
-    val out = new ByteArrayOutputStream()
-    writeInt16(out, MetadataApiKey) // header v1/v2
-    writeInt16(out, version)
-    writeInt32(out, correlationId)
-    writeNullableString(out, clientId)
-    if (flexible) writeUVarInt(out, 0) // header v2 tag buffer
-    val w = new WR(out, flexible)
-    topics match {
-      case None => w.count(if (version == 0) 0 else -1) // v0: empty = all; v1+: null = all
-      case Some(ts) =>
-        w.count(ts.length)
-        ts.foreach { t =>
-          if (version >= 10) w.uuid(new Array[Byte](16))
-          w.str(t)
-          w.tags() // per-entry tagged fields at EVERY flexible version (v9+)
-        }
+      topics: Option[Seq[String]]): Array[Byte] =
+    writeRequest(Metadata, version, correlationId, clientId) { w =>
+      topics match {
+        case None => w.count(if (version == 0) 0 else -1) // v0: empty = all; v1+: null = all
+        case Some(ts) =>
+          w.count(ts.length)
+          ts.foreach { t =>
+            if (version >= 10) w.uuid(new Array[Byte](16))
+            w.str(t)
+            w.tags() // per-entry tagged fields at EVERY flexible version (v9+)
+          }
+      }
+      if (version >= 4) w.bool(false) // allow_auto_topic_creation
+      if (version >= 8 && version <= 10) w.bool(false) // include_cluster_authorized_operations
+      if (version >= 8) w.bool(false) // include_topic_authorized_operations
+      w.tags()
     }
-    if (version >= 4) w.bool(false) // allow_auto_topic_creation
-    if (version >= 8 && version <= 10) w.bool(false) // include_cluster_authorized_operations
-    if (version >= 8) w.bool(false) // include_topic_authorized_operations
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   def decodeMetadataRequest(bytes: Array[Byte]): (Int, MetadataRequest) = {
-    val buf = unframe(bytes)
-    val apiKey = buf.getShort.toInt
-    require(apiKey == MetadataApiKey, s"api key $apiKey is not Metadata")
-    val version = buf.getShort.toInt
-    require(version >= 0 && version <= MetadataMaxVersion,
-      s"unsupported Metadata version $version")
-    val flexible = version >= 9
-    val correlationId = buf.getInt
-    val clientId = readNullableString(buf)
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (RequestHeader(version, correlationId, clientId), r) =
+      readRequest(bytes, Metadata)
     val n = r.count()
     // v0 has no null array: empty means ALL. v1+ makes null=all so
     // empty can mean "no topics, brokers/controller only". A v10+
@@ -568,58 +620,47 @@ object KafkaWire {
 
   def encodeMetadataResponse(version: Int, correlationId: Int,
       brokers: Seq[(Int, String, Int)], clusterId: String,
-      topics: Seq[TopicMetadata]): Array[Byte] = {
-    require(version >= 0 && version <= MetadataMaxVersion,
-      s"unsupported Metadata version $version")
-    val flexible = version >= 9
-    val out = new ByteArrayOutputStream()
-    writeInt32(out, correlationId) // response header v0/v1
-    if (flexible) writeUVarInt(out, 0)
-    val w = new WR(out, flexible)
-    if (version >= 3) w.i32(0) // throttle_time_ms
-    w.count(brokers.length)
-    brokers.foreach { case (id, host, port) =>
-      w.i32(id); w.str(host); w.i32(port)
-      if (version >= 1) w.str(null) // rack
-      w.tags()
-    }
-    if (version >= 2) w.str(clusterId)
-    if (version >= 1) w.i32(brokers.headOption.map(_._1).getOrElse(-1)) // controller
-    w.count(topics.length)
-    topics.foreach { t =>
-      w.i16(t.errorCode)
-      // Name is nullable only at v12+ per the protocol; the v10/v11
-      // UNKNOWN_TOPIC_ID answer carries an EMPTY name (the zero UUID
-      // already signals "unknown") so a conformant decoder can read it
-      w.str(if (t.name == null && version < 12) "" else t.name)
-      if (version >= 10)
-        w.uuid(if (t.name == null) new Array[Byte](16) else topicUuid(t.name))
-      if (version >= 1) w.bool(false) // is_internal
-      w.count(t.partitions.length)
-      t.partitions.foreach { p =>
-        w.i16(p.errorCode)
-        w.i32(p.index)
-        w.i32(p.leader)
-        if (version >= 7) w.i32(0) // leader_epoch
-        w.count(p.replicas.length); p.replicas.foreach(w.i32)
-        w.count(p.isr.length); p.isr.foreach(w.i32)
-        if (version >= 5) w.count(0) // offline_replicas
+      topics: Seq[TopicMetadata]): Array[Byte] =
+    writeResponse(Metadata, version, correlationId) { w =>
+      if (version >= 3) w.i32(0) // throttle_time_ms
+      w.count(brokers.length)
+      brokers.foreach { case (id, host, port) =>
+        w.i32(id); w.str(host); w.i32(port)
+        if (version >= 1) w.str(null) // rack
         w.tags()
       }
-      if (version >= 8) w.i32(Int.MinValue) // topic_authorized_operations: not requested
+      if (version >= 2) w.str(clusterId)
+      if (version >= 1) w.i32(brokers.headOption.map(_._1).getOrElse(-1)) // controller
+      w.count(topics.length)
+      topics.foreach { t =>
+        w.i16(t.errorCode)
+        // Name is nullable only at v12+ per the protocol; the v10/v11
+        // UNKNOWN_TOPIC_ID answer carries an EMPTY name (the zero UUID
+        // already signals "unknown") so a conformant decoder can read it
+        w.str(if (t.name == null && version < 12) "" else t.name)
+        if (version >= 10)
+          w.uuid(if (t.name == null) new Array[Byte](16) else topicUuid(t.name))
+        if (version >= 1) w.bool(false) // is_internal
+        w.count(t.partitions.length)
+        t.partitions.foreach { p =>
+          w.i16(p.errorCode)
+          w.i32(p.index)
+          w.i32(p.leader)
+          if (version >= 7) w.i32(0) // leader_epoch
+          w.count(p.replicas.length); p.replicas.foreach(w.i32)
+          w.count(p.isr.length); p.isr.foreach(w.i32)
+          if (version >= 5) w.count(0) // offline_replicas
+          w.tags()
+        }
+        if (version >= 8) w.i32(Int.MinValue) // topic_authorized_operations: not requested
+        w.tags()
+      }
+      if (version >= 8 && version <= 10) w.i32(Int.MinValue) // cluster_authorized_operations
       w.tags()
     }
-    if (version >= 8 && version <= 10) w.i32(Int.MinValue) // cluster_authorized_operations
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   def decodeMetadataResponse(version: Int, bytes: Array[Byte]): MetadataResponse = {
-    val flexible = version >= 9
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (correlationId, r) = readResponse(Metadata, version, bytes)
     if (version >= 3) r.i32() // throttle_time_ms
     val brokers = (0 until r.count()).map { _ =>
       val b = (r.i32(), r.str(), r.i32())
@@ -704,9 +745,6 @@ object KafkaWire {
   // FetchResponse v0:   topics ARRAY<name STRING, partitions ARRAY<
   //   partition INT32, error INT16, high_watermark INT64,
   //   message_set_size INT32, message_set>>
-
-  val ProduceApiKey = 0
-  val FetchApiKey = 1
 
   case class WireRecord(key: Array[Byte], value: Array[Byte])
 
@@ -805,7 +843,7 @@ object KafkaWire {
       timeoutMs: Int,
       topics: Seq[(String, Seq[(Int, Seq[WireRecord])])]): Array[Byte] = {
     val out = new ByteArrayOutputStream()
-    writeInt16(out, ProduceApiKey) // header v1
+    writeInt16(out, Produce.key) // header v1
     writeInt16(out, 0)
     writeInt32(out, correlationId)
     writeNullableString(out, clientId)
@@ -844,7 +882,7 @@ object KafkaWire {
       maxWaitMs: Int, minBytes: Int,
       topics: Seq[(String, Seq[(Int, Long, Int)])]): Array[Byte] = {
     val out = new ByteArrayOutputStream()
-    writeInt16(out, FetchApiKey) // header v1
+    writeInt16(out, Fetch.key) // header v1
     writeInt16(out, 0)
     writeInt32(out, correlationId)
     writeNullableString(out, clientId)
@@ -891,13 +929,10 @@ object KafkaWire {
   //   partitions ARRAY<partition INT32, offset INT64,
   //   metadata NULLABLE_STRING, error INT16>> (offset -1 = none).
 
-  val OffsetCommitApiKey = 8
-  val OffsetFetchApiKey = 9
-
   def encodeOffsetCommitRequestV0(correlationId: Int, clientId: String,
       group: String, topics: Seq[(String, Seq[(Int, Long, String)])]): Array[Byte] = {
     val out = new ByteArrayOutputStream()
-    writeInt16(out, OffsetCommitApiKey) // header v1
+    writeInt16(out, OffsetCommit.key) // header v1
     writeInt16(out, 0)
     writeInt32(out, correlationId)
     writeNullableString(out, clientId)
@@ -928,7 +963,7 @@ object KafkaWire {
   def encodeOffsetFetchRequestV0(correlationId: Int, clientId: String,
       group: String, topics: Seq[(String, Seq[Int])]): Array[Byte] = {
     val out = new ByteArrayOutputStream()
-    writeInt16(out, OffsetFetchApiKey) // header v1
+    writeInt16(out, OffsetFetch.key) // header v1
     writeInt16(out, 0)
     writeInt32(out, correlationId)
     writeNullableString(out, clientId)
@@ -962,12 +997,10 @@ object KafkaWire {
   // Response: topics ARRAY<name, partitions ARRAY<partition INT32,
   //   error INT16, offsets ARRAY<INT64>>>.
 
-  val ListOffsetsApiKey = 2
-
   def encodeListOffsetsRequestV0(correlationId: Int, clientId: String,
       topics: Seq[(String, Seq[(Int, Long, Int)])]): Array[Byte] = {
     val out = new ByteArrayOutputStream()
-    writeInt16(out, ListOffsetsApiKey) // header v1
+    writeInt16(out, ListOffsets.key) // header v1
     writeInt16(out, 0)
     writeInt32(out, correlationId)
     writeNullableString(out, clientId)
@@ -1022,20 +1055,6 @@ object KafkaWire {
   //     v5 log_start_offset; v7 error_code + session_id; v11
   //     preferred_read_replica; v12 flexible.
 
-  val ProduceMaxVersion = 9
-  /** v13 = KIP-516 topic-id keying: request/response address topics by
-    * the 16-byte topic_id (graft's deterministic [[topicUuid]]) instead
-    * of name; unknown ids answer UNKNOWN_TOPIC_ID (100) per partition.
-    * v14 = KIP-405 (adds only the tiered-storage error code; no tiered
-    * reads here, so the code is never answered); v15 = KIP-903: the
-    * top-level replica_id field is REMOVED — followers identify via
-    * the tagged ReplicaState (consumers, graft's only callers, carry
-    * neither); v16 = KIP-951: the response MAY carry tagged
-    * NodeEndpoints / CurrentLeader redirects — optional, and a
-    * single-broker engine never redirects, so they are simply not
-    * emitted. */
-  val FetchMaxVersion = 16
-
   /** An id the v13 decoder could not resolve becomes this reserved
     * name (illegal in Kafka's topic charset, so it can never collide):
     * the hex suffix lets the response encoder echo the ORIGINAL id
@@ -1080,7 +1099,7 @@ object KafkaWire {
 
   /** Field codec pair abstracting legacy vs flexible (compact)
     * encodings, so one body walk serves every version of an API. */
-  private final class WR(val out: ByteArrayOutputStream, flexible: Boolean) {
+  private final class WR(val out: ByteArrayOutputStream, val flexible: Boolean) {
     def i8(v: Int): Unit = out.write(v & 0xff)
     def bool(v: Boolean): Unit = out.write(if (v) 1 else 0)
     def i16(v: Int): Unit = writeInt16(out, v)
@@ -1098,7 +1117,7 @@ object KafkaWire {
     def tags(): Unit = if (flexible) writeUVarInt(out, 0)
   }
 
-  private final class RD(val buf: ByteBuffer, flexible: Boolean) {
+  private final class RD(val buf: ByteBuffer, val flexible: Boolean) {
     def i8(): Int = buf.get().toInt
     def bool(): Boolean = buf.get() != 0
     def i16(): Int = buf.getShort.toInt
@@ -1112,6 +1131,85 @@ object KafkaWire {
       if (flexible) readCompactBytes(buf) else readBytesField(buf)
     def f64(): Double = java.lang.Double.longBitsToDouble(buf.getLong)
     def tags(): Unit = if (flexible) readTags(buf)
+  }
+
+  /** Request header v1/v2 past its api_key: api_version,
+    * correlation_id and client_id (NULLABLE_STRING in both). */
+  private[streaming] final case class RequestHeader(version: Int,
+      correlationId: Int, clientId: String)
+
+  private def readHeaderFields(buf: ByteBuffer): RequestHeader =
+    RequestHeader(buf.getShort.toInt, buf.getInt, readNullableString(buf))
+
+  /** The header of a framed request of any api, unchecked — for the
+    * listener's quota attribution and failure logs, which read it
+    * before (or instead of) a codec. */
+  private[streaming] def peekRequestHeader(framed: Array[Byte]): RequestHeader = {
+    val buf = unframe(framed)
+    buf.getShort // api_key
+    readHeaderFields(buf)
+  }
+
+  /** Server-side header read: the frame must carry `api`'s key at a
+    * version in [0, maxVersion] (anything else fails the decode, which
+    * closes the connection); a flexible version's header tag buffer is
+    * skipped, and the returned reader sits at the body. */
+  private def readRequest(bytes: Array[Byte], api: Api): (RequestHeader, RD) = {
+    val buf = unframe(bytes)
+    require(buf.getShort.toInt == api.key, s"not a ${api.name} request")
+    val header = readHeaderFields(buf)
+    require(header.version >= 0 && header.version <= api.maxVersion,
+      s"unsupported ${api.name} version ${header.version}")
+    val flexible = api.flexible(header.version)
+    if (flexible) readTags(buf) // header v2 tag buffer
+    (header, new RD(buf, flexible))
+  }
+
+  /** Client-side encode: size prefix, request header v1/v2, then
+    * `body` through a writer in the version's encoding. The version is
+    * the caller's to choose (the server's [[readRequest]] is what
+    * enforces `maxVersion`). */
+  private def writeRequest(api: Api, version: Int, correlationId: Int,
+      clientId: String)(body: WR => Unit): Array[Byte] = {
+    val flexible = api.flexible(version)
+    val out = new ByteArrayOutputStream(64)
+    writeInt32(out, 0) // size prefix, filled in by closeFrame
+    writeInt16(out, api.key)
+    writeInt16(out, version)
+    writeInt32(out, correlationId)
+    writeNullableString(out, clientId) // header v1/v2: legacy string either way
+    if (flexible) writeUVarInt(out, 0) // header v2 tag buffer
+    body(new WR(out, flexible))
+    closeFrame(out)
+  }
+
+  /** Response header v1 (correlation id + tag buffer) at every flexible
+    * version but one: ApiVersions answers with header v0 at ALL
+    * versions, so a client can parse any broker's reply (KIP-511). */
+  private def taggedResponseHeader(api: Api, version: Int): Boolean =
+    api.flexible(version) && api.key != ApiVersions.key
+
+  /** Server-side encode: size prefix, response header, then `body`,
+    * at the version the request was decoded at. `capacity` pre-sizes
+    * the buffer for record-carrying responses. */
+  private def writeResponse(api: Api, version: Int, correlationId: Int,
+      capacity: Int = 64)(body: WR => Unit): Array[Byte] = {
+    val out = new ByteArrayOutputStream(capacity)
+    writeInt32(out, 0) // size prefix, filled in by closeFrame
+    writeInt32(out, correlationId)
+    if (taggedResponseHeader(api, version)) writeUVarInt(out, 0)
+    body(new WR(out, api.flexible(version)))
+    closeFrame(out)
+  }
+
+  /** Client-side decode: the correlation id, and a reader at the body
+    * (past a flexible response header's tag buffer). */
+  private def readResponse(api: Api, version: Int,
+      bytes: Array[Byte]): (Int, RD) = {
+    val buf = unframe(bytes)
+    val correlationId = buf.getInt
+    if (taggedResponseHeader(api, version)) readTags(buf)
+    (correlationId, new RD(buf, api.flexible(version)))
   }
 
   /** All-version produce request: each partition payload decodes to
@@ -1191,46 +1289,29 @@ object KafkaWire {
       compression: Int = CompressionNone): Array[Byte] = {
     require(compression == CompressionNone || version >= 3,
       "compressed produce needs the RecordBatch v2 payload (v3+)")
-    require(version >= 0 && version <= ProduceMaxVersion,
-      s"unsupported Produce version $version")
-    val flexible = version >= 9
-    val out = new ByteArrayOutputStream()
-    writeInt16(out, ProduceApiKey)
-    writeInt16(out, version)
-    writeInt32(out, correlationId)
-    writeNullableString(out, clientId) // header v1/v2: legacy string
-    if (flexible) writeUVarInt(out, 0) // header v2 tag buffer
-    val w = new WR(out, flexible)
-    if (version >= 3) w.str(transactionalId)
-    w.i16(acks)
-    w.i32(timeoutMs)
-    w.count(topics.length)
-    topics.foreach { case (name, parts) =>
-      w.str(name)
-      w.count(parts.length)
-      parts.foreach { case (p, batch) =>
-        w.i32(p)
-        w.bytes(produceRecordsPayload(version, batch, compression))
+    writeRequest(Produce, version, correlationId, clientId) { w =>
+      if (version >= 3) w.str(transactionalId)
+      w.i16(acks)
+      w.i32(timeoutMs)
+      w.count(topics.length)
+      topics.foreach { case (name, parts) =>
+        w.str(name)
+        w.count(parts.length)
+        parts.foreach { case (p, batch) =>
+          w.i32(p)
+          w.bytes(produceRecordsPayload(version, batch, compression))
+          w.tags()
+        }
         w.tags()
       }
       w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
   }
 
   /** Server-side decode of a framed produce request, any version 0–9. */
   def decodeProduceRequest(bytes: Array[Byte]): ProduceRequest = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == ProduceApiKey, "not a Produce request")
-    val version = buf.getShort.toInt
-    require(version >= 0 && version <= ProduceMaxVersion,
-      s"unsupported Produce version $version")
-    val flexible = version >= 9
-    val correlationId = buf.getInt
-    val clientId = readNullableString(buf)
-    if (flexible) readTags(buf) // header v2 tag buffer
-    val r = new RD(buf, flexible)
+    val (RequestHeader(version, correlationId, clientId), r) =
+      readRequest(bytes, Produce)
     val txnId = if (version >= 3) r.str() else null
     val acks = r.i16()
     val timeout = r.i32()
@@ -1276,29 +1357,24 @@ object KafkaWire {
     * results = (topic, (partition, error, baseOffset)*)*. */
   def encodeProduceResponse(version: Int, correlationId: Int,
       results: Seq[(String, Seq[(Int, Int, Long)])],
-      throttleTimeMs: Int = 0): Array[Byte] = {
-    val flexible = version >= 9
-    val out = new ByteArrayOutputStream()
-    writeInt32(out, correlationId)
-    if (flexible) writeUVarInt(out, 0) // response header v1 tag buffer
-    val w = new WR(out, flexible)
-    w.count(results.length)
-    results.foreach { case (name, parts) =>
-      w.str(name)
-      w.count(parts.length)
-      parts.foreach { case (p, err, base) =>
-        w.i32(p); w.i16(err); w.i64(base)
-        if (version >= 2) w.i64(-1L) // log_append_time: create-time
-        if (version >= 5) w.i64(-1L) // log_start_offset: not reported
-        if (version >= 8) { w.count(0); w.str(null) } // record_errors, error_message
+      throttleTimeMs: Int = 0): Array[Byte] =
+    writeResponse(Produce, version, correlationId) { w =>
+      w.count(results.length)
+      results.foreach { case (name, parts) =>
+        w.str(name)
+        w.count(parts.length)
+        parts.foreach { case (p, err, base) =>
+          w.i32(p); w.i16(err); w.i64(base)
+          if (version >= 2) w.i64(-1L) // log_append_time: create-time
+          if (version >= 5) w.i64(-1L) // log_start_offset: not reported
+          if (version >= 8) { w.count(0); w.str(null) } // record_errors, error_message
+          w.tags()
+        }
         w.tags()
       }
+      if (version >= 1) w.i32(throttleTimeMs)
       w.tags()
     }
-    if (version >= 1) w.i32(throttleTimeMs)
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   def decodeProduceResponse(version: Int,
       bytes: Array[Byte]): (Int, Seq[(String, Seq[(Int, Int, Long)])]) = {
@@ -1310,11 +1386,7 @@ object KafkaWire {
     * throttle_time_ms (0 at v0). */
   def decodeProduceResponseFull(version: Int, bytes: Array[Byte])
       : (Int, Seq[(String, Seq[(Int, Int, Long)])], Int) = {
-    val flexible = version >= 9
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (correlationId, r) = readResponse(Produce, version, bytes)
     val topics = (0 until r.count()).map { _ =>
       val name = r.str()
       val parts = (0 until r.count()).map { _ =>
@@ -1345,51 +1417,42 @@ object KafkaWire {
       /** v13: per-name topic_id override (for unknown-id test legs);
         * absent names use the deterministic [[topicUuid]]. */
       idOverrides: Map[String, Array[Byte]] = Map.empty): Array[Byte] = {
-    require(version >= 0 && version <= FetchMaxVersion,
-      s"unsupported Fetch version $version")
-    val flexible = version >= 12
     val byId = version >= 13
-    val out = new ByteArrayOutputStream()
-    writeInt16(out, FetchApiKey)
-    writeInt16(out, version)
-    writeInt32(out, correlationId)
-    writeNullableString(out, clientId)
-    if (flexible) writeUVarInt(out, 0) // header v2 tag buffer
-    val w = new WR(out, flexible)
-    if (version <= 14) w.i32(-1) // replica_id: -1 = consumer (gone v15+)
-    w.i32(maxWaitMs)
-    w.i32(minBytes)
-    if (version >= 3) w.i32(maxBytes)
-    if (version >= 4) out.write(isolationLevel)
-    if (version >= 7) { w.i32(sessionId); w.i32(sessionEpoch) }
-    w.count(topics.length)
-    topics.foreach { case (name, parts) =>
-      if (byId) w.uuid(idOverrides.getOrElse(name, idOfName(name)))
-      else w.str(name)
-      w.count(parts.length)
-      parts.foreach { case (p, off, partMaxBytes) =>
-        w.i32(p)
-        if (version >= 9) w.i32(-1) // current_leader_epoch: unknown
-        w.i64(off)
-        if (version >= 12) w.i32(-1) // last_fetched_epoch
-        if (version >= 5) w.i64(-1L) // log_start_offset (follower-only)
-        w.i32(partMaxBytes)
-        w.tags()
-      }
-      w.tags()
-    }
-    if (version >= 7) {
-      w.count(forgotten.length)
-      forgotten.foreach { case (name, parts) =>
+    writeRequest(Fetch, version, correlationId, clientId) { w =>
+      if (version <= 14) w.i32(-1) // replica_id: -1 = consumer (gone v15+)
+      w.i32(maxWaitMs)
+      w.i32(minBytes)
+      if (version >= 3) w.i32(maxBytes)
+      if (version >= 4) w.out.write(isolationLevel)
+      if (version >= 7) { w.i32(sessionId); w.i32(sessionEpoch) }
+      w.count(topics.length)
+      topics.foreach { case (name, parts) =>
         if (byId) w.uuid(idOverrides.getOrElse(name, idOfName(name)))
         else w.str(name)
-        w.count(parts.length); parts.foreach(w.i32)
+        w.count(parts.length)
+        parts.foreach { case (p, off, partMaxBytes) =>
+          w.i32(p)
+          if (version >= 9) w.i32(-1) // current_leader_epoch: unknown
+          w.i64(off)
+          if (version >= 12) w.i32(-1) // last_fetched_epoch
+          if (version >= 5) w.i64(-1L) // log_start_offset (follower-only)
+          w.i32(partMaxBytes)
+          w.tags()
+        }
         w.tags()
       }
+      if (version >= 7) {
+        w.count(forgotten.length)
+        forgotten.foreach { case (name, parts) =>
+          if (byId) w.uuid(idOverrides.getOrElse(name, idOfName(name)))
+          else w.str(name)
+          w.count(parts.length); parts.foreach(w.i32)
+          w.tags()
+        }
+      }
+      if (version >= 11) w.str("") // rack_id
+      w.tags()
     }
-    if (version >= 11) w.str("") // rack_id
-    w.tags()
-    frame(out.toByteArray)
   }
 
   def decodeFetchRequest(bytes: Array[Byte],
@@ -1398,22 +1461,14 @@ object KafkaWire {
         * broker answers with UNKNOWN_TOPIC_ID (100). */
       topicIdResolver: Array[Byte] => Option[String] = _ => None)
       : FetchRequest = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == FetchApiKey, "not a Fetch request")
-    val version = buf.getShort.toInt
-    require(version >= 0 && version <= FetchMaxVersion,
-      s"unsupported Fetch version $version")
-    val flexible = version >= 12
+    val (RequestHeader(version, correlationId, clientId), r) =
+      readRequest(bytes, Fetch)
     val byId = version >= 13
-    val correlationId = buf.getInt
-    val clientId = readNullableString(buf)
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
     if (version <= 14) r.i32() // replica_id (tagged ReplicaState v15+)
     val maxWait = r.i32()
     val minBytes = r.i32()
     val maxBytes = if (version >= 3) r.i32() else Int.MaxValue
-    val isolationLevel = if (version >= 4) buf.get().toInt else 0
+    val isolationLevel = if (version >= 4) r.buf.get().toInt else 0
     val (sessionId, sessionEpoch) =
       if (version >= 7) (r.i32(), r.i32()) else (0, -1)
     def readTopicKey(): String =
@@ -1467,9 +1522,6 @@ object KafkaWire {
         * config); topics absent here serve at `compression`. */
       compressionByTopic: Map[String, Int] = Map.empty,
       throttleTimeMs: Int = 0): Array[Byte] = {
-    require(version >= 0 && version <= FetchMaxVersion,
-      s"unsupported Fetch version $version")
-    val flexible = version >= 12
     val byId = version >= 13
     val payloads = topics.map { case (name, parts) =>
       parts.map { case (_, _, _, records) =>
@@ -1484,38 +1536,35 @@ object KafkaWire {
           records.map { case (off, rec) => (off, WireRecord(rec.key, rec.value)) })
       }
     }
-    val out = openFrame(payloads)
-    writeInt32(out, correlationId)
-    if (flexible) writeUVarInt(out, 0) // response header v1 tag buffer
-    val w = new WR(out, flexible)
-    if (version >= 1) w.i32(throttleTimeMs)
-    if (version >= 7) { w.i16(errorCode); w.i32(sessionId) }
-    w.count(topics.length)
-    topics.iterator.zip(payloads.iterator).foreach { case ((name, parts), tPayloads) =>
-      // v13: the id — for an unresolved marker name this recovers and
-      // echoes the REQUEST's original topic_id, per the protocol
-      if (byId) w.uuid(idOfName(name)) else w.str(name)
-      w.count(parts.length)
-      parts.iterator.zip(tPayloads.iterator).foreach { case ((p, err, hw, _), payload) =>
-        w.i32(p); w.i16(err); w.i64(hw)
-        if (version >= 4) {
-          w.i64(lso.getOrElse((name, p), hw)) // last_stable_offset
-          if (version >= 5) w.i64(0L) // log_start_offset
-          // aborted_transactions stays empty BY DESIGN: graft's
-          // read_committed filtering is broker-side (aborted records
-          // are omitted from the response as offset gaps, the same
-          // shape compaction produces), so clients have nothing to
-          // filter and no control batches exist to delimit
-          w.count(0)
-          if (version >= 11) w.i32(-1) // preferred_read_replica
+    writeResponse(Fetch, version, correlationId, frameCapacity(payloads)) { w =>
+      if (version >= 1) w.i32(throttleTimeMs)
+      if (version >= 7) { w.i16(errorCode); w.i32(sessionId) }
+      w.count(topics.length)
+      topics.iterator.zip(payloads.iterator).foreach { case ((name, parts), tPayloads) =>
+        // v13: the id — for an unresolved marker name this recovers and
+        // echoes the REQUEST's original topic_id, per the protocol
+        if (byId) w.uuid(idOfName(name)) else w.str(name)
+        w.count(parts.length)
+        parts.iterator.zip(tPayloads.iterator).foreach { case ((p, err, hw, _), payload) =>
+          w.i32(p); w.i16(err); w.i64(hw)
+          if (version >= 4) {
+            w.i64(lso.getOrElse((name, p), hw)) // last_stable_offset
+            if (version >= 5) w.i64(0L) // log_start_offset
+            // aborted_transactions stays empty BY DESIGN: graft's
+            // read_committed filtering is broker-side (aborted records
+            // are omitted from the response as offset gaps, the same
+            // shape compaction produces), so clients have nothing to
+            // filter and no control batches exist to delimit
+            w.count(0)
+            if (version >= 11) w.i32(-1) // preferred_read_replica
+          }
+          w.bytes(payload)
+          w.tags()
         }
-        w.bytes(payload)
         w.tags()
       }
       w.tags()
     }
-    w.tags()
-    closeFrame(out)
   }
 
   def decodeFetchResponse(version: Int, bytes: Array[Byte],
@@ -1532,12 +1581,8 @@ object KafkaWire {
   def decodeFetchResponseFull(version: Int, bytes: Array[Byte],
       topicIdResolver: Array[Byte] => Option[String] = _ => None)
       : (Int, Int, Int, Seq[(String, Seq[(Int, Int, Long, Seq[(Long, WireRecordV2)])])]) = {
-    val flexible = version >= 12
     val byId = version >= 13
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (correlationId, r) = readResponse(Fetch, version, bytes)
     if (version >= 1) r.i32() // throttle_time_ms
     val (errorCode, sessionId) =
       if (version >= 7) (r.i16(), r.i32()) else (0, 0)
@@ -1579,11 +1624,6 @@ object KafkaWire {
   // (graft's Assignors) and ships them back via SyncGroup, everyone
   // else receives theirs — per the public spec.
 
-  val JoinGroupApiKey = 11
-  val HeartbeatApiKey = 12
-  val LeaveGroupApiKey = 13
-  val SyncGroupApiKey = 14
-
   case class JoinGroupResponseV0(correlationId: Int, errorCode: Int,
       generationId: Int, protocol: String, leaderId: String,
       memberId: String, members: Seq[(String, Array[Byte])])
@@ -1592,7 +1632,7 @@ object KafkaWire {
       group: String, sessionTimeoutMs: Int, memberId: String,
       protocolType: String, protocols: Seq[(String, Array[Byte])]): Array[Byte] = {
     val out = new ByteArrayOutputStream()
-    writeInt16(out, JoinGroupApiKey); writeInt16(out, 0)
+    writeInt16(out, JoinGroup.key); writeInt16(out, 0)
     writeInt32(out, correlationId); writeNullableString(out, clientId)
     writeNullableString(out, group)
     writeInt32(out, sessionTimeoutMs)
@@ -1624,7 +1664,7 @@ object KafkaWire {
       group: String, generationId: Int, memberId: String,
       assignments: Seq[(String, Array[Byte])]): Array[Byte] = {
     val out = new ByteArrayOutputStream()
-    writeInt16(out, SyncGroupApiKey); writeInt16(out, 0)
+    writeInt16(out, SyncGroup.key); writeInt16(out, 0)
     writeInt32(out, correlationId); writeNullableString(out, clientId)
     writeNullableString(out, group)
     writeInt32(out, generationId)
@@ -1646,7 +1686,7 @@ object KafkaWire {
   def encodeHeartbeatRequestV0(correlationId: Int, clientId: String,
       group: String, generationId: Int, memberId: String): Array[Byte] = {
     val out = new ByteArrayOutputStream()
-    writeInt16(out, HeartbeatApiKey); writeInt16(out, 0)
+    writeInt16(out, Heartbeat.key); writeInt16(out, 0)
     writeInt32(out, correlationId); writeNullableString(out, clientId)
     writeNullableString(out, group)
     writeInt32(out, generationId)
@@ -1657,7 +1697,7 @@ object KafkaWire {
   def encodeLeaveGroupRequestV0(correlationId: Int, clientId: String,
       group: String, memberId: String): Array[Byte] = {
     val out = new ByteArrayOutputStream()
-    writeInt16(out, LeaveGroupApiKey); writeInt16(out, 0)
+    writeInt16(out, LeaveGroup.key); writeInt16(out, 0)
     writeInt32(out, correlationId); writeNullableString(out, clientId)
     writeNullableString(out, group)
     writeNullableString(out, memberId)
@@ -1673,12 +1713,10 @@ object KafkaWire {
   // client performs before ANY group RPC (offsets or membership);
   // a single-broker graft always answers itself. ---
 
-  val FindCoordinatorApiKey = 10
-
   def encodeFindCoordinatorRequestV0(correlationId: Int, clientId: String,
       group: String): Array[Byte] = {
     val out = new ByteArrayOutputStream()
-    writeInt16(out, FindCoordinatorApiKey); writeInt16(out, 0)
+    writeInt16(out, FindCoordinator.key); writeInt16(out, 0)
     writeInt32(out, correlationId); writeNullableString(out, clientId)
     writeNullableString(out, group)
     frame(out.toByteArray)
@@ -1698,33 +1736,6 @@ object KafkaWire {
   // OffsetFetch v6, FindCoordinator v3, JoinGroup v6, Heartbeat v4,
   // LeaveGroup v4, SyncGroup v4.
 
-  /** v7 = KIP-734 MAX_TIMESTAMP (-3); v8/v9 = KIP-405/KIP-1005
-    * EARLIEST_LOCAL (-4) / LATEST_TIERED (-5) sentinel timestamps —
-    * no schema change at either. */
-  val ListOffsetsMaxVersion = 9
-  val OffsetCommitMaxVersion = 8
-  val OffsetFetchMaxVersion = 9
-  val FindCoordinatorMaxVersion = 4
-  val JoinGroupMaxVersion = 9
-  val HeartbeatMaxVersion = 4
-  val LeaveGroupMaxVersion = 5
-  val SyncGroupMaxVersion = 5
-
-  private def requestHeader(out: ByteArrayOutputStream, apiKey: Int, version: Int,
-      correlationId: Int, clientId: String, flexible: Boolean): Unit = {
-    writeInt16(out, apiKey)
-    writeInt16(out, version)
-    writeInt32(out, correlationId)
-    writeNullableString(out, clientId) // header v1/v2: legacy string either way
-    if (flexible) writeUVarInt(out, 0) // header v2 tag buffer
-  }
-
-  private def responseHeader(out: ByteArrayOutputStream, correlationId: Int,
-      flexible: Boolean): Unit = {
-    writeInt32(out, correlationId)
-    if (flexible) writeUVarInt(out, 0) // response header v1 tag buffer
-  }
-
   // -- ListOffsets (key 2) v0–v9: v1 drops max_num_offsets and moves
   // the response to ONE (timestamp, offset) pair; v2 isolation_level
   // + response throttle; v4 leader epochs; v6 flexible; v7 admits
@@ -1738,43 +1749,29 @@ object KafkaWire {
     * as 1. */
   def encodeListOffsetsRequest(version: Int, correlationId: Int, clientId: String,
       topics: Seq[(String, Seq[(Int, Long, Int)])],
-      isolationLevel: Int = 0): Array[Byte] = {
-    require(version >= 0 && version <= ListOffsetsMaxVersion,
-      s"unsupported ListOffsets version $version")
-    val flexible = version >= 6
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, ListOffsetsApiKey, version, correlationId, clientId, flexible)
-    val w = new WR(out, flexible)
-    w.i32(-1) // replica_id: consumer
-    if (version >= 2) w.i8(isolationLevel)
-    w.count(topics.length)
-    topics.foreach { case (name, parts) =>
-      w.str(name)
-      w.count(parts.length)
-      parts.foreach { case (p, ts, maxN) =>
-        w.i32(p)
-        if (version >= 4) w.i32(-1) // current_leader_epoch
-        w.i64(ts)
-        if (version == 0) w.i32(maxN)
+      isolationLevel: Int = 0): Array[Byte] =
+    writeRequest(ListOffsets, version, correlationId, clientId) { w =>
+      w.i32(-1) // replica_id: consumer
+      if (version >= 2) w.i8(isolationLevel)
+      w.count(topics.length)
+      topics.foreach { case (name, parts) =>
+        w.str(name)
+        w.count(parts.length)
+        parts.foreach { case (p, ts, maxN) =>
+          w.i32(p)
+          if (version >= 4) w.i32(-1) // current_leader_epoch
+          w.i64(ts)
+          if (version == 0) w.i32(maxN)
+          w.tags()
+        }
         w.tags()
       }
       w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   def decodeListOffsetsRequest(bytes: Array[Byte]): ListOffsetsRequest = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == ListOffsetsApiKey, "not a ListOffsets request")
-    val version = buf.getShort.toInt
-    require(version >= 0 && version <= ListOffsetsMaxVersion,
-      s"unsupported ListOffsets version $version")
-    val flexible = version >= 6
-    val correlationId = buf.getInt
-    val clientId = readNullableString(buf)
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (RequestHeader(version, correlationId, clientId), r) =
+      readRequest(bytes, ListOffsets)
     r.i32() // replica_id
     val isolation = if (version >= 2) r.i8() else 0
     val topics = (0 until r.count()).map { _ =>
@@ -1798,42 +1795,32 @@ object KafkaWire {
     * v0 encodes the offsets ARRAY; v1+ the single (timestamp, offset)
     * pair — offset −1 / timestamp −1 mean "no such offset". */
   def encodeListOffsetsResponse(version: Int, correlationId: Int,
-      topics: Seq[(String, Seq[(Int, Int, Long, Long, Seq[Long])])]): Array[Byte] = {
-    require(version >= 0 && version <= ListOffsetsMaxVersion,
-      s"unsupported ListOffsets version $version")
-    val flexible = version >= 6
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible)
-    val w = new WR(out, flexible)
-    if (version >= 2) w.i32(0) // throttle_time_ms
-    w.count(topics.length)
-    topics.foreach { case (name, parts) =>
-      w.str(name)
-      w.count(parts.length)
-      parts.foreach { case (p, err, ts, off, v0Offs) =>
-        w.i32(p)
-        w.i16(err)
-        if (version == 0) { w.count(v0Offs.length); v0Offs.foreach(w.i64) }
-        else {
-          w.i64(ts)
-          w.i64(off)
-          if (version >= 4) w.i32(-1) // leader_epoch
+      topics: Seq[(String, Seq[(Int, Int, Long, Long, Seq[Long])])]): Array[Byte] =
+    writeResponse(ListOffsets, version, correlationId) { w =>
+      if (version >= 2) w.i32(0) // throttle_time_ms
+      w.count(topics.length)
+      topics.foreach { case (name, parts) =>
+        w.str(name)
+        w.count(parts.length)
+        parts.foreach { case (p, err, ts, off, v0Offs) =>
+          w.i32(p)
+          w.i16(err)
+          if (version == 0) { w.count(v0Offs.length); v0Offs.foreach(w.i64) }
+          else {
+            w.i64(ts)
+            w.i64(off)
+            if (version >= 4) w.i32(-1) // leader_epoch
+          }
+          w.tags()
         }
         w.tags()
       }
       w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   def decodeListOffsetsResponse(version: Int, bytes: Array[Byte])
       : (Int, Seq[(String, Seq[(Int, Int, Long, Long, Seq[Long])])]) = {
-    val flexible = version >= 6
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (correlationId, r) = readResponse(ListOffsets, version, bytes)
     if (version >= 2) r.i32() // throttle_time_ms
     val topics = (0 until r.count()).map { _ =>
       val name = r.str()
@@ -1868,46 +1855,32 @@ object KafkaWire {
 
   def encodeOffsetCommitRequest(version: Int, correlationId: Int, clientId: String,
       group: String, generationId: Int, memberId: String, groupInstanceId: String,
-      topics: Seq[(String, Seq[(Int, Long, String)])]): Array[Byte] = {
-    require(version >= 0 && version <= OffsetCommitMaxVersion,
-      s"unsupported OffsetCommit version $version")
-    val flexible = version >= 8
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, OffsetCommitApiKey, version, correlationId, clientId, flexible)
-    val w = new WR(out, flexible)
-    w.str(group)
-    if (version >= 1) { w.i32(generationId); w.str(memberId) }
-    if (version >= 7) w.str(groupInstanceId)
-    if (version >= 2 && version <= 4) w.i64(-1L) // retention_time_ms: broker default
-    w.count(topics.length)
-    topics.foreach { case (name, parts) =>
-      w.str(name)
-      w.count(parts.length)
-      parts.foreach { case (p, off, meta) =>
-        w.i32(p)
-        w.i64(off)
-        if (version >= 6) w.i32(-1) // committed_leader_epoch
-        if (version == 1) w.i64(-1L) // commit_timestamp
-        w.str(meta)
+      topics: Seq[(String, Seq[(Int, Long, String)])]): Array[Byte] =
+    writeRequest(OffsetCommit, version, correlationId, clientId) { w =>
+      w.str(group)
+      if (version >= 1) { w.i32(generationId); w.str(memberId) }
+      if (version >= 7) w.str(groupInstanceId)
+      if (version >= 2 && version <= 4) w.i64(-1L) // retention_time_ms: broker default
+      w.count(topics.length)
+      topics.foreach { case (name, parts) =>
+        w.str(name)
+        w.count(parts.length)
+        parts.foreach { case (p, off, meta) =>
+          w.i32(p)
+          w.i64(off)
+          if (version >= 6) w.i32(-1) // committed_leader_epoch
+          if (version == 1) w.i64(-1L) // commit_timestamp
+          w.str(meta)
+          w.tags()
+        }
         w.tags()
       }
       w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   def decodeOffsetCommitRequest(bytes: Array[Byte]): OffsetCommitRequest = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == OffsetCommitApiKey, "not an OffsetCommit request")
-    val version = buf.getShort.toInt
-    require(version >= 0 && version <= OffsetCommitMaxVersion,
-      s"unsupported OffsetCommit version $version")
-    val flexible = version >= 8
-    val correlationId = buf.getInt
-    val clientId = readNullableString(buf)
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (RequestHeader(version, correlationId, clientId), r) =
+      readRequest(bytes, OffsetCommit)
     val group = r.str()
     val (gen, member) = if (version >= 1) (r.i32(), r.str()) else (-1, "")
     val gii = if (version >= 7) r.str() else null
@@ -1932,32 +1905,22 @@ object KafkaWire {
   }
 
   def encodeOffsetCommitResponse(version: Int, correlationId: Int,
-      topics: Seq[(String, Seq[(Int, Int)])]): Array[Byte] = {
-    require(version >= 0 && version <= OffsetCommitMaxVersion,
-      s"unsupported OffsetCommit version $version")
-    val flexible = version >= 8
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible)
-    val w = new WR(out, flexible)
-    if (version >= 3) w.i32(0) // throttle_time_ms
-    w.count(topics.length)
-    topics.foreach { case (name, parts) =>
-      w.str(name)
-      w.count(parts.length)
-      parts.foreach { case (p, err) => w.i32(p); w.i16(err); w.tags() }
+      topics: Seq[(String, Seq[(Int, Int)])]): Array[Byte] =
+    writeResponse(OffsetCommit, version, correlationId) { w =>
+      if (version >= 3) w.i32(0) // throttle_time_ms
+      w.count(topics.length)
+      topics.foreach { case (name, parts) =>
+        w.str(name)
+        w.count(parts.length)
+        parts.foreach { case (p, err) => w.i32(p); w.i16(err); w.tags() }
+        w.tags()
+      }
       w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   def decodeOffsetCommitResponse(version: Int, bytes: Array[Byte])
       : (Int, Seq[(String, Seq[(Int, Int)])]) = {
-    val flexible = version >= 8
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (correlationId, r) = readResponse(OffsetCommit, version, bytes)
     if (version >= 3) r.i32() // throttle_time_ms
     val topics = (0 until r.count()).map { _ =>
       val name = r.str()
@@ -1989,62 +1952,49 @@ object KafkaWire {
       groups: Seq[(String, Option[Seq[(String, Seq[Int])]])],
       requireStable: Boolean = false,
       members: Seq[(String, Int)] = Seq.empty): Array[Byte] = {
-    require(version >= 0 && version <= OffsetFetchMaxVersion,
-      s"unsupported OffsetFetch version $version")
     require(version >= 8 || groups.length == 1,
       s"OffsetFetch v$version carries exactly one group")
     require(version >= 9 || members.isEmpty,
       s"OffsetFetch v$version has no member_id/member_epoch fields")
-    val flexible = version >= 6
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, OffsetFetchApiKey, version, correlationId, clientId, flexible)
-    val w = new WR(out, flexible)
-    def writeTopics(topics: Option[Seq[(String, Seq[Int])]]): Unit = topics match {
-      case None =>
-        require(version >= 2, s"OffsetFetch v$version has no null topics array")
-        w.count(-1)
-      case Some(ts) =>
-        w.count(ts.length)
-        ts.foreach { case (name, parts) =>
-          w.str(name)
-          w.count(parts.length); parts.foreach(w.i32)
+    writeRequest(OffsetFetch, version, correlationId, clientId) { w =>
+      def writeTopics(topics: Option[Seq[(String, Seq[Int])]]): Unit = topics match {
+        case None =>
+          require(version >= 2, s"OffsetFetch v$version has no null topics array")
+          w.count(-1)
+        case Some(ts) =>
+          w.count(ts.length)
+          ts.foreach { case (name, parts) =>
+            w.str(name)
+            w.count(parts.length); parts.foreach(w.i32)
+            w.tags()
+          }
+      }
+      if (version <= 7) {
+        val (group, topics) = groups.head
+        w.str(group)
+        writeTopics(topics)
+        if (version == 7) w.bool(requireStable)
+      } else {
+        w.count(groups.length)
+        groups.zipWithIndex.foreach { case ((group, topics), i) =>
+          w.str(group)
+          if (version >= 9) {
+            val (mid, epoch) = members.lift(i).getOrElse((null: String, -1))
+            w.str(mid)
+            w.i32(epoch)
+          }
+          writeTopics(topics)
           w.tags()
         }
-    }
-    if (version <= 7) {
-      val (group, topics) = groups.head
-      w.str(group)
-      writeTopics(topics)
-      if (version == 7) w.bool(requireStable)
-    } else {
-      w.count(groups.length)
-      groups.zipWithIndex.foreach { case ((group, topics), i) =>
-        w.str(group)
-        if (version >= 9) {
-          val (mid, epoch) = members.lift(i).getOrElse((null: String, -1))
-          w.str(mid)
-          w.i32(epoch)
-        }
-        writeTopics(topics)
-        w.tags()
+        w.bool(requireStable)
       }
-      w.bool(requireStable)
+      w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
   }
 
   def decodeOffsetFetchRequest(bytes: Array[Byte]): OffsetFetchRequest = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == OffsetFetchApiKey, "not an OffsetFetch request")
-    val version = buf.getShort.toInt
-    require(version >= 0 && version <= OffsetFetchMaxVersion,
-      s"unsupported OffsetFetch version $version")
-    val flexible = version >= 6
-    val correlationId = buf.getInt
-    val clientId = readNullableString(buf)
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (RequestHeader(version, correlationId, clientId), r) =
+      readRequest(bytes, OffsetFetch)
     def readTopics(): Option[Seq[(String, Seq[Int])]] = {
       val n = r.count()
       if (n < 0) None
@@ -2081,54 +2031,44 @@ object KafkaWire {
   /** Per group: (group_id, group_error, topics(name, partitions
     * (partition, offset, metadata, error))). */
   def encodeOffsetFetchResponse(version: Int, correlationId: Int,
-      groups: Seq[(String, Int, Seq[(String, Seq[(Int, Long, String, Int)])])]): Array[Byte] = {
-    require(version >= 0 && version <= OffsetFetchMaxVersion,
-      s"unsupported OffsetFetch version $version")
-    val flexible = version >= 6
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible)
-    val w = new WR(out, flexible)
-    if (version >= 3) w.i32(0) // throttle_time_ms
-    def writeTopics(topics: Seq[(String, Seq[(Int, Long, String, Int)])]): Unit = {
-      w.count(topics.length)
-      topics.foreach { case (name, parts) =>
-        w.str(name)
-        w.count(parts.length)
-        parts.foreach { case (p, off, meta, err) =>
-          w.i32(p)
-          w.i64(off)
-          if (version >= 5) w.i32(-1) // committed_leader_epoch
-          w.str(meta)
-          w.i16(err)
+      groups: Seq[(String, Int, Seq[(String, Seq[(Int, Long, String, Int)])])]): Array[Byte] =
+    writeResponse(OffsetFetch, version, correlationId) { w =>
+      if (version >= 3) w.i32(0) // throttle_time_ms
+      def writeTopics(topics: Seq[(String, Seq[(Int, Long, String, Int)])]): Unit = {
+        w.count(topics.length)
+        topics.foreach { case (name, parts) =>
+          w.str(name)
+          w.count(parts.length)
+          parts.foreach { case (p, off, meta, err) =>
+            w.i32(p)
+            w.i64(off)
+            if (version >= 5) w.i32(-1) // committed_leader_epoch
+            w.str(meta)
+            w.i16(err)
+            w.tags()
+          }
           w.tags()
         }
-        w.tags()
       }
-    }
-    if (version <= 7) {
-      val (_, gerr, topics) = groups.head
-      writeTopics(topics)
-      if (version >= 2) w.i16(gerr)
-    } else {
-      w.count(groups.length)
-      groups.foreach { case (gid, gerr, topics) =>
-        w.str(gid)
+      if (version <= 7) {
+        val (_, gerr, topics) = groups.head
         writeTopics(topics)
-        w.i16(gerr)
-        w.tags()
+        if (version >= 2) w.i16(gerr)
+      } else {
+        w.count(groups.length)
+        groups.foreach { case (gid, gerr, topics) =>
+          w.str(gid)
+          writeTopics(topics)
+          w.i16(gerr)
+          w.tags()
+        }
       }
+      w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   def decodeOffsetFetchResponse(version: Int, bytes: Array[Byte])
       : (Int, Seq[(String, Int, Seq[(String, Seq[(Int, Long, String, Int)])])]) = {
-    val flexible = version >= 6
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (correlationId, r) = readResponse(OffsetFetch, version, bytes)
     if (version >= 3) r.i32() // throttle_time_ms
     def readTopics(): Seq[(String, Seq[(Int, Long, String, Int)])] =
       (0 until r.count()).map { _ =>
@@ -2171,38 +2111,24 @@ object KafkaWire {
 
   def encodeFindCoordinatorRequest(version: Int, correlationId: Int,
       clientId: String, keyType: Int, keys: Seq[String]): Array[Byte] = {
-    require(version >= 0 && version <= FindCoordinatorMaxVersion,
-      s"unsupported FindCoordinator version $version")
     require(version >= 4 || keys.length == 1,
       s"FindCoordinator v$version carries exactly one key")
-    val flexible = version >= 3
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, FindCoordinatorApiKey, version, correlationId, clientId, flexible)
-    val w = new WR(out, flexible)
-    if (version <= 3) {
-      w.str(keys.head)
-      if (version >= 1) w.i8(keyType)
-    } else {
-      w.i8(keyType)
-      w.count(keys.length)
-      keys.foreach(w.str)
+    writeRequest(FindCoordinator, version, correlationId, clientId) { w =>
+      if (version <= 3) {
+        w.str(keys.head)
+        if (version >= 1) w.i8(keyType)
+      } else {
+        w.i8(keyType)
+        w.count(keys.length)
+        keys.foreach(w.str)
+      }
+      w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
   }
 
   def decodeFindCoordinatorRequest(bytes: Array[Byte]): FindCoordinatorRequest = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == FindCoordinatorApiKey,
-      "not a FindCoordinator request")
-    val version = buf.getShort.toInt
-    require(version >= 0 && version <= FindCoordinatorMaxVersion,
-      s"unsupported FindCoordinator version $version")
-    val flexible = version >= 3
-    val correlationId = buf.getInt
-    val clientId = readNullableString(buf)
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (RequestHeader(version, correlationId, clientId), r) =
+      readRequest(bytes, FindCoordinator)
     val (keyType, keys) =
       if (version <= 3) {
         val key = r.str()
@@ -2218,40 +2144,30 @@ object KafkaWire {
 
   /** Coordinators: (key, error, node_id, host, port). */
   def encodeFindCoordinatorResponse(version: Int, correlationId: Int,
-      coordinators: Seq[(String, Int, Int, String, Int)]): Array[Byte] = {
-    require(version >= 0 && version <= FindCoordinatorMaxVersion,
-      s"unsupported FindCoordinator version $version")
-    val flexible = version >= 3
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible)
-    val w = new WR(out, flexible)
-    if (version >= 1) w.i32(0) // throttle_time_ms
-    if (version <= 3) {
-      val (_, err, node, host, port) = coordinators.head
-      w.i16(err)
-      if (version >= 1) w.str(null) // error_message
-      w.i32(node); w.str(host); w.i32(port)
-    } else {
-      w.count(coordinators.length)
-      coordinators.foreach { case (key, err, node, host, port) =>
-        w.str(key)
-        w.i32(node); w.str(host); w.i32(port)
+      coordinators: Seq[(String, Int, Int, String, Int)]): Array[Byte] =
+    writeResponse(FindCoordinator, version, correlationId) { w =>
+      if (version >= 1) w.i32(0) // throttle_time_ms
+      if (version <= 3) {
+        val (_, err, node, host, port) = coordinators.head
         w.i16(err)
-        w.str(null) // error_message
-        w.tags()
+        if (version >= 1) w.str(null) // error_message
+        w.i32(node); w.str(host); w.i32(port)
+      } else {
+        w.count(coordinators.length)
+        coordinators.foreach { case (key, err, node, host, port) =>
+          w.str(key)
+          w.i32(node); w.str(host); w.i32(port)
+          w.i16(err)
+          w.str(null) // error_message
+          w.tags()
+        }
       }
+      w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   def decodeFindCoordinatorResponse(version: Int, bytes: Array[Byte])
       : (Int, Seq[(String, Int, Int, String, Int)]) = {
-    val flexible = version >= 3
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (correlationId, r) = readResponse(FindCoordinator, version, bytes)
     if (version >= 1) r.i32() // throttle_time_ms
     val coordinators =
       if (version <= 3) {
@@ -2289,37 +2205,23 @@ object KafkaWire {
   def encodeJoinGroupRequest(version: Int, correlationId: Int, clientId: String,
       group: String, sessionTimeoutMs: Int, rebalanceTimeoutMs: Int,
       memberId: String, groupInstanceId: String, protocolType: String,
-      protocols: Seq[(String, Array[Byte])], reason: String = null): Array[Byte] = {
-    require(version >= 0 && version <= JoinGroupMaxVersion,
-      s"unsupported JoinGroup version $version")
-    val flexible = version >= 6
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, JoinGroupApiKey, version, correlationId, clientId, flexible)
-    val w = new WR(out, flexible)
-    w.str(group)
-    w.i32(sessionTimeoutMs)
-    if (version >= 1) w.i32(rebalanceTimeoutMs)
-    w.str(memberId)
-    if (version >= 5) w.str(groupInstanceId)
-    w.str(protocolType)
-    w.count(protocols.length)
-    protocols.foreach { case (n, m) => w.str(n); w.bytes(m); w.tags() }
-    if (version >= 8) w.str(reason)
-    w.tags()
-    frame(out.toByteArray)
-  }
+      protocols: Seq[(String, Array[Byte])], reason: String = null): Array[Byte] =
+    writeRequest(JoinGroup, version, correlationId, clientId) { w =>
+      w.str(group)
+      w.i32(sessionTimeoutMs)
+      if (version >= 1) w.i32(rebalanceTimeoutMs)
+      w.str(memberId)
+      if (version >= 5) w.str(groupInstanceId)
+      w.str(protocolType)
+      w.count(protocols.length)
+      protocols.foreach { case (n, m) => w.str(n); w.bytes(m); w.tags() }
+      if (version >= 8) w.str(reason)
+      w.tags()
+    }
 
   def decodeJoinGroupRequest(bytes: Array[Byte]): JoinGroupRequest = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == JoinGroupApiKey, "not a JoinGroup request")
-    val version = buf.getShort.toInt
-    require(version >= 0 && version <= JoinGroupMaxVersion,
-      s"unsupported JoinGroup version $version")
-    val flexible = version >= 6
-    val correlationId = buf.getInt
-    val clientId = readNullableString(buf)
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (RequestHeader(version, correlationId, clientId), r) =
+      readRequest(bytes, JoinGroup)
     val group = r.str()
     val sessionTimeout = r.i32()
     val rebalanceTimeout = if (version >= 1) r.i32() else sessionTimeout
@@ -2339,38 +2241,28 @@ object KafkaWire {
   def encodeJoinGroupResponse(version: Int, correlationId: Int, errorCode: Int,
       generationId: Int, protocolType: String, protocol: String, leaderId: String,
       memberId: String, members: Seq[(String, String, Array[Byte])],
-      skipAssignment: Boolean = false): Array[Byte] = {
-    require(version >= 0 && version <= JoinGroupMaxVersion,
-      s"unsupported JoinGroup version $version")
-    val flexible = version >= 6
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible)
-    val w = new WR(out, flexible)
-    if (version >= 2) w.i32(0) // throttle_time_ms
-    w.i16(errorCode)
-    w.i32(generationId)
-    if (version >= 7) w.str(protocolType)
-    w.str(protocol)
-    w.str(leaderId)
-    if (version >= 9) w.bool(skipAssignment)
-    w.str(memberId)
-    w.count(members.length)
-    members.foreach { case (id, gii, meta) =>
-      w.str(id)
-      if (version >= 5) w.str(gii)
-      w.bytes(meta)
+      skipAssignment: Boolean = false): Array[Byte] =
+    writeResponse(JoinGroup, version, correlationId) { w =>
+      if (version >= 2) w.i32(0) // throttle_time_ms
+      w.i16(errorCode)
+      w.i32(generationId)
+      if (version >= 7) w.str(protocolType)
+      w.str(protocol)
+      w.str(leaderId)
+      if (version >= 9) w.bool(skipAssignment)
+      w.str(memberId)
+      w.count(members.length)
+      members.foreach { case (id, gii, meta) =>
+        w.str(id)
+        if (version >= 5) w.str(gii)
+        w.bytes(meta)
+        w.tags()
+      }
       w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   def decodeJoinGroupResponse(version: Int, bytes: Array[Byte]): JoinGroupResponse = {
-    val flexible = version >= 6
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (correlationId, r) = readResponse(JoinGroup, version, bytes)
     if (version >= 2) r.i32() // throttle_time_ms
     val err = r.i16()
     val gen = r.i32()
@@ -2402,35 +2294,21 @@ object KafkaWire {
   def encodeSyncGroupRequest(version: Int, correlationId: Int, clientId: String,
       group: String, generationId: Int, memberId: String, groupInstanceId: String,
       protocolType: String, protocolName: String,
-      assignments: Seq[(String, Array[Byte])]): Array[Byte] = {
-    require(version >= 0 && version <= SyncGroupMaxVersion,
-      s"unsupported SyncGroup version $version")
-    val flexible = version >= 4
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, SyncGroupApiKey, version, correlationId, clientId, flexible)
-    val w = new WR(out, flexible)
-    w.str(group)
-    w.i32(generationId)
-    w.str(memberId)
-    if (version >= 3) w.str(groupInstanceId)
-    if (version >= 5) { w.str(protocolType); w.str(protocolName) }
-    w.count(assignments.length)
-    assignments.foreach { case (id, a) => w.str(id); w.bytes(a); w.tags() }
-    w.tags()
-    frame(out.toByteArray)
-  }
+      assignments: Seq[(String, Array[Byte])]): Array[Byte] =
+    writeRequest(SyncGroup, version, correlationId, clientId) { w =>
+      w.str(group)
+      w.i32(generationId)
+      w.str(memberId)
+      if (version >= 3) w.str(groupInstanceId)
+      if (version >= 5) { w.str(protocolType); w.str(protocolName) }
+      w.count(assignments.length)
+      assignments.foreach { case (id, a) => w.str(id); w.bytes(a); w.tags() }
+      w.tags()
+    }
 
   def decodeSyncGroupRequest(bytes: Array[Byte]): SyncGroupRequest = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == SyncGroupApiKey, "not a SyncGroup request")
-    val version = buf.getShort.toInt
-    require(version >= 0 && version <= SyncGroupMaxVersion,
-      s"unsupported SyncGroup version $version")
-    val flexible = version >= 4
-    val correlationId = buf.getInt
-    val clientId = readNullableString(buf)
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (RequestHeader(version, correlationId, clientId), r) =
+      readRequest(bytes, SyncGroup)
     val group = r.str()
     val gen = r.i32()
     val member = r.str()
@@ -2446,28 +2324,18 @@ object KafkaWire {
 
   def encodeSyncGroupResponse(version: Int, correlationId: Int, errorCode: Int,
       protocolType: String, protocolName: String,
-      assignment: Array[Byte]): Array[Byte] = {
-    require(version >= 0 && version <= SyncGroupMaxVersion,
-      s"unsupported SyncGroup version $version")
-    val flexible = version >= 4
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible)
-    val w = new WR(out, flexible)
-    if (version >= 1) w.i32(0) // throttle_time_ms
-    w.i16(errorCode)
-    if (version >= 5) { w.str(protocolType); w.str(protocolName) }
-    w.bytes(assignment)
-    w.tags()
-    frame(out.toByteArray)
-  }
+      assignment: Array[Byte]): Array[Byte] =
+    writeResponse(SyncGroup, version, correlationId) { w =>
+      if (version >= 1) w.i32(0) // throttle_time_ms
+      w.i16(errorCode)
+      if (version >= 5) { w.str(protocolType); w.str(protocolName) }
+      w.bytes(assignment)
+      w.tags()
+    }
 
   def decodeSyncGroupResponse(version: Int, bytes: Array[Byte])
       : (Int, Int, String, String, Array[Byte]) = {
-    val flexible = version >= 4
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (correlationId, r) = readResponse(SyncGroup, version, bytes)
     if (version >= 1) r.i32() // throttle_time_ms
     val err = r.i16()
     val (pt, pn) = if (version >= 5) (r.str(), r.str()) else (null, null)
@@ -2483,32 +2351,18 @@ object KafkaWire {
 
   def encodeHeartbeatRequest(version: Int, correlationId: Int, clientId: String,
       group: String, generationId: Int, memberId: String,
-      groupInstanceId: String = null): Array[Byte] = {
-    require(version >= 0 && version <= HeartbeatMaxVersion,
-      s"unsupported Heartbeat version $version")
-    val flexible = version >= 4
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, HeartbeatApiKey, version, correlationId, clientId, flexible)
-    val w = new WR(out, flexible)
-    w.str(group)
-    w.i32(generationId)
-    w.str(memberId)
-    if (version >= 3) w.str(groupInstanceId)
-    w.tags()
-    frame(out.toByteArray)
-  }
+      groupInstanceId: String = null): Array[Byte] =
+    writeRequest(Heartbeat, version, correlationId, clientId) { w =>
+      w.str(group)
+      w.i32(generationId)
+      w.str(memberId)
+      if (version >= 3) w.str(groupInstanceId)
+      w.tags()
+    }
 
   def decodeHeartbeatRequest(bytes: Array[Byte]): HeartbeatRequest = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == HeartbeatApiKey, "not a Heartbeat request")
-    val version = buf.getShort.toInt
-    require(version >= 0 && version <= HeartbeatMaxVersion,
-      s"unsupported Heartbeat version $version")
-    val flexible = version >= 4
-    val correlationId = buf.getInt
-    val clientId = readNullableString(buf)
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (RequestHeader(version, correlationId, clientId), r) =
+      readRequest(bytes, Heartbeat)
     val group = r.str()
     val gen = r.i32()
     val member = r.str()
@@ -2519,25 +2373,15 @@ object KafkaWire {
 
   /** Heartbeat response at any version (v1+ throttle, v4 flexible). */
   def encodeHeartbeatResponse(version: Int, correlationId: Int,
-      errorCode: Int): Array[Byte] = {
-    require(version >= 0 && version <= HeartbeatMaxVersion,
-      s"unsupported Heartbeat version $version")
-    val flexible = version >= 4
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible)
-    val w = new WR(out, flexible)
-    if (version >= 1) w.i32(0) // throttle_time_ms
-    w.i16(errorCode)
-    w.tags()
-    frame(out.toByteArray)
-  }
+      errorCode: Int): Array[Byte] =
+    writeResponse(Heartbeat, version, correlationId) { w =>
+      if (version >= 1) w.i32(0) // throttle_time_ms
+      w.i16(errorCode)
+      w.tags()
+    }
 
   def decodeHeartbeatResponse(version: Int, bytes: Array[Byte]): (Int, Int) = {
-    val flexible = version >= 4
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (correlationId, r) = readResponse(Heartbeat, version, bytes)
     if (version >= 1) r.i32() // throttle_time_ms
     val err = r.i16()
     r.tags()
@@ -2554,40 +2398,27 @@ object KafkaWire {
 
   def encodeLeaveGroupRequest(version: Int, correlationId: Int, clientId: String,
       group: String, members: Seq[(String, String, String)]): Array[Byte] = {
-    require(version >= 0 && version <= LeaveGroupMaxVersion,
-      s"unsupported LeaveGroup version $version")
     require(version >= 3 || members.length == 1,
       s"LeaveGroup v$version carries exactly one member")
-    val flexible = version >= 4
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, LeaveGroupApiKey, version, correlationId, clientId, flexible)
-    val w = new WR(out, flexible)
-    w.str(group)
-    if (version <= 2) w.str(members.head._1)
-    else {
-      w.count(members.length)
-      members.foreach { case (id, gii, reason) =>
-        w.str(id)
-        w.str(gii)
-        if (version >= 5) w.str(reason)
-        w.tags()
+    writeRequest(LeaveGroup, version, correlationId, clientId) { w =>
+      w.str(group)
+      if (version <= 2) w.str(members.head._1)
+      else {
+        w.count(members.length)
+        members.foreach { case (id, gii, reason) =>
+          w.str(id)
+          w.str(gii)
+          if (version >= 5) w.str(reason)
+          w.tags()
+        }
       }
+      w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
   }
 
   def decodeLeaveGroupRequest(bytes: Array[Byte]): LeaveGroupRequest = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == LeaveGroupApiKey, "not a LeaveGroup request")
-    val version = buf.getShort.toInt
-    require(version >= 0 && version <= LeaveGroupMaxVersion,
-      s"unsupported LeaveGroup version $version")
-    val flexible = version >= 4
-    val correlationId = buf.getInt
-    val clientId = readNullableString(buf)
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (RequestHeader(version, correlationId, clientId), r) =
+      readRequest(bytes, LeaveGroup)
     val group = r.str()
     val members =
       if (version <= 2) Seq((r.str(), null: String, null: String))
@@ -2604,32 +2435,22 @@ object KafkaWire {
 
   /** Members: (member_id, group_instance_id, error). */
   def encodeLeaveGroupResponse(version: Int, correlationId: Int, errorCode: Int,
-      members: Seq[(String, String, Int)]): Array[Byte] = {
-    require(version >= 0 && version <= LeaveGroupMaxVersion,
-      s"unsupported LeaveGroup version $version")
-    val flexible = version >= 4
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible)
-    val w = new WR(out, flexible)
-    if (version >= 1) w.i32(0) // throttle_time_ms
-    w.i16(errorCode)
-    if (version >= 3) {
-      w.count(members.length)
-      members.foreach { case (id, gii, err) =>
-        w.str(id); w.str(gii); w.i16(err); w.tags()
+      members: Seq[(String, String, Int)]): Array[Byte] =
+    writeResponse(LeaveGroup, version, correlationId) { w =>
+      if (version >= 1) w.i32(0) // throttle_time_ms
+      w.i16(errorCode)
+      if (version >= 3) {
+        w.count(members.length)
+        members.foreach { case (id, gii, err) =>
+          w.str(id); w.str(gii); w.i16(err); w.tags()
+        }
       }
+      w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   def decodeLeaveGroupResponse(version: Int, bytes: Array[Byte])
       : (Int, Int, Seq[(String, String, Int)]) = {
-    val flexible = version >= 4
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (correlationId, r) = readResponse(LeaveGroup, version, bytes)
     if (version >= 1) r.i32() // throttle_time_ms
     val err = r.i16()
     val members =
@@ -2644,15 +2465,9 @@ object KafkaWire {
   // --- Group/topic admin v0 (DescribeGroups 15, ListGroups 16,
   // CreateTopics 19, DeleteTopics 20, DeleteRecords 21) ---
 
-  val DescribeGroupsApiKey = 15
-  val ListGroupsApiKey = 16
-  val CreateTopicsApiKey = 19
-  val DeleteTopicsApiKey = 20
-  val DeleteRecordsApiKey = 21
-
   def encodeListGroupsRequestV0(correlationId: Int, clientId: String): Array[Byte] = {
     val out = new ByteArrayOutputStream()
-    writeInt16(out, ListGroupsApiKey); writeInt16(out, 0)
+    writeInt16(out, ListGroups.key); writeInt16(out, 0)
     writeInt32(out, correlationId); writeNullableString(out, clientId)
     frame(out.toByteArray)
   }
@@ -2674,7 +2489,7 @@ object KafkaWire {
   def encodeDescribeGroupsRequestV0(correlationId: Int, clientId: String,
       groups: Seq[String]): Array[Byte] = {
     val out = new ByteArrayOutputStream()
-    writeInt16(out, DescribeGroupsApiKey); writeInt16(out, 0)
+    writeInt16(out, DescribeGroups.key); writeInt16(out, 0)
     writeInt32(out, correlationId); writeNullableString(out, clientId)
     writeInt32(out, groups.length)
     groups.foreach(writeNullableString(out, _))
@@ -2706,43 +2521,25 @@ object KafkaWire {
   // These serve v0 too; the *V0 client codecs above drive the
   // golden-frame specs. ---
 
-  val ListGroupsMaxVersion = 5
-  val DescribeGroupsMaxVersion = 5
-
   case class ListGroupsRequest(version: Int, correlationId: Int,
       clientId: String, statesFilter: Seq[String], typesFilter: Seq[String])
 
   def encodeListGroupsRequest(version: Int, correlationId: Int,
       clientId: String, statesFilter: Seq[String] = Seq.empty,
-      typesFilter: Seq[String] = Seq.empty): Array[Byte] = {
-    require(version >= 0 && version <= ListGroupsMaxVersion,
-      s"unsupported ListGroups version $version")
-    val flexible = version >= 3
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, ListGroupsApiKey, version, correlationId, clientId,
-      flexible)
-    val w = new WR(out, flexible)
-    if (version >= 4) {
-      w.count(statesFilter.length); statesFilter.foreach(w.str)
+      typesFilter: Seq[String] = Seq.empty): Array[Byte] =
+    writeRequest(ListGroups, version, correlationId, clientId) { w =>
+      if (version >= 4) {
+        w.count(statesFilter.length); statesFilter.foreach(w.str)
+      }
+      if (version >= 5) {
+        w.count(typesFilter.length); typesFilter.foreach(w.str)
+      }
+      w.tags()
     }
-    if (version >= 5) {
-      w.count(typesFilter.length); typesFilter.foreach(w.str)
-    }
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   def decodeListGroupsRequest(bytes: Array[Byte]): ListGroupsRequest = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == ListGroupsApiKey, "not a ListGroups request")
-    val version = buf.getShort.toInt
-    require(version >= 0 && version <= ListGroupsMaxVersion,
-      s"unsupported ListGroups version $version")
-    val flexible = version >= 3
-    val correlationId = buf.getInt
-    val clientId = readNullableString(buf)
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (RequestHeader(version, correlationId, clientId), r) =
+      readRequest(bytes, ListGroups)
     val states =
       if (version >= 4) (0 until r.count()).map(_ => r.str()).toSeq
       else Seq.empty
@@ -2757,33 +2554,25 @@ object KafkaWire {
     * state ships at v4+, type at v5+ — lower versions drop them. */
   def encodeListGroupsResponse(version: Int, correlationId: Int,
       errorCode: Int,
-      groups: Seq[(String, String, String, String)]): Array[Byte] = {
-    val flexible = version >= 3
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible)
-    val w = new WR(out, flexible)
-    if (version >= 1) w.i32(0) // throttle_time_ms
-    w.i16(errorCode)
-    w.count(groups.length)
-    groups.foreach { case (g, pt, state, gtype) =>
-      w.str(g); w.str(pt)
-      if (version >= 4) w.str(state)
-      if (version >= 5) w.str(gtype)
+      groups: Seq[(String, String, String, String)]): Array[Byte] =
+    writeResponse(ListGroups, version, correlationId) { w =>
+      if (version >= 1) w.i32(0) // throttle_time_ms
+      w.i16(errorCode)
+      w.count(groups.length)
+      groups.foreach { case (g, pt, state, gtype) =>
+        w.str(g); w.str(pt)
+        if (version >= 4) w.str(state)
+        if (version >= 5) w.str(gtype)
+        w.tags()
+      }
       w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   /** (correlationId, errorCode, (group, protocolType, state, type)*) —
     * fields a version doesn't carry come back "". */
   def decodeListGroupsResponse(version: Int, bytes: Array[Byte])
       : (Int, Int, Seq[(String, String, String, String)]) = {
-    val flexible = version >= 3
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (correlationId, r) = readResponse(ListGroups, version, bytes)
     if (version >= 1) r.i32() // throttle_time_ms
     val err = r.i16()
     val groups = (0 until r.count()).map { _ =>
@@ -2803,32 +2592,16 @@ object KafkaWire {
 
   def encodeDescribeGroupsRequest(version: Int, correlationId: Int,
       clientId: String, groups: Seq[String],
-      includeAuthorizedOperations: Boolean = false): Array[Byte] = {
-    require(version >= 0 && version <= DescribeGroupsMaxVersion,
-      s"unsupported DescribeGroups version $version")
-    val flexible = version >= 5
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, DescribeGroupsApiKey, version, correlationId, clientId,
-      flexible)
-    val w = new WR(out, flexible)
-    w.count(groups.length); groups.foreach(w.str)
-    if (version >= 3) w.bool(includeAuthorizedOperations)
-    w.tags()
-    frame(out.toByteArray)
-  }
+      includeAuthorizedOperations: Boolean = false): Array[Byte] =
+    writeRequest(DescribeGroups, version, correlationId, clientId) { w =>
+      w.count(groups.length); groups.foreach(w.str)
+      if (version >= 3) w.bool(includeAuthorizedOperations)
+      w.tags()
+    }
 
   def decodeDescribeGroupsRequest(bytes: Array[Byte]): DescribeGroupsRequest = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == DescribeGroupsApiKey,
-      "not a DescribeGroups request")
-    val version = buf.getShort.toInt
-    require(version >= 0 && version <= DescribeGroupsMaxVersion,
-      s"unsupported DescribeGroups version $version")
-    val flexible = version >= 5
-    val correlationId = buf.getInt
-    val clientId = readNullableString(buf)
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (RequestHeader(version, correlationId, clientId), r) =
+      readRequest(bytes, DescribeGroups)
     val groups = (0 until r.count()).map(_ => r.str()).toSeq
     val iao = if (version >= 3) r.bool() else false
     r.tags()
@@ -2842,40 +2615,32 @@ object KafkaWire {
       instanceIds: Seq[String], authorizedOperations: Int)
 
   def encodeDescribeGroupsResponse(version: Int, correlationId: Int,
-      groups: Seq[DescribedGroupModern]): Array[Byte] = {
-    val flexible = version >= 5
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible)
-    val w = new WR(out, flexible)
-    if (version >= 1) w.i32(0) // throttle_time_ms
-    w.count(groups.length)
-    groups.foreach { gm =>
-      val g = gm.group
-      w.i16(g.errorCode)
-      w.str(g.group); w.str(g.state); w.str(g.protocolType); w.str(g.protocol)
-      w.count(g.members.length)
-      g.members.zipWithIndex.foreach {
-        case ((id, clientId, host, meta, assignment), i) =>
-          w.str(id)
-          if (version >= 4) w.str(gm.instanceIds.lift(i).orNull)
-          w.str(clientId); w.str(host)
-          w.bytes(meta); w.bytes(assignment)
-          w.tags()
+      groups: Seq[DescribedGroupModern]): Array[Byte] =
+    writeResponse(DescribeGroups, version, correlationId) { w =>
+      if (version >= 1) w.i32(0) // throttle_time_ms
+      w.count(groups.length)
+      groups.foreach { gm =>
+        val g = gm.group
+        w.i16(g.errorCode)
+        w.str(g.group); w.str(g.state); w.str(g.protocolType); w.str(g.protocol)
+        w.count(g.members.length)
+        g.members.zipWithIndex.foreach {
+          case ((id, clientId, host, meta, assignment), i) =>
+            w.str(id)
+            if (version >= 4) w.str(gm.instanceIds.lift(i).orNull)
+            w.str(clientId); w.str(host)
+            w.bytes(meta); w.bytes(assignment)
+            w.tags()
+        }
+        if (version >= 3) w.i32(gm.authorizedOperations)
+        w.tags()
       }
-      if (version >= 3) w.i32(gm.authorizedOperations)
       w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   def decodeDescribeGroupsResponse(version: Int, bytes: Array[Byte])
       : (Int, Seq[DescribedGroupModern]) = {
-    val flexible = version >= 5
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (correlationId, r) = readResponse(DescribeGroups, version, bytes)
     if (version >= 1) r.i32() // throttle_time_ms
     val groups = (0 until r.count()).map { _ =>
       val err = r.i16()
@@ -2906,10 +2671,6 @@ object KafkaWire {
   // flexible v2). These serve v0 too; the *V0 client codecs above
   // drive the golden specs. ---
 
-  val CreateTopicsMaxVersion = 7
-  val DeleteTopicsMaxVersion = 6
-  val DeleteRecordsMaxVersion = 2
-
   case class CreatableTopic(name: String, numPartitions: Int,
       replicationFactor: Int, assignments: Seq[(Int, Seq[Int])],
       configs: Seq[(String, String)])
@@ -2920,45 +2681,29 @@ object KafkaWire {
 
   def encodeCreateTopicsRequest(version: Int, correlationId: Int,
       clientId: String, topics: Seq[CreatableTopic], timeoutMs: Int,
-      validateOnly: Boolean = false): Array[Byte] = {
-    require(version >= 0 && version <= CreateTopicsMaxVersion,
-      s"unsupported CreateTopics version $version")
-    val flexible = version >= 5
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, CreateTopicsApiKey, version, correlationId, clientId,
-      flexible)
-    val w = new WR(out, flexible)
-    w.count(topics.length)
-    topics.foreach { t =>
-      w.str(t.name)
-      w.i32(t.numPartitions)
-      w.i16(t.replicationFactor)
-      w.count(t.assignments.length)
-      t.assignments.foreach { case (p, brokers) =>
-        w.i32(p); w.count(brokers.length); brokers.foreach(w.i32); w.tags()
+      validateOnly: Boolean = false): Array[Byte] =
+    writeRequest(CreateTopics, version, correlationId, clientId) { w =>
+      w.count(topics.length)
+      topics.foreach { t =>
+        w.str(t.name)
+        w.i32(t.numPartitions)
+        w.i16(t.replicationFactor)
+        w.count(t.assignments.length)
+        t.assignments.foreach { case (p, brokers) =>
+          w.i32(p); w.count(brokers.length); brokers.foreach(w.i32); w.tags()
+        }
+        w.count(t.configs.length)
+        t.configs.foreach { case (n, v) => w.str(n); w.str(v); w.tags() }
+        w.tags()
       }
-      w.count(t.configs.length)
-      t.configs.foreach { case (n, v) => w.str(n); w.str(v); w.tags() }
+      w.i32(timeoutMs)
+      if (version >= 1) w.bool(validateOnly)
       w.tags()
     }
-    w.i32(timeoutMs)
-    if (version >= 1) w.bool(validateOnly)
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   def decodeCreateTopicsRequest(bytes: Array[Byte]): CreateTopicsRequest = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == CreateTopicsApiKey,
-      "not a CreateTopics request")
-    val version = buf.getShort.toInt
-    require(version >= 0 && version <= CreateTopicsMaxVersion,
-      s"unsupported CreateTopics version $version")
-    val flexible = version >= 5
-    val correlationId = buf.getInt
-    val clientId = readNullableString(buf)
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (RequestHeader(version, correlationId, clientId), r) =
+      readRequest(bytes, CreateTopics)
     val topics = (0 until r.count()).map { _ =>
       val name = r.str()
       val parts = r.i32()
@@ -2993,44 +2738,36 @@ object KafkaWire {
       configs: Seq[(String, String, Int)], topicId: Array[Byte] = null)
 
   def encodeCreateTopicsResponse(version: Int, correlationId: Int,
-      topics: Seq[CreatedTopic]): Array[Byte] = {
-    val flexible = version >= 5
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible)
-    val w = new WR(out, flexible)
-    if (version >= 2) w.i32(0) // throttle_time_ms
-    w.count(topics.length)
-    topics.foreach { t =>
-      w.str(t.name)
-      if (version >= 7)
-        w.uuid(if (t.errorCode == 0) topicUuid(t.name) else new Array[Byte](16))
-      w.i16(t.errorCode)
-      if (version >= 1) w.str(t.errorMessage)
-      if (version >= 5) {
-        w.i32(t.numPartitions)
-        w.i16(t.replicationFactor)
-        w.count(if (t.configs == null) -1 else t.configs.length)
-        if (t.configs != null) t.configs.foreach { case (n, v, src) =>
-          w.str(n); w.str(v)
-          w.bool(false) // read_only
-          w.i8(src)
-          w.bool(false) // is_sensitive
-          w.tags()
+      topics: Seq[CreatedTopic]): Array[Byte] =
+    writeResponse(CreateTopics, version, correlationId) { w =>
+      if (version >= 2) w.i32(0) // throttle_time_ms
+      w.count(topics.length)
+      topics.foreach { t =>
+        w.str(t.name)
+        if (version >= 7)
+          w.uuid(if (t.errorCode == 0) topicUuid(t.name) else new Array[Byte](16))
+        w.i16(t.errorCode)
+        if (version >= 1) w.str(t.errorMessage)
+        if (version >= 5) {
+          w.i32(t.numPartitions)
+          w.i16(t.replicationFactor)
+          w.count(if (t.configs == null) -1 else t.configs.length)
+          if (t.configs != null) t.configs.foreach { case (n, v, src) =>
+            w.str(n); w.str(v)
+            w.bool(false) // read_only
+            w.i8(src)
+            w.bool(false) // is_sensitive
+            w.tags()
+          }
         }
+        w.tags()
       }
       w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   def decodeCreateTopicsResponse(version: Int,
       bytes: Array[Byte]): (Int, Seq[CreatedTopic]) = {
-    val flexible = version >= 5
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (correlationId, r) = readResponse(CreateTopics, version, bytes)
     if (version >= 2) r.i32() // throttle_time_ms
     val topics = (0 until r.count()).map { _ =>
       val name = r.str()
@@ -3062,39 +2799,23 @@ object KafkaWire {
 
   def encodeDeleteTopicsRequest(version: Int, correlationId: Int,
       clientId: String, topics: Seq[(String, Array[Byte])],
-      timeoutMs: Int): Array[Byte] = {
-    require(version >= 0 && version <= DeleteTopicsMaxVersion,
-      s"unsupported DeleteTopics version $version")
-    val flexible = version >= 4
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, DeleteTopicsApiKey, version, correlationId, clientId,
-      flexible)
-    val w = new WR(out, flexible)
-    w.count(topics.length)
-    topics.foreach { case (name, id) =>
-      if (version >= 6) {
-        w.str(name)
-        w.uuid(if (id == null) new Array[Byte](16) else id)
-        w.tags()
-      } else w.str(name)
+      timeoutMs: Int): Array[Byte] =
+    writeRequest(DeleteTopics, version, correlationId, clientId) { w =>
+      w.count(topics.length)
+      topics.foreach { case (name, id) =>
+        if (version >= 6) {
+          w.str(name)
+          w.uuid(if (id == null) new Array[Byte](16) else id)
+          w.tags()
+        } else w.str(name)
+      }
+      w.i32(timeoutMs)
+      w.tags()
     }
-    w.i32(timeoutMs)
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   def decodeDeleteTopicsRequest(bytes: Array[Byte]): DeleteTopicsRequest = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == DeleteTopicsApiKey,
-      "not a DeleteTopics request")
-    val version = buf.getShort.toInt
-    require(version >= 0 && version <= DeleteTopicsMaxVersion,
-      s"unsupported DeleteTopics version $version")
-    val flexible = version >= 4
-    val correlationId = buf.getInt
-    val clientId = readNullableString(buf)
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (RequestHeader(version, correlationId, clientId), r) =
+      readRequest(bytes, DeleteTopics)
     val topics = (0 until r.count()).map { _ =>
       if (version >= 6) {
         val name = r.str(); val id = r.uuid(); r.tags()
@@ -3109,31 +2830,23 @@ object KafkaWire {
   /** responses = (name, topic_id, error_code, error_message);
     * topic_id ships at v6, error_message at v5+. */
   def encodeDeleteTopicsResponse(version: Int, correlationId: Int,
-      responses: Seq[(String, Array[Byte], Int, String)]): Array[Byte] = {
-    val flexible = version >= 4
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible)
-    val w = new WR(out, flexible)
-    if (version >= 1) w.i32(0) // throttle_time_ms
-    w.count(responses.length)
-    responses.foreach { case (name, id, err, msg) =>
-      w.str(name)
-      if (version >= 6) w.uuid(if (id == null) new Array[Byte](16) else id)
-      w.i16(err)
-      if (version >= 5) w.str(msg)
+      responses: Seq[(String, Array[Byte], Int, String)]): Array[Byte] =
+    writeResponse(DeleteTopics, version, correlationId) { w =>
+      if (version >= 1) w.i32(0) // throttle_time_ms
+      w.count(responses.length)
+      responses.foreach { case (name, id, err, msg) =>
+        w.str(name)
+        if (version >= 6) w.uuid(if (id == null) new Array[Byte](16) else id)
+        w.i16(err)
+        if (version >= 5) w.str(msg)
+        w.tags()
+      }
       w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   def decodeDeleteTopicsResponse(version: Int, bytes: Array[Byte])
       : (Int, Seq[(String, Array[Byte], Int, String)]) = {
-    val flexible = version >= 4
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (correlationId, r) = readResponse(DeleteTopics, version, bytes)
     if (version >= 1) r.i32() // throttle_time_ms
     val responses = (0 until r.count()).map { _ =>
       val name = r.str()
@@ -3153,38 +2866,22 @@ object KafkaWire {
 
   def encodeDeleteRecordsRequest(version: Int, correlationId: Int,
       clientId: String, topics: Seq[(String, Seq[(Int, Long)])],
-      timeoutMs: Int): Array[Byte] = {
-    require(version >= 0 && version <= DeleteRecordsMaxVersion,
-      s"unsupported DeleteRecords version $version")
-    val flexible = version >= 2
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, DeleteRecordsApiKey, version, correlationId, clientId,
-      flexible)
-    val w = new WR(out, flexible)
-    w.count(topics.length)
-    topics.foreach { case (name, parts) =>
-      w.str(name)
-      w.count(parts.length)
-      parts.foreach { case (p, off) => w.i32(p); w.i64(off); w.tags() }
+      timeoutMs: Int): Array[Byte] =
+    writeRequest(DeleteRecords, version, correlationId, clientId) { w =>
+      w.count(topics.length)
+      topics.foreach { case (name, parts) =>
+        w.str(name)
+        w.count(parts.length)
+        parts.foreach { case (p, off) => w.i32(p); w.i64(off); w.tags() }
+        w.tags()
+      }
+      w.i32(timeoutMs)
       w.tags()
     }
-    w.i32(timeoutMs)
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   def decodeDeleteRecordsRequest(bytes: Array[Byte]): DeleteRecordsRequest = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == DeleteRecordsApiKey,
-      "not a DeleteRecords request")
-    val version = buf.getShort.toInt
-    require(version >= 0 && version <= DeleteRecordsMaxVersion,
-      s"unsupported DeleteRecords version $version")
-    val flexible = version >= 2
-    val correlationId = buf.getInt
-    val clientId = readNullableString(buf)
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (RequestHeader(version, correlationId, clientId), r) =
+      readRequest(bytes, DeleteRecords)
     val topics = (0 until r.count()).map { _ =>
       val name = r.str()
       val parts = (0 until r.count()).map { _ =>
@@ -3199,32 +2896,24 @@ object KafkaWire {
   }
 
   def encodeDeleteRecordsResponse(version: Int, correlationId: Int,
-      topics: Seq[(String, Seq[(Int, Long, Int)])]): Array[Byte] = {
-    val flexible = version >= 2
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible)
-    val w = new WR(out, flexible)
-    w.i32(0) // throttle_time_ms (v0+ — DeleteRecords shipped with it)
-    w.count(topics.length)
-    topics.foreach { case (name, parts) =>
-      w.str(name)
-      w.count(parts.length)
-      parts.foreach { case (p, lowWatermark, err) =>
-        w.i32(p); w.i64(lowWatermark); w.i16(err); w.tags()
+      topics: Seq[(String, Seq[(Int, Long, Int)])]): Array[Byte] =
+    writeResponse(DeleteRecords, version, correlationId) { w =>
+      w.i32(0) // throttle_time_ms (v0+ — DeleteRecords shipped with it)
+      w.count(topics.length)
+      topics.foreach { case (name, parts) =>
+        w.str(name)
+        w.count(parts.length)
+        parts.foreach { case (p, lowWatermark, err) =>
+          w.i32(p); w.i64(lowWatermark); w.i16(err); w.tags()
+        }
+        w.tags()
       }
       w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   def decodeDeleteRecordsResponse(version: Int, bytes: Array[Byte])
       : (Int, Seq[(String, Seq[(Int, Long, Int)])]) = {
-    val flexible = version >= 2
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (correlationId, r) = readResponse(DeleteRecords, version, bytes)
     r.i32() // throttle_time_ms
     val topics = (0 until r.count()).map { _ =>
       val name = r.str()
@@ -3241,7 +2930,7 @@ object KafkaWire {
   def encodeCreateTopicsRequestV0(correlationId: Int, clientId: String,
       topics: Seq[(String, Int, Int)], timeoutMs: Int): Array[Byte] = {
     val out = new ByteArrayOutputStream()
-    writeInt16(out, CreateTopicsApiKey); writeInt16(out, 0)
+    writeInt16(out, CreateTopics.key); writeInt16(out, 0)
     writeInt32(out, correlationId); writeNullableString(out, clientId)
     writeInt32(out, topics.length)
     topics.foreach { case (name, numPartitions, replication) =>
@@ -3267,7 +2956,7 @@ object KafkaWire {
   def encodeDeleteTopicsRequestV0(correlationId: Int, clientId: String,
       topics: Seq[String], timeoutMs: Int): Array[Byte] = {
     val out = new ByteArrayOutputStream()
-    writeInt16(out, DeleteTopicsApiKey); writeInt16(out, 0)
+    writeInt16(out, DeleteTopics.key); writeInt16(out, 0)
     writeInt32(out, correlationId); writeNullableString(out, clientId)
     writeInt32(out, topics.length)
     topics.foreach(writeNullableString(out, _))
@@ -3278,7 +2967,7 @@ object KafkaWire {
   def encodeDeleteRecordsRequestV0(correlationId: Int, clientId: String,
       topics: Seq[(String, Seq[(Int, Long)])], timeoutMs: Int): Array[Byte] = {
     val out = new ByteArrayOutputStream()
-    writeInt16(out, DeleteRecordsApiKey); writeInt16(out, 0)
+    writeInt16(out, DeleteRecords.key); writeInt16(out, 0)
     writeInt32(out, correlationId); writeNullableString(out, clientId)
     writeInt32(out, topics.length)
     topics.foreach { case (name, parts) =>
@@ -3315,9 +3004,6 @@ object KafkaWire {
   // current (producer_id, producer_epoch) the client holds, for epoch
   // bumps after an unclean shutdown. ---
 
-  val InitProducerIdApiKey = 22
-  val InitProducerIdMaxVersion = 4
-
   case class InitProducerIdRequest(version: Int, correlationId: Int,
       clientId: String, transactionalId: String, transactionTimeoutMs: Int,
       currentProducerId: Long, currentProducerEpoch: Int)
@@ -3325,33 +3011,17 @@ object KafkaWire {
   def encodeInitProducerIdRequest(version: Int, correlationId: Int,
       clientId: String, transactionalId: String, transactionTimeoutMs: Int,
       currentProducerId: Long = -1L, currentProducerEpoch: Int = -1)
-      : Array[Byte] = {
-    require(version >= 0 && version <= InitProducerIdMaxVersion,
-      s"unsupported InitProducerId version $version")
-    val flexible = version >= 2
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, InitProducerIdApiKey, version, correlationId, clientId,
-      flexible)
-    val w = new WR(out, flexible)
-    w.str(transactionalId)
-    w.i32(transactionTimeoutMs)
-    if (version >= 3) { w.i64(currentProducerId); w.i16(currentProducerEpoch) }
-    w.tags()
-    frame(out.toByteArray)
-  }
+      : Array[Byte] =
+    writeRequest(InitProducerId, version, correlationId, clientId) { w =>
+      w.str(transactionalId)
+      w.i32(transactionTimeoutMs)
+      if (version >= 3) { w.i64(currentProducerId); w.i16(currentProducerEpoch) }
+      w.tags()
+    }
 
   def decodeInitProducerIdRequest(bytes: Array[Byte]): InitProducerIdRequest = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == InitProducerIdApiKey,
-      "not an InitProducerId request")
-    val version = buf.getShort.toInt
-    require(version >= 0 && version <= InitProducerIdMaxVersion,
-      s"unsupported InitProducerId version $version")
-    val flexible = version >= 2
-    val correlationId = buf.getInt
-    val clientId = readNullableString(buf)
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (RequestHeader(version, correlationId, clientId), r) =
+      readRequest(bytes, InitProducerId)
     val txnId = r.str()
     val timeoutMs = r.i32()
     val (pid, epoch) =
@@ -3362,27 +3032,19 @@ object KafkaWire {
   }
 
   def encodeInitProducerIdResponse(version: Int, correlationId: Int,
-      errorCode: Int, producerId: Long, producerEpoch: Int): Array[Byte] = {
-    val flexible = version >= 2
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible)
-    val w = new WR(out, flexible)
-    w.i32(0) // throttle_time_ms
-    w.i16(errorCode)
-    w.i64(producerId)
-    w.i16(producerEpoch)
-    w.tags()
-    frame(out.toByteArray)
-  }
+      errorCode: Int, producerId: Long, producerEpoch: Int): Array[Byte] =
+    writeResponse(InitProducerId, version, correlationId) { w =>
+      w.i32(0) // throttle_time_ms
+      w.i16(errorCode)
+      w.i64(producerId)
+      w.i16(producerEpoch)
+      w.tags()
+    }
 
   /** (correlationId, errorCode, producerId, producerEpoch) */
   def decodeInitProducerIdResponse(version: Int,
       bytes: Array[Byte]): (Int, Int, Long, Int) = {
-    val flexible = version >= 2
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (correlationId, r) = readResponse(InitProducerId, version, bytes)
     r.i32() // throttle_time_ms
     val t = (correlationId, r.i16(), r.i64(), r.i16())
     r.tags()
@@ -3404,8 +3066,6 @@ object KafkaWire {
   // live in code, not a mutable config store, and tooling just needs
   // an honest answer instead of a dropped connection. ---
 
-  val DescribeConfigsApiKey = 32
-  val DescribeConfigsMaxVersion = 4
   /** Resource types from the public spec. */
   val ConfigResourceTopic = 2
   val ConfigResourceBroker = 4
@@ -3422,42 +3082,26 @@ object KafkaWire {
   def encodeDescribeConfigsRequest(version: Int, correlationId: Int,
       clientId: String, resources: Seq[(Int, String, Option[Seq[String]])],
       includeSynonyms: Boolean = false,
-      includeDocumentation: Boolean = false): Array[Byte] = {
-    require(version >= 0 && version <= DescribeConfigsMaxVersion,
-      s"unsupported DescribeConfigs version $version")
-    val flexible = version >= 4
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, DescribeConfigsApiKey, version, correlationId, clientId,
-      flexible)
-    val w = new WR(out, flexible)
-    w.count(resources.length)
-    resources.foreach { case (rType, rName, keys) =>
-      w.i8(rType)
-      w.str(rName)
-      keys match {
-        case None => w.count(-1)
-        case Some(ks) => w.count(ks.length); ks.foreach(w.str)
+      includeDocumentation: Boolean = false): Array[Byte] =
+    writeRequest(DescribeConfigs, version, correlationId, clientId) { w =>
+      w.count(resources.length)
+      resources.foreach { case (rType, rName, keys) =>
+        w.i8(rType)
+        w.str(rName)
+        keys match {
+          case None => w.count(-1)
+          case Some(ks) => w.count(ks.length); ks.foreach(w.str)
+        }
+        w.tags()
       }
+      if (version >= 1) w.bool(includeSynonyms)
+      if (version >= 3) w.bool(includeDocumentation)
       w.tags()
     }
-    if (version >= 1) w.bool(includeSynonyms)
-    if (version >= 3) w.bool(includeDocumentation)
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   def decodeDescribeConfigsRequest(bytes: Array[Byte]): DescribeConfigsRequest = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == DescribeConfigsApiKey,
-      "not a DescribeConfigs request")
-    val version = buf.getShort.toInt
-    require(version >= 0 && version <= DescribeConfigsMaxVersion,
-      s"unsupported DescribeConfigs version $version")
-    val flexible = version >= 4
-    val correlationId = buf.getInt
-    val clientId = readNullableString(buf)
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (RequestHeader(version, correlationId, clientId), r) =
+      readRequest(bytes, DescribeConfigs)
     val resources = (0 until r.count()).map { _ =>
       val rType = r.i8()
       val rName = r.str()
@@ -3484,47 +3128,39 @@ object KafkaWire {
     * DYNAMIC_TOPIC_CONFIG); everything else is a default echo. */
   def encodeDescribeConfigsResponse(version: Int, correlationId: Int,
       results: Seq[(Int, String, Int, String, Seq[(String, String, Boolean)])])
-      : Array[Byte] = {
-    val flexible = version >= 4
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible)
-    val w = new WR(out, flexible)
-    w.i32(0) // throttle_time_ms
-    w.count(results.length)
-    results.foreach { case (err, errMsg, rType, rName, configs) =>
-      w.i16(err)
-      w.str(errMsg)
-      w.i8(rType)
-      w.str(rName)
-      w.count(configs.length)
-      configs.foreach { case (name, value, dynamic) =>
-        w.str(name)
-        w.str(value)
-        w.bool(!dynamic) // read_only
-        if (version == 0) w.bool(!dynamic) // is_default
-        else w.i8(if (dynamic) 1 else 5) // DYNAMIC_TOPIC_CONFIG / DEFAULT
-        w.bool(false) // is_sensitive
-        if (version >= 1) w.count(0) // synonyms: none
-        if (version >= 3) {
-          w.i8(0) // config_type: UNKNOWN (static echo)
-          w.str(null) // documentation
+      : Array[Byte] =
+    writeResponse(DescribeConfigs, version, correlationId) { w =>
+      w.i32(0) // throttle_time_ms
+      w.count(results.length)
+      results.foreach { case (err, errMsg, rType, rName, configs) =>
+        w.i16(err)
+        w.str(errMsg)
+        w.i8(rType)
+        w.str(rName)
+        w.count(configs.length)
+        configs.foreach { case (name, value, dynamic) =>
+          w.str(name)
+          w.str(value)
+          w.bool(!dynamic) // read_only
+          if (version == 0) w.bool(!dynamic) // is_default
+          else w.i8(if (dynamic) 1 else 5) // DYNAMIC_TOPIC_CONFIG / DEFAULT
+          w.bool(false) // is_sensitive
+          if (version >= 1) w.count(0) // synonyms: none
+          if (version >= 3) {
+            w.i8(0) // config_type: UNKNOWN (static echo)
+            w.str(null) // documentation
+          }
+          w.tags()
         }
         w.tags()
       }
       w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   /** (correlationId, results as in [[encodeDescribeConfigsResponse]]). */
   def decodeDescribeConfigsResponse(version: Int, bytes: Array[Byte])
       : (Int, Seq[(Int, String, Int, String, Seq[(String, String, Boolean)])]) = {
-    val flexible = version >= 4
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (correlationId, r) = readResponse(DescribeConfigs, version, bytes)
     r.i32() // throttle_time_ms
     val results = (0 until r.count()).map { _ =>
       val err = r.i16()
@@ -3560,9 +3196,6 @@ object KafkaWire {
   // error INT16, error_message NSTRING]>. Manual assignments are
   // meaningless on a single broker and answer INVALID_REQUEST. ---
 
-  val CreatePartitionsApiKey = 37
-  val CreatePartitionsMaxVersion = 3
-
   case class CreatePartitionsRequest(version: Int, correlationId: Int,
       clientId: String,
       /** (topic, new total count, manual assignments present?) */
@@ -3571,39 +3204,23 @@ object KafkaWire {
 
   def encodeCreatePartitionsRequest(version: Int, correlationId: Int,
       clientId: String, topics: Seq[(String, Int)], timeoutMs: Int = 30000,
-      validateOnly: Boolean = false): Array[Byte] = {
-    require(version >= 0 && version <= CreatePartitionsMaxVersion,
-      s"unsupported CreatePartitions version $version")
-    val flexible = version >= 2
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, CreatePartitionsApiKey, version, correlationId,
-      clientId, flexible)
-    val w = new WR(out, flexible)
-    w.count(topics.length)
-    topics.foreach { case (name, count) =>
-      w.str(name)
-      w.i32(count)
-      w.count(-1) // assignments: null (broker-chosen)
+      validateOnly: Boolean = false): Array[Byte] =
+    writeRequest(CreatePartitions, version, correlationId, clientId) { w =>
+      w.count(topics.length)
+      topics.foreach { case (name, count) =>
+        w.str(name)
+        w.i32(count)
+        w.count(-1) // assignments: null (broker-chosen)
+        w.tags()
+      }
+      w.i32(timeoutMs)
+      w.bool(validateOnly)
       w.tags()
     }
-    w.i32(timeoutMs)
-    w.bool(validateOnly)
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   def decodeCreatePartitionsRequest(bytes: Array[Byte]): CreatePartitionsRequest = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == CreatePartitionsApiKey,
-      "not a CreatePartitions request")
-    val version = buf.getShort.toInt
-    require(version >= 0 && version <= CreatePartitionsMaxVersion,
-      s"unsupported CreatePartitions version $version")
-    val flexible = version >= 2
-    val correlationId = buf.getInt
-    val clientId = readNullableString(buf)
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (RequestHeader(version, correlationId, clientId), r) =
+      readRequest(bytes, CreatePartitions)
     val topics = (0 until r.count()).map { _ =>
       val name = r.str()
       val count = r.i32()
@@ -3624,28 +3241,20 @@ object KafkaWire {
 
   /** results: (topic, errorCode, errorMessage). */
   def encodeCreatePartitionsResponse(version: Int, correlationId: Int,
-      results: Seq[(String, Int, String)]): Array[Byte] = {
-    val flexible = version >= 2
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible)
-    val w = new WR(out, flexible)
-    w.i32(0) // throttle_time_ms
-    w.count(results.length)
-    results.foreach { case (name, err, msg) =>
-      w.str(name); w.i16(err); w.str(msg); w.tags()
+      results: Seq[(String, Int, String)]): Array[Byte] =
+    writeResponse(CreatePartitions, version, correlationId) { w =>
+      w.i32(0) // throttle_time_ms
+      w.count(results.length)
+      results.foreach { case (name, err, msg) =>
+        w.str(name); w.i16(err); w.str(msg); w.tags()
+      }
+      w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   /** (correlationId, (topic, errorCode, errorMessage)*). */
   def decodeCreatePartitionsResponse(version: Int, bytes: Array[Byte])
       : (Int, Seq[(String, Int, String)]) = {
-    val flexible = version >= 2
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (correlationId, r) = readResponse(CreatePartitions, version, bytes)
     r.i32() // throttle
     val results = (0 until r.count()).map { _ =>
       val t = (r.str(), r.i16(), r.str()); r.tags(); t
@@ -3661,36 +3270,24 @@ object KafkaWire {
   // (group-level), throttle, topics ARRAY<[name, partitions
   // ARRAY<[partition INT32, error INT16]>]>. ---
 
-  val OffsetDeleteApiKey = 47
-  val OffsetDeleteMaxVersion = 0
-
   case class OffsetDeleteRequest(correlationId: Int, clientId: String,
       group: String, topics: Seq[(String, Seq[Int])])
 
   def encodeOffsetDeleteRequest(correlationId: Int, clientId: String,
-      group: String, topics: Seq[(String, Seq[Int])]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, OffsetDeleteApiKey, 0, correlationId, clientId,
-      flexible = false)
-    val w = new WR(out, flexible = false)
-    w.str(group)
-    w.count(topics.length)
-    topics.foreach { case (name, parts) =>
-      w.str(name)
-      w.count(parts.length)
-      parts.foreach(w.i32)
+      group: String, topics: Seq[(String, Seq[Int])]): Array[Byte] =
+    writeRequest(OffsetDelete, 0, correlationId, clientId) { w =>
+      w.str(group)
+      w.count(topics.length)
+      topics.foreach { case (name, parts) =>
+        w.str(name)
+        w.count(parts.length)
+        parts.foreach(w.i32)
+      }
     }
-    frame(out.toByteArray)
-  }
 
   def decodeOffsetDeleteRequest(bytes: Array[Byte]): OffsetDeleteRequest = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == OffsetDeleteApiKey,
-      "not an OffsetDelete request")
-    require(buf.getShort.toInt == 0, "unsupported OffsetDelete version")
-    val correlationId = buf.getInt
-    val clientId = readNullableString(buf)
-    val r = new RD(buf, flexible = false)
+    val (RequestHeader(_, correlationId, clientId), r) =
+      readRequest(bytes, OffsetDelete)
     val group = r.str()
     val topics = (0 until r.count()).map { _ =>
       (r.str(), (0 until r.count()).map(_ => r.i32()).toSeq)
@@ -3700,27 +3297,22 @@ object KafkaWire {
 
   /** topics: (name, (partition, errorCode)*). */
   def encodeOffsetDeleteResponse(correlationId: Int, groupError: Int,
-      topics: Seq[(String, Seq[(Int, Int)])]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible = false)
-    val w = new WR(out, flexible = false)
-    w.i16(groupError)
-    w.i32(0) // throttle_time_ms
-    w.count(topics.length)
-    topics.foreach { case (name, parts) =>
-      w.str(name)
-      w.count(parts.length)
-      parts.foreach { case (p, err) => w.i32(p); w.i16(err) }
+      topics: Seq[(String, Seq[(Int, Int)])]): Array[Byte] =
+    writeResponse(OffsetDelete, 0, correlationId) { w =>
+      w.i16(groupError)
+      w.i32(0) // throttle_time_ms
+      w.count(topics.length)
+      topics.foreach { case (name, parts) =>
+        w.str(name)
+        w.count(parts.length)
+        parts.foreach { case (p, err) => w.i32(p); w.i16(err) }
+      }
     }
-    frame(out.toByteArray)
-  }
 
   /** (correlationId, groupError, topics as encoded). */
   def decodeOffsetDeleteResponse(bytes: Array[Byte])
       : (Int, Int, Seq[(String, Seq[(Int, Int)])]) = {
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    val r = new RD(buf, flexible = false)
+    val (correlationId, r) = readResponse(OffsetDelete, 0, bytes)
     val groupError = r.i16()
     r.i32() // throttle
     val topics = (0 until r.count()).map { _ =>
@@ -3734,37 +3326,18 @@ object KafkaWire {
   // send. Request: groups_names ARRAY<STRING>. Response: throttle,
   // results ARRAY<[group_id STRING, error_code INT16]>. ---
 
-  val DeleteGroupsApiKey = 42
-  val DeleteGroupsMaxVersion = 2
-
   def encodeDeleteGroupsRequest(version: Int, correlationId: Int,
-      clientId: String, groups: Seq[String]): Array[Byte] = {
-    require(version >= 0 && version <= DeleteGroupsMaxVersion,
-      s"unsupported DeleteGroups version $version")
-    val flexible = version >= 2
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, DeleteGroupsApiKey, version, correlationId, clientId,
-      flexible)
-    val w = new WR(out, flexible)
-    w.count(groups.length)
-    groups.foreach(w.str)
-    w.tags()
-    frame(out.toByteArray)
-  }
+      clientId: String, groups: Seq[String]): Array[Byte] =
+    writeRequest(DeleteGroups, version, correlationId, clientId) { w =>
+      w.count(groups.length)
+      groups.foreach(w.str)
+      w.tags()
+    }
 
   /** (version, correlationId, groupIds). */
   def decodeDeleteGroupsRequest(bytes: Array[Byte]): (Int, Int, Seq[String]) = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == DeleteGroupsApiKey,
-      "not a DeleteGroups request")
-    val version = buf.getShort.toInt
-    require(version >= 0 && version <= DeleteGroupsMaxVersion,
-      s"unsupported DeleteGroups version $version")
-    val flexible = version >= 2
-    val correlationId = buf.getInt
-    val clientId = readNullableString(buf)
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (RequestHeader(version, correlationId, _), r) =
+      readRequest(bytes, DeleteGroups)
     val groups = (0 until r.count()).map(_ => r.str())
     r.tags()
     (version, correlationId, groups.toSeq)
@@ -3772,26 +3345,18 @@ object KafkaWire {
 
   /** results: (groupId, errorCode)*. */
   def encodeDeleteGroupsResponse(version: Int, correlationId: Int,
-      results: Seq[(String, Int)]): Array[Byte] = {
-    val flexible = version >= 2
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible)
-    val w = new WR(out, flexible)
-    w.i32(0) // throttle_time_ms
-    w.count(results.length)
-    results.foreach { case (g, err) => w.str(g); w.i16(err); w.tags() }
-    w.tags()
-    frame(out.toByteArray)
-  }
+      results: Seq[(String, Int)]): Array[Byte] =
+    writeResponse(DeleteGroups, version, correlationId) { w =>
+      w.i32(0) // throttle_time_ms
+      w.count(results.length)
+      results.foreach { case (g, err) => w.str(g); w.i16(err); w.tags() }
+      w.tags()
+    }
 
   /** (correlationId, results as (groupId, errorCode)). */
   def decodeDeleteGroupsResponse(version: Int, bytes: Array[Byte])
       : (Int, Seq[(String, Int)]) = {
-    val flexible = version >= 2
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (correlationId, r) = readResponse(DeleteGroups, version, bytes)
     r.i32() // throttle_time_ms
     val results = (0 until r.count()).map { _ =>
       val g = r.str(); val e = r.i16(); r.tags(); (g, e)
@@ -3809,30 +3374,17 @@ object KafkaWire {
   // cluster_authorized_operations INT32 (-2147483648 = not
   // requested). ---
 
-  val DescribeClusterApiKey = 60
-  val DescribeClusterMaxVersion = 0
-
   def encodeDescribeClusterRequest(correlationId: Int, clientId: String,
-      includeAuthorizedOps: Boolean = false): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, DescribeClusterApiKey, 0, correlationId, clientId,
-      flexible = true)
-    val w = new WR(out, flexible = true)
-    w.bool(includeAuthorizedOps)
-    w.tags()
-    frame(out.toByteArray)
-  }
+      includeAuthorizedOps: Boolean = false): Array[Byte] =
+    writeRequest(DescribeCluster, 0, correlationId, clientId) { w =>
+      w.bool(includeAuthorizedOps)
+      w.tags()
+    }
 
   /** (correlationId, includeAuthorizedOps). */
   def decodeDescribeClusterRequest(bytes: Array[Byte]): (Int, Boolean) = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == DescribeClusterApiKey,
-      "not a DescribeCluster request")
-    require(buf.getShort.toInt == 0, "unsupported DescribeCluster version")
-    val correlationId = buf.getInt
-    readNullableString(buf) // client id
-    readTags(buf)
-    val r = new RD(buf, flexible = true)
+    val (RequestHeader(_, correlationId, _), r) =
+      readRequest(bytes, DescribeCluster)
     val includeOps = r.bool()
     r.tags()
     (correlationId, includeOps)
@@ -3840,31 +3392,25 @@ object KafkaWire {
 
   def encodeDescribeClusterResponse(correlationId: Int, clusterId: String,
       controllerId: Int, brokers: Seq[(Int, String, Int, String)])
-      : Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible = true)
-    val w = new WR(out, flexible = true)
-    w.i32(0) // throttle_time_ms
-    w.i16(0) // error_code
-    w.str(null) // error_message
-    w.str(clusterId)
-    w.i32(controllerId)
-    w.count(brokers.length)
-    brokers.foreach { case (id, host, port, rack) =>
-      w.i32(id); w.str(host); w.i32(port); w.str(rack); w.tags()
+      : Array[Byte] =
+    writeResponse(DescribeCluster, 0, correlationId) { w =>
+      w.i32(0) // throttle_time_ms
+      w.i16(0) // error_code
+      w.str(null) // error_message
+      w.str(clusterId)
+      w.i32(controllerId)
+      w.count(brokers.length)
+      brokers.foreach { case (id, host, port, rack) =>
+        w.i32(id); w.str(host); w.i32(port); w.str(rack); w.tags()
+      }
+      w.i32(Int.MinValue) // cluster_authorized_operations: not requested
+      w.tags()
     }
-    w.i32(Int.MinValue) // cluster_authorized_operations: not requested
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   /** (correlationId, clusterId, controllerId, brokers). */
   def decodeDescribeClusterResponse(bytes: Array[Byte])
       : (Int, String, Int, Seq[(Int, String, Int, String)]) = {
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    readTags(buf)
-    val r = new RD(buf, flexible = true)
+    val (correlationId, r) = readResponse(DescribeCluster, 0, bytes)
     r.i32() // throttle
     val err = r.i16()
     require(err == 0, s"DescribeCluster error $err")
@@ -3889,9 +3435,6 @@ object KafkaWire {
   // INT16, error_message NSTRING, resource_type INT8, resource_name
   // STRING]>. ---
 
-  val AlterConfigsApiKey = 33
-  val AlterConfigsMaxVersion = 2
-
   case class AlterConfigsRequest(version: Int, correlationId: Int,
       clientId: String,
       /** (resourceType, resourceName, (configName, value)*) */
@@ -3900,39 +3443,23 @@ object KafkaWire {
 
   def encodeAlterConfigsRequest(version: Int, correlationId: Int,
       clientId: String, resources: Seq[(Int, String, Seq[(String, String)])],
-      validateOnly: Boolean = false): Array[Byte] = {
-    require(version >= 0 && version <= AlterConfigsMaxVersion,
-      s"unsupported AlterConfigs version $version")
-    val flexible = version >= 2
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, AlterConfigsApiKey, version, correlationId, clientId,
-      flexible)
-    val w = new WR(out, flexible)
-    w.count(resources.length)
-    resources.foreach { case (rType, rName, configs) =>
-      w.i8(rType)
-      w.str(rName)
-      w.count(configs.length)
-      configs.foreach { case (n, v) => w.str(n); w.str(v); w.tags() }
+      validateOnly: Boolean = false): Array[Byte] =
+    writeRequest(AlterConfigs, version, correlationId, clientId) { w =>
+      w.count(resources.length)
+      resources.foreach { case (rType, rName, configs) =>
+        w.i8(rType)
+        w.str(rName)
+        w.count(configs.length)
+        configs.foreach { case (n, v) => w.str(n); w.str(v); w.tags() }
+        w.tags()
+      }
+      w.bool(validateOnly)
       w.tags()
     }
-    w.bool(validateOnly)
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   def decodeAlterConfigsRequest(bytes: Array[Byte]): AlterConfigsRequest = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == AlterConfigsApiKey,
-      "not an AlterConfigs request")
-    val version = buf.getShort.toInt
-    require(version >= 0 && version <= AlterConfigsMaxVersion,
-      s"unsupported AlterConfigs version $version")
-    val flexible = version >= 2
-    val correlationId = buf.getInt
-    val clientId = readNullableString(buf)
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (RequestHeader(version, correlationId, clientId), r) =
+      readRequest(bytes, AlterConfigs)
     val resources = (0 until r.count()).map { _ =>
       val rType = r.i8()
       val rName = r.str()
@@ -3951,28 +3478,20 @@ object KafkaWire {
   /** responses: (error, errorMessage, resourceType, resourceName)*. */
   def encodeAlterConfigsResponse(version: Int, correlationId: Int,
       responses: Seq[(Int, String, Int, String)],
-      flexibleFrom: Int = 2): Array[Byte] = {
-    val flexible = version >= flexibleFrom
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible)
-    val w = new WR(out, flexible)
-    w.i32(0) // throttle_time_ms
-    w.count(responses.length)
-    responses.foreach { case (err, msg, rType, rName) =>
-      w.i16(err); w.str(msg); w.i8(rType); w.str(rName); w.tags()
+      api: Api = AlterConfigs): Array[Byte] =
+    writeResponse(api, version, correlationId) { w =>
+      w.i32(0) // throttle_time_ms
+      w.count(responses.length)
+      responses.foreach { case (err, msg, rType, rName) =>
+        w.i16(err); w.str(msg); w.i8(rType); w.str(rName); w.tags()
+      }
+      w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   /** (correlationId, responses as encoded). */
   def decodeAlterConfigsResponse(version: Int, bytes: Array[Byte],
-      flexibleFrom: Int = 2): (Int, Seq[(Int, String, Int, String)]) = {
-    val flexible = version >= flexibleFrom
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+      api: Api = AlterConfigs): (Int, Seq[(Int, String, Int, String)]) = {
+    val (correlationId, r) = readResponse(api, version, bytes)
     r.i32() // throttle
     val responses = (0 until r.count()).map { _ =>
       val t = (r.i16(), r.str(), r.i8(), r.str()); r.tags(); t
@@ -3990,9 +3509,6 @@ object KafkaWire {
   // NSTRING]>]>, validate_only BOOL. Response: same shape as
   // AlterConfigs. ---
 
-  val IncrementalAlterConfigsApiKey = 44
-  val IncrementalAlterConfigsMaxVersion = 1
-
   case class IncrementalAlterConfigsRequest(version: Int, correlationId: Int,
       clientId: String,
       /** (resourceType, resourceName, (configName, op, value)*) */
@@ -4002,42 +3518,26 @@ object KafkaWire {
   def encodeIncrementalAlterConfigsRequest(version: Int, correlationId: Int,
       clientId: String,
       resources: Seq[(Int, String, Seq[(String, Int, String)])],
-      validateOnly: Boolean = false): Array[Byte] = {
-    require(version >= 0 && version <= IncrementalAlterConfigsMaxVersion,
-      s"unsupported IncrementalAlterConfigs version $version")
-    val flexible = version >= 1
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, IncrementalAlterConfigsApiKey, version, correlationId,
-      clientId, flexible)
-    val w = new WR(out, flexible)
-    w.count(resources.length)
-    resources.foreach { case (rType, rName, configs) =>
-      w.i8(rType)
-      w.str(rName)
-      w.count(configs.length)
-      configs.foreach { case (n, op, v) =>
-        w.str(n); w.i8(op); w.str(v); w.tags()
+      validateOnly: Boolean = false): Array[Byte] =
+    writeRequest(IncrementalAlterConfigs, version, correlationId, clientId) { w =>
+      w.count(resources.length)
+      resources.foreach { case (rType, rName, configs) =>
+        w.i8(rType)
+        w.str(rName)
+        w.count(configs.length)
+        configs.foreach { case (n, op, v) =>
+          w.str(n); w.i8(op); w.str(v); w.tags()
+        }
+        w.tags()
       }
+      w.bool(validateOnly)
       w.tags()
     }
-    w.bool(validateOnly)
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   def decodeIncrementalAlterConfigsRequest(bytes: Array[Byte])
       : IncrementalAlterConfigsRequest = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == IncrementalAlterConfigsApiKey,
-      "not an IncrementalAlterConfigs request")
-    val version = buf.getShort.toInt
-    require(version >= 0 && version <= IncrementalAlterConfigsMaxVersion,
-      s"unsupported IncrementalAlterConfigs version $version")
-    val flexible = version >= 1
-    val correlationId = buf.getInt
-    val clientId = readNullableString(buf)
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (RequestHeader(version, correlationId, clientId), r) =
+      readRequest(bytes, IncrementalAlterConfigs)
     val resources = (0 until r.count()).map { _ =>
       val rType = r.i8()
       val rName = r.str()
@@ -4056,11 +3556,11 @@ object KafkaWire {
   def encodeIncrementalAlterConfigsResponse(version: Int, correlationId: Int,
       responses: Seq[(Int, String, Int, String)]): Array[Byte] =
     encodeAlterConfigsResponse(version, correlationId, responses,
-      flexibleFrom = 1)
+      IncrementalAlterConfigs)
 
   def decodeIncrementalAlterConfigsResponse(version: Int, bytes: Array[Byte])
       : (Int, Seq[(Int, String, Int, String)]) =
-    decodeAlterConfigsResponse(version, bytes, flexibleFrom = 1)
+    decodeAlterConfigsResponse(version, bytes, IncrementalAlterConfigs)
 
   // --- OffsetForLeaderEpoch (key 23, v0–v4; flexible v4) — the
   // truncation-detection RPC a modern consumer/follower sends when
@@ -4072,9 +3572,6 @@ object KafkaWire {
   // ARRAY<[name, partitions ARRAY<[error INT16, partition INT32,
   // leader_epoch INT32 (v1+), end_offset INT64]>]>. ---
 
-  val OffsetForLeaderEpochApiKey = 23
-  val OffsetForLeaderEpochMaxVersion = 4
-
   case class OffsetForLeaderEpochRequest(version: Int, correlationId: Int,
       clientId: String, replicaId: Int,
       /** (topic, (partition, currentLeaderEpoch, leaderEpoch)*) */
@@ -4082,44 +3579,28 @@ object KafkaWire {
 
   def encodeOffsetForLeaderEpochRequest(version: Int, correlationId: Int,
       clientId: String, topics: Seq[(String, Seq[(Int, Int, Int)])],
-      replicaId: Int = -2): Array[Byte] = {
-    require(version >= 0 && version <= OffsetForLeaderEpochMaxVersion,
-      s"unsupported OffsetForLeaderEpoch version $version")
-    val flexible = version >= 4
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, OffsetForLeaderEpochApiKey, version, correlationId,
-      clientId, flexible)
-    val w = new WR(out, flexible)
-    if (version >= 3) w.i32(replicaId)
-    w.count(topics.length)
-    topics.foreach { case (name, parts) =>
-      w.str(name)
-      w.count(parts.length)
-      parts.foreach { case (p, curEpoch, epoch) =>
-        w.i32(p)
-        if (version >= 2) w.i32(curEpoch)
-        w.i32(epoch)
+      replicaId: Int = -2): Array[Byte] =
+    writeRequest(OffsetForLeaderEpoch, version, correlationId, clientId) { w =>
+      if (version >= 3) w.i32(replicaId)
+      w.count(topics.length)
+      topics.foreach { case (name, parts) =>
+        w.str(name)
+        w.count(parts.length)
+        parts.foreach { case (p, curEpoch, epoch) =>
+          w.i32(p)
+          if (version >= 2) w.i32(curEpoch)
+          w.i32(epoch)
+          w.tags()
+        }
         w.tags()
       }
       w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   def decodeOffsetForLeaderEpochRequest(bytes: Array[Byte])
       : OffsetForLeaderEpochRequest = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == OffsetForLeaderEpochApiKey,
-      "not an OffsetForLeaderEpoch request")
-    val version = buf.getShort.toInt
-    require(version >= 0 && version <= OffsetForLeaderEpochMaxVersion,
-      s"unsupported OffsetForLeaderEpoch version $version")
-    val flexible = version >= 4
-    val correlationId = buf.getInt
-    val clientId = readNullableString(buf)
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (RequestHeader(version, correlationId, clientId), r) =
+      readRequest(bytes, OffsetForLeaderEpoch)
     val replicaId = if (version >= 3) r.i32() else -2
     val topics = (0 until r.count()).map { _ =>
       val name = r.str()
@@ -4140,37 +3621,29 @@ object KafkaWire {
 
   /** topics: (name, (error, partition, leaderEpoch, endOffset)*). */
   def encodeOffsetForLeaderEpochResponse(version: Int, correlationId: Int,
-      topics: Seq[(String, Seq[(Int, Int, Int, Long)])]): Array[Byte] = {
-    val flexible = version >= 4
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible)
-    val w = new WR(out, flexible)
-    if (version >= 2) w.i32(0) // throttle_time_ms
-    w.count(topics.length)
-    topics.foreach { case (name, parts) =>
-      w.str(name)
-      w.count(parts.length)
-      parts.foreach { case (err, p, epoch, end) =>
-        w.i16(err)
-        w.i32(p)
-        if (version >= 1) w.i32(epoch)
-        w.i64(end)
+      topics: Seq[(String, Seq[(Int, Int, Int, Long)])]): Array[Byte] =
+    writeResponse(OffsetForLeaderEpoch, version, correlationId) { w =>
+      if (version >= 2) w.i32(0) // throttle_time_ms
+      w.count(topics.length)
+      topics.foreach { case (name, parts) =>
+        w.str(name)
+        w.count(parts.length)
+        parts.foreach { case (err, p, epoch, end) =>
+          w.i16(err)
+          w.i32(p)
+          if (version >= 1) w.i32(epoch)
+          w.i64(end)
+          w.tags()
+        }
         w.tags()
       }
       w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   /** (correlationId, topics as encoded). */
   def decodeOffsetForLeaderEpochResponse(version: Int, bytes: Array[Byte])
       : (Int, Seq[(String, Seq[(Int, Int, Int, Long)])]) = {
-    val flexible = version >= 4
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (correlationId, r) = readResponse(OffsetForLeaderEpoch, version, bytes)
     if (version >= 2) r.i32() // throttle
     val topics = (0 until r.count()).map { _ =>
       val name = r.str()
@@ -4196,55 +3669,30 @@ object KafkaWire {
   // the schema around batched broker-to-broker calls a single-broker
   // engine never receives. ---
 
-  val AddPartitionsToTxnApiKey = 24
-  val AddPartitionsToTxnMaxVersion = 3
-  val AddOffsetsToTxnApiKey = 25
-  val AddOffsetsToTxnMaxVersion = 3
-  val EndTxnApiKey = 26
-  val EndTxnMaxVersion = 3
-  val TxnOffsetCommitApiKey = 28
-  val TxnOffsetCommitMaxVersion = 3
-
   case class AddPartitionsToTxnRequest(version: Int, correlationId: Int,
       clientId: String, transactionalId: String, producerId: Long,
       producerEpoch: Int, topics: Seq[(String, Seq[Int])])
 
   def encodeAddPartitionsToTxnRequest(version: Int, correlationId: Int,
       clientId: String, transactionalId: String, producerId: Long,
-      producerEpoch: Int, topics: Seq[(String, Seq[Int])]): Array[Byte] = {
-    require(version >= 0 && version <= AddPartitionsToTxnMaxVersion,
-      s"unsupported AddPartitionsToTxn version $version")
-    val flexible = version >= 3
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, AddPartitionsToTxnApiKey, version, correlationId,
-      clientId, flexible)
-    val w = new WR(out, flexible)
-    w.str(transactionalId)
-    w.i64(producerId)
-    w.i16(producerEpoch)
-    w.count(topics.length)
-    topics.foreach { case (name, parts) =>
-      w.str(name)
-      w.count(parts.length); parts.foreach(w.i32)
+      producerEpoch: Int, topics: Seq[(String, Seq[Int])]): Array[Byte] =
+    writeRequest(AddPartitionsToTxn, version, correlationId, clientId) { w =>
+      w.str(transactionalId)
+      w.i64(producerId)
+      w.i16(producerEpoch)
+      w.count(topics.length)
+      topics.foreach { case (name, parts) =>
+        w.str(name)
+        w.count(parts.length); parts.foreach(w.i32)
+        w.tags()
+      }
       w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   def decodeAddPartitionsToTxnRequest(
       bytes: Array[Byte]): AddPartitionsToTxnRequest = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == AddPartitionsToTxnApiKey,
-      "not an AddPartitionsToTxn request")
-    val version = buf.getShort.toInt
-    require(version >= 0 && version <= AddPartitionsToTxnMaxVersion,
-      s"unsupported AddPartitionsToTxn version $version")
-    val flexible = version >= 3
-    val correlationId = buf.getInt
-    val clientId = readNullableString(buf)
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (RequestHeader(version, correlationId, clientId), r) =
+      readRequest(bytes, AddPartitionsToTxn)
     val txnId = r.str()
     val pid = r.i64()
     val epoch = r.i16()
@@ -4261,30 +3709,22 @@ object KafkaWire {
 
   /** results = (topic, (partition, errorCode)*)*. */
   def encodeAddPartitionsToTxnResponse(version: Int, correlationId: Int,
-      results: Seq[(String, Seq[(Int, Int)])]): Array[Byte] = {
-    val flexible = version >= 3
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible)
-    val w = new WR(out, flexible)
-    w.i32(0) // throttle_time_ms
-    w.count(results.length)
-    results.foreach { case (name, parts) =>
-      w.str(name)
-      w.count(parts.length)
-      parts.foreach { case (p, err) => w.i32(p); w.i16(err); w.tags() }
+      results: Seq[(String, Seq[(Int, Int)])]): Array[Byte] =
+    writeResponse(AddPartitionsToTxn, version, correlationId) { w =>
+      w.i32(0) // throttle_time_ms
+      w.count(results.length)
+      results.foreach { case (name, parts) =>
+        w.str(name)
+        w.count(parts.length)
+        parts.foreach { case (p, err) => w.i32(p); w.i16(err); w.tags() }
+        w.tags()
+      }
       w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   def decodeAddPartitionsToTxnResponse(version: Int, bytes: Array[Byte])
       : (Int, Seq[(String, Seq[(Int, Int)])]) = {
-    val flexible = version >= 3
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (correlationId, r) = readResponse(AddPartitionsToTxn, version, bytes)
     r.i32() // throttle_time_ms
     val results = (0 until r.count()).map { _ =>
       val name = r.str()
@@ -4304,35 +3744,19 @@ object KafkaWire {
 
   def encodeAddOffsetsToTxnRequest(version: Int, correlationId: Int,
       clientId: String, transactionalId: String, producerId: Long,
-      producerEpoch: Int, groupId: String): Array[Byte] = {
-    require(version >= 0 && version <= AddOffsetsToTxnMaxVersion,
-      s"unsupported AddOffsetsToTxn version $version")
-    val flexible = version >= 3
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, AddOffsetsToTxnApiKey, version, correlationId,
-      clientId, flexible)
-    val w = new WR(out, flexible)
-    w.str(transactionalId)
-    w.i64(producerId)
-    w.i16(producerEpoch)
-    w.str(groupId)
-    w.tags()
-    frame(out.toByteArray)
-  }
+      producerEpoch: Int, groupId: String): Array[Byte] =
+    writeRequest(AddOffsetsToTxn, version, correlationId, clientId) { w =>
+      w.str(transactionalId)
+      w.i64(producerId)
+      w.i16(producerEpoch)
+      w.str(groupId)
+      w.tags()
+    }
 
   def decodeAddOffsetsToTxnRequest(
       bytes: Array[Byte]): AddOffsetsToTxnRequest = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == AddOffsetsToTxnApiKey,
-      "not an AddOffsetsToTxn request")
-    val version = buf.getShort.toInt
-    require(version >= 0 && version <= AddOffsetsToTxnMaxVersion,
-      s"unsupported AddOffsetsToTxn version $version")
-    val flexible = version >= 3
-    val correlationId = buf.getInt
-    val clientId = readNullableString(buf)
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (RequestHeader(version, correlationId, clientId), r) =
+      readRequest(bytes, AddOffsetsToTxn)
     val req = AddOffsetsToTxnRequest(version, correlationId, clientId,
       r.str(), r.i64(), r.i16(), r.str())
     r.tags()
@@ -4340,25 +3764,17 @@ object KafkaWire {
   }
 
   def encodeAddOffsetsToTxnResponse(version: Int, correlationId: Int,
-      errorCode: Int): Array[Byte] = {
-    val flexible = version >= 3
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible)
-    val w = new WR(out, flexible)
-    w.i32(0) // throttle_time_ms
-    w.i16(errorCode)
-    w.tags()
-    frame(out.toByteArray)
-  }
+      errorCode: Int): Array[Byte] =
+    writeResponse(AddOffsetsToTxn, version, correlationId) { w =>
+      w.i32(0) // throttle_time_ms
+      w.i16(errorCode)
+      w.tags()
+    }
 
   /** (correlationId, errorCode). */
   def decodeAddOffsetsToTxnResponse(version: Int,
       bytes: Array[Byte]): (Int, Int) = {
-    val flexible = version >= 3
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (correlationId, r) = readResponse(AddOffsetsToTxn, version, bytes)
     r.i32() // throttle_time_ms
     val t = (correlationId, r.i16())
     r.tags()
@@ -4371,32 +3787,18 @@ object KafkaWire {
 
   def encodeEndTxnRequest(version: Int, correlationId: Int, clientId: String,
       transactionalId: String, producerId: Long, producerEpoch: Int,
-      committed: Boolean): Array[Byte] = {
-    require(version >= 0 && version <= EndTxnMaxVersion,
-      s"unsupported EndTxn version $version")
-    val flexible = version >= 3
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, EndTxnApiKey, version, correlationId, clientId, flexible)
-    val w = new WR(out, flexible)
-    w.str(transactionalId)
-    w.i64(producerId)
-    w.i16(producerEpoch)
-    w.bool(committed)
-    w.tags()
-    frame(out.toByteArray)
-  }
+      committed: Boolean): Array[Byte] =
+    writeRequest(EndTxn, version, correlationId, clientId) { w =>
+      w.str(transactionalId)
+      w.i64(producerId)
+      w.i16(producerEpoch)
+      w.bool(committed)
+      w.tags()
+    }
 
   def decodeEndTxnRequest(bytes: Array[Byte]): EndTxnRequest = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == EndTxnApiKey, "not an EndTxn request")
-    val version = buf.getShort.toInt
-    require(version >= 0 && version <= EndTxnMaxVersion,
-      s"unsupported EndTxn version $version")
-    val flexible = version >= 3
-    val correlationId = buf.getInt
-    val clientId = readNullableString(buf)
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (RequestHeader(version, correlationId, clientId), r) =
+      readRequest(bytes, EndTxn)
     val req = EndTxnRequest(version, correlationId, clientId,
       r.str(), r.i64(), r.i16(), r.bool())
     r.tags()
@@ -4404,24 +3806,16 @@ object KafkaWire {
   }
 
   def encodeEndTxnResponse(version: Int, correlationId: Int,
-      errorCode: Int): Array[Byte] = {
-    val flexible = version >= 3
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible)
-    val w = new WR(out, flexible)
-    w.i32(0) // throttle_time_ms
-    w.i16(errorCode)
-    w.tags()
-    frame(out.toByteArray)
-  }
+      errorCode: Int): Array[Byte] =
+    writeResponse(EndTxn, version, correlationId) { w =>
+      w.i32(0) // throttle_time_ms
+      w.i16(errorCode)
+      w.tags()
+    }
 
   /** (correlationId, errorCode). */
   def decodeEndTxnResponse(version: Int, bytes: Array[Byte]): (Int, Int) = {
-    val flexible = version >= 3
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (correlationId, r) = readResponse(EndTxn, version, bytes)
     r.i32() // throttle_time_ms
     val t = (correlationId, r.i16())
     r.tags()
@@ -4436,48 +3830,32 @@ object KafkaWire {
   def encodeTxnOffsetCommitRequest(version: Int, correlationId: Int,
       clientId: String, transactionalId: String, groupId: String,
       producerId: Long, producerEpoch: Int,
-      topics: Seq[(String, Seq[(Int, Long, String)])]): Array[Byte] = {
-    require(version >= 0 && version <= TxnOffsetCommitMaxVersion,
-      s"unsupported TxnOffsetCommit version $version")
-    val flexible = version >= 3
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, TxnOffsetCommitApiKey, version, correlationId, clientId,
-      flexible)
-    val w = new WR(out, flexible)
-    w.str(transactionalId)
-    w.str(groupId)
-    w.i64(producerId)
-    w.i16(producerEpoch)
-    w.count(topics.length)
-    topics.foreach { case (name, parts) =>
-      w.str(name)
-      w.count(parts.length)
-      parts.foreach { case (p, off, meta) =>
-        w.i32(p)
-        w.i64(off)
-        if (version >= 2) w.i32(-1) // committed_leader_epoch
-        w.str(meta)
+      topics: Seq[(String, Seq[(Int, Long, String)])]): Array[Byte] =
+    writeRequest(TxnOffsetCommit, version, correlationId, clientId) { w =>
+      w.str(transactionalId)
+      w.str(groupId)
+      w.i64(producerId)
+      w.i16(producerEpoch)
+      w.count(topics.length)
+      topics.foreach { case (name, parts) =>
+        w.str(name)
+        w.count(parts.length)
+        parts.foreach { case (p, off, meta) =>
+          w.i32(p)
+          w.i64(off)
+          if (version >= 2) w.i32(-1) // committed_leader_epoch
+          w.str(meta)
+          w.tags()
+        }
         w.tags()
       }
       w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   def decodeTxnOffsetCommitRequest(
       bytes: Array[Byte]): TxnOffsetCommitRequest = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == TxnOffsetCommitApiKey,
-      "not a TxnOffsetCommit request")
-    val version = buf.getShort.toInt
-    require(version >= 0 && version <= TxnOffsetCommitMaxVersion,
-      s"unsupported TxnOffsetCommit version $version")
-    val flexible = version >= 3
-    val correlationId = buf.getInt
-    val clientId = readNullableString(buf)
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (RequestHeader(version, correlationId, clientId), r) =
+      readRequest(bytes, TxnOffsetCommit)
     val txnId = r.str()
     val groupId = r.str()
     val pid = r.i64()
@@ -4502,22 +3880,18 @@ object KafkaWire {
 
   /** results = (topic, (partition, errorCode)*)*. */
   def encodeTxnOffsetCommitResponse(version: Int, correlationId: Int,
-      results: Seq[(String, Seq[(Int, Int)])]): Array[Byte] = {
-    val flexible = version >= 3
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible)
-    val w = new WR(out, flexible)
-    w.i32(0) // throttle_time_ms
-    w.count(results.length)
-    results.foreach { case (name, parts) =>
-      w.str(name)
-      w.count(parts.length)
-      parts.foreach { case (p, err) => w.i32(p); w.i16(err); w.tags() }
+      results: Seq[(String, Seq[(Int, Int)])]): Array[Byte] =
+    writeResponse(TxnOffsetCommit, version, correlationId) { w =>
+      w.i32(0) // throttle_time_ms
+      w.count(results.length)
+      results.foreach { case (name, parts) =>
+        w.str(name)
+        w.count(parts.length)
+        parts.foreach { case (p, err) => w.i32(p); w.i16(err); w.tags() }
+        w.tags()
+      }
       w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   def decodeTxnOffsetCommitResponse(version: Int, bytes: Array[Byte])
       : (Int, Seq[(String, Seq[(Int, Int)])]) =
@@ -4534,41 +3908,24 @@ object KafkaWire {
   // coordinator for named transactional ids; ListTransactions
   // enumerates the coordinator with optional state/pid filters. ---
 
-  val DescribeProducersApiKey = 61
-  val DescribeProducersMaxVersion = 0
-  val DescribeTransactionsApiKey = 65
-  val DescribeTransactionsMaxVersion = 0
-  val ListTransactionsApiKey = 66
-  val ListTransactionsMaxVersion = 0
-
   def encodeDescribeProducersRequest(correlationId: Int, clientId: String,
-      topics: Seq[(String, Seq[Int])]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, DescribeProducersApiKey, 0, correlationId, clientId,
-      flexible = true)
-    val w = new WR(out, flexible = true)
-    w.count(topics.length)
-    topics.foreach { case (name, parts) =>
-      w.str(name)
-      w.count(parts.length)
-      parts.foreach(w.i32)
+      topics: Seq[(String, Seq[Int])]): Array[Byte] =
+    writeRequest(DescribeProducers, 0, correlationId, clientId) { w =>
+      w.count(topics.length)
+      topics.foreach { case (name, parts) =>
+        w.str(name)
+        w.count(parts.length)
+        parts.foreach(w.i32)
+        w.tags()
+      }
       w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   /** (correlationId, (topic, partitions)*). */
   def decodeDescribeProducersRequest(bytes: Array[Byte])
       : (Int, Seq[(String, Seq[Int])]) = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == DescribeProducersApiKey,
-      "not a DescribeProducers request")
-    require(buf.getShort.toInt == 0, "unsupported DescribeProducers version")
-    val correlationId = buf.getInt
-    readNullableString(buf) // client id
-    readTags(buf)
-    val r = new RD(buf, flexible = true)
+    val (RequestHeader(_, correlationId, _), r) =
+      readRequest(bytes, DescribeProducers)
     val topics = (0 until r.count()).map { _ =>
       val name = r.str()
       val parts = (0 until r.count()).map(_ => r.i32())
@@ -4589,38 +3946,32 @@ object KafkaWire {
   /** topics = (name, (partition, errorCode, producers)*)*. */
   def encodeDescribeProducersResponse(correlationId: Int,
       topics: Seq[(String, Seq[(Int, Int, Seq[ActiveProducer])])])
-      : Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible = true)
-    val w = new WR(out, flexible = true)
-    w.i32(0) // throttle_time_ms
-    w.count(topics.length)
-    topics.foreach { case (name, parts) =>
-      w.str(name)
-      w.count(parts.length)
-      parts.foreach { case (p, err, producers) =>
-        w.i32(p); w.i16(err); w.str(null) // error_message
-        w.count(producers.length)
-        producers.foreach { a =>
-          w.i64(a.producerId); w.i32(a.epoch); w.i32(a.lastSequence)
-          w.i64(a.lastTimestamp); w.i32(a.coordinatorEpoch)
-          w.i64(a.currentTxnStartOffset); w.tags()
+      : Array[Byte] =
+    writeResponse(DescribeProducers, 0, correlationId) { w =>
+      w.i32(0) // throttle_time_ms
+      w.count(topics.length)
+      topics.foreach { case (name, parts) =>
+        w.str(name)
+        w.count(parts.length)
+        parts.foreach { case (p, err, producers) =>
+          w.i32(p); w.i16(err); w.str(null) // error_message
+          w.count(producers.length)
+          producers.foreach { a =>
+            w.i64(a.producerId); w.i32(a.epoch); w.i32(a.lastSequence)
+            w.i64(a.lastTimestamp); w.i32(a.coordinatorEpoch)
+            w.i64(a.currentTxnStartOffset); w.tags()
+          }
+          w.tags()
         }
         w.tags()
       }
       w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   /** (correlationId, (topic, (partition, errorCode, producers)*)*). */
   def decodeDescribeProducersResponse(bytes: Array[Byte])
       : (Int, Seq[(String, Seq[(Int, Int, Seq[ActiveProducer])])]) = {
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    readTags(buf)
-    val r = new RD(buf, flexible = true)
+    val (correlationId, r) = readResponse(DescribeProducers, 0, bytes)
     r.i32() // throttle
     val topics = (0 until r.count()).map { _ =>
       val name = r.str()
@@ -4642,29 +3993,18 @@ object KafkaWire {
   }
 
   def encodeDescribeTransactionsRequest(correlationId: Int, clientId: String,
-      transactionalIds: Seq[String]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, DescribeTransactionsApiKey, 0, correlationId, clientId,
-      flexible = true)
-    val w = new WR(out, flexible = true)
-    w.count(transactionalIds.length)
-    transactionalIds.foreach(w.str)
-    w.tags()
-    frame(out.toByteArray)
-  }
+      transactionalIds: Seq[String]): Array[Byte] =
+    writeRequest(DescribeTransactions, 0, correlationId, clientId) { w =>
+      w.count(transactionalIds.length)
+      transactionalIds.foreach(w.str)
+      w.tags()
+    }
 
   /** (correlationId, transactionalIds). */
   def decodeDescribeTransactionsRequest(bytes: Array[Byte])
       : (Int, Seq[String]) = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == DescribeTransactionsApiKey,
-      "not a DescribeTransactions request")
-    require(buf.getShort.toInt == 0,
-      "unsupported DescribeTransactions version")
-    val correlationId = buf.getInt
-    readNullableString(buf) // client id
-    readTags(buf)
-    val r = new RD(buf, flexible = true)
+    val (RequestHeader(_, correlationId, _), r) =
+      readRequest(bytes, DescribeTransactions)
     val ids = (0 until r.count()).map(_ => r.str())
     r.tags()
     (correlationId, ids.toSeq)
@@ -4678,36 +4018,30 @@ object KafkaWire {
     producerEpoch: Int, topics: Seq[(String, Seq[Int])])
 
   def encodeDescribeTransactionsResponse(correlationId: Int,
-      states: Seq[DescribedTxn]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible = true)
-    val w = new WR(out, flexible = true)
-    w.i32(0) // throttle_time_ms
-    w.count(states.length)
-    states.foreach { s =>
-      w.i16(s.errorCode); w.str(s.transactionalId); w.str(s.state)
-      w.i32(s.timeoutMs); w.i64(s.startTimeMs); w.i64(s.producerId)
-      w.i16(s.producerEpoch)
-      w.count(s.topics.length)
-      s.topics.foreach { case (name, parts) =>
-        w.str(name)
-        w.count(parts.length)
-        parts.foreach(w.i32)
+      states: Seq[DescribedTxn]): Array[Byte] =
+    writeResponse(DescribeTransactions, 0, correlationId) { w =>
+      w.i32(0) // throttle_time_ms
+      w.count(states.length)
+      states.foreach { s =>
+        w.i16(s.errorCode); w.str(s.transactionalId); w.str(s.state)
+        w.i32(s.timeoutMs); w.i64(s.startTimeMs); w.i64(s.producerId)
+        w.i16(s.producerEpoch)
+        w.count(s.topics.length)
+        s.topics.foreach { case (name, parts) =>
+          w.str(name)
+          w.count(parts.length)
+          parts.foreach(w.i32)
+          w.tags()
+        }
         w.tags()
       }
       w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   /** (correlationId, states). */
   def decodeDescribeTransactionsResponse(bytes: Array[Byte])
       : (Int, Seq[DescribedTxn]) = {
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    readTags(buf)
-    val r = new RD(buf, flexible = true)
+    val (correlationId, r) = readResponse(DescribeTransactions, 0, bytes)
     r.i32() // throttle
     val states = (0 until r.count()).map { _ =>
       val err = r.i16(); val id = r.str(); val state = r.str()
@@ -4728,30 +4062,20 @@ object KafkaWire {
 
   def encodeListTransactionsRequest(correlationId: Int, clientId: String,
       stateFilters: Seq[String] = Seq.empty,
-      producerIdFilters: Seq[Long] = Seq.empty): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, ListTransactionsApiKey, 0, correlationId, clientId,
-      flexible = true)
-    val w = new WR(out, flexible = true)
-    w.count(stateFilters.length)
-    stateFilters.foreach(w.str)
-    w.count(producerIdFilters.length)
-    producerIdFilters.foreach(w.i64)
-    w.tags()
-    frame(out.toByteArray)
-  }
+      producerIdFilters: Seq[Long] = Seq.empty): Array[Byte] =
+    writeRequest(ListTransactions, 0, correlationId, clientId) { w =>
+      w.count(stateFilters.length)
+      stateFilters.foreach(w.str)
+      w.count(producerIdFilters.length)
+      producerIdFilters.foreach(w.i64)
+      w.tags()
+    }
 
   /** (correlationId, stateFilters, producerIdFilters). */
   def decodeListTransactionsRequest(bytes: Array[Byte])
       : (Int, Seq[String], Seq[Long]) = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == ListTransactionsApiKey,
-      "not a ListTransactions request")
-    require(buf.getShort.toInt == 0, "unsupported ListTransactions version")
-    val correlationId = buf.getInt
-    readNullableString(buf) // client id
-    readTags(buf)
-    val r = new RD(buf, flexible = true)
+    val (RequestHeader(_, correlationId, _), r) =
+      readRequest(bytes, ListTransactions)
     val stateFilters = (0 until r.count()).map(_ => r.str())
     val pidFilters = (0 until r.count()).map(_ => r.i64())
     r.tags()
@@ -4761,29 +4085,23 @@ object KafkaWire {
   /** states = (transactionalId, producerId, state)*. */
   def encodeListTransactionsResponse(correlationId: Int,
       unknownStateFilters: Seq[String],
-      states: Seq[(String, Long, String)]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible = true)
-    val w = new WR(out, flexible = true)
-    w.i32(0) // throttle_time_ms
-    w.i16(0) // error_code
-    w.count(unknownStateFilters.length)
-    unknownStateFilters.foreach(w.str)
-    w.count(states.length)
-    states.foreach { case (id, pid, state) =>
-      w.str(id); w.i64(pid); w.str(state); w.tags()
+      states: Seq[(String, Long, String)]): Array[Byte] =
+    writeResponse(ListTransactions, 0, correlationId) { w =>
+      w.i32(0) // throttle_time_ms
+      w.i16(0) // error_code
+      w.count(unknownStateFilters.length)
+      unknownStateFilters.foreach(w.str)
+      w.count(states.length)
+      states.foreach { case (id, pid, state) =>
+        w.str(id); w.i64(pid); w.str(state); w.tags()
+      }
+      w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   /** (correlationId, unknownStateFilters, states). */
   def decodeListTransactionsResponse(bytes: Array[Byte])
       : (Int, Seq[String], Seq[(String, Long, String)]) = {
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    readTags(buf)
-    val r = new RD(buf, flexible = true)
+    val (correlationId, r) = readResponse(ListTransactions, 0, bytes)
     r.i32() // throttle
     val err = r.i16()
     require(err == 0, s"ListTransactions error $err")
@@ -4805,79 +4123,48 @@ object KafkaWire {
   // (RFC 4616: [authzid] NUL authcid NUL passwd) against a static
   // credential map. ---
 
-  val SaslHandshakeApiKey = 17
-  val SaslHandshakeMaxVersion = 1
-  val SaslAuthenticateApiKey = 36
-  val SaslAuthenticateMaxVersion = 2
-
   def encodeSaslHandshakeRequest(version: Int, correlationId: Int,
-      clientId: String, mechanism: String): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, SaslHandshakeApiKey, version, correlationId, clientId,
-      flexible = false)
-    writeNullableString(out, mechanism)
-    frame(out.toByteArray)
-  }
+      clientId: String, mechanism: String): Array[Byte] =
+    writeRequest(SaslHandshake, version, correlationId, clientId) { w =>
+      writeNullableString(w.out, mechanism)
+    }
 
   /** (version, correlationId, mechanism). */
   def decodeSaslHandshakeRequest(bytes: Array[Byte]): (Int, Int, String) = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == SaslHandshakeApiKey,
-      "not a SaslHandshake request")
-    val version = buf.getShort.toInt
-    require(version >= 0 && version <= SaslHandshakeMaxVersion,
-      s"unsupported SaslHandshake version $version")
-    val correlationId = buf.getInt
-    readNullableString(buf) // client id
-    (version, correlationId, readNullableString(buf))
+    val (RequestHeader(version, correlationId, _), r) =
+      readRequest(bytes, SaslHandshake)
+    (version, correlationId, readNullableString(r.buf))
   }
 
   def encodeSaslHandshakeResponse(correlationId: Int, errorCode: Int,
-      mechanisms: Seq[String]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible = false)
-    writeInt16(out, errorCode)
-    writeInt32(out, mechanisms.length)
-    mechanisms.foreach(writeNullableString(out, _))
-    frame(out.toByteArray)
-  }
+      mechanisms: Seq[String]): Array[Byte] =
+    writeResponse(SaslHandshake, 0, correlationId) { w =>
+      writeInt16(w.out, errorCode)
+      writeInt32(w.out, mechanisms.length)
+      mechanisms.foreach(writeNullableString(w.out, _))
+    }
 
   /** (correlationId, errorCode, mechanisms). */
   def decodeSaslHandshakeResponse(bytes: Array[Byte])
       : (Int, Int, Seq[String]) = {
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    val err = buf.getShort.toInt
-    val mechanisms = (0 until buf.getInt).map(_ => readNullableString(buf))
+    val (correlationId, r) = readResponse(SaslHandshake, 0, bytes)
+    val err = r.buf.getShort.toInt
+    val mechanisms = (0 until r.buf.getInt).map(_ => readNullableString(r.buf))
     (correlationId, err, mechanisms.toSeq)
   }
 
   def encodeSaslAuthenticateRequest(version: Int, correlationId: Int,
-      clientId: String, authBytes: Array[Byte]): Array[Byte] = {
-    val flexible = version >= 2
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, SaslAuthenticateApiKey, version, correlationId,
-      clientId, flexible)
-    val w = new WR(out, flexible)
-    w.bytes(authBytes)
-    w.tags()
-    frame(out.toByteArray)
-  }
+      clientId: String, authBytes: Array[Byte]): Array[Byte] =
+    writeRequest(SaslAuthenticate, version, correlationId, clientId) { w =>
+      w.bytes(authBytes)
+      w.tags()
+    }
 
   /** (version, correlationId, authBytes). */
   def decodeSaslAuthenticateRequest(bytes: Array[Byte])
       : (Int, Int, Array[Byte]) = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == SaslAuthenticateApiKey,
-      "not a SaslAuthenticate request")
-    val version = buf.getShort.toInt
-    require(version >= 0 && version <= SaslAuthenticateMaxVersion,
-      s"unsupported SaslAuthenticate version $version")
-    val correlationId = buf.getInt
-    readNullableString(buf) // client id
-    val flexible = version >= 2
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (RequestHeader(version, correlationId, _), r) =
+      readRequest(bytes, SaslAuthenticate)
     val auth = r.bytes()
     r.tags()
     (version, correlationId, auth)
@@ -4885,18 +4172,14 @@ object KafkaWire {
 
   def encodeSaslAuthenticateResponse(version: Int, correlationId: Int,
       errorCode: Int, errorMessage: String, authBytes: Array[Byte],
-      sessionLifetimeMs: Long = 0L): Array[Byte] = {
-    val flexible = version >= 2
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible)
-    val w = new WR(out, flexible)
-    w.i16(errorCode)
-    w.str(errorMessage)
-    w.bytes(authBytes)
-    if (version >= 1) w.i64(sessionLifetimeMs)
-    w.tags()
-    frame(out.toByteArray)
-  }
+      sessionLifetimeMs: Long = 0L): Array[Byte] =
+    writeResponse(SaslAuthenticate, version, correlationId) { w =>
+      w.i16(errorCode)
+      w.str(errorMessage)
+      w.bytes(authBytes)
+      if (version >= 1) w.i64(sessionLifetimeMs)
+      w.tags()
+    }
 
   /** (correlationId, errorCode, errorMessage, sessionLifetimeMs). */
   /** (correlationId, errorCode, errorMessage, auth_bytes) — the auth
@@ -4904,11 +4187,7 @@ object KafkaWire {
     * server-final; empty for PLAIN). */
   def decodeSaslAuthenticateResponse(version: Int, bytes: Array[Byte])
       : (Int, Int, String, Array[Byte]) = {
-    val flexible = version >= 2
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (correlationId, r) = readResponse(SaslAuthenticate, version, bytes)
     val err = r.i16()
     val msg = r.str()
     val authBytes = r.bytes()
@@ -4923,36 +4202,20 @@ object KafkaWire {
   // upsertion carries (salt, salted_password): the server derives and
   // stores the StoredKey/ServerKey quartet, never the password. ---
 
-  val DescribeUserScramCredentialsApiKey = 50
-  val DescribeUserScramCredentialsMaxVersion = 0
-  val AlterUserScramCredentialsApiKey = 51
-  val AlterUserScramCredentialsMaxVersion = 0
-
   /** users == null means "all users" (the null array in the request). */
   def encodeDescribeUserScramCredentialsRequest(correlationId: Int,
-      clientId: String, users: Seq[String]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, DescribeUserScramCredentialsApiKey, 0, correlationId,
-      clientId, flexible = true)
-    val w = new WR(out, flexible = true)
-    w.count(if (users == null) -1 else users.length)
-    if (users != null) users.foreach { u => w.str(u); w.tags() }
-    w.tags()
-    frame(out.toByteArray)
-  }
+      clientId: String, users: Seq[String]): Array[Byte] =
+    writeRequest(DescribeUserScramCredentials, 0, correlationId, clientId) { w =>
+      w.count(if (users == null) -1 else users.length)
+      if (users != null) users.foreach { u => w.str(u); w.tags() }
+      w.tags()
+    }
 
   /** (correlationId, users-or-null). */
   def decodeDescribeUserScramCredentialsRequest(
       bytes: Array[Byte]): (Int, Seq[String]) = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == DescribeUserScramCredentialsApiKey,
-      "not a DescribeUserScramCredentials request")
-    require(buf.getShort.toInt == 0,
-      "only DescribeUserScramCredentials v0 supported")
-    val correlationId = buf.getInt
-    readNullableString(buf)
-    readTags(buf)
-    val r = new RD(buf, flexible = true)
+    val (RequestHeader(_, correlationId, _), r) =
+      readRequest(bytes, DescribeUserScramCredentials)
     val n = r.count()
     val users =
       if (n < 0) null
@@ -4965,30 +4228,24 @@ object KafkaWire {
     * (mechanism_code, iterations)*)*. */
   def encodeDescribeUserScramCredentialsResponse(correlationId: Int,
       errorCode: Int, errorMessage: String,
-      results: Seq[(String, Int, String, Seq[(Int, Int)])]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible = true)
-    val w = new WR(out, flexible = true)
-    w.i32(0) // throttle_time_ms
-    w.i16(errorCode)
-    w.str(errorMessage)
-    w.count(results.length)
-    results.foreach { case (user, err, msg, infos) =>
-      w.str(user); w.i16(err); w.str(msg)
-      w.count(infos.length)
-      infos.foreach { case (mech, iters) => w.i8(mech); w.i32(iters); w.tags() }
+      results: Seq[(String, Int, String, Seq[(Int, Int)])]): Array[Byte] =
+    writeResponse(DescribeUserScramCredentials, 0, correlationId) { w =>
+      w.i32(0) // throttle_time_ms
+      w.i16(errorCode)
+      w.str(errorMessage)
+      w.count(results.length)
+      results.foreach { case (user, err, msg, infos) =>
+        w.str(user); w.i16(err); w.str(msg)
+        w.count(infos.length)
+        infos.foreach { case (mech, iters) => w.i8(mech); w.i32(iters); w.tags() }
+        w.tags()
+      }
       w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   def decodeDescribeUserScramCredentialsResponse(bytes: Array[Byte])
       : (Int, Int, String, Seq[(String, Int, String, Seq[(Int, Int)])]) = {
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    readTags(buf)
-    val r = new RD(buf, flexible = true)
+    val (correlationId, r) = readResponse(DescribeUserScramCredentials, 0, bytes)
     r.i32() // throttle_time_ms
     val err = r.i16()
     val msg = r.str()
@@ -5009,33 +4266,22 @@ object KafkaWire {
   def encodeAlterUserScramCredentialsRequest(correlationId: Int,
       clientId: String, deletions: Seq[(String, Int)],
       upsertions: Seq[(String, Int, Int, Array[Byte], Array[Byte])])
-      : Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, AlterUserScramCredentialsApiKey, 0, correlationId,
-      clientId, flexible = true)
-    val w = new WR(out, flexible = true)
-    w.count(deletions.length)
-    deletions.foreach { case (u, m) => w.str(u); w.i8(m); w.tags() }
-    w.count(upsertions.length)
-    upsertions.foreach { case (u, m, iters, salt, sp) =>
-      w.str(u); w.i8(m); w.i32(iters); w.bytes(salt); w.bytes(sp); w.tags()
+      : Array[Byte] =
+    writeRequest(AlterUserScramCredentials, 0, correlationId, clientId) { w =>
+      w.count(deletions.length)
+      deletions.foreach { case (u, m) => w.str(u); w.i8(m); w.tags() }
+      w.count(upsertions.length)
+      upsertions.foreach { case (u, m, iters, salt, sp) =>
+        w.str(u); w.i8(m); w.i32(iters); w.bytes(salt); w.bytes(sp); w.tags()
+      }
+      w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   def decodeAlterUserScramCredentialsRequest(bytes: Array[Byte])
       : (Int, Seq[(String, Int)],
          Seq[(String, Int, Int, Array[Byte], Array[Byte])]) = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == AlterUserScramCredentialsApiKey,
-      "not an AlterUserScramCredentials request")
-    require(buf.getShort.toInt == 0,
-      "only AlterUserScramCredentials v0 supported")
-    val correlationId = buf.getInt
-    readNullableString(buf)
-    readTags(buf)
-    val r = new RD(buf, flexible = true)
+    val (RequestHeader(_, correlationId, _), r) =
+      readRequest(bytes, AlterUserScramCredentials)
     val deletions = (0 until r.count()).map { _ =>
       val t = (r.str(), r.i8()); r.tags(); t
     }.toSeq
@@ -5048,25 +4294,19 @@ object KafkaWire {
 
   /** results = (user, error_code, error_message)*. */
   def encodeAlterUserScramCredentialsResponse(correlationId: Int,
-      results: Seq[(String, Int, String)]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible = true)
-    val w = new WR(out, flexible = true)
-    w.i32(0) // throttle_time_ms
-    w.count(results.length)
-    results.foreach { case (u, err, msg) =>
-      w.str(u); w.i16(err); w.str(msg); w.tags()
+      results: Seq[(String, Int, String)]): Array[Byte] =
+    writeResponse(AlterUserScramCredentials, 0, correlationId) { w =>
+      w.i32(0) // throttle_time_ms
+      w.count(results.length)
+      results.foreach { case (u, err, msg) =>
+        w.str(u); w.i16(err); w.str(msg); w.tags()
+      }
+      w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   def decodeAlterUserScramCredentialsResponse(
       bytes: Array[Byte]): (Int, Seq[(String, Int, String)]) = {
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    readTags(buf)
-    val r = new RD(buf, flexible = true)
+    val (correlationId, r) = readResponse(AlterUserScramCredentials, 0, bytes)
     r.i32() // throttle_time_ms
     val results = (0 until r.count()).map { _ =>
       val t = (r.str(), r.i16(), r.str()); r.tags(); t
@@ -5099,41 +4339,31 @@ object KafkaWire {
   // ARRAY<[name STRING, partitions ARRAY<[partition INT32,
   // size INT64, offset_lag INT64, is_future BOOL]>]>]>. ---
 
-  val DescribeLogDirsApiKey = 35
-  val DescribeLogDirsMaxVersion = 0
-
   def encodeDescribeLogDirsRequest(correlationId: Int, clientId: String,
-      topics: Seq[(String, Seq[Int])]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, DescribeLogDirsApiKey, 0, correlationId, clientId,
-      flexible = false)
-    if (topics == null) writeInt32(out, -1)
-    else {
-      writeInt32(out, topics.length)
-      topics.foreach { case (name, parts) =>
-        writeNullableString(out, name)
-        writeInt32(out, parts.length)
-        parts.foreach(writeInt32(out, _))
+      topics: Seq[(String, Seq[Int])]): Array[Byte] =
+    writeRequest(DescribeLogDirs, 0, correlationId, clientId) { w =>
+      if (topics == null) writeInt32(w.out, -1)
+      else {
+        writeInt32(w.out, topics.length)
+        topics.foreach { case (name, parts) =>
+          writeNullableString(w.out, name)
+          writeInt32(w.out, parts.length)
+          parts.foreach(writeInt32(w.out, _))
+        }
       }
     }
-    frame(out.toByteArray)
-  }
 
   /** (correlationId, topics) — topics null = all. */
   def decodeDescribeLogDirsRequest(bytes: Array[Byte])
       : (Int, Seq[(String, Seq[Int])]) = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == DescribeLogDirsApiKey,
-      "not a DescribeLogDirs request")
-    require(buf.getShort.toInt == 0, "unsupported DescribeLogDirs version")
-    val correlationId = buf.getInt
-    readNullableString(buf) // client id
-    val n = buf.getInt
+    val (RequestHeader(_, correlationId, _), r) =
+      readRequest(bytes, DescribeLogDirs)
+    val n = r.buf.getInt
     val topics =
       if (n < 0) null
       else (0 until n).map { _ =>
-        val name = readNullableString(buf)
-        val parts = (0 until buf.getInt).map(_ => buf.getInt)
+        val name = readNullableString(r.buf)
+        val parts = (0 until r.buf.getInt).map(_ => r.buf.getInt)
         (name, parts.toSeq)
       }.toSeq
     (correlationId, topics)
@@ -5143,40 +4373,37 @@ object KafkaWire {
     * isFuture)*)*)*. */
   def encodeDescribeLogDirsResponse(correlationId: Int,
       dirs: Seq[(Int, String, Seq[(String, Seq[(Int, Long, Long, Boolean)])])])
-      : Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible = false)
-    writeInt32(out, 0) // throttle_time_ms
-    writeInt32(out, dirs.length)
-    dirs.foreach { case (err, logDir, topics) =>
-      writeInt16(out, err)
-      writeNullableString(out, logDir)
-      writeInt32(out, topics.length)
-      topics.foreach { case (name, parts) =>
-        writeNullableString(out, name)
-        writeInt32(out, parts.length)
-        parts.foreach { case (p, size, lag, future) =>
-          writeInt32(out, p); writeInt64(out, size); writeInt64(out, lag)
-          out.write(if (future) 1 else 0)
+      : Array[Byte] =
+    writeResponse(DescribeLogDirs, 0, correlationId) { w =>
+      writeInt32(w.out, 0) // throttle_time_ms
+      writeInt32(w.out, dirs.length)
+      dirs.foreach { case (err, logDir, topics) =>
+        writeInt16(w.out, err)
+        writeNullableString(w.out, logDir)
+        writeInt32(w.out, topics.length)
+        topics.foreach { case (name, parts) =>
+          writeNullableString(w.out, name)
+          writeInt32(w.out, parts.length)
+          parts.foreach { case (p, size, lag, future) =>
+            writeInt32(w.out, p); writeInt64(w.out, size); writeInt64(w.out, lag)
+            w.out.write(if (future) 1 else 0)
+          }
         }
       }
     }
-    frame(out.toByteArray)
-  }
 
   /** (correlationId, dirs). */
   def decodeDescribeLogDirsResponse(bytes: Array[Byte])
       : (Int, Seq[(Int, String, Seq[(String, Seq[(Int, Long, Long, Boolean)])])]) = {
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    buf.getInt // throttle
-    val dirs = (0 until buf.getInt).map { _ =>
-      val err = buf.getShort.toInt
-      val logDir = readNullableString(buf)
-      val topics = (0 until buf.getInt).map { _ =>
-        val name = readNullableString(buf)
-        val parts = (0 until buf.getInt).map { _ =>
-          (buf.getInt, buf.getLong, buf.getLong, buf.get() != 0)
+    val (correlationId, r) = readResponse(DescribeLogDirs, 0, bytes)
+    r.buf.getInt // throttle
+    val dirs = (0 until r.buf.getInt).map { _ =>
+      val err = r.buf.getShort.toInt
+      val logDir = readNullableString(r.buf)
+      val topics = (0 until r.buf.getInt).map { _ =>
+        val name = readNullableString(r.buf)
+        val parts = (0 until r.buf.getInt).map { _ =>
+          (r.buf.getInt, r.buf.getLong, r.buf.getLong, r.buf.get() != 0)
         }
         (name, parts.toSeq)
       }
@@ -5193,12 +4420,6 @@ object KafkaWire {
   // turns the surface into the real, durably-stored ACL admin plane
   // (Acls.scala) and switches on request authorization broker-wide. ---
 
-  val DescribeAclsApiKey = 29
-  val DescribeAclsMaxVersion = 3
-  val CreateAclsApiKey = 30
-  val CreateAclsMaxVersion = 3
-  val DeleteAclsApiKey = 31
-  val DeleteAclsMaxVersion = 3
   val NoAuthorizerMessage = "No Authorizer is configured on the broker"
 
   private def writeAclString(out: ByteArrayOutputStream, s: String,
@@ -5219,45 +4440,33 @@ object KafkaWire {
     * filter, (v1+) pattern_type INT8, principal filter, host filter,
     * operation INT8, permission INT8. Null strings mean "any". */
   def encodeDescribeAclsRequest(version: Int, correlationId: Int,
-      clientId: String, filter: Acls.AclFilter): Array[Byte] = {
-    val flexible = version >= 2
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, DescribeAclsApiKey, version, correlationId, clientId,
-      flexible)
-    out.write(filter.resourceType)
-    writeAclString(out, filter.resourceName, flexible)
-    if (version >= 1) out.write(filter.patternType)
-    writeAclString(out, filter.principal, flexible)
-    writeAclString(out, filter.host, flexible)
-    out.write(filter.operation)
-    out.write(filter.permissionType)
-    aclTags(out, flexible)
-    frame(out.toByteArray)
-  }
+      clientId: String, filter: Acls.AclFilter): Array[Byte] =
+    writeRequest(DescribeAcls, version, correlationId, clientId) { w =>
+      w.out.write(filter.resourceType)
+      writeAclString(w.out, filter.resourceName, w.flexible)
+      if (version >= 1) w.out.write(filter.patternType)
+      writeAclString(w.out, filter.principal, w.flexible)
+      writeAclString(w.out, filter.host, w.flexible)
+      w.out.write(filter.operation)
+      w.out.write(filter.permissionType)
+      aclTags(w.out, w.flexible)
+    }
 
   /** (version, correlationId, filter). A v0 filter carries no pattern
     * type and decodes as LITERAL - KIP-290's compatibility mapping,
     * so a pre-pattern client never touches prefixed ACLs. */
   def decodeDescribeAclsRequest(bytes: Array[Byte])
       : (Int, Int, Acls.AclFilter) = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == DescribeAclsApiKey,
-      "not a DescribeAcls request")
-    val version = buf.getShort.toInt
-    require(version >= 0 && version <= DescribeAclsMaxVersion,
-      s"unsupported DescribeAcls version $version")
-    val flexible = version >= 2
-    val correlationId = buf.getInt
-    readNullableString(buf) // client id
-    if (flexible) readTags(buf)
-    val resourceType = buf.get().toInt
-    val resourceName = readAclString(buf, flexible)
-    val patternType = if (version >= 1) buf.get().toInt else Acls.PatLiteral
-    val principal = readAclString(buf, flexible)
-    val host = readAclString(buf, flexible)
-    val operation = buf.get().toInt
-    val permission = buf.get().toInt
-    if (flexible) readTags(buf)
+    val (RequestHeader(version, correlationId, _), r) =
+      readRequest(bytes, DescribeAcls)
+    val resourceType = r.buf.get().toInt
+    val resourceName = readAclString(r.buf, r.flexible)
+    val patternType = if (version >= 1) r.buf.get().toInt else Acls.PatLiteral
+    val principal = readAclString(r.buf, r.flexible)
+    val host = readAclString(r.buf, r.flexible)
+    val operation = r.buf.get().toInt
+    val permission = r.buf.get().toInt
+    if (r.flexible) readTags(r.buf)
     (version, correlationId, Acls.AclFilter(resourceType, resourceName,
       patternType, principal, host, operation, permission))
   }
@@ -5268,65 +4477,59 @@ object KafkaWire {
     * permission) ACL entries - the protocol's nesting. */
   def encodeDescribeAclsResponse(version: Int, correlationId: Int,
       errorCode: Int, errorMessage: String,
-      acls: Seq[Acls.AclBinding]): Array[Byte] = {
-    val flexible = version >= 2
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible)
-    writeInt32(out, 0) // throttle_time_ms
-    writeInt16(out, errorCode)
-    writeAclString(out, errorMessage, flexible)
-    // v0 cannot express a non-literal pattern: prefixed bindings are
-    // withheld from v0 describes (KIP-290's downgrade rule)
-    val served =
-      if (version >= 1) acls else acls.filter(_.patternType == Acls.PatLiteral)
-    val grouped = served
-      .groupBy(b => (b.resourceType, b.resourceName, b.patternType))
-      .toSeq.sortBy { case ((t, n, p), _) => (t, n, p) }
-    writeAclArrayLen(out, grouped.length, flexible)
-    grouped.foreach { case ((resType, resName, patType), entries) =>
-      out.write(resType)
-      writeAclString(out, resName, flexible)
-      if (version >= 1) out.write(patType)
-      writeAclArrayLen(out, entries.length, flexible)
-      entries.foreach { b =>
-        writeAclString(out, b.principal, flexible)
-        writeAclString(out, b.host, flexible)
-        out.write(b.operation)
-        out.write(b.permissionType)
-        aclTags(out, flexible)
+      acls: Seq[Acls.AclBinding]): Array[Byte] =
+    writeResponse(DescribeAcls, version, correlationId) { w =>
+      writeInt32(w.out, 0) // throttle_time_ms
+      writeInt16(w.out, errorCode)
+      writeAclString(w.out, errorMessage, w.flexible)
+      // v0 cannot express a non-literal pattern: prefixed bindings are
+      // withheld from v0 describes (KIP-290's downgrade rule)
+      val served =
+        if (version >= 1) acls else acls.filter(_.patternType == Acls.PatLiteral)
+      val grouped = served
+        .groupBy(b => (b.resourceType, b.resourceName, b.patternType))
+        .toSeq.sortBy { case ((t, n, p), _) => (t, n, p) }
+      writeAclArrayLen(w.out, grouped.length, w.flexible)
+      grouped.foreach { case ((resType, resName, patType), entries) =>
+        w.out.write(resType)
+        writeAclString(w.out, resName, w.flexible)
+        if (version >= 1) w.out.write(patType)
+        writeAclArrayLen(w.out, entries.length, w.flexible)
+        entries.foreach { b =>
+          writeAclString(w.out, b.principal, w.flexible)
+          writeAclString(w.out, b.host, w.flexible)
+          w.out.write(b.operation)
+          w.out.write(b.permissionType)
+          aclTags(w.out, w.flexible)
+        }
+        aclTags(w.out, w.flexible)
       }
-      aclTags(out, flexible)
+      aclTags(w.out, w.flexible)
     }
-    aclTags(out, flexible)
-    frame(out.toByteArray)
-  }
 
   /** (correlationId, errorCode, errorMessage, flattened bindings). */
   def decodeDescribeAclsResponse(bytes: Array[Byte], version: Int)
       : (Int, Int, String, Seq[Acls.AclBinding]) = {
-    val flexible = version >= 2
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    if (flexible) readTags(buf)
-    buf.getInt // throttle
-    val err = buf.getShort.toInt
-    val msg = readAclString(buf, flexible)
-    val resources = (0 until readAclArrayLen(buf, flexible)).flatMap { _ =>
-      val resType = buf.get().toInt
-      val resName = readAclString(buf, flexible)
-      val patType = if (version >= 1) buf.get().toInt else Acls.PatLiteral
-      val entries = (0 until readAclArrayLen(buf, flexible)).map { _ =>
-        val principal = readAclString(buf, flexible)
-        val host = readAclString(buf, flexible)
-        val op = buf.get().toInt
-        val perm = buf.get().toInt
-        if (flexible) readTags(buf)
+    val (correlationId, r) = readResponse(DescribeAcls, version, bytes)
+    r.buf.getInt // throttle
+    val err = r.buf.getShort.toInt
+    val msg = readAclString(r.buf, r.flexible)
+    val resources = (0 until readAclArrayLen(r.buf, r.flexible)).flatMap { _ =>
+      val resType = r.buf.get().toInt
+      val resName = readAclString(r.buf, r.flexible)
+      val patType = if (version >= 1) r.buf.get().toInt else Acls.PatLiteral
+      val entries = (0 until readAclArrayLen(r.buf, r.flexible)).map { _ =>
+        val principal = readAclString(r.buf, r.flexible)
+        val host = readAclString(r.buf, r.flexible)
+        val op = r.buf.get().toInt
+        val perm = r.buf.get().toInt
+        if (r.flexible) readTags(r.buf)
         Acls.AclBinding(resType, resName, patType, principal, host, op, perm)
       }
-      if (flexible) readTags(buf)
+      if (r.flexible) readTags(r.buf)
       entries
     }
-    if (flexible) readTags(buf)
+    if (r.flexible) readTags(r.buf)
     (correlationId, err, msg, resources.toSeq)
   }
 
@@ -5335,137 +4538,109 @@ object KafkaWire {
     * INT8, principal STRING, host STRING, operation INT8, permission
     * INT8). */
   def encodeCreateAclsRequest(version: Int, correlationId: Int,
-      clientId: String, creations: Seq[Acls.AclBinding]): Array[Byte] = {
-    val flexible = version >= 2
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, CreateAclsApiKey, version, correlationId, clientId,
-      flexible)
-    writeAclArrayLen(out, creations.length, flexible)
-    creations.foreach { b =>
-      out.write(b.resourceType)
-      writeAclString(out, b.resourceName, flexible)
-      if (version >= 1) out.write(b.patternType)
-      writeAclString(out, b.principal, flexible)
-      writeAclString(out, b.host, flexible)
-      out.write(b.operation)
-      out.write(b.permissionType)
-      aclTags(out, flexible)
+      clientId: String, creations: Seq[Acls.AclBinding]): Array[Byte] =
+    writeRequest(CreateAcls, version, correlationId, clientId) { w =>
+      writeAclArrayLen(w.out, creations.length, w.flexible)
+      creations.foreach { b =>
+        w.out.write(b.resourceType)
+        writeAclString(w.out, b.resourceName, w.flexible)
+        if (version >= 1) w.out.write(b.patternType)
+        writeAclString(w.out, b.principal, w.flexible)
+        writeAclString(w.out, b.host, w.flexible)
+        w.out.write(b.operation)
+        w.out.write(b.permissionType)
+        aclTags(w.out, w.flexible)
+      }
+      aclTags(w.out, w.flexible)
     }
-    aclTags(out, flexible)
-    frame(out.toByteArray)
-  }
 
   /** (version, correlationId, creations). v0 creations decode as
     * LITERAL (the only pattern the pre-KIP-290 schema could say). */
   def decodeCreateAclsRequest(bytes: Array[Byte])
       : (Int, Int, Seq[Acls.AclBinding]) = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == CreateAclsApiKey, "not a CreateAcls request")
-    val version = buf.getShort.toInt
-    require(version >= 0 && version <= CreateAclsMaxVersion,
-      s"unsupported CreateAcls version $version")
-    val flexible = version >= 2
-    val correlationId = buf.getInt
-    readNullableString(buf) // client id
-    if (flexible) readTags(buf)
-    val creations = (0 until readAclArrayLen(buf, flexible)).map { _ =>
-      val resType = buf.get().toInt
-      val resName = readAclString(buf, flexible)
-      val patType = if (version >= 1) buf.get().toInt else Acls.PatLiteral
-      val principal = readAclString(buf, flexible)
-      val host = readAclString(buf, flexible)
-      val op = buf.get().toInt
-      val perm = buf.get().toInt
-      if (flexible) readTags(buf)
+    val (RequestHeader(version, correlationId, _), r) =
+      readRequest(bytes, CreateAcls)
+    val creations = (0 until readAclArrayLen(r.buf, r.flexible)).map { _ =>
+      val resType = r.buf.get().toInt
+      val resName = readAclString(r.buf, r.flexible)
+      val patType = if (version >= 1) r.buf.get().toInt else Acls.PatLiteral
+      val principal = readAclString(r.buf, r.flexible)
+      val host = readAclString(r.buf, r.flexible)
+      val op = r.buf.get().toInt
+      val perm = r.buf.get().toInt
+      if (r.flexible) readTags(r.buf)
       Acls.AclBinding(resType, resName, patType, principal, host, op, perm)
     }
-    if (flexible) readTags(buf)
+    if (r.flexible) readTags(r.buf)
     (version, correlationId, creations.toSeq)
   }
 
   /** CreateAcls response: throttle, results (error, error_message)
     * per creation, in request order. */
   def encodeCreateAclsResponse(version: Int, correlationId: Int,
-      results: Seq[(Int, String)]): Array[Byte] = {
-    val flexible = version >= 2
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible)
-    writeInt32(out, 0)
-    writeAclArrayLen(out, results.length, flexible)
-    results.foreach { case (err, msg) =>
-      writeInt16(out, err)
-      writeAclString(out, msg, flexible)
-      aclTags(out, flexible)
+      results: Seq[(Int, String)]): Array[Byte] =
+    writeResponse(CreateAcls, version, correlationId) { w =>
+      writeInt32(w.out, 0)
+      writeAclArrayLen(w.out, results.length, w.flexible)
+      results.foreach { case (err, msg) =>
+        writeInt16(w.out, err)
+        writeAclString(w.out, msg, w.flexible)
+        aclTags(w.out, w.flexible)
+      }
+      aclTags(w.out, w.flexible)
     }
-    aclTags(out, flexible)
-    frame(out.toByteArray)
-  }
 
   /** (correlationId, (error, message)*). */
   def decodeCreateAclsResponse(bytes: Array[Byte], version: Int)
       : (Int, Seq[(Int, String)]) = {
-    val flexible = version >= 2
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    if (flexible) readTags(buf)
-    buf.getInt // throttle
-    val results = (0 until readAclArrayLen(buf, flexible)).map { _ =>
-      val r = (buf.getShort.toInt, readAclString(buf, flexible))
-      if (flexible) readTags(buf)
-      r
+    val (correlationId, r) = readResponse(CreateAcls, version, bytes)
+    r.buf.getInt // throttle
+    val results = (0 until readAclArrayLen(r.buf, r.flexible)).map { _ =>
+      val e = (r.buf.getShort.toInt, readAclString(r.buf, r.flexible))
+      if (r.flexible) readTags(r.buf)
+      e
     }
-    if (flexible) readTags(buf)
+    if (r.flexible) readTags(r.buf)
     (correlationId, results.toSeq)
   }
 
   /** DeleteAcls request v0-v3: filters with the DescribeAcls filter
     * shape. */
   def encodeDeleteAclsRequest(version: Int, correlationId: Int,
-      clientId: String, filters: Seq[Acls.AclFilter]): Array[Byte] = {
-    val flexible = version >= 2
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, DeleteAclsApiKey, version, correlationId, clientId,
-      flexible)
-    writeAclArrayLen(out, filters.length, flexible)
-    filters.foreach { f =>
-      out.write(f.resourceType)
-      writeAclString(out, f.resourceName, flexible)
-      if (version >= 1) out.write(f.patternType)
-      writeAclString(out, f.principal, flexible)
-      writeAclString(out, f.host, flexible)
-      out.write(f.operation)
-      out.write(f.permissionType)
-      aclTags(out, flexible)
+      clientId: String, filters: Seq[Acls.AclFilter]): Array[Byte] =
+    writeRequest(DeleteAcls, version, correlationId, clientId) { w =>
+      writeAclArrayLen(w.out, filters.length, w.flexible)
+      filters.foreach { f =>
+        w.out.write(f.resourceType)
+        writeAclString(w.out, f.resourceName, w.flexible)
+        if (version >= 1) w.out.write(f.patternType)
+        writeAclString(w.out, f.principal, w.flexible)
+        writeAclString(w.out, f.host, w.flexible)
+        w.out.write(f.operation)
+        w.out.write(f.permissionType)
+        aclTags(w.out, w.flexible)
+      }
+      aclTags(w.out, w.flexible)
     }
-    aclTags(out, flexible)
-    frame(out.toByteArray)
-  }
 
   /** (version, correlationId, filters). v0 filters decode as LITERAL
     * (KIP-290's mapping - see decodeDescribeAclsRequest). */
   def decodeDeleteAclsRequest(bytes: Array[Byte])
       : (Int, Int, Seq[Acls.AclFilter]) = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == DeleteAclsApiKey, "not a DeleteAcls request")
-    val version = buf.getShort.toInt
-    require(version >= 0 && version <= DeleteAclsMaxVersion,
-      s"unsupported DeleteAcls version $version")
-    val flexible = version >= 2
-    val correlationId = buf.getInt
-    readNullableString(buf) // client id
-    if (flexible) readTags(buf)
-    val filters = (0 until readAclArrayLen(buf, flexible)).map { _ =>
-      val resType = buf.get().toInt
-      val resName = readAclString(buf, flexible)
-      val patType = if (version >= 1) buf.get().toInt else Acls.PatLiteral
-      val principal = readAclString(buf, flexible)
-      val host = readAclString(buf, flexible)
-      val op = buf.get().toInt
-      val perm = buf.get().toInt
-      if (flexible) readTags(buf)
+    val (RequestHeader(version, correlationId, _), r) =
+      readRequest(bytes, DeleteAcls)
+    val filters = (0 until readAclArrayLen(r.buf, r.flexible)).map { _ =>
+      val resType = r.buf.get().toInt
+      val resName = readAclString(r.buf, r.flexible)
+      val patType = if (version >= 1) r.buf.get().toInt else Acls.PatLiteral
+      val principal = readAclString(r.buf, r.flexible)
+      val host = readAclString(r.buf, r.flexible)
+      val op = r.buf.get().toInt
+      val perm = r.buf.get().toInt
+      if (r.flexible) readTags(r.buf)
       Acls.AclFilter(resType, resName, patType, principal, host, op, perm)
     }
-    if (flexible) readTags(buf)
+    if (r.flexible) readTags(r.buf)
     (version, correlationId, filters.toSeq)
   }
 
@@ -5474,62 +4649,56 @@ object KafkaWire {
     * own (error, error_message) slot - 0 here, deletion is atomic
     * under the authorizer's monitor). */
   def encodeDeleteAclsResponse(version: Int, correlationId: Int,
-      results: Seq[(Int, String, Seq[Acls.AclBinding])]): Array[Byte] = {
-    val flexible = version >= 2
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible)
-    writeInt32(out, 0)
-    writeAclArrayLen(out, results.length, flexible)
-    results.foreach { case (err, msg, matched) =>
-      writeInt16(out, err)
-      writeAclString(out, msg, flexible)
-      writeAclArrayLen(out, matched.length, flexible)
-      matched.foreach { b =>
-        writeInt16(out, 0) // per-binding error
-        writeAclString(out, null, flexible)
-        out.write(b.resourceType)
-        writeAclString(out, b.resourceName, flexible)
-        if (version >= 1) out.write(b.patternType)
-        writeAclString(out, b.principal, flexible)
-        writeAclString(out, b.host, flexible)
-        out.write(b.operation)
-        out.write(b.permissionType)
-        aclTags(out, flexible)
+      results: Seq[(Int, String, Seq[Acls.AclBinding])]): Array[Byte] =
+    writeResponse(DeleteAcls, version, correlationId) { w =>
+      writeInt32(w.out, 0)
+      writeAclArrayLen(w.out, results.length, w.flexible)
+      results.foreach { case (err, msg, matched) =>
+        writeInt16(w.out, err)
+        writeAclString(w.out, msg, w.flexible)
+        writeAclArrayLen(w.out, matched.length, w.flexible)
+        matched.foreach { b =>
+          writeInt16(w.out, 0) // per-binding error
+          writeAclString(w.out, null, w.flexible)
+          w.out.write(b.resourceType)
+          writeAclString(w.out, b.resourceName, w.flexible)
+          if (version >= 1) w.out.write(b.patternType)
+          writeAclString(w.out, b.principal, w.flexible)
+          writeAclString(w.out, b.host, w.flexible)
+          w.out.write(b.operation)
+          w.out.write(b.permissionType)
+          aclTags(w.out, w.flexible)
+        }
+        aclTags(w.out, w.flexible)
       }
-      aclTags(out, flexible)
+      aclTags(w.out, w.flexible)
     }
-    aclTags(out, flexible)
-    frame(out.toByteArray)
-  }
 
   /** (correlationId, (error, message, deleted bindings)*). */
   def decodeDeleteAclsResponse(bytes: Array[Byte], version: Int)
       : (Int, Seq[(Int, String, Seq[Acls.AclBinding])]) = {
-    val flexible = version >= 2
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    if (flexible) readTags(buf)
-    buf.getInt // throttle
-    val results = (0 until readAclArrayLen(buf, flexible)).map { _ =>
-      val err = buf.getShort.toInt
-      val msg = readAclString(buf, flexible)
-      val matched = (0 until readAclArrayLen(buf, flexible)).map { _ =>
-        buf.getShort // per-binding error
-        readAclString(buf, flexible) // per-binding message
-        val resType = buf.get().toInt
-        val resName = readAclString(buf, flexible)
-        val patType = if (version >= 1) buf.get().toInt else Acls.PatLiteral
-        val principal = readAclString(buf, flexible)
-        val host = readAclString(buf, flexible)
-        val op = buf.get().toInt
-        val perm = buf.get().toInt
-        if (flexible) readTags(buf)
+    val (correlationId, r) = readResponse(DeleteAcls, version, bytes)
+    r.buf.getInt // throttle
+    val results = (0 until readAclArrayLen(r.buf, r.flexible)).map { _ =>
+      val err = r.buf.getShort.toInt
+      val msg = readAclString(r.buf, r.flexible)
+      val matched = (0 until readAclArrayLen(r.buf, r.flexible)).map { _ =>
+        r.buf.getShort // per-binding error
+        readAclString(r.buf, r.flexible) // per-binding message
+        val resType = r.buf.get().toInt
+        val resName = readAclString(r.buf, r.flexible)
+        val patType = if (version >= 1) r.buf.get().toInt else Acls.PatLiteral
+        val principal = readAclString(r.buf, r.flexible)
+        val host = readAclString(r.buf, r.flexible)
+        val op = r.buf.get().toInt
+        val perm = r.buf.get().toInt
+        if (r.flexible) readTags(r.buf)
         Acls.AclBinding(resType, resName, patType, principal, host, op, perm)
       }
-      if (flexible) readTags(buf)
+      if (r.flexible) readTags(r.buf)
       (err, msg, matched.toSeq)
     }
-    if (flexible) readTags(buf)
+    if (r.flexible) readTags(r.buf)
     (correlationId, results.toSeq)
   }
 
@@ -5545,82 +4714,64 @@ object KafkaWire {
   // NO_REASSIGNMENT_IN_PROGRESS (85), and the in-progress list is
   // always empty. ---
 
-  val ElectLeadersApiKey = 43
-  val ElectLeadersMaxVersion = 0
-  val AlterPartitionReassignmentsApiKey = 45
-  val AlterPartitionReassignmentsMaxVersion = 0
-  val ListPartitionReassignmentsApiKey = 46
-  val ListPartitionReassignmentsMaxVersion = 0
-
   /** v0: topic_partitions NULLABLE_ARRAY<[topic, partitions]>,
     * timeout_ms. null = elect wherever needed (nowhere, here). */
   def encodeElectLeadersRequest(correlationId: Int, clientId: String,
-      topics: Seq[(String, Seq[Int])]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, ElectLeadersApiKey, 0, correlationId, clientId,
-      flexible = false)
-    if (topics == null) writeInt32(out, -1)
-    else {
-      writeInt32(out, topics.length)
-      topics.foreach { case (name, parts) =>
-        writeNullableString(out, name)
-        writeInt32(out, parts.length)
-        parts.foreach(writeInt32(out, _))
+      topics: Seq[(String, Seq[Int])]): Array[Byte] =
+    writeRequest(ElectLeaders, 0, correlationId, clientId) { w =>
+      if (topics == null) writeInt32(w.out, -1)
+      else {
+        writeInt32(w.out, topics.length)
+        topics.foreach { case (name, parts) =>
+          writeNullableString(w.out, name)
+          writeInt32(w.out, parts.length)
+          parts.foreach(writeInt32(w.out, _))
+        }
       }
+      writeInt32(w.out, 30000) // timeout_ms
     }
-    writeInt32(out, 30000) // timeout_ms
-    frame(out.toByteArray)
-  }
 
   /** (correlationId, topics) — topics null = all needing election. */
   def decodeElectLeadersRequest(bytes: Array[Byte])
       : (Int, Seq[(String, Seq[Int])]) = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == ElectLeadersApiKey,
-      "not an ElectLeaders request")
-    require(buf.getShort.toInt == 0, "unsupported ElectLeaders version")
-    val correlationId = buf.getInt
-    readNullableString(buf) // client id
-    val n = buf.getInt
+    val (RequestHeader(_, correlationId, _), r) = readRequest(bytes, ElectLeaders)
+    val n = r.buf.getInt
     val topics =
       if (n < 0) null
       else (0 until n).map { _ =>
-        val name = readNullableString(buf)
-        val parts = (0 until buf.getInt).map(_ => buf.getInt)
+        val name = readNullableString(r.buf)
+        val parts = (0 until r.buf.getInt).map(_ => r.buf.getInt)
         (name, parts.toSeq)
       }.toSeq
-    buf.getInt // timeout_ms
+    r.buf.getInt // timeout_ms
     (correlationId, topics)
   }
 
   /** v0: throttle, results ARRAY<[topic, partition_results
     * ARRAY<[partition, error, error_message]>]>. */
   def encodeElectLeadersResponse(correlationId: Int,
-      results: Seq[(String, Seq[(Int, Int, String)])]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible = false)
-    writeInt32(out, 0)
-    writeInt32(out, results.length)
-    results.foreach { case (name, parts) =>
-      writeNullableString(out, name)
-      writeInt32(out, parts.length)
-      parts.foreach { case (p, err, msg) =>
-        writeInt32(out, p); writeInt16(out, err); writeNullableString(out, msg)
+      results: Seq[(String, Seq[(Int, Int, String)])]): Array[Byte] =
+    writeResponse(ElectLeaders, 0, correlationId) { w =>
+      writeInt32(w.out, 0)
+      writeInt32(w.out, results.length)
+      results.foreach { case (name, parts) =>
+        writeNullableString(w.out, name)
+        writeInt32(w.out, parts.length)
+        parts.foreach { case (p, err, msg) =>
+          writeInt32(w.out, p); writeInt16(w.out, err); writeNullableString(w.out, msg)
+        }
       }
     }
-    frame(out.toByteArray)
-  }
 
   /** (correlationId, results). */
   def decodeElectLeadersResponse(bytes: Array[Byte])
       : (Int, Seq[(String, Seq[(Int, Int, String)])]) = {
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    buf.getInt // throttle
-    val results = (0 until buf.getInt).map { _ =>
-      val name = readNullableString(buf)
-      val parts = (0 until buf.getInt).map { _ =>
-        (buf.getInt, buf.getShort.toInt, readNullableString(buf))
+    val (correlationId, r) = readResponse(ElectLeaders, 0, bytes)
+    r.buf.getInt // throttle
+    val results = (0 until r.buf.getInt).map { _ =>
+      val name = readNullableString(r.buf)
+      val parts = (0 until r.buf.getInt).map { _ =>
+        (r.buf.getInt, r.buf.getShort.toInt, readNullableString(r.buf))
       }
       (name, parts.toSeq)
     }
@@ -5632,40 +4783,29 @@ object KafkaWire {
     * null replicas = cancel that partition's reassignment. */
   def encodeAlterPartitionReassignmentsRequest(correlationId: Int,
       clientId: String, topics: Seq[(String, Seq[(Int, Seq[Int])])])
-      : Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, AlterPartitionReassignmentsApiKey, 0, correlationId,
-      clientId, flexible = true)
-    val w = new WR(out, flexible = true)
-    w.i32(30000) // timeout_ms
-    w.count(topics.length)
-    topics.foreach { case (name, parts) =>
-      w.str(name)
-      w.count(parts.length)
-      parts.foreach { case (p, replicas) =>
-        w.i32(p)
-        if (replicas == null) w.count(-1)
-        else { w.count(replicas.length); replicas.foreach(w.i32) }
+      : Array[Byte] =
+    writeRequest(AlterPartitionReassignments, 0, correlationId, clientId) { w =>
+      w.i32(30000) // timeout_ms
+      w.count(topics.length)
+      topics.foreach { case (name, parts) =>
+        w.str(name)
+        w.count(parts.length)
+        parts.foreach { case (p, replicas) =>
+          w.i32(p)
+          if (replicas == null) w.count(-1)
+          else { w.count(replicas.length); replicas.foreach(w.i32) }
+          w.tags()
+        }
         w.tags()
       }
       w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   /** (correlationId, (topic, (partition, replicas-or-null)*)*). */
   def decodeAlterPartitionReassignmentsRequest(bytes: Array[Byte])
       : (Int, Seq[(String, Seq[(Int, Seq[Int])])]) = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == AlterPartitionReassignmentsApiKey,
-      "not an AlterPartitionReassignments request")
-    require(buf.getShort.toInt == 0,
-      "unsupported AlterPartitionReassignments version")
-    val correlationId = buf.getInt
-    readNullableString(buf) // client id
-    readTags(buf)
-    val r = new RD(buf, flexible = true)
+    val (RequestHeader(_, correlationId, _), r) =
+      readRequest(bytes, AlterPartitionReassignments)
     r.i32() // timeout_ms
     val topics = (0 until r.count()).map { _ =>
       val name = r.str()
@@ -5687,33 +4827,27 @@ object KafkaWire {
   /** v0: throttle, error, error_message, responses ARRAY<[topic,
     * partitions ARRAY<[partition, error, error_message]>]>. */
   def encodeAlterPartitionReassignmentsResponse(correlationId: Int,
-      results: Seq[(String, Seq[(Int, Int, String)])]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible = true)
-    val w = new WR(out, flexible = true)
-    w.i32(0) // throttle_time_ms
-    w.i16(0) // top-level error
-    w.str(null)
-    w.count(results.length)
-    results.foreach { case (name, parts) =>
-      w.str(name)
-      w.count(parts.length)
-      parts.foreach { case (p, err, msg) =>
-        w.i32(p); w.i16(err); w.str(msg); w.tags()
+      results: Seq[(String, Seq[(Int, Int, String)])]): Array[Byte] =
+    writeResponse(AlterPartitionReassignments, 0, correlationId) { w =>
+      w.i32(0) // throttle_time_ms
+      w.i16(0) // top-level error
+      w.str(null)
+      w.count(results.length)
+      results.foreach { case (name, parts) =>
+        w.str(name)
+        w.count(parts.length)
+        parts.foreach { case (p, err, msg) =>
+          w.i32(p); w.i16(err); w.str(msg); w.tags()
+        }
+        w.tags()
       }
       w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   /** (correlationId, results). */
   def decodeAlterPartitionReassignmentsResponse(bytes: Array[Byte])
       : (Int, Seq[(String, Seq[(Int, Int, String)])]) = {
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    readTags(buf)
-    val r = new RD(buf, flexible = true)
+    val (correlationId, r) = readResponse(AlterPartitionReassignments, 0, bytes)
     r.i32() // throttle
     val err = r.i16()
     require(err == 0, s"AlterPartitionReassignments error $err")
@@ -5733,28 +4867,17 @@ object KafkaWire {
   /** v0 (flexible): timeout_ms, topics NULLABLE_ARRAY<[name,
     * partition_indexes ARRAY<INT32>]> — null = list everything. */
   def encodeListPartitionReassignmentsRequest(correlationId: Int,
-      clientId: String): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, ListPartitionReassignmentsApiKey, 0, correlationId,
-      clientId, flexible = true)
-    val w = new WR(out, flexible = true)
-    w.i32(30000)
-    w.count(-1) // all
-    w.tags()
-    frame(out.toByteArray)
-  }
+      clientId: String): Array[Byte] =
+    writeRequest(ListPartitionReassignments, 0, correlationId, clientId) { w =>
+      w.i32(30000)
+      w.count(-1) // all
+      w.tags()
+    }
 
   /** correlationId (the filter is irrelevant — the list is empty). */
   def decodeListPartitionReassignmentsRequest(bytes: Array[Byte]): Int = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == ListPartitionReassignmentsApiKey,
-      "not a ListPartitionReassignments request")
-    require(buf.getShort.toInt == 0,
-      "unsupported ListPartitionReassignments version")
-    val correlationId = buf.getInt
-    readNullableString(buf) // client id
-    readTags(buf)
-    val r = new RD(buf, flexible = true)
+    val (RequestHeader(_, correlationId, _), r) =
+      readRequest(bytes, ListPartitionReassignments)
     r.i32() // timeout_ms
     val n = r.count()
     (0 until math.max(n, 0)).foreach { _ =>
@@ -5768,25 +4891,19 @@ object KafkaWire {
 
   /** v0: throttle, error, error_message, topics (always empty here). */
   def encodeListPartitionReassignmentsResponse(correlationId: Int,
-      errorCode: Int = 0, errorMessage: String = null): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible = true)
-    val w = new WR(out, flexible = true)
-    w.i32(0)
-    w.i16(errorCode)
-    w.str(errorMessage)
-    w.count(0)
-    w.tags()
-    frame(out.toByteArray)
-  }
+      errorCode: Int = 0, errorMessage: String = null): Array[Byte] =
+    writeResponse(ListPartitionReassignments, 0, correlationId) { w =>
+      w.i32(0)
+      w.i16(errorCode)
+      w.str(errorMessage)
+      w.count(0)
+      w.tags()
+    }
 
   /** (correlationId, topic count — 0 on this broker). */
   def decodeListPartitionReassignmentsResponse(bytes: Array[Byte])
       : (Int, Int) = {
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    readTags(buf)
-    val r = new RD(buf, flexible = true)
+    val (correlationId, r) = readResponse(ListPartitionReassignments, 0, bytes)
     r.i32()
     val err = r.i16()
     require(err == 0, s"ListPartitionReassignments error $err")
@@ -6170,19 +5287,6 @@ object KafkaWire {
   // Topic addressing is by topic_id (KIP-516 UUIDs), resolved the
   // same way Fetch v13 resolves them. ---
 
-  val ConsumerGroupHeartbeatApiKey = 68
-  /** v1 (AK 4.0): SubscribedTopicRegex — the broker-side regex
-    * subscription KIP-848 completes the consumer API with. Max held
-    * at 1: a v2 existed only as an unverified wire-identical-to-v1
-    * assumption (no schema JSON in this container to confirm), and a
-    * broker advertising max=2 GUARANTEES clients pick v2 — if v2
-    * added any non-tagged field, every modern client would misparse.
-    * Advertising the verified maximum is the safe contract; raise
-    * only after checking Apache Kafka's ConsumerGroupHeartbeat.json. */
-  val ConsumerGroupHeartbeatMaxVersion = 1
-  val ConsumerGroupDescribeApiKey = 69
-  val ConsumerGroupDescribeMaxVersion = 0
-
   case class CGHeartbeatRequest(correlationId: Int, clientId: String,
       groupId: String, memberId: String, memberEpoch: Int,
       instanceId: String, rackId: String, rebalanceTimeoutMs: Int,
@@ -6202,51 +5306,39 @@ object KafkaWire {
       serverAssignor: String = null, instanceId: String = null,
       rackId: String = null, rebalanceTimeoutMs: Int = -1,
       subscribedTopicRegex: String = null, version: Int = 0): Array[Byte] = {
-    require(version >= 0 && version <= ConsumerGroupHeartbeatMaxVersion)
     // the regex field only exists at v1+: silently encoding a frame
     // that drops what the caller asked for would be a lossy lie
     require(subscribedTopicRegex == null || version >= 1,
       "subscribedTopicRegex requires ConsumerGroupHeartbeat v1+")
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, ConsumerGroupHeartbeatApiKey, version, correlationId,
-      clientId, flexible = true)
-    val w = new WR(out, flexible = true)
-    w.str(groupId)
-    w.str(memberId)
-    w.i32(memberEpoch)
-    w.str(instanceId)
-    w.str(rackId)
-    w.i32(rebalanceTimeoutMs)
-    if (subscribedTopicNames == null) w.count(-1)
-    else { w.count(subscribedTopicNames.length); subscribedTopicNames.foreach(w.str) }
-    if (version >= 1) w.str(subscribedTopicRegex)
-    w.str(serverAssignor)
-    if (topicPartitions == null) w.count(-1)
-    else {
-      w.count(topicPartitions.length)
-      topicPartitions.foreach { case (name, parts) =>
-        w.uuid(topicUuid(name))
-        w.count(parts.length); parts.foreach(w.i32)
-        w.tags()
+    writeRequest(ConsumerGroupHeartbeat, version, correlationId, clientId) { w =>
+      w.str(groupId)
+      w.str(memberId)
+      w.i32(memberEpoch)
+      w.str(instanceId)
+      w.str(rackId)
+      w.i32(rebalanceTimeoutMs)
+      if (subscribedTopicNames == null) w.count(-1)
+      else { w.count(subscribedTopicNames.length); subscribedTopicNames.foreach(w.str) }
+      if (version >= 1) w.str(subscribedTopicRegex)
+      w.str(serverAssignor)
+      if (topicPartitions == null) w.count(-1)
+      else {
+        w.count(topicPartitions.length)
+        topicPartitions.foreach { case (name, parts) =>
+          w.uuid(topicUuid(name))
+          w.count(parts.length); parts.foreach(w.i32)
+          w.tags()
+        }
       }
+      w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
   }
 
   def decodeConsumerGroupHeartbeatRequest(bytes: Array[Byte],
       topicIdResolver: Array[Byte] => Option[String] = _ => None)
       : CGHeartbeatRequest = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == ConsumerGroupHeartbeatApiKey,
-      "not a ConsumerGroupHeartbeat request")
-    val version = buf.getShort.toInt
-    require(version >= 0 && version <= ConsumerGroupHeartbeatMaxVersion,
-      "unsupported ConsumerGroupHeartbeat version")
-    val correlationId = buf.getInt
-    val clientId = readNullableString(buf)
-    readTags(buf)
-    val r = new RD(buf, flexible = true)
+    val (RequestHeader(version, correlationId, clientId), r) =
+      readRequest(bytes, ConsumerGroupHeartbeat)
     val groupId = r.str()
     val memberId = r.str()
     val memberEpoch = r.i32()
@@ -6275,31 +5367,28 @@ object KafkaWire {
   def encodeConsumerGroupHeartbeatResponse(correlationId: Int,
       errorCode: Int, errorMessage: String, memberId: String,
       memberEpoch: Int, heartbeatIntervalMs: Int,
-      assignment: Option[Seq[(String, Seq[Int])]]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible = true)
-    val w = new WR(out, flexible = true)
-    w.i32(0) // throttle_time_ms
-    w.i16(errorCode)
-    w.str(errorMessage)
-    w.str(memberId)
-    w.i32(memberEpoch)
-    w.i32(heartbeatIntervalMs)
-    assignment match {
-      case None => w.i8(-1) // nullable struct: absent
-      case Some(tps) =>
-        w.i8(1)
-        w.count(tps.length)
-        tps.foreach { case (name, parts) =>
-          w.uuid(idOfName(name))
-          w.count(parts.length); parts.foreach(w.i32)
+      assignment: Option[Seq[(String, Seq[Int])]]): Array[Byte] =
+    writeResponse(ConsumerGroupHeartbeat, 0, correlationId) { w =>
+      w.i32(0) // throttle_time_ms
+      w.i16(errorCode)
+      w.str(errorMessage)
+      w.str(memberId)
+      w.i32(memberEpoch)
+      w.i32(heartbeatIntervalMs)
+      assignment match {
+        case None => w.i8(-1) // nullable struct: absent
+        case Some(tps) =>
+          w.i8(1)
+          w.count(tps.length)
+          tps.foreach { case (name, parts) =>
+            w.uuid(idOfName(name))
+            w.count(parts.length); parts.foreach(w.i32)
+            w.tags()
+          }
           w.tags()
-        }
-        w.tags()
+      }
+      w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   /** (correlationId, errorCode, errorMessage, memberId, memberEpoch,
     * heartbeatIntervalMs, assignment). */
@@ -6307,10 +5396,7 @@ object KafkaWire {
       topicIdResolver: Array[Byte] => Option[String] = _ => None)
       : (Int, Int, String, String, Int, Int,
          Option[Seq[(String, Seq[Int])]]) = {
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    readTags(buf)
-    val r = new RD(buf, flexible = true)
+    val (correlationId, r) = readResponse(ConsumerGroupHeartbeat, 0, bytes)
     r.i32() // throttle_time_ms
     val err = r.i16()
     val errMsg = r.str()
@@ -6347,29 +5433,18 @@ object KafkaWire {
 
   def encodeConsumerGroupDescribeRequest(correlationId: Int,
       clientId: String, groupIds: Seq[String],
-      includeAuthorizedOps: Boolean = false): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, ConsumerGroupDescribeApiKey, 0, correlationId,
-      clientId, flexible = true)
-    val w = new WR(out, flexible = true)
-    w.count(groupIds.length); groupIds.foreach(w.str)
-    w.bool(includeAuthorizedOps)
-    w.tags()
-    frame(out.toByteArray)
-  }
+      includeAuthorizedOps: Boolean = false): Array[Byte] =
+    writeRequest(ConsumerGroupDescribe, 0, correlationId, clientId) { w =>
+      w.count(groupIds.length); groupIds.foreach(w.str)
+      w.bool(includeAuthorizedOps)
+      w.tags()
+    }
 
   /** (correlationId, groupIds, includeAuthorizedOps). */
   def decodeConsumerGroupDescribeRequest(bytes: Array[Byte])
       : (Int, Seq[String], Boolean) = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == ConsumerGroupDescribeApiKey,
-      "not a ConsumerGroupDescribe request")
-    require(buf.getShort.toInt == 0,
-      "unsupported ConsumerGroupDescribe version")
-    val correlationId = buf.getInt
-    readNullableString(buf)
-    readTags(buf)
-    val r = new RD(buf, flexible = true)
+    val (RequestHeader(_, correlationId, _), r) =
+      readRequest(bytes, ConsumerGroupDescribe)
     val ids = (0 until r.count()).map(_ => r.str()).toSeq
     val includeOps = r.bool()
     r.tags()
@@ -6377,61 +5452,55 @@ object KafkaWire {
   }
 
   def encodeConsumerGroupDescribeResponse(correlationId: Int,
-      groups: Seq[CGDescribedGroup]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible = true)
-    val w = new WR(out, flexible = true)
-    w.i32(0) // throttle_time_ms
-    w.count(groups.length)
-    groups.foreach { g =>
-      w.i16(g.errorCode)
-      w.str(g.errorMessage)
-      w.str(g.groupId)
-      w.str(g.groupState)
-      w.i32(g.groupEpoch)
-      w.i32(g.assignmentEpoch)
-      w.str(g.assignorName)
-      w.count(g.members.length)
-      g.members.foreach { m =>
-        w.str(m.memberId)
-        w.str(m.instanceId)
-        w.str(m.rackId)
-        w.i32(m.memberEpoch)
-        w.str(m.clientId)
-        w.str(m.clientHost)
-        w.count(m.subscribedTopicNames.length)
-        m.subscribedTopicNames.foreach(w.str)
-        w.str(m.subscribedTopicRegex)
-        // assignment structs are NOT nullable here; describe entries
-        // carry BOTH topic_id and topic_name, unlike the heartbeat
-        def assignment(tps: Seq[(String, Seq[Int])]): Unit = {
-          w.count(tps.length)
-          tps.foreach { case (name, parts) =>
-            w.uuid(idOfName(name))
-            w.str(name)
-            w.count(parts.length); parts.foreach(w.i32)
+      groups: Seq[CGDescribedGroup]): Array[Byte] =
+    writeResponse(ConsumerGroupDescribe, 0, correlationId) { w =>
+      w.i32(0) // throttle_time_ms
+      w.count(groups.length)
+      groups.foreach { g =>
+        w.i16(g.errorCode)
+        w.str(g.errorMessage)
+        w.str(g.groupId)
+        w.str(g.groupState)
+        w.i32(g.groupEpoch)
+        w.i32(g.assignmentEpoch)
+        w.str(g.assignorName)
+        w.count(g.members.length)
+        g.members.foreach { m =>
+          w.str(m.memberId)
+          w.str(m.instanceId)
+          w.str(m.rackId)
+          w.i32(m.memberEpoch)
+          w.str(m.clientId)
+          w.str(m.clientHost)
+          w.count(m.subscribedTopicNames.length)
+          m.subscribedTopicNames.foreach(w.str)
+          w.str(m.subscribedTopicRegex)
+          // assignment structs are NOT nullable here; describe entries
+          // carry BOTH topic_id and topic_name, unlike the heartbeat
+          def assignment(tps: Seq[(String, Seq[Int])]): Unit = {
+            w.count(tps.length)
+            tps.foreach { case (name, parts) =>
+              w.uuid(idOfName(name))
+              w.str(name)
+              w.count(parts.length); parts.foreach(w.i32)
+              w.tags()
+            }
             w.tags()
           }
+          assignment(m.assignment)
+          assignment(m.targetAssignment)
           w.tags()
         }
-        assignment(m.assignment)
-        assignment(m.targetAssignment)
+        w.i32(Int.MinValue) // authorized_operations: not computed
         w.tags()
       }
-      w.i32(Int.MinValue) // authorized_operations: not computed
       w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   /** (correlationId, groups). */
   def decodeConsumerGroupDescribeResponse(bytes: Array[Byte])
       : (Int, Seq[CGDescribedGroup]) = {
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    readTags(buf)
-    val r = new RD(buf, flexible = true)
+    val (correlationId, r) = readResponse(ConsumerGroupDescribe, 0, bytes)
     r.i32() // throttle_time_ms
     val groups = (0 until r.count()).map { _ =>
       val err = r.i16()
@@ -6490,32 +5559,18 @@ object KafkaWire {
   // subscribed — the client then pushes nothing; NULL would mean
   // "all metrics"). ---
 
-  val GetTelemetrySubscriptionsApiKey = 71
-  val GetTelemetrySubscriptionsMaxVersion = 0
-
   def encodeGetTelemetrySubscriptionsRequest(correlationId: Int,
-      clientId: String, clientInstanceId: Array[Byte]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, GetTelemetrySubscriptionsApiKey, 0, correlationId,
-      clientId, flexible = true)
-    val w = new WR(out, flexible = true)
-    w.uuid(clientInstanceId)
-    w.tags()
-    frame(out.toByteArray)
-  }
+      clientId: String, clientInstanceId: Array[Byte]): Array[Byte] =
+    writeRequest(GetTelemetrySubscriptions, 0, correlationId, clientId) { w =>
+      w.uuid(clientInstanceId)
+      w.tags()
+    }
 
   /** (correlationId, clientInstanceId). */
   def decodeGetTelemetrySubscriptionsRequest(bytes: Array[Byte])
       : (Int, Array[Byte]) = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == GetTelemetrySubscriptionsApiKey,
-      "not a GetTelemetrySubscriptions request")
-    require(buf.getShort.toInt == 0,
-      "unsupported GetTelemetrySubscriptions version")
-    val correlationId = buf.getInt
-    readNullableString(buf) // client id
-    readTags(buf)
-    val r = new RD(buf, flexible = true)
+    val (RequestHeader(_, correlationId, _), r) =
+      readRequest(bytes, GetTelemetrySubscriptions)
     val instanceId = r.uuid()
     r.tags()
     (correlationId, instanceId)
@@ -6525,24 +5580,21 @@ object KafkaWire {
       errorCode: Int, clientInstanceId: Array[Byte], subscriptionId: Int,
       acceptedCompression: Seq[Int], pushIntervalMs: Int,
       telemetryMaxBytes: Int, deltaTemporality: Boolean,
-      requestedMetrics: Seq[String]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible = true)
-    val w = new WR(out, flexible = true)
-    w.i32(0) // throttle_time_ms
-    w.i16(errorCode)
-    w.uuid(clientInstanceId)
-    w.i32(subscriptionId)
-    w.count(acceptedCompression.length)
-    acceptedCompression.foreach(w.i8)
-    w.i32(pushIntervalMs)
-    w.i32(telemetryMaxBytes)
-    w.bool(deltaTemporality)
-    w.count(requestedMetrics.length)
-    requestedMetrics.foreach(w.str)
-    w.tags()
-    frame(out.toByteArray)
-  }
+      requestedMetrics: Seq[String]): Array[Byte] =
+    writeResponse(GetTelemetrySubscriptions, 0, correlationId) { w =>
+      w.i32(0) // throttle_time_ms
+      w.i16(errorCode)
+      w.uuid(clientInstanceId)
+      w.i32(subscriptionId)
+      w.count(acceptedCompression.length)
+      acceptedCompression.foreach(w.i8)
+      w.i32(pushIntervalMs)
+      w.i32(telemetryMaxBytes)
+      w.bool(deltaTemporality)
+      w.count(requestedMetrics.length)
+      requestedMetrics.foreach(w.str)
+      w.tags()
+    }
 
   /** (correlationId, errorCode, clientInstanceId, subscriptionId,
     * acceptedCompression, pushIntervalMs, telemetryMaxBytes,
@@ -6550,10 +5602,7 @@ object KafkaWire {
   def decodeGetTelemetrySubscriptionsResponse(bytes: Array[Byte])
       : (Int, Int, Array[Byte], Int, Seq[Int], Int, Int, Boolean,
          Seq[String]) = {
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    readTags(buf)
-    val r = new RD(buf, flexible = true)
+    val (correlationId, r) = readResponse(GetTelemetrySubscriptions, 0, bytes)
     r.i32() // throttle
     val err = r.i16()
     val instanceId = r.uuid()
@@ -6573,38 +5622,24 @@ object KafkaWire {
   // COMPACT_BYTES. Response: throttle INT32, error INT16.
   // UNKNOWN_SUBSCRIPTION_ID = 117, TELEMETRY_TOO_LARGE = 118.
 
-  val PushTelemetryApiKey = 72
-  val PushTelemetryMaxVersion = 0
-
   def encodePushTelemetryRequest(correlationId: Int, clientId: String,
       clientInstanceId: Array[Byte], subscriptionId: Int,
       terminating: Boolean, compressionType: Int,
-      metrics: Array[Byte]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, PushTelemetryApiKey, 0, correlationId, clientId,
-      flexible = true)
-    val w = new WR(out, flexible = true)
-    w.uuid(clientInstanceId)
-    w.i32(subscriptionId)
-    w.bool(terminating)
-    w.i8(compressionType)
-    w.bytes(metrics)
-    w.tags()
-    frame(out.toByteArray)
-  }
+      metrics: Array[Byte]): Array[Byte] =
+    writeRequest(PushTelemetry, 0, correlationId, clientId) { w =>
+      w.uuid(clientInstanceId)
+      w.i32(subscriptionId)
+      w.bool(terminating)
+      w.i8(compressionType)
+      w.bytes(metrics)
+      w.tags()
+    }
 
   /** (correlationId, clientInstanceId, subscriptionId, terminating,
     * compressionType, metrics). */
   def decodePushTelemetryRequest(bytes: Array[Byte])
       : (Int, Array[Byte], Int, Boolean, Int, Array[Byte]) = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == PushTelemetryApiKey,
-      "not a PushTelemetry request")
-    require(buf.getShort.toInt == 0, "unsupported PushTelemetry version")
-    val correlationId = buf.getInt
-    readNullableString(buf) // client id
-    readTags(buf)
-    val r = new RD(buf, flexible = true)
+    val (RequestHeader(_, correlationId, _), r) = readRequest(bytes, PushTelemetry)
     val instanceId = r.uuid()
     val subId = r.i32()
     val terminating = r.bool()
@@ -6615,22 +5650,16 @@ object KafkaWire {
   }
 
   def encodePushTelemetryResponse(correlationId: Int,
-      errorCode: Int): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible = true)
-    val w = new WR(out, flexible = true)
-    w.i32(0) // throttle_time_ms
-    w.i16(errorCode)
-    w.tags()
-    frame(out.toByteArray)
-  }
+      errorCode: Int): Array[Byte] =
+    writeResponse(PushTelemetry, 0, correlationId) { w =>
+      w.i32(0) // throttle_time_ms
+      w.i16(errorCode)
+      w.tags()
+    }
 
   /** (correlationId, errorCode). */
   def decodePushTelemetryResponse(bytes: Array[Byte]): (Int, Int) = {
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    readTags(buf)
-    val r = new RD(buf, flexible = true)
+    val (correlationId, r) = readResponse(PushTelemetry, 0, bytes)
     r.i32() // throttle
     val err = r.i16()
     r.tags()
@@ -6642,54 +5671,34 @@ object KafkaWire {
   // response: throttle INT32, error INT16, client_metrics_resources
   // ARRAY<[name COMPACT_STRING]>.
 
-  val ListClientMetricsResourcesApiKey = 74
-  val ListClientMetricsResourcesMaxVersion = 0
-
   def encodeListClientMetricsResourcesRequest(correlationId: Int,
-      clientId: String): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, ListClientMetricsResourcesApiKey, 0, correlationId,
-      clientId, flexible = true)
-    val w = new WR(out, flexible = true)
-    w.tags()
-    frame(out.toByteArray)
-  }
+      clientId: String): Array[Byte] =
+    writeRequest(ListClientMetricsResources, 0, correlationId, clientId) { w =>
+      w.tags()
+    }
 
   /** correlationId. */
   def decodeListClientMetricsResourcesRequest(bytes: Array[Byte]): Int = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == ListClientMetricsResourcesApiKey,
-      "not a ListClientMetricsResources request")
-    require(buf.getShort.toInt == 0,
-      "unsupported ListClientMetricsResources version")
-    val correlationId = buf.getInt
-    readNullableString(buf) // client id
-    readTags(buf)
-    val r = new RD(buf, flexible = true)
+    val (RequestHeader(_, correlationId, _), r) =
+      readRequest(bytes, ListClientMetricsResources)
     r.tags()
     correlationId
   }
 
   def encodeListClientMetricsResourcesResponse(correlationId: Int,
-      errorCode: Int, names: Seq[String]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible = true)
-    val w = new WR(out, flexible = true)
-    w.i32(0) // throttle_time_ms
-    w.i16(errorCode)
-    w.count(names.length)
-    names.foreach { n => w.str(n); w.tags() }
-    w.tags()
-    frame(out.toByteArray)
-  }
+      errorCode: Int, names: Seq[String]): Array[Byte] =
+    writeResponse(ListClientMetricsResources, 0, correlationId) { w =>
+      w.i32(0) // throttle_time_ms
+      w.i16(errorCode)
+      w.count(names.length)
+      names.foreach { n => w.str(n); w.tags() }
+      w.tags()
+    }
 
   /** (correlationId, errorCode, names). */
   def decodeListClientMetricsResourcesResponse(bytes: Array[Byte])
       : (Int, Int, Seq[String]) = {
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    readTags(buf)
-    val r = new RD(buf, flexible = true)
+    val (correlationId, r) = readResponse(ListClientMetricsResources, 0, bytes)
     r.i32() // throttle
     val err = r.i16()
     val names = (0 until r.count()).map { _ =>
@@ -6713,9 +5722,6 @@ object KafkaWire {
   // ARRAY<INT32>, eligible_leader_replicas NULLABLE_ARRAY<INT32>,
   // last_known_elr NULLABLE_ARRAY<INT32>, offline ARRAY<INT32>]>,
   // topic_authorized_operations INT32]>, next_cursor NULLABLE_STRUCT.
-
-  val DescribeTopicPartitionsApiKey = 75
-  val DescribeTopicPartitionsMaxVersion = 0
 
   /** Pagination cursor: the first (topic, partition) NOT yet served. */
   final case class DtpCursor(topicName: String, partitionIndex: Int)
@@ -6746,31 +5752,20 @@ object KafkaWire {
 
   def encodeDescribeTopicPartitionsRequest(correlationId: Int,
       clientId: String, topics: Seq[String], responsePartitionLimit: Int,
-      cursor: Option[DtpCursor]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, DescribeTopicPartitionsApiKey, 0, correlationId,
-      clientId, flexible = true)
-    val w = new WR(out, flexible = true)
-    w.count(topics.length)
-    topics.foreach { t => w.str(t); w.tags() }
-    w.i32(responsePartitionLimit)
-    writeDtpCursor(w, cursor)
-    w.tags()
-    frame(out.toByteArray)
-  }
+      cursor: Option[DtpCursor]): Array[Byte] =
+    writeRequest(DescribeTopicPartitions, 0, correlationId, clientId) { w =>
+      w.count(topics.length)
+      topics.foreach { t => w.str(t); w.tags() }
+      w.i32(responsePartitionLimit)
+      writeDtpCursor(w, cursor)
+      w.tags()
+    }
 
   /** (correlationId, topics, responsePartitionLimit, cursor). */
   def decodeDescribeTopicPartitionsRequest(bytes: Array[Byte])
       : (Int, Seq[String], Int, Option[DtpCursor]) = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == DescribeTopicPartitionsApiKey,
-      "not a DescribeTopicPartitions request")
-    require(buf.getShort.toInt == 0,
-      "unsupported DescribeTopicPartitions version")
-    val correlationId = buf.getInt
-    readNullableString(buf) // client id
-    readTags(buf)
-    val r = new RD(buf, flexible = true)
+    val (RequestHeader(_, correlationId, _), r) =
+      readRequest(bytes, DescribeTopicPartitions)
     val topics = (0 until r.count()).map { _ =>
       val n = r.str(); r.tags(); n
     }.toSeq
@@ -6781,51 +5776,45 @@ object KafkaWire {
   }
 
   def encodeDescribeTopicPartitionsResponse(correlationId: Int,
-      topics: Seq[DtpTopic], nextCursor: Option[DtpCursor]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible = true)
-    val w = new WR(out, flexible = true)
-    w.i32(0) // throttle_time_ms
-    w.count(topics.length)
-    topics.foreach { t =>
-      w.i16(t.errorCode)
-      w.str(t.name)
-      w.uuid(t.topicId)
-      w.bool(t.isInternal)
-      w.count(t.partitions.length)
-      t.partitions.foreach { p =>
-        w.i16(p.errorCode)
-        w.i32(p.index)
-        w.i32(p.leaderId)
-        w.i32(p.leaderEpoch)
-        w.count(p.replicas.length); p.replicas.foreach(w.i32)
-        w.count(p.isr.length); p.isr.foreach(w.i32)
-        p.eligibleLeaderReplicas match {
-          case None => w.count(-1)
-          case Some(xs) => w.count(xs.length); xs.foreach(w.i32)
+      topics: Seq[DtpTopic], nextCursor: Option[DtpCursor]): Array[Byte] =
+    writeResponse(DescribeTopicPartitions, 0, correlationId) { w =>
+      w.i32(0) // throttle_time_ms
+      w.count(topics.length)
+      topics.foreach { t =>
+        w.i16(t.errorCode)
+        w.str(t.name)
+        w.uuid(t.topicId)
+        w.bool(t.isInternal)
+        w.count(t.partitions.length)
+        t.partitions.foreach { p =>
+          w.i16(p.errorCode)
+          w.i32(p.index)
+          w.i32(p.leaderId)
+          w.i32(p.leaderEpoch)
+          w.count(p.replicas.length); p.replicas.foreach(w.i32)
+          w.count(p.isr.length); p.isr.foreach(w.i32)
+          p.eligibleLeaderReplicas match {
+            case None => w.count(-1)
+            case Some(xs) => w.count(xs.length); xs.foreach(w.i32)
+          }
+          p.lastKnownElr match {
+            case None => w.count(-1)
+            case Some(xs) => w.count(xs.length); xs.foreach(w.i32)
+          }
+          w.count(p.offline.length); p.offline.foreach(w.i32)
+          w.tags()
         }
-        p.lastKnownElr match {
-          case None => w.count(-1)
-          case Some(xs) => w.count(xs.length); xs.foreach(w.i32)
-        }
-        w.count(p.offline.length); p.offline.foreach(w.i32)
+        w.i32(t.authorizedOperations)
         w.tags()
       }
-      w.i32(t.authorizedOperations)
+      writeDtpCursor(w, nextCursor)
       w.tags()
     }
-    writeDtpCursor(w, nextCursor)
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   /** (correlationId, topics, nextCursor). */
   def decodeDescribeTopicPartitionsResponse(bytes: Array[Byte])
       : (Int, Seq[DtpTopic], Option[DtpCursor]) = {
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    readTags(buf)
-    val r = new RD(buf, flexible = true)
+    val (correlationId, r) = readResponse(DescribeTopicPartitions, 0, bytes)
     r.i32() // throttle
     def intArray(): Seq[Int] = (0 until r.count()).map(_ => r.i32()).toSeq
     def nullableIntArray(): Option[Seq[Int]] = {
@@ -6859,45 +5848,29 @@ object KafkaWire {
   // and no owned-partitions report: record locks do the real
   // coordination, so the heartbeat is subscription + epoch only. ---
 
-  val ShareGroupHeartbeatApiKey = 76
-  val ShareGroupHeartbeatMaxVersion = 0
-  val ShareGroupDescribeApiKey = 77
-  val ShareGroupDescribeMaxVersion = 0
-
   def encodeShareGroupHeartbeatRequest(correlationId: Int,
       clientId: String, groupId: String, memberId: String,
       memberEpoch: Int, subscribedTopicNames: Seq[String] = null,
-      rackId: String = null): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, ShareGroupHeartbeatApiKey, 0, correlationId,
-      clientId, flexible = true)
-    val w = new WR(out, flexible = true)
-    w.str(groupId)
-    w.str(memberId)
-    w.i32(memberEpoch)
-    w.str(rackId)
-    if (subscribedTopicNames == null) w.count(-1)
-    else {
-      w.count(subscribedTopicNames.length)
-      subscribedTopicNames.foreach(w.str)
+      rackId: String = null): Array[Byte] =
+    writeRequest(ShareGroupHeartbeat, 0, correlationId, clientId) { w =>
+      w.str(groupId)
+      w.str(memberId)
+      w.i32(memberEpoch)
+      w.str(rackId)
+      if (subscribedTopicNames == null) w.count(-1)
+      else {
+        w.count(subscribedTopicNames.length)
+        subscribedTopicNames.foreach(w.str)
+      }
+      w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   /** (correlationId, groupId, memberId, memberEpoch, rackId,
     * subscribedTopicNames (null = unchanged), clientId). */
   def decodeShareGroupHeartbeatRequest(bytes: Array[Byte])
       : (Int, String, String, Int, String, Seq[String], String) = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == ShareGroupHeartbeatApiKey,
-      "not a ShareGroupHeartbeat request")
-    require(buf.getShort.toInt == 0,
-      "unsupported ShareGroupHeartbeat version")
-    val correlationId = buf.getInt
-    val clientId = readNullableString(buf)
-    readTags(buf)
-    val r = new RD(buf, flexible = true)
+    val (RequestHeader(_, correlationId, clientId), r) =
+      readRequest(bytes, ShareGroupHeartbeat)
     val groupId = r.str()
     val memberId = r.str()
     val memberEpoch = r.i32()
@@ -6913,31 +5886,28 @@ object KafkaWire {
   def encodeShareGroupHeartbeatResponse(correlationId: Int,
       errorCode: Int, errorMessage: String, memberId: String,
       memberEpoch: Int, heartbeatIntervalMs: Int,
-      assignment: Option[Seq[(String, Seq[Int])]]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible = true)
-    val w = new WR(out, flexible = true)
-    w.i32(0) // throttle_time_ms
-    w.i16(errorCode)
-    w.str(errorMessage)
-    w.str(memberId)
-    w.i32(memberEpoch)
-    w.i32(heartbeatIntervalMs)
-    assignment match {
-      case None => w.i8(-1) // nullable struct: absent (= unchanged)
-      case Some(tps) =>
-        w.i8(1)
-        w.count(tps.length)
-        tps.foreach { case (name, parts) =>
-          w.uuid(idOfName(name))
-          w.count(parts.length); parts.foreach(w.i32)
+      assignment: Option[Seq[(String, Seq[Int])]]): Array[Byte] =
+    writeResponse(ShareGroupHeartbeat, 0, correlationId) { w =>
+      w.i32(0) // throttle_time_ms
+      w.i16(errorCode)
+      w.str(errorMessage)
+      w.str(memberId)
+      w.i32(memberEpoch)
+      w.i32(heartbeatIntervalMs)
+      assignment match {
+        case None => w.i8(-1) // nullable struct: absent (= unchanged)
+        case Some(tps) =>
+          w.i8(1)
+          w.count(tps.length)
+          tps.foreach { case (name, parts) =>
+            w.uuid(idOfName(name))
+            w.count(parts.length); parts.foreach(w.i32)
+            w.tags()
+          }
           w.tags()
-        }
-        w.tags()
+      }
+      w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   /** (correlationId, errorCode, errorMessage, memberId, memberEpoch,
     * heartbeatIntervalMs, assignment). */
@@ -6945,10 +5915,7 @@ object KafkaWire {
       topicIdResolver: Array[Byte] => Option[String] = _ => None)
       : (Int, Int, String, String, Int, Int,
          Option[Seq[(String, Seq[Int])]]) = {
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    readTags(buf)
-    val r = new RD(buf, flexible = true)
+    val (correlationId, r) = readResponse(ShareGroupHeartbeat, 0, bytes)
     r.i32() // throttle_time_ms
     val err = r.i16()
     val errMsg = r.str()
@@ -6983,29 +5950,18 @@ object KafkaWire {
 
   def encodeShareGroupDescribeRequest(correlationId: Int,
       clientId: String, groupIds: Seq[String],
-      includeAuthorizedOperations: Boolean = false): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, ShareGroupDescribeApiKey, 0, correlationId,
-      clientId, flexible = true)
-    val w = new WR(out, flexible = true)
-    w.count(groupIds.length); groupIds.foreach(w.str)
-    w.bool(includeAuthorizedOperations)
-    w.tags()
-    frame(out.toByteArray)
-  }
+      includeAuthorizedOperations: Boolean = false): Array[Byte] =
+    writeRequest(ShareGroupDescribe, 0, correlationId, clientId) { w =>
+      w.count(groupIds.length); groupIds.foreach(w.str)
+      w.bool(includeAuthorizedOperations)
+      w.tags()
+    }
 
   /** (correlationId, groupIds, includeAuthorizedOperations). */
   def decodeShareGroupDescribeRequest(bytes: Array[Byte])
       : (Int, Seq[String], Boolean) = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == ShareGroupDescribeApiKey,
-      "not a ShareGroupDescribe request")
-    require(buf.getShort.toInt == 0,
-      "unsupported ShareGroupDescribe version")
-    val correlationId = buf.getInt
-    readNullableString(buf) // client id
-    readTags(buf)
-    val r = new RD(buf, flexible = true)
+    val (RequestHeader(_, correlationId, _), r) =
+      readRequest(bytes, ShareGroupDescribe)
     val groups = (0 until r.count()).map(_ => r.str()).toSeq
     val includeOps = r.bool()
     r.tags()
@@ -7014,56 +5970,50 @@ object KafkaWire {
 
   def encodeShareGroupDescribeResponse(correlationId: Int,
       groups: Seq[SGDescribedGroup],
-      authorizedOperations: Int = Int.MinValue): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible = true)
-    val w = new WR(out, flexible = true)
-    w.i32(0) // throttle_time_ms
-    w.count(groups.length)
-    groups.foreach { g =>
-      w.i16(g.errorCode)
-      w.str(g.errorMessage)
-      w.str(g.groupId)
-      w.str(g.groupState)
-      w.i32(g.groupEpoch)
-      w.i32(g.assignmentEpoch)
-      w.str(g.assignorName)
-      w.count(g.members.length)
-      g.members.foreach { m =>
-        w.str(m.memberId)
-        w.str(m.rackId)
-        w.i32(m.memberEpoch)
-        w.str(m.clientId)
-        w.str(m.clientHost)
-        w.count(m.subscribed.length); m.subscribed.foreach(w.str)
-        // assignment struct — NOT nullable here, and its entries
-        // carry BOTH topic_id and topic_name (the key-69 describe
-        // shape, unlike the heartbeat's id-only entries)
-        w.count(m.assignment.length)
-        m.assignment.foreach { case (name, parts) =>
-          w.uuid(idOfName(name))
-          w.str(name)
-          w.count(parts.length); parts.foreach(w.i32)
+      authorizedOperations: Int = Int.MinValue): Array[Byte] =
+    writeResponse(ShareGroupDescribe, 0, correlationId) { w =>
+      w.i32(0) // throttle_time_ms
+      w.count(groups.length)
+      groups.foreach { g =>
+        w.i16(g.errorCode)
+        w.str(g.errorMessage)
+        w.str(g.groupId)
+        w.str(g.groupState)
+        w.i32(g.groupEpoch)
+        w.i32(g.assignmentEpoch)
+        w.str(g.assignorName)
+        w.count(g.members.length)
+        g.members.foreach { m =>
+          w.str(m.memberId)
+          w.str(m.rackId)
+          w.i32(m.memberEpoch)
+          w.str(m.clientId)
+          w.str(m.clientHost)
+          w.count(m.subscribed.length); m.subscribed.foreach(w.str)
+          // assignment struct — NOT nullable here, and its entries
+          // carry BOTH topic_id and topic_name (the key-69 describe
+          // shape, unlike the heartbeat's id-only entries)
+          w.count(m.assignment.length)
+          m.assignment.foreach { case (name, parts) =>
+            w.uuid(idOfName(name))
+            w.str(name)
+            w.count(parts.length); parts.foreach(w.i32)
+            w.tags()
+          }
+          w.tags()
           w.tags()
         }
-        w.tags()
+        w.i32(authorizedOperations)
         w.tags()
       }
-      w.i32(authorizedOperations)
       w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   /** (correlationId, groups). */
   def decodeShareGroupDescribeResponse(bytes: Array[Byte],
       topicIdResolver: Array[Byte] => Option[String] = _ => None)
       : (Int, Seq[SGDescribedGroup]) = {
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    readTags(buf)
-    val r = new RD(buf, flexible = true)
+    val (correlationId, r) = readResponse(ShareGroupDescribe, 0, bytes)
     r.i32() // throttle_time_ms
     val groups = (0 until r.count()).map { _ =>
       val err = r.i16()
@@ -7114,10 +6064,6 @@ object KafkaWire {
   // ShareAcknowledge v1 is schema-identical to v0 (the stable-version
   // alignment bump, so a 4.1 client sees matching maxima on both
   // share RPCs).
-  val ShareFetchApiKey = 78
-  val ShareFetchMaxVersion = 1
-  val ShareAcknowledgeApiKey = 79
-  val ShareAcknowledgeMaxVersion = 1
 
   /** One acknowledgement batch over offsets [first, last]: either ONE
     * acknowledge type applying to the whole range, or one per offset.
@@ -7165,54 +6111,41 @@ object KafkaWire {
       maxWaitMs: Int = 500, minBytes: Int = 1,
       maxBytes: Int = 64 * 1024 * 1024, version: Int = 0,
       maxRecords: Int = Int.MaxValue,
-      batchSize: Int = Int.MaxValue): Array[Byte] = {
-    require(version >= 0 && version <= ShareFetchMaxVersion,
-      s"unsupported ShareFetch version $version")
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, ShareFetchApiKey, version, correlationId, clientId,
-      flexible = true)
-    val w = new WR(out, flexible = true)
-    w.str(groupId)
-    w.str(memberId)
-    w.i32(sessionEpoch)
-    w.i32(maxWaitMs)
-    w.i32(minBytes)
-    w.i32(maxBytes)
-    if (version >= 1) { w.i32(maxRecords); w.i32(batchSize) }
-    w.count(topics.length)
-    topics.foreach { case (name, parts) =>
-      w.uuid(topicUuid(name))
-      w.count(parts.length)
-      parts.foreach { p =>
-        w.i32(p.partition)
-        if (version == 0) w.i32(p.partitionMaxBytes)
-        writeShareAckBatches(w, p.acks)
+      batchSize: Int = Int.MaxValue): Array[Byte] =
+    writeRequest(ShareFetch, version, correlationId, clientId) { w =>
+      w.str(groupId)
+      w.str(memberId)
+      w.i32(sessionEpoch)
+      w.i32(maxWaitMs)
+      w.i32(minBytes)
+      w.i32(maxBytes)
+      if (version >= 1) { w.i32(maxRecords); w.i32(batchSize) }
+      w.count(topics.length)
+      topics.foreach { case (name, parts) =>
+        w.uuid(topicUuid(name))
+        w.count(parts.length)
+        parts.foreach { p =>
+          w.i32(p.partition)
+          if (version == 0) w.i32(p.partitionMaxBytes)
+          writeShareAckBatches(w, p.acks)
+          w.tags()
+        }
+        w.tags()
+      }
+      w.count(forgotten.length)
+      forgotten.foreach { case (name, parts) =>
+        w.uuid(topicUuid(name))
+        w.count(parts.length); parts.foreach(w.i32)
         w.tags()
       }
       w.tags()
     }
-    w.count(forgotten.length)
-    forgotten.foreach { case (name, parts) =>
-      w.uuid(topicUuid(name))
-      w.count(parts.length); parts.foreach(w.i32)
-      w.tags()
-    }
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   def decodeShareFetchRequest(bytes: Array[Byte],
       topicIdResolver: Array[Byte] => Option[String] = _ => None)
       : ShareFetchRequest = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == ShareFetchApiKey, "not a ShareFetch request")
-    val version = buf.getShort.toInt
-    require(version >= 0 && version <= ShareFetchMaxVersion,
-      s"unsupported ShareFetch version $version")
-    val correlationId = buf.getInt
-    val clientId = readNullableString(buf)
-    readTags(buf)
-    val r = new RD(buf, flexible = true)
+    val (RequestHeader(version, correlationId, clientId), r) =
+      readRequest(bytes, ShareFetch)
     val groupId = r.str()
     val memberId = r.str()
     val sessionEpoch = r.i32()
@@ -7275,46 +6208,44 @@ object KafkaWire {
           p.records, compression)
       }
     }
-    val out = openFrame(payloads)
-    responseHeader(out, correlationId, flexible = true)
-    val w = new WR(out, flexible = true)
-    w.i32(0) // throttle_time_ms
-    w.i16(errorCode)
-    w.str(errorMessage)
-    // v1 (KIP-932 GA): the group's share.record.lock.duration.ms, so
-    // the client knows how long its acquisitions stay locked — sits
-    // between error_message and the responses array in the public
-    // ShareFetchResponse schema
-    if (version >= 1) w.i32(acquisitionLockTimeoutMs)
-    w.count(topics.length)
-    topics.iterator.zip(payloads.iterator).foreach { case ((name, parts), ps) =>
-      w.uuid(idOfName(name))
-      w.count(parts.length)
-      parts.iterator.zip(ps.iterator).foreach { case (p, payload) =>
-        w.i32(p.partition)
-        w.i16(p.errorCode)
-        w.str(p.errorMessage)
-        w.i16(p.ackErrorCode)
-        w.str(p.ackErrorMessage)
-        w.i32(nodeId); w.i32(0); w.tags() // current_leader (epoch 0)
-        w.bytes(payload)
-        w.count(p.acquired.length)
-        p.acquired.foreach { a =>
-          w.i64(a.firstOffset); w.i64(a.lastOffset); w.i16(a.deliveryCount)
+    writeResponse(ShareFetch, version, correlationId, frameCapacity(payloads)) { w =>
+      w.i32(0) // throttle_time_ms
+      w.i16(errorCode)
+      w.str(errorMessage)
+      // v1 (KIP-932 GA): the group's share.record.lock.duration.ms, so
+      // the client knows how long its acquisitions stay locked — sits
+      // between error_message and the responses array in the public
+      // ShareFetchResponse schema
+      if (version >= 1) w.i32(acquisitionLockTimeoutMs)
+      w.count(topics.length)
+      topics.iterator.zip(payloads.iterator).foreach { case ((name, parts), ps) =>
+        w.uuid(idOfName(name))
+        w.count(parts.length)
+        parts.iterator.zip(ps.iterator).foreach { case (p, payload) =>
+          w.i32(p.partition)
+          w.i16(p.errorCode)
+          w.str(p.errorMessage)
+          w.i16(p.ackErrorCode)
+          w.str(p.ackErrorMessage)
+          w.i32(nodeId); w.i32(0); w.tags() // current_leader (epoch 0)
+          w.bytes(payload)
+          w.count(p.acquired.length)
+          p.acquired.foreach { a =>
+            w.i64(a.firstOffset); w.i64(a.lastOffset); w.i16(a.deliveryCount)
+            w.tags()
+          }
           w.tags()
         }
         w.tags()
       }
+      // node_endpoints: this broker, when the caller names it
+      if (host == null) w.count(0)
+      else {
+        w.count(1)
+        w.i32(nodeId); w.str(host); w.i32(port); w.str(null); w.tags()
+      }
       w.tags()
     }
-    // node_endpoints: this broker, when the caller names it
-    if (host == null) w.count(0)
-    else {
-      w.count(1)
-      w.i32(nodeId); w.str(host); w.i32(port); w.str(null); w.tags()
-    }
-    w.tags()
-    closeFrame(out)
   }
 
   /** The v1 response's top-level acquisition_lock_timeout_ms, for
@@ -7322,10 +6253,7 @@ object KafkaWire {
     * error_code, error_message) then reads the int32. Valid ONLY on a
     * v1+ frame; a v0 frame has the responses array there. */
   def shareFetchAcquisitionLockMs(bytes: Array[Byte]): Int = {
-    val buf = unframe(bytes)
-    buf.getInt // correlation
-    readTags(buf)
-    val r = new RD(buf, flexible = true)
+    val (_, r) = readResponse(ShareFetch, 1, bytes)
     r.i32(); r.i16(); r.str() // throttle, error_code, error_message
     r.i32()
   }
@@ -7337,10 +6265,7 @@ object KafkaWire {
       topicIdResolver: Array[Byte] => Option[String] = _ => None,
       version: Int = 0)
       : (Int, Int, String, Seq[(String, Seq[ShareFetchPartResp])]) = {
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    readTags(buf)
-    val r = new RD(buf, flexible = true)
+    val (correlationId, r) = readResponse(ShareFetch, version, bytes)
     r.i32() // throttle
     val err = r.i16()
     val errMsg = r.str()
@@ -7383,44 +6308,30 @@ object KafkaWire {
   def encodeShareAcknowledgeRequest(correlationId: Int, clientId: String,
       groupId: String, memberId: String, sessionEpoch: Int,
       topics: Seq[(String, Seq[(Int, Seq[ShareAckBatch])])],
-      version: Int = 0): Array[Byte] = {
-    require(version >= 0 && version <= ShareAcknowledgeMaxVersion,
-      s"unsupported ShareAcknowledge version $version")
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, ShareAcknowledgeApiKey, version, correlationId,
-      clientId, flexible = true)
-    val w = new WR(out, flexible = true)
-    w.str(groupId)
-    w.str(memberId)
-    w.i32(sessionEpoch)
-    w.count(topics.length)
-    topics.foreach { case (name, parts) =>
-      w.uuid(topicUuid(name))
-      w.count(parts.length)
-      parts.foreach { case (p, acks) =>
-        w.i32(p)
-        writeShareAckBatches(w, acks)
+      version: Int = 0): Array[Byte] =
+    writeRequest(ShareAcknowledge, version, correlationId, clientId) { w =>
+      w.str(groupId)
+      w.str(memberId)
+      w.i32(sessionEpoch)
+      w.count(topics.length)
+      topics.foreach { case (name, parts) =>
+        w.uuid(topicUuid(name))
+        w.count(parts.length)
+        parts.foreach { case (p, acks) =>
+          w.i32(p)
+          writeShareAckBatches(w, acks)
+          w.tags()
+        }
         w.tags()
       }
       w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   def decodeShareAcknowledgeRequest(bytes: Array[Byte],
       topicIdResolver: Array[Byte] => Option[String] = _ => None)
       : ShareAcknowledgeRequest = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == ShareAcknowledgeApiKey,
-      "not a ShareAcknowledge request")
-    val ackVersion = buf.getShort.toInt
-    require(ackVersion >= 0 && ackVersion <= ShareAcknowledgeMaxVersion,
-      s"unsupported ShareAcknowledge version $ackVersion")
-    val correlationId = buf.getInt
-    val clientId = readNullableString(buf)
-    readTags(buf)
-    val r = new RD(buf, flexible = true)
+    val (RequestHeader(ackVersion, correlationId, clientId), r) =
+      readRequest(bytes, ShareAcknowledge)
     val groupId = r.str()
     val memberId = r.str()
     val sessionEpoch = r.i32()
@@ -7444,44 +6355,38 @@ object KafkaWire {
   def encodeShareAcknowledgeResponse(correlationId: Int, errorCode: Int,
       errorMessage: String,
       topics: Seq[(String, Seq[(Int, Int, String)])],
-      nodeId: Int = 0, host: String = null, port: Int = 0): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible = true)
-    val w = new WR(out, flexible = true)
-    w.i32(0) // throttle_time_ms
-    w.i16(errorCode)
-    w.str(errorMessage)
-    w.count(topics.length)
-    topics.foreach { case (name, parts) =>
-      w.uuid(idOfName(name))
-      w.count(parts.length)
-      parts.foreach { case (p, err, msg) =>
-        w.i32(p)
-        w.i16(err)
-        w.str(msg)
-        w.i32(nodeId); w.i32(0); w.tags() // current_leader (epoch 0)
+      nodeId: Int = 0, host: String = null, port: Int = 0): Array[Byte] =
+    writeResponse(ShareAcknowledge, 0, correlationId) { w =>
+      w.i32(0) // throttle_time_ms
+      w.i16(errorCode)
+      w.str(errorMessage)
+      w.count(topics.length)
+      topics.foreach { case (name, parts) =>
+        w.uuid(idOfName(name))
+        w.count(parts.length)
+        parts.foreach { case (p, err, msg) =>
+          w.i32(p)
+          w.i16(err)
+          w.str(msg)
+          w.i32(nodeId); w.i32(0); w.tags() // current_leader (epoch 0)
+          w.tags()
+        }
         w.tags()
+      }
+      if (host == null) w.count(0)
+      else {
+        w.count(1)
+        w.i32(nodeId); w.str(host); w.i32(port); w.str(null); w.tags()
       }
       w.tags()
     }
-    if (host == null) w.count(0)
-    else {
-      w.count(1)
-      w.i32(nodeId); w.str(host); w.i32(port); w.str(null); w.tags()
-    }
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   /** (correlationId, errorCode, errorMessage,
     * (topic, (partition, errorCode, errorMessage)*)*). */
   def decodeShareAcknowledgeResponse(bytes: Array[Byte],
       topicIdResolver: Array[Byte] => Option[String] = _ => None)
       : (Int, Int, String, Seq[(String, Seq[(Int, Int, String)])]) = {
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    readTags(buf)
-    val r = new RD(buf, flexible = true)
+    val (correlationId, r) = readResponse(ShareAcknowledge, 0, bytes)
     r.i32() // throttle
     val err = r.i16()
     val errMsg = r.str()
@@ -7511,11 +6416,6 @@ object KafkaWire {
   // entity_name) pairs with null names meaning the DEFAULT sentinel;
   // the broker's quota model lives in Quotas.scala. ---
 
-  val DescribeClientQuotasApiKey = 48
-  val DescribeClientQuotasMaxVersion = 1
-  val AlterClientQuotasApiKey = 49
-  val AlterClientQuotasMaxVersion = 1
-
   private def writeQuotaEntity(w: WR, e: Quotas.Entity): Unit = {
     val parts = Seq(
       e.user.map(n => (Quotas.EntityUser, n.orNull)),
@@ -7543,35 +6443,21 @@ object KafkaWire {
     * match_type 0 exact/1 default/2 any, match name), strict. */
   def encodeDescribeClientQuotasRequest(version: Int, correlationId: Int,
       clientId: String, components: Seq[(String, Int, String)],
-      strict: Boolean): Array[Byte] = {
-    val flexible = version >= 1
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, DescribeClientQuotasApiKey, version, correlationId,
-      clientId, flexible)
-    val w = new WR(out, flexible)
-    w.count(components.length)
-    components.foreach { case (t, mt, n) =>
-      w.str(t); w.i8(mt); w.str(n); w.tags()
+      strict: Boolean): Array[Byte] =
+    writeRequest(DescribeClientQuotas, version, correlationId, clientId) { w =>
+      w.count(components.length)
+      components.foreach { case (t, mt, n) =>
+        w.str(t); w.i8(mt); w.str(n); w.tags()
+      }
+      w.bool(strict)
+      w.tags()
     }
-    w.bool(strict)
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   /** (version, correlationId, components, strict). */
   def decodeDescribeClientQuotasRequest(bytes: Array[Byte])
       : (Int, Int, Seq[(String, Int, String)], Boolean) = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == DescribeClientQuotasApiKey,
-      "not a DescribeClientQuotas request")
-    val version = buf.getShort.toInt
-    require(version >= 0 && version <= DescribeClientQuotasMaxVersion,
-      s"unsupported DescribeClientQuotas version $version")
-    val flexible = version >= 1
-    val correlationId = buf.getInt
-    readNullableString(buf)
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (RequestHeader(version, correlationId, _), r) =
+      readRequest(bytes, DescribeClientQuotas)
     val components = (0 until r.count()).map { _ =>
       val c = (r.str(), r.i8(), r.str()); r.tags(); c
     }
@@ -7584,33 +6470,25 @@ object KafkaWire {
     * (entity, (key, value) doubles). */
   def encodeDescribeClientQuotasResponse(version: Int, correlationId: Int,
       errorCode: Int, errorMessage: String,
-      entries: Seq[(Quotas.Entity, Seq[(String, Double)])]): Array[Byte] = {
-    val flexible = version >= 1
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible)
-    val w = new WR(out, flexible)
-    w.i32(0) // throttle_time_ms
-    w.i16(errorCode)
-    w.str(errorMessage)
-    w.count(entries.length)
-    entries.foreach { case (e, values) =>
-      writeQuotaEntity(w, e)
-      w.count(values.length)
-      values.foreach { case (k, v) => w.str(k); w.f64(v); w.tags() }
+      entries: Seq[(Quotas.Entity, Seq[(String, Double)])]): Array[Byte] =
+    writeResponse(DescribeClientQuotas, version, correlationId) { w =>
+      w.i32(0) // throttle_time_ms
+      w.i16(errorCode)
+      w.str(errorMessage)
+      w.count(entries.length)
+      entries.foreach { case (e, values) =>
+        writeQuotaEntity(w, e)
+        w.count(values.length)
+        values.foreach { case (k, v) => w.str(k); w.f64(v); w.tags() }
+        w.tags()
+      }
       w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   /** (correlationId, errorCode, errorMessage, entries). */
   def decodeDescribeClientQuotasResponse(bytes: Array[Byte], version: Int)
       : (Int, Int, String, Seq[(Quotas.Entity, Seq[(String, Double)])]) = {
-    val flexible = version >= 1
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (correlationId, r) = readResponse(DescribeClientQuotas, version, bytes)
     r.i32()
     val err = r.i16()
     val msg = r.str()
@@ -7631,38 +6509,24 @@ object KafkaWire {
   def encodeAlterClientQuotasRequest(version: Int, correlationId: Int,
       clientId: String,
       entries: Seq[(Quotas.Entity, Seq[(String, Double, Boolean)])],
-      validateOnly: Boolean): Array[Byte] = {
-    val flexible = version >= 1
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, AlterClientQuotasApiKey, version, correlationId,
-      clientId, flexible)
-    val w = new WR(out, flexible)
-    w.count(entries.length)
-    entries.foreach { case (e, ops) =>
-      writeQuotaEntity(w, e)
-      w.count(ops.length)
-      ops.foreach { case (k, v, rm) => w.str(k); w.f64(v); w.bool(rm); w.tags() }
+      validateOnly: Boolean): Array[Byte] =
+    writeRequest(AlterClientQuotas, version, correlationId, clientId) { w =>
+      w.count(entries.length)
+      entries.foreach { case (e, ops) =>
+        writeQuotaEntity(w, e)
+        w.count(ops.length)
+        ops.foreach { case (k, v, rm) => w.str(k); w.f64(v); w.bool(rm); w.tags() }
+        w.tags()
+      }
+      w.bool(validateOnly)
       w.tags()
     }
-    w.bool(validateOnly)
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   /** (version, correlationId, entries, validateOnly). */
   def decodeAlterClientQuotasRequest(bytes: Array[Byte])
       : (Int, Int, Seq[(Quotas.Entity, Seq[(String, Double, Boolean)])], Boolean) = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == AlterClientQuotasApiKey,
-      "not an AlterClientQuotas request")
-    val version = buf.getShort.toInt
-    require(version >= 0 && version <= AlterClientQuotasMaxVersion,
-      s"unsupported AlterClientQuotas version $version")
-    val flexible = version >= 1
-    val correlationId = buf.getInt
-    readNullableString(buf)
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (RequestHeader(version, correlationId, _), r) =
+      readRequest(bytes, AlterClientQuotas)
     val entries = (0 until r.count()).map { _ =>
       val e = readQuotaEntity(r)
       val ops = (0 until r.count()).map { _ =>
@@ -7679,28 +6543,20 @@ object KafkaWire {
   /** AlterClientQuotas response: per-entry (error, message, entity),
     * request order. */
   def encodeAlterClientQuotasResponse(version: Int, correlationId: Int,
-      results: Seq[(Int, String, Quotas.Entity)]): Array[Byte] = {
-    val flexible = version >= 1
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible)
-    val w = new WR(out, flexible)
-    w.i32(0)
-    w.count(results.length)
-    results.foreach { case (err, msg, e) =>
-      w.i16(err); w.str(msg); writeQuotaEntity(w, e); w.tags()
+      results: Seq[(Int, String, Quotas.Entity)]): Array[Byte] =
+    writeResponse(AlterClientQuotas, version, correlationId) { w =>
+      w.i32(0)
+      w.count(results.length)
+      results.foreach { case (err, msg, e) =>
+        w.i16(err); w.str(msg); writeQuotaEntity(w, e); w.tags()
+      }
+      w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   /** (correlationId, (error, message, entity)*). */
   def decodeAlterClientQuotasResponse(bytes: Array[Byte], version: Int)
       : (Int, Seq[(Int, String, Quotas.Entity)]) = {
-    val flexible = version >= 1
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (correlationId, r) = readResponse(AlterClientQuotas, version, bytes)
     r.i32()
     val results = (0 until r.count()).map { _ =>
       val err = r.i16(); val msg = r.str(); val e = readQuotaEntity(r)
@@ -7718,15 +6574,6 @@ object KafkaWire {
   // "Type:name" principal string at the codec edge. The token model
   // lives in DelegationTokens.scala. ---
 
-  val CreateDelegationTokenApiKey = 38
-  val CreateDelegationTokenMaxVersion = 3
-  val RenewDelegationTokenApiKey = 39
-  val RenewDelegationTokenMaxVersion = 2
-  val ExpireDelegationTokenApiKey = 40
-  val ExpireDelegationTokenMaxVersion = 2
-  val DescribeDelegationTokenApiKey = 41
-  val DescribeDelegationTokenMaxVersion = 3
-
   private def splitPrincipal(p: String): (String, String) = {
     val i = if (p == null) -1 else p.indexOf(':')
     if (i < 0) ("User", if (p == null) "" else p)
@@ -7740,40 +6587,26 @@ object KafkaWire {
     * pair (mint for self). */
   def encodeCreateDelegationTokenRequest(version: Int, correlationId: Int,
       clientId: String, owner: String, renewers: Seq[String],
-      maxLifetimeMs: Long): Array[Byte] = {
-    val flexible = version >= 2
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, CreateDelegationTokenApiKey, version, correlationId,
-      clientId, flexible)
-    val w = new WR(out, flexible)
-    if (version >= 3) {
-      if (owner == null) { w.str(null); w.str(null) }
-      else { val (t, n) = splitPrincipal(owner); w.str(t); w.str(n) }
+      maxLifetimeMs: Long): Array[Byte] =
+    writeRequest(CreateDelegationToken, version, correlationId, clientId) { w =>
+      if (version >= 3) {
+        if (owner == null) { w.str(null); w.str(null) }
+        else { val (t, n) = splitPrincipal(owner); w.str(t); w.str(n) }
+      }
+      w.count(renewers.length)
+      renewers.foreach { r =>
+        val (t, n) = splitPrincipal(r)
+        w.str(t); w.str(n); w.tags()
+      }
+      w.i64(maxLifetimeMs)
+      w.tags()
     }
-    w.count(renewers.length)
-    renewers.foreach { r =>
-      val (t, n) = splitPrincipal(r)
-      w.str(t); w.str(n); w.tags()
-    }
-    w.i64(maxLifetimeMs)
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   /** (version, correlationId, ownerOrNull, renewers, maxLifetimeMs). */
   def decodeCreateDelegationTokenRequest(bytes: Array[Byte])
       : (Int, Int, String, Seq[String], Long) = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == CreateDelegationTokenApiKey,
-      "not a CreateDelegationToken request")
-    val version = buf.getShort.toInt
-    require(version >= 0 && version <= CreateDelegationTokenMaxVersion,
-      s"unsupported CreateDelegationToken version $version")
-    val flexible = version >= 2
-    val correlationId = buf.getInt
-    readNullableString(buf)
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (RequestHeader(version, correlationId, _), r) =
+      readRequest(bytes, CreateDelegationToken)
     val owner =
       if (version < 3) null
       else {
@@ -7792,35 +6625,27 @@ object KafkaWire {
   def encodeCreateDelegationTokenResponse(version: Int, correlationId: Int,
       errorCode: Int, owner: String, requester: String, issueTs: Long,
       expiryTs: Long, maxTs: Long, tokenId: String,
-      hmac: Array[Byte]): Array[Byte] = {
-    val flexible = version >= 2
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible)
-    val w = new WR(out, flexible)
-    w.i16(errorCode)
-    val (ot, on) = splitPrincipal(if (owner == null) "" else owner)
-    w.str(ot); w.str(on)
-    if (version >= 3) {
-      val (rt, rn) = splitPrincipal(if (requester == null) "" else requester)
-      w.str(rt); w.str(rn)
+      hmac: Array[Byte]): Array[Byte] =
+    writeResponse(CreateDelegationToken, version, correlationId) { w =>
+      w.i16(errorCode)
+      val (ot, on) = splitPrincipal(if (owner == null) "" else owner)
+      w.str(ot); w.str(on)
+      if (version >= 3) {
+        val (rt, rn) = splitPrincipal(if (requester == null) "" else requester)
+        w.str(rt); w.str(rn)
+      }
+      w.i64(issueTs); w.i64(expiryTs); w.i64(maxTs)
+      w.str(if (tokenId == null) "" else tokenId)
+      w.bytes(if (hmac == null) Array.emptyByteArray else hmac)
+      w.i32(0) // throttle_time_ms (trailing in the token APIs)
+      w.tags()
     }
-    w.i64(issueTs); w.i64(expiryTs); w.i64(maxTs)
-    w.str(if (tokenId == null) "" else tokenId)
-    w.bytes(if (hmac == null) Array.emptyByteArray else hmac)
-    w.i32(0) // throttle_time_ms (trailing in the token APIs)
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   /** (correlationId, errorCode, owner, issueTs, expiryTs, maxTs,
     * tokenId, hmac). */
   def decodeCreateDelegationTokenResponse(bytes: Array[Byte], version: Int)
       : (Int, Int, String, Long, Long, Long, String, Array[Byte]) = {
-    val flexible = version >= 2
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (correlationId, r) = readResponse(CreateDelegationToken, version, bytes)
     val err = r.i16()
     val owner = joinPrincipal(r.str(), r.str())
     if (version >= 3) { r.str(); r.str() } // requester
@@ -7833,31 +6658,18 @@ object KafkaWire {
   }
 
   /** Renew/Expire requests share one shape: hmac + a period. */
-  private def encodeTokenPeriodRequest(apiKey: Int, maxVersion: Int,
-      version: Int, correlationId: Int, clientId: String,
-      hmac: Array[Byte], periodMs: Long): Array[Byte] = {
-    val flexible = version >= 2
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, apiKey, version, correlationId, clientId, flexible)
-    val w = new WR(out, flexible)
-    w.bytes(hmac)
-    w.i64(periodMs)
-    w.tags()
-    frame(out.toByteArray)
-  }
+  private def encodeTokenPeriodRequest(api: Api, version: Int,
+      correlationId: Int, clientId: String, hmac: Array[Byte],
+      periodMs: Long): Array[Byte] =
+    writeRequest(api, version, correlationId, clientId) { w =>
+      w.bytes(hmac)
+      w.i64(periodMs)
+      w.tags()
+    }
 
-  private def decodeTokenPeriodRequest(bytes: Array[Byte], apiKey: Int,
-      maxVersion: Int, label: String): (Int, Int, Array[Byte], Long) = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == apiKey, s"not a $label request")
-    val version = buf.getShort.toInt
-    require(version >= 0 && version <= maxVersion,
-      s"unsupported $label version $version")
-    val flexible = version >= 2
-    val correlationId = buf.getInt
-    readNullableString(buf)
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+  private def decodeTokenPeriodRequest(bytes: Array[Byte],
+      api: Api): (Int, Int, Array[Byte], Long) = {
+    val (RequestHeader(version, correlationId, _), r) = readRequest(bytes, api)
     val hmac = r.bytes()
     val period = r.i64()
     r.tags()
@@ -7866,49 +6678,38 @@ object KafkaWire {
 
   def encodeRenewDelegationTokenRequest(version: Int, correlationId: Int,
       clientId: String, hmac: Array[Byte], renewPeriodMs: Long): Array[Byte] =
-    encodeTokenPeriodRequest(RenewDelegationTokenApiKey,
-      RenewDelegationTokenMaxVersion, version, correlationId, clientId,
-      hmac, renewPeriodMs)
+    encodeTokenPeriodRequest(RenewDelegationToken, version, correlationId,
+      clientId, hmac, renewPeriodMs)
 
   def decodeRenewDelegationTokenRequest(bytes: Array[Byte])
       : (Int, Int, Array[Byte], Long) =
-    decodeTokenPeriodRequest(bytes, RenewDelegationTokenApiKey,
-      RenewDelegationTokenMaxVersion, "RenewDelegationToken")
+    decodeTokenPeriodRequest(bytes, RenewDelegationToken)
 
   def encodeExpireDelegationTokenRequest(version: Int, correlationId: Int,
       clientId: String, hmac: Array[Byte],
       expiryTimePeriodMs: Long): Array[Byte] =
-    encodeTokenPeriodRequest(ExpireDelegationTokenApiKey,
-      ExpireDelegationTokenMaxVersion, version, correlationId, clientId,
-      hmac, expiryTimePeriodMs)
+    encodeTokenPeriodRequest(ExpireDelegationToken, version, correlationId,
+      clientId, hmac, expiryTimePeriodMs)
 
   def decodeExpireDelegationTokenRequest(bytes: Array[Byte])
       : (Int, Int, Array[Byte], Long) =
-    decodeTokenPeriodRequest(bytes, ExpireDelegationTokenApiKey,
-      ExpireDelegationTokenMaxVersion, "ExpireDelegationToken")
+    decodeTokenPeriodRequest(bytes, ExpireDelegationToken)
 
   /** Renew/Expire responses: error, expiry_timestamp, throttle. */
   def encodeTokenExpiryResponse(version: Int, correlationId: Int,
-      errorCode: Int, expiryTs: Long): Array[Byte] = {
-    val flexible = version >= 2
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible)
-    val w = new WR(out, flexible)
-    w.i16(errorCode)
-    w.i64(expiryTs)
-    w.i32(0)
-    w.tags()
-    frame(out.toByteArray)
-  }
+      errorCode: Int, expiryTs: Long,
+      api: Api = RenewDelegationToken): Array[Byte] =
+    writeResponse(api, version, correlationId) { w =>
+      w.i16(errorCode)
+      w.i64(expiryTs)
+      w.i32(0)
+      w.tags()
+    }
 
   /** (correlationId, errorCode, expiryTs). */
-  def decodeTokenExpiryResponse(bytes: Array[Byte], version: Int)
-      : (Int, Int, Long) = {
-    val flexible = version >= 2
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+  def decodeTokenExpiryResponse(bytes: Array[Byte], version: Int,
+      api: Api = RenewDelegationToken): (Int, Int, Long) = {
+    val (correlationId, r) = readResponse(api, version, bytes)
     val err = r.i16()
     val expiry = r.i64()
     r.i32()
@@ -7918,39 +6719,25 @@ object KafkaWire {
 
   /** DescribeDelegationToken request: owners (null = all). */
   def encodeDescribeDelegationTokenRequest(version: Int, correlationId: Int,
-      clientId: String, owners: Option[Seq[String]]): Array[Byte] = {
-    val flexible = version >= 2
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, DescribeDelegationTokenApiKey, version, correlationId,
-      clientId, flexible)
-    val w = new WR(out, flexible)
-    owners match {
-      case None => w.count(-1)
-      case Some(os) =>
-        w.count(os.length)
-        os.foreach { o =>
-          val (t, n) = splitPrincipal(o)
-          w.str(t); w.str(n); w.tags()
-        }
+      clientId: String, owners: Option[Seq[String]]): Array[Byte] =
+    writeRequest(DescribeDelegationToken, version, correlationId, clientId) { w =>
+      owners match {
+        case None => w.count(-1)
+        case Some(os) =>
+          w.count(os.length)
+          os.foreach { o =>
+            val (t, n) = splitPrincipal(o)
+            w.str(t); w.str(n); w.tags()
+          }
+      }
+      w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   /** (version, correlationId, owners). */
   def decodeDescribeDelegationTokenRequest(bytes: Array[Byte])
       : (Int, Int, Option[Seq[String]]) = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == DescribeDelegationTokenApiKey,
-      "not a DescribeDelegationToken request")
-    val version = buf.getShort.toInt
-    require(version >= 0 && version <= DescribeDelegationTokenMaxVersion,
-      s"unsupported DescribeDelegationToken version $version")
-    val flexible = version >= 2
-    val correlationId = buf.getInt
-    readNullableString(buf)
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (RequestHeader(version, correlationId, _), r) =
+      readRequest(bytes, DescribeDelegationToken)
     val n = r.count()
     val owners =
       if (n < 0) None
@@ -7968,43 +6755,35 @@ object KafkaWire {
       renewers: Seq[String])
 
   def encodeDescribeDelegationTokenResponse(version: Int, correlationId: Int,
-      errorCode: Int, tokens: Seq[DescribedToken]): Array[Byte] = {
-    val flexible = version >= 2
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible)
-    val w = new WR(out, flexible)
-    w.i16(errorCode)
-    w.count(tokens.length)
-    tokens.foreach { t =>
-      val (ot, on) = splitPrincipal(t.owner)
-      w.str(ot); w.str(on)
-      if (version >= 3) {
-        val (rt, rn) = splitPrincipal(t.requester)
-        w.str(rt); w.str(rn)
+      errorCode: Int, tokens: Seq[DescribedToken]): Array[Byte] =
+    writeResponse(DescribeDelegationToken, version, correlationId) { w =>
+      w.i16(errorCode)
+      w.count(tokens.length)
+      tokens.foreach { t =>
+        val (ot, on) = splitPrincipal(t.owner)
+        w.str(ot); w.str(on)
+        if (version >= 3) {
+          val (rt, rn) = splitPrincipal(t.requester)
+          w.str(rt); w.str(rn)
+        }
+        w.i64(t.issueTs); w.i64(t.expiryTs); w.i64(t.maxTs)
+        w.str(t.tokenId)
+        w.bytes(t.hmac)
+        w.count(t.renewers.length)
+        t.renewers.foreach { rr =>
+          val (rt, rn) = splitPrincipal(rr)
+          w.str(rt); w.str(rn); w.tags()
+        }
+        w.tags()
       }
-      w.i64(t.issueTs); w.i64(t.expiryTs); w.i64(t.maxTs)
-      w.str(t.tokenId)
-      w.bytes(t.hmac)
-      w.count(t.renewers.length)
-      t.renewers.foreach { rr =>
-        val (rt, rn) = splitPrincipal(rr)
-        w.str(rt); w.str(rn); w.tags()
-      }
+      w.i32(0)
       w.tags()
     }
-    w.i32(0)
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   /** (correlationId, errorCode, tokens). */
   def decodeDescribeDelegationTokenResponse(bytes: Array[Byte], version: Int)
       : (Int, Int, Seq[DescribedToken]) = {
-    val flexible = version >= 2
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    if (flexible) readTags(buf)
-    val r = new RD(buf, flexible)
+    val (correlationId, r) = readResponse(DescribeDelegationToken, version, bytes)
     val err = r.i16()
     val tokens = (0 until r.count()).map { _ =>
       val owner = joinPrincipal(r.str(), r.str())
@@ -8030,45 +6809,28 @@ object KafkaWire {
   // at every version; v1 adds the per-replica fetch/caught-up
   // timestamps. --
 
-  val DescribeQuorumApiKey = 55
-  val DescribeQuorumMaxVersion = 1
-
   /** The KRaft metadata log's singleton coordinate. */
   val ClusterMetadataTopic = "__cluster_metadata"
 
   def encodeDescribeQuorumRequest(version: Int, correlationId: Int,
       clientId: String,
       topics: Seq[(String, Seq[Int])] = Seq((ClusterMetadataTopic, Seq(0))))
-      : Array[Byte] = {
-    require(version >= 0 && version <= DescribeQuorumMaxVersion,
-      s"unsupported DescribeQuorum version $version")
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, DescribeQuorumApiKey, version, correlationId,
-      clientId, flexible = true)
-    val w = new WR(out, true)
-    w.count(topics.length)
-    topics.foreach { case (name, parts) =>
-      w.str(name)
-      w.count(parts.length)
-      parts.foreach { p => w.i32(p); w.tags() }
+      : Array[Byte] =
+    writeRequest(DescribeQuorum, version, correlationId, clientId) { w =>
+      w.count(topics.length)
+      topics.foreach { case (name, parts) =>
+        w.str(name)
+        w.count(parts.length)
+        parts.foreach { p => w.i32(p); w.tags() }
+        w.tags()
+      }
       w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   def decodeDescribeQuorumRequest(bytes: Array[Byte])
       : (Int, Int, Seq[(String, Seq[Int])]) = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == DescribeQuorumApiKey,
-      "not a DescribeQuorum request")
-    val version = buf.getShort.toInt
-    require(version >= 0 && version <= DescribeQuorumMaxVersion,
-      s"unsupported DescribeQuorum version $version")
-    val correlationId = buf.getInt
-    readNullableString(buf)
-    readTags(buf)
-    val r = new RD(buf, true)
+    val (RequestHeader(version, correlationId, _), r) =
+      readRequest(bytes, DescribeQuorum)
     val topics = (0 until r.count()).map { _ =>
       val name = r.str()
       val parts = (0 until r.count()).map { _ =>
@@ -8092,50 +6854,44 @@ object KafkaWire {
   def encodeDescribeQuorumResponse(version: Int, correlationId: Int,
       errorCode: Int,
       topics: Seq[(String, Seq[(Int, Int, Int, Int, Long,
-        Seq[QuorumReplica], Seq[QuorumReplica])])]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible = true)
-    val w = new WR(out, true)
-    w.i16(errorCode)
-    def writeReplicas(rs: Seq[QuorumReplica]): Unit = {
-      w.count(rs.length)
-      rs.foreach { rep =>
-        w.i32(rep.replicaId)
-        w.i64(rep.logEndOffset)
-        if (version >= 1) {
-          w.i64(rep.lastFetchTimestamp)
-          w.i64(rep.lastCaughtUpTimestamp)
+        Seq[QuorumReplica], Seq[QuorumReplica])])]): Array[Byte] =
+    writeResponse(DescribeQuorum, version, correlationId) { w =>
+      w.i16(errorCode)
+      def writeReplicas(rs: Seq[QuorumReplica]): Unit = {
+        w.count(rs.length)
+        rs.foreach { rep =>
+          w.i32(rep.replicaId)
+          w.i64(rep.logEndOffset)
+          if (version >= 1) {
+            w.i64(rep.lastFetchTimestamp)
+            w.i64(rep.lastCaughtUpTimestamp)
+          }
+          w.tags()
         }
-        w.tags()
       }
-    }
-    w.count(topics.length)
-    topics.foreach { case (name, parts) =>
-      w.str(name)
-      w.count(parts.length)
-      parts.foreach { case (p, err, leaderId, leaderEpoch, hw, voters, obs) =>
-        w.i32(p)
-        w.i16(err)
-        w.i32(leaderId)
-        w.i32(leaderEpoch)
-        w.i64(hw)
-        writeReplicas(voters)
-        writeReplicas(obs)
+      w.count(topics.length)
+      topics.foreach { case (name, parts) =>
+        w.str(name)
+        w.count(parts.length)
+        parts.foreach { case (p, err, leaderId, leaderEpoch, hw, voters, obs) =>
+          w.i32(p)
+          w.i16(err)
+          w.i32(leaderId)
+          w.i32(leaderEpoch)
+          w.i64(hw)
+          writeReplicas(voters)
+          writeReplicas(obs)
+          w.tags()
+        }
         w.tags()
       }
       w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   def decodeDescribeQuorumResponse(version: Int, bytes: Array[Byte])
       : (Int, Int, Seq[(String, Seq[(Int, Int, Int, Int, Long,
         Seq[QuorumReplica], Seq[QuorumReplica])])]) = {
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    readTags(buf)
-    val r = new RD(buf, true)
+    val (correlationId, r) = readResponse(DescribeQuorum, version, bytes)
     val err = r.i16()
     def readReplicas(): Seq[QuorumReplica] =
       (0 until r.count()).map { _ =>
@@ -8165,9 +6921,6 @@ object KafkaWire {
   // allow_downgrade per update, v1 replaces it with upgrade_type and
   // adds validate_only. --
 
-  val UpdateFeaturesApiKey = 57
-  val UpdateFeaturesMaxVersion = 1
-
   /** Updates: (feature, maxVersionLevel, upgradeType) — v0's
     * allow_downgrade=true arrives as [[Features.SafeDowngrade]]. */
   case class UpdateFeaturesRequest(version: Int, correlationId: Int,
@@ -8178,39 +6931,26 @@ object KafkaWire {
       clientId: String, timeoutMs: Int,
       updates: Seq[(String, Int, Int)],
       validateOnly: Boolean = false): Array[Byte] = {
-    require(version >= 0 && version <= UpdateFeaturesMaxVersion,
-      s"unsupported UpdateFeatures version $version")
     require(version >= 1 || !validateOnly,
       "UpdateFeatures v0 has no validate_only field")
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, UpdateFeaturesApiKey, version, correlationId,
-      clientId, flexible = true)
-    val w = new WR(out, true)
-    w.i32(timeoutMs)
-    w.count(updates.length)
-    updates.foreach { case (feature, level, upgradeType) =>
-      w.str(feature)
-      w.i16(level)
-      if (version == 0) w.bool(upgradeType != Features.Upgrade)
-      else w.i8(upgradeType)
+    writeRequest(UpdateFeatures, version, correlationId, clientId) { w =>
+      w.i32(timeoutMs)
+      w.count(updates.length)
+      updates.foreach { case (feature, level, upgradeType) =>
+        w.str(feature)
+        w.i16(level)
+        if (version == 0) w.bool(upgradeType != Features.Upgrade)
+        else w.i8(upgradeType)
+        w.tags()
+      }
+      if (version >= 1) w.bool(validateOnly)
       w.tags()
     }
-    if (version >= 1) w.bool(validateOnly)
-    w.tags()
-    frame(out.toByteArray)
   }
 
   def decodeUpdateFeaturesRequest(bytes: Array[Byte]): UpdateFeaturesRequest = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == UpdateFeaturesApiKey,
-      "not an UpdateFeatures request")
-    val version = buf.getShort.toInt
-    require(version >= 0 && version <= UpdateFeaturesMaxVersion,
-      s"unsupported UpdateFeatures version $version")
-    val correlationId = buf.getInt
-    val clientId = readNullableString(buf)
-    readTags(buf)
-    val r = new RD(buf, true)
+    val (RequestHeader(version, correlationId, clientId), r) =
+      readRequest(bytes, UpdateFeatures)
     val timeoutMs = r.i32()
     val updates = (0 until r.count()).map { _ =>
       val feature = r.str()
@@ -8231,27 +6971,21 @@ object KafkaWire {
   /** results: (feature, errorCode, errorMessage|null). */
   def encodeUpdateFeaturesResponse(version: Int, correlationId: Int,
       errorCode: Int, errorMessage: String,
-      results: Seq[(String, Int, String)]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible = true)
-    val w = new WR(out, true)
-    w.i32(0) // throttle_time_ms
-    w.i16(errorCode)
-    w.str(errorMessage)
-    w.count(results.length)
-    results.foreach { case (feature, err, msg) =>
-      w.str(feature); w.i16(err); w.str(msg); w.tags()
+      results: Seq[(String, Int, String)]): Array[Byte] =
+    writeResponse(UpdateFeatures, version, correlationId) { w =>
+      w.i32(0) // throttle_time_ms
+      w.i16(errorCode)
+      w.str(errorMessage)
+      w.count(results.length)
+      results.foreach { case (feature, err, msg) =>
+        w.str(feature); w.i16(err); w.str(msg); w.tags()
+      }
+      w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   def decodeUpdateFeaturesResponse(bytes: Array[Byte])
       : (Int, Int, String, Seq[(String, Int, String)]) = {
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    readTags(buf)
-    val r = new RD(buf, true)
+    val (correlationId, r) = readResponse(UpdateFeatures, 0, bytes)
     r.i32() // throttle
     val err = r.i16()
     val msg = r.str()
@@ -8275,57 +7009,39 @@ object KafkaWire {
   // by name + topic_id in responses, mirroring the share data path's
   // id discipline. --
 
-  val DescribeShareGroupOffsetsApiKey = 90
-  val DescribeShareGroupOffsetsMaxVersion = 0
-  val AlterShareGroupOffsetsApiKey = 91
-  val AlterShareGroupOffsetsMaxVersion = 0
-  val DeleteShareGroupOffsetsApiKey = 92
-  val DeleteShareGroupOffsetsMaxVersion = 0
-
   /** Request: per group, the topics to describe — `topics = null`
     * asks for EVERY topic the group has share state on; within a
     * topic, `partitions = null` asks for every partition. */
   def encodeDescribeShareGroupOffsetsRequest(correlationId: Int,
       clientId: String,
       groups: Seq[(String, Option[Seq[(String, Option[Seq[Int]])]])])
-      : Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, DescribeShareGroupOffsetsApiKey, 0, correlationId,
-      clientId, flexible = true)
-    val w = new WR(out, true)
-    w.count(groups.length)
-    groups.foreach { case (group, topicsOpt) =>
-      w.str(group)
-      topicsOpt match {
-        case None => w.count(-1)
-        case Some(topics) =>
-          w.count(topics.length)
-          topics.foreach { case (name, partsOpt) =>
-            w.str(name)
-            partsOpt match {
-              case None => w.count(-1)
-              case Some(ps) => w.count(ps.length); ps.foreach(w.i32)
+      : Array[Byte] =
+    writeRequest(DescribeShareGroupOffsets, 0, correlationId, clientId) { w =>
+      w.count(groups.length)
+      groups.foreach { case (group, topicsOpt) =>
+        w.str(group)
+        topicsOpt match {
+          case None => w.count(-1)
+          case Some(topics) =>
+            w.count(topics.length)
+            topics.foreach { case (name, partsOpt) =>
+              w.str(name)
+              partsOpt match {
+                case None => w.count(-1)
+                case Some(ps) => w.count(ps.length); ps.foreach(w.i32)
+              }
+              w.tags()
             }
-            w.tags()
-          }
+        }
+        w.tags()
       }
       w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   def decodeDescribeShareGroupOffsetsRequest(bytes: Array[Byte])
       : (Int, Seq[(String, Option[Seq[(String, Option[Seq[Int]])]])]) = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == DescribeShareGroupOffsetsApiKey,
-      "not a DescribeShareGroupOffsets request")
-    require(buf.getShort.toInt == 0,
-      "unsupported DescribeShareGroupOffsets version")
-    val correlationId = buf.getInt
-    readNullableString(buf)
-    readTags(buf)
-    val r = new RD(buf, true)
+    val (RequestHeader(_, correlationId, _), r) =
+      readRequest(bytes, DescribeShareGroupOffsets)
     val groups = (0 until r.count()).map { _ =>
       val group = r.str()
       val nt = r.count()
@@ -8355,43 +7071,37 @@ object KafkaWire {
     * topics carry (name, partitions). */
   def encodeDescribeShareGroupOffsetsResponse(correlationId: Int,
       groups: Seq[(String, Int, String, Seq[(String, Seq[ShareOffsetRow])])])
-      : Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible = true)
-    val w = new WR(out, true)
-    w.i32(0) // throttle_time_ms
-    w.count(groups.length)
-    groups.foreach { case (group, gErr, gMsg, topics) =>
-      w.str(group)
-      w.i16(gErr)
-      w.str(gMsg)
-      w.count(topics.length)
-      topics.foreach { case (name, parts) =>
-        w.str(name)
-        w.uuid(idOfName(name))
-        w.count(parts.length)
-        parts.foreach { p =>
-          w.i32(p.partition)
-          w.i64(p.startOffset)
-          w.i32(p.leaderEpoch)
-          w.i16(p.errorCode)
-          w.str(p.errorMessage)
+      : Array[Byte] =
+    writeResponse(DescribeShareGroupOffsets, 0, correlationId) { w =>
+      w.i32(0) // throttle_time_ms
+      w.count(groups.length)
+      groups.foreach { case (group, gErr, gMsg, topics) =>
+        w.str(group)
+        w.i16(gErr)
+        w.str(gMsg)
+        w.count(topics.length)
+        topics.foreach { case (name, parts) =>
+          w.str(name)
+          w.uuid(idOfName(name))
+          w.count(parts.length)
+          parts.foreach { p =>
+            w.i32(p.partition)
+            w.i64(p.startOffset)
+            w.i32(p.leaderEpoch)
+            w.i16(p.errorCode)
+            w.str(p.errorMessage)
+            w.tags()
+          }
           w.tags()
         }
         w.tags()
       }
       w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   def decodeDescribeShareGroupOffsetsResponse(bytes: Array[Byte])
       : (Int, Seq[(String, Int, String, Seq[(String, Seq[ShareOffsetRow])])]) = {
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    readTags(buf)
-    val r = new RD(buf, true)
+    val (correlationId, r) = readResponse(DescribeShareGroupOffsets, 0, bytes)
     r.i32() // throttle
     val groups = (0 until r.count()).map { _ =>
       val group = r.str()
@@ -8418,34 +7128,23 @@ object KafkaWire {
   /** Topics: (name, Seq((partition, startOffset))). */
   def encodeAlterShareGroupOffsetsRequest(correlationId: Int,
       clientId: String, groupId: String,
-      topics: Seq[(String, Seq[(Int, Long)])]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, AlterShareGroupOffsetsApiKey, 0, correlationId,
-      clientId, flexible = true)
-    val w = new WR(out, true)
-    w.str(groupId)
-    w.count(topics.length)
-    topics.foreach { case (name, parts) =>
-      w.str(name)
-      w.count(parts.length)
-      parts.foreach { case (p, off) => w.i32(p); w.i64(off); w.tags() }
+      topics: Seq[(String, Seq[(Int, Long)])]): Array[Byte] =
+    writeRequest(AlterShareGroupOffsets, 0, correlationId, clientId) { w =>
+      w.str(groupId)
+      w.count(topics.length)
+      topics.foreach { case (name, parts) =>
+        w.str(name)
+        w.count(parts.length)
+        parts.foreach { case (p, off) => w.i32(p); w.i64(off); w.tags() }
+        w.tags()
+      }
       w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   def decodeAlterShareGroupOffsetsRequest(bytes: Array[Byte])
       : (Int, String, Seq[(String, Seq[(Int, Long)])]) = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == AlterShareGroupOffsetsApiKey,
-      "not an AlterShareGroupOffsets request")
-    require(buf.getShort.toInt == 0,
-      "unsupported AlterShareGroupOffsets version")
-    val correlationId = buf.getInt
-    readNullableString(buf)
-    readTags(buf)
-    val r = new RD(buf, true)
+    val (RequestHeader(_, correlationId, _), r) =
+      readRequest(bytes, AlterShareGroupOffsets)
     val groupId = r.str()
     val topics = (0 until r.count()).map { _ =>
       val name = r.str()
@@ -8462,33 +7161,27 @@ object KafkaWire {
   /** Topics: (name, Seq((partition, errorCode, errorMessage))). */
   def encodeAlterShareGroupOffsetsResponse(correlationId: Int,
       errorCode: Int, errorMessage: String,
-      topics: Seq[(String, Seq[(Int, Int, String)])]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible = true)
-    val w = new WR(out, true)
-    w.i32(0) // throttle_time_ms
-    w.i16(errorCode)
-    w.str(errorMessage)
-    w.count(topics.length)
-    topics.foreach { case (name, parts) =>
-      w.str(name)
-      w.uuid(idOfName(name))
-      w.count(parts.length)
-      parts.foreach { case (p, err, msg) =>
-        w.i32(p); w.i16(err); w.str(msg); w.tags()
+      topics: Seq[(String, Seq[(Int, Int, String)])]): Array[Byte] =
+    writeResponse(AlterShareGroupOffsets, 0, correlationId) { w =>
+      w.i32(0) // throttle_time_ms
+      w.i16(errorCode)
+      w.str(errorMessage)
+      w.count(topics.length)
+      topics.foreach { case (name, parts) =>
+        w.str(name)
+        w.uuid(idOfName(name))
+        w.count(parts.length)
+        parts.foreach { case (p, err, msg) =>
+          w.i32(p); w.i16(err); w.str(msg); w.tags()
+        }
+        w.tags()
       }
       w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   def decodeAlterShareGroupOffsetsResponse(bytes: Array[Byte])
       : (Int, Int, String, Seq[(String, Seq[(Int, Int, String)])]) = {
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    readTags(buf)
-    val r = new RD(buf, true)
+    val (correlationId, r) = readResponse(AlterShareGroupOffsets, 0, bytes)
     r.i32() // throttle
     val err = r.i16()
     val msg = r.str()
@@ -8508,29 +7201,18 @@ object KafkaWire {
   /** Deletion is TOPIC-granular (the whole group×topic share state),
     * matching the admin tool — there is no per-partition delete. */
   def encodeDeleteShareGroupOffsetsRequest(correlationId: Int,
-      clientId: String, groupId: String, topics: Seq[String]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    requestHeader(out, DeleteShareGroupOffsetsApiKey, 0, correlationId,
-      clientId, flexible = true)
-    val w = new WR(out, true)
-    w.str(groupId)
-    w.count(topics.length)
-    topics.foreach { name => w.str(name); w.tags() }
-    w.tags()
-    frame(out.toByteArray)
-  }
+      clientId: String, groupId: String, topics: Seq[String]): Array[Byte] =
+    writeRequest(DeleteShareGroupOffsets, 0, correlationId, clientId) { w =>
+      w.str(groupId)
+      w.count(topics.length)
+      topics.foreach { name => w.str(name); w.tags() }
+      w.tags()
+    }
 
   def decodeDeleteShareGroupOffsetsRequest(bytes: Array[Byte])
       : (Int, String, Seq[String]) = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == DeleteShareGroupOffsetsApiKey,
-      "not a DeleteShareGroupOffsets request")
-    require(buf.getShort.toInt == 0,
-      "unsupported DeleteShareGroupOffsets version")
-    val correlationId = buf.getInt
-    readNullableString(buf)
-    readTags(buf)
-    val r = new RD(buf, true)
+    val (RequestHeader(_, correlationId, _), r) =
+      readRequest(bytes, DeleteShareGroupOffsets)
     val groupId = r.str()
     val topics = (0 until r.count()).map { _ =>
       val name = r.str(); r.tags(); name
@@ -8542,31 +7224,25 @@ object KafkaWire {
   /** Topics: (name, errorCode, errorMessage). */
   def encodeDeleteShareGroupOffsetsResponse(correlationId: Int,
       errorCode: Int, errorMessage: String,
-      topics: Seq[(String, Int, String)]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    responseHeader(out, correlationId, flexible = true)
-    val w = new WR(out, true)
-    w.i32(0) // throttle_time_ms
-    w.i16(errorCode)
-    w.str(errorMessage)
-    w.count(topics.length)
-    topics.foreach { case (name, err, msg) =>
-      w.str(name)
-      w.uuid(idOfName(name))
-      w.i16(err)
-      w.str(msg)
+      topics: Seq[(String, Int, String)]): Array[Byte] =
+    writeResponse(DeleteShareGroupOffsets, 0, correlationId) { w =>
+      w.i32(0) // throttle_time_ms
+      w.i16(errorCode)
+      w.str(errorMessage)
+      w.count(topics.length)
+      topics.foreach { case (name, err, msg) =>
+        w.str(name)
+        w.uuid(idOfName(name))
+        w.i16(err)
+        w.str(msg)
+        w.tags()
+      }
       w.tags()
     }
-    w.tags()
-    frame(out.toByteArray)
-  }
 
   def decodeDeleteShareGroupOffsetsResponse(bytes: Array[Byte])
       : (Int, Int, String, Seq[(String, Int, String)]) = {
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    readTags(buf)
-    val r = new RD(buf, true)
+    val (correlationId, r) = readResponse(DeleteShareGroupOffsets, 0, bytes)
     r.i32() // throttle
     val err = r.i16()
     val msg = r.str()

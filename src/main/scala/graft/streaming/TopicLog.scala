@@ -1800,11 +1800,6 @@ object TopicLog {
   private def renderOffsetMap(m: Map[Int, Long]): String =
     m.toSeq.sorted.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
 
-  private def writeOffsetMap(path: Path, m: Map[Int, Long]): Unit = {
-    Files.createDirectories(path.getParent)
-    Files.writeString(path, renderOffsetMap(m))
-  }
-
   private def readOffsetMap(path: Path): Option[Map[Int, Long]] =
     if (!Files.exists(path)) None
     else {

@@ -3,6 +3,7 @@ package graft.streaming
 import java.io.{DataInputStream, EOFException}
 import java.net.{ServerSocket, Socket, SocketException}
 import java.util.concurrent.Executors
+import scala.util.control.NonFatal
 
 /** A TCP accept loop serving the Kafka-wire handlers — the
   * Spark-native analog of the reference's connection handler (ref:
@@ -132,7 +133,7 @@ class WireServer(private val broker: Broker,
             broker.retireManifestHistory()
           } catch {
             case e: Exception if running =>
-              System.err.println(s"graft WireServer maintenance tick error: $e")
+              WireServer.log.warn("maintenance tick failed: {}", e.toString)
           } finally tickRunning.set(false)
       })
     }
@@ -158,7 +159,7 @@ class WireServer(private val broker: Broker,
             case e: Throwable if running =>
               // a transient accept failure must not silently kill the
               // acceptor — the server would look alive and serve nothing
-              System.err.println(s"graft WireServer accept error: $e")
+              WireServer.log.warn("accept failed: {}", e.toString)
           }
     })
     this
@@ -197,7 +198,13 @@ class WireServer(private val broker: Broker,
       var open = true
       while (running && open) {
         val size = in.readInt()
-        require(size >= 0 && size <= 64 * 1024 * 1024, s"bad frame size $size")
+        // before authentication only SASL-sized frames are read, so an
+        // unauthenticated peer cannot make the listener allocate a
+        // produce-sized buffer (Kafka's sasl.server.max.receive.size)
+        val maxSize =
+          if (authenticated) WireServer.MaxFrameBytes
+          else WireServer.MaxPreAuthFrameBytes
+        require(size >= 0 && size <= maxSize, s"bad frame size $size")
         val payload = new Array[Byte](size)
         in.readFully(payload)
         if (rawSasl) {
@@ -242,7 +249,7 @@ class WireServer(private val broker: Broker,
           // other connection keep serving.
           try {
             apiKey match {
-              case KafkaWire.SaslHandshakeApiKey =>
+              case KafkaWire.SaslHandshake.key =>
                 val (version, corr, wanted) =
                   KafkaWire.decodeSaslHandshakeRequest(framed)
                 val resp =
@@ -276,7 +283,7 @@ class WireServer(private val broker: Broker,
                       WireServer.Mechanisms)
                   }
                 out.write(resp); out.flush()
-              case KafkaWire.SaslAuthenticateApiKey =>
+              case KafkaWire.SaslAuthenticate.key =>
                 val (version, corr, token) =
                   KafkaWire.decodeSaslAuthenticateRequest(framed)
                 def answer(err: Int, msg: String, reply: Array[Byte]): Unit = {
@@ -319,7 +326,7 @@ class WireServer(private val broker: Broker,
                   authFailureDelay()
                   open = false
                 }
-              case KafkaWire.ApiVersionsApiKey =>
+              case KafkaWire.ApiVersions.key =>
                 // allowed pre-auth: clients negotiate versions first
                 broker.authCtx.set((principal, clientHost))
                 broker.authKindCtx.set(authKind)
@@ -341,13 +348,13 @@ class WireServer(private val broker: Broker,
                 // request_percentage: handler wall time metered per
                 // request; a bound quota holds the response (channel
                 // muting) before it leaves
-                broker.requestTimeHold(clientIdOf(payload),
+                broker.requestTimeHold(clientIdOf(framed),
                   (System.nanoTime() - t0) / 1000000L)
                 out.write(resp); out.flush()
             }
           } catch {
             case e: Exception =>
-              System.err.println(s"graft WireServer request error (api_key $apiKey): $e")
+              logRequestFailure(apiKey, framed, clientHost, e)
               open = false
           }
         }
@@ -356,20 +363,30 @@ class WireServer(private val broker: Broker,
       case _: EOFException => () // client closed between frames
       case _: SocketException => ()
       case e: Exception =>
-        System.err.println(s"graft WireServer connection error: $e")
+        WireServer.log.warn("connection closed client_host={} error={}",
+          clientHost: Any, e.toString: Any)
     } finally sock.close()
   }
 
-  /** The request header's client_id, parsed without a full decode
-    * (header v1/v2: api_key i16, version i16, correlation i32, then
-    * the INT16-length nullable string) — the quota entity's client
-    * axis. Malformed headers answer "" rather than failing the quota
-    * path; the handler's own decode reports the real error. */
-  private def clientIdOf(payload: Array[Byte]): String = {
-    if (payload.length < 10) return ""
-    val len = ((payload(8) & 0xff) << 8) | (payload(9) & 0xff)
-    if (len == 0xffff || len == 0 || payload.length < 10 + len) ""
-    else new String(payload, 10, len, "UTF-8")
+  /** The request header's client_id, without a full decode — the
+    * quota entity's client axis. A null id or a malformed header
+    * answers "" rather than failing the quota path; the handler's own
+    * decode reports the real error. */
+  private def clientIdOf(framed: Array[Byte]): String =
+    try Option(KafkaWire.peekRequestHeader(framed).clientId).getOrElse("")
+    catch { case NonFatal(_) => "" }
+
+  /** One structured line per request that fails and closes its
+    * connection, keyed by what the header says (-1 where the header
+    * itself is unreadable). */
+  private def logRequestFailure(apiKey: Int, framed: Array[Byte],
+      clientHost: String, e: Exception): Unit = {
+    val h = try Some(KafkaWire.peekRequestHeader(framed))
+      catch { case NonFatal(_) => None }
+    WireServer.log.warn(
+      "request failed, connection closed api_key={} version={} correlation_id={} client_host={} error={}",
+      Array[AnyRef](Int.box(apiKey), Int.box(h.fold(-1)(_.version)),
+        Int.box(h.fold(-1)(_.correlationId)), clientHost, e.toString): _*)
   }
 
   /** Check one RFC 4616 PLAIN token against the credential map;
@@ -525,6 +542,16 @@ class WireServer(private val broker: Broker,
 }
 
 object WireServer {
+  private val log = org.slf4j.LoggerFactory.getLogger(classOf[WireServer])
+
+  /** Largest request frame an authenticated (or unsecured) connection
+    * may send. */
+  val MaxFrameBytes: Int = 64 * 1024 * 1024
+
+  /** Largest frame a secured listener reads before SASL completes —
+    * Kafka's sasl.server.max.receive.size default (512 KiB). */
+  val MaxPreAuthFrameBytes: Int = 512 * 1024
+
   /** Delay before closing a connection that failed SASL authentication
     * (Kafka's connection.failed.authentication.delay.ms default is
     * 100 ms). Overridable down for tests would be over-engineering:
@@ -549,129 +576,98 @@ object WireServer {
 
   /** One served Kafka API; `handler` is None only for the SASL pair,
     * which the connection loop answers from its own SASL state. */
-  final case class ApiSpec(key: Int, name: String, maxVersion: Int,
-      handler: Option[Handler])
+  final case class ApiSpec(api: KafkaWire.Api, handler: Option[Handler]) {
+    def key: Int = api.key
+    def name: String = api.name
+    def maxVersion: Int = api.maxVersion
+  }
 
-  private def api(key: Int, name: String, maxVersion: Int)(h: Handler) =
-    ApiSpec(key, name, maxVersion, Some(h))
+  private def api(a: KafkaWire.Api)(h: Handler) = ApiSpec(a, Some(h))
 
   /** What the listener speaks, in api-key order: only dispatchable
     * keys, at only their implemented versions, so a client that picks
     * the highest mutually supported version always lands on one the
-    * codecs decode. Adding an API is one row here plus its codec in
-    * [[KafkaWire]]; ApiVersions, [[Broker.WireApis]] (and through it
-    * `broker_api_versions`) and [[Handlers]] all derive from it. */
+    * codecs decode. Adding an API is one [[KafkaWire.Api]] declaration
+    * (key, name, max version, first flexible version), one row here,
+    * and its codec bodies in [[KafkaWire]], which take their header,
+    * version check and flexible switch from the declaration;
+    * ApiVersions, [[Broker.WireApis]] (and through it
+    * `broker_api_versions`) and [[Handlers]] all derive from this
+    * table. */
   val Apis: IndexedSeq[ApiSpec] = {
     import KafkaWire._
     IndexedSeq(
-      api(0, "Produce", ProduceMaxVersion)(_.broker.handleProduce(_)),
-      api(1, "Fetch", FetchMaxVersion)(_.broker.handleFetch(_)),
-      api(2, "ListOffsets", ListOffsetsMaxVersion)(_.broker.handleListOffsets(_)),
-      api(3, "Metadata", MetadataMaxVersion)(_.handleMetadata(_)),
-      api(8, "OffsetCommit", OffsetCommitMaxVersion)(_.broker.handleOffsetCommit(_)),
-      api(9, "OffsetFetch", OffsetFetchMaxVersion)(_.broker.handleOffsetFetch(_)),
+      api(Produce)(_.broker.handleProduce(_)),
+      api(Fetch)(_.broker.handleFetch(_)),
+      api(ListOffsets)(_.broker.handleListOffsets(_)),
+      api(Metadata)(_.handleMetadata(_)),
+      api(OffsetCommit)(_.broker.handleOffsetCommit(_)),
+      api(OffsetFetch)(_.broker.handleOffsetFetch(_)),
       // single-broker: every key's coordinator is this server
-      api(10, "FindCoordinator", FindCoordinatorMaxVersion)((s, f) =>
+      api(FindCoordinator)((s, f) =>
         s.broker.handleFindCoordinator(f, s.advertisedHost, s.boundPort)),
-      api(11, "JoinGroup", JoinGroupMaxVersion)(_.broker.handleJoinGroup(_)),
-      api(12, "Heartbeat", HeartbeatMaxVersion)(_.broker.handleHeartbeat(_)),
-      api(13, "LeaveGroup", LeaveGroupMaxVersion)(_.broker.handleLeaveGroup(_)),
-      api(14, "SyncGroup", SyncGroupMaxVersion)(_.broker.handleSyncGroup(_)),
-      api(15, "DescribeGroups", DescribeGroupsMaxVersion)(
-        _.broker.handleDescribeGroups(_)),
-      api(16, "ListGroups", ListGroupsMaxVersion)(_.broker.handleListGroups(_)),
-      ApiSpec(17, "SaslHandshake", SaslHandshakeMaxVersion, None),
-      api(18, "ApiVersions", ApiVersionsMaxVersion)(_.handleApiVersions(_)),
-      api(19, "CreateTopics", CreateTopicsMaxVersion)(_.broker.handleCreateTopics(_)),
-      api(20, "DeleteTopics", DeleteTopicsMaxVersion)(_.broker.handleDeleteTopics(_)),
-      api(21, "DeleteRecords", DeleteRecordsMaxVersion)(
-        _.broker.handleDeleteRecords(_)),
-      api(22, "InitProducerId", InitProducerIdMaxVersion)(
-        _.broker.handleInitProducerId(_)),
-      api(23, "OffsetForLeaderEpoch", OffsetForLeaderEpochMaxVersion)(
-        _.broker.handleOffsetForLeaderEpoch(_)),
-      api(24, "AddPartitionsToTxn", AddPartitionsToTxnMaxVersion)(
-        _.broker.handleAddPartitionsToTxn(_)),
-      api(25, "AddOffsetsToTxn", AddOffsetsToTxnMaxVersion)(
-        _.broker.handleAddOffsetsToTxn(_)),
-      api(26, "EndTxn", EndTxnMaxVersion)(_.broker.handleEndTxn(_)),
-      api(28, "TxnOffsetCommit", TxnOffsetCommitMaxVersion)(
-        _.broker.handleTxnOffsetCommit(_)),
-      api(29, "DescribeAcls", DescribeAclsMaxVersion)(_.broker.handleDescribeAcls(_)),
-      api(30, "CreateAcls", CreateAclsMaxVersion)(_.broker.handleCreateAcls(_)),
-      api(31, "DeleteAcls", DeleteAclsMaxVersion)(_.broker.handleDeleteAcls(_)),
-      api(32, "DescribeConfigs", DescribeConfigsMaxVersion)((s, f) =>
+      api(JoinGroup)(_.broker.handleJoinGroup(_)),
+      api(Heartbeat)(_.broker.handleHeartbeat(_)),
+      api(LeaveGroup)(_.broker.handleLeaveGroup(_)),
+      api(SyncGroup)(_.broker.handleSyncGroup(_)),
+      api(DescribeGroups)(_.broker.handleDescribeGroups(_)),
+      api(ListGroups)(_.broker.handleListGroups(_)),
+      ApiSpec(SaslHandshake, None),
+      api(ApiVersions)(_.handleApiVersions(_)),
+      api(CreateTopics)(_.broker.handleCreateTopics(_)),
+      api(DeleteTopics)(_.broker.handleDeleteTopics(_)),
+      api(DeleteRecords)(_.broker.handleDeleteRecords(_)),
+      api(InitProducerId)(_.broker.handleInitProducerId(_)),
+      api(OffsetForLeaderEpoch)(_.broker.handleOffsetForLeaderEpoch(_)),
+      api(AddPartitionsToTxn)(_.broker.handleAddPartitionsToTxn(_)),
+      api(AddOffsetsToTxn)(_.broker.handleAddOffsetsToTxn(_)),
+      api(EndTxn)(_.broker.handleEndTxn(_)),
+      api(TxnOffsetCommit)(_.broker.handleTxnOffsetCommit(_)),
+      api(DescribeAcls)(_.broker.handleDescribeAcls(_)),
+      api(CreateAcls)(_.broker.handleCreateAcls(_)),
+      api(DeleteAcls)(_.broker.handleDeleteAcls(_)),
+      api(DescribeConfigs)((s, f) =>
         s.broker.handleDescribeConfigs(f, s.advertisedHost, s.boundPort)),
-      api(33, "AlterConfigs", AlterConfigsMaxVersion)(_.broker.handleAlterConfigs(_)),
-      api(35, "DescribeLogDirs", DescribeLogDirsMaxVersion)(
-        _.broker.handleDescribeLogDirs(_)),
-      ApiSpec(36, "SaslAuthenticate", SaslAuthenticateMaxVersion, None),
-      api(37, "CreatePartitions", CreatePartitionsMaxVersion)(
-        _.broker.handleCreatePartitions(_)),
-      api(38, "CreateDelegationToken", CreateDelegationTokenMaxVersion)(
-        _.broker.handleCreateDelegationToken(_)),
-      api(39, "RenewDelegationToken", RenewDelegationTokenMaxVersion)(
-        _.broker.handleRenewDelegationToken(_)),
-      api(40, "ExpireDelegationToken", ExpireDelegationTokenMaxVersion)(
-        _.broker.handleExpireDelegationToken(_)),
-      api(41, "DescribeDelegationToken", DescribeDelegationTokenMaxVersion)(
-        _.broker.handleDescribeDelegationToken(_)),
-      api(42, "DeleteGroups", DeleteGroupsMaxVersion)(_.broker.handleDeleteGroups(_)),
-      api(43, "ElectLeaders", ElectLeadersMaxVersion)(_.broker.handleElectLeaders(_)),
-      api(44, "IncrementalAlterConfigs", IncrementalAlterConfigsMaxVersion)(
-        _.broker.handleIncrementalAlterConfigs(_)),
-      api(45, "AlterPartitionReassignments",
-        AlterPartitionReassignmentsMaxVersion)(
-        _.broker.handleAlterPartitionReassignments(_)),
-      api(46, "ListPartitionReassignments", ListPartitionReassignmentsMaxVersion)(
-        _.broker.handleListPartitionReassignments(_)),
-      api(47, "OffsetDelete", OffsetDeleteMaxVersion)(_.broker.handleOffsetDelete(_)),
-      api(48, "DescribeClientQuotas", DescribeClientQuotasMaxVersion)(
-        _.broker.handleDescribeClientQuotas(_)),
-      api(49, "AlterClientQuotas", AlterClientQuotasMaxVersion)(
-        _.broker.handleAlterClientQuotas(_)),
-      api(50, "DescribeUserScramCredentials",
-        DescribeUserScramCredentialsMaxVersion)(_.handleDescribeUserScram(_)),
-      api(51, "AlterUserScramCredentials", AlterUserScramCredentialsMaxVersion)(
-        _.handleAlterUserScram(_)),
-      api(55, "DescribeQuorum", DescribeQuorumMaxVersion)(
-        _.broker.handleDescribeQuorum(_)),
-      api(57, "UpdateFeatures", UpdateFeaturesMaxVersion)(
-        _.broker.handleUpdateFeatures(_)),
-      api(60, "DescribeCluster", DescribeClusterMaxVersion)((s, f) =>
+      api(AlterConfigs)(_.broker.handleAlterConfigs(_)),
+      api(DescribeLogDirs)(_.broker.handleDescribeLogDirs(_)),
+      ApiSpec(SaslAuthenticate, None),
+      api(CreatePartitions)(_.broker.handleCreatePartitions(_)),
+      api(CreateDelegationToken)(_.broker.handleCreateDelegationToken(_)),
+      api(RenewDelegationToken)(_.broker.handleRenewDelegationToken(_)),
+      api(ExpireDelegationToken)(_.broker.handleExpireDelegationToken(_)),
+      api(DescribeDelegationToken)(_.broker.handleDescribeDelegationToken(_)),
+      api(DeleteGroups)(_.broker.handleDeleteGroups(_)),
+      api(ElectLeaders)(_.broker.handleElectLeaders(_)),
+      api(IncrementalAlterConfigs)(_.broker.handleIncrementalAlterConfigs(_)),
+      api(AlterPartitionReassignments)(_.broker.handleAlterPartitionReassignments(_)),
+      api(ListPartitionReassignments)(_.broker.handleListPartitionReassignments(_)),
+      api(OffsetDelete)(_.broker.handleOffsetDelete(_)),
+      api(DescribeClientQuotas)(_.broker.handleDescribeClientQuotas(_)),
+      api(AlterClientQuotas)(_.broker.handleAlterClientQuotas(_)),
+      api(DescribeUserScramCredentials)(_.handleDescribeUserScram(_)),
+      api(AlterUserScramCredentials)(_.handleAlterUserScram(_)),
+      api(DescribeQuorum)(_.broker.handleDescribeQuorum(_)),
+      api(UpdateFeatures)(_.broker.handleUpdateFeatures(_)),
+      api(DescribeCluster)((s, f) =>
         s.broker.handleDescribeCluster(f, s.advertisedHost, s.boundPort)),
-      api(61, "DescribeProducers", DescribeProducersMaxVersion)(
-        _.broker.handleDescribeProducers(_)),
-      api(65, "DescribeTransactions", DescribeTransactionsMaxVersion)(
-        _.broker.handleDescribeTransactions(_)),
-      api(66, "ListTransactions", ListTransactionsMaxVersion)(
-        _.broker.handleListTransactions(_)),
-      api(68, "ConsumerGroupHeartbeat", ConsumerGroupHeartbeatMaxVersion)(
-        _.broker.handleConsumerGroupHeartbeat(_)),
-      api(69, "ConsumerGroupDescribe", ConsumerGroupDescribeMaxVersion)(
-        _.broker.handleConsumerGroupDescribe(_)),
-      api(71, "GetTelemetrySubscriptions", GetTelemetrySubscriptionsMaxVersion)(
-        _.broker.handleGetTelemetrySubscriptions(_)),
-      api(72, "PushTelemetry", PushTelemetryMaxVersion)(
-        _.broker.handlePushTelemetry(_)),
-      api(74, "ListClientMetricsResources", ListClientMetricsResourcesMaxVersion)(
-        _.broker.handleListClientMetricsResources(_)),
-      api(75, "DescribeTopicPartitions", DescribeTopicPartitionsMaxVersion)(
-        _.broker.handleDescribeTopicPartitions(_)),
-      api(76, "ShareGroupHeartbeat", ShareGroupHeartbeatMaxVersion)(
-        _.broker.handleShareGroupHeartbeat(_)),
-      api(77, "ShareGroupDescribe", ShareGroupDescribeMaxVersion)(
-        _.broker.handleShareGroupDescribe(_)),
-      api(78, "ShareFetch", ShareFetchMaxVersion)((s, f) =>
+      api(DescribeProducers)(_.broker.handleDescribeProducers(_)),
+      api(DescribeTransactions)(_.broker.handleDescribeTransactions(_)),
+      api(ListTransactions)(_.broker.handleListTransactions(_)),
+      api(ConsumerGroupHeartbeat)(_.broker.handleConsumerGroupHeartbeat(_)),
+      api(ConsumerGroupDescribe)(_.broker.handleConsumerGroupDescribe(_)),
+      api(GetTelemetrySubscriptions)(_.broker.handleGetTelemetrySubscriptions(_)),
+      api(PushTelemetry)(_.broker.handlePushTelemetry(_)),
+      api(ListClientMetricsResources)(_.broker.handleListClientMetricsResources(_)),
+      api(DescribeTopicPartitions)(_.broker.handleDescribeTopicPartitions(_)),
+      api(ShareGroupHeartbeat)(_.broker.handleShareGroupHeartbeat(_)),
+      api(ShareGroupDescribe)(_.broker.handleShareGroupDescribe(_)),
+      api(ShareFetch)((s, f) =>
         s.broker.handleShareFetch(f, s.advertisedHost, s.boundPort)),
-      api(79, "ShareAcknowledge", ShareAcknowledgeMaxVersion)((s, f) =>
+      api(ShareAcknowledge)((s, f) =>
         s.broker.handleShareAcknowledge(f, s.advertisedHost, s.boundPort)),
-      api(90, "DescribeShareGroupOffsets", DescribeShareGroupOffsetsMaxVersion)(
-        _.broker.handleDescribeShareGroupOffsets(_)),
-      api(91, "AlterShareGroupOffsets", AlterShareGroupOffsetsMaxVersion)(
-        _.broker.handleAlterShareGroupOffsets(_)),
-      api(92, "DeleteShareGroupOffsets", DeleteShareGroupOffsetsMaxVersion)(
-        _.broker.handleDeleteShareGroupOffsets(_)))
+      api(DescribeShareGroupOffsets)(_.broker.handleDescribeShareGroupOffsets(_)),
+      api(AlterShareGroupOffsets)(_.broker.handleAlterShareGroupOffsets(_)),
+      api(DeleteShareGroupOffsets)(_.broker.handleDeleteShareGroupOffsets(_)))
   }
 
   /** The dispatch lookup, indexed by api key: null where no handler. */

@@ -138,7 +138,7 @@ class FeatureSpec extends AnyFunSuite {
   }
 
   test("DescribeQuorum codec round-trips at v0 and v1") {
-    for (v <- 0 to DescribeQuorumMaxVersion) {
+    for (v <- 0 to DescribeQuorum.maxVersion) {
       val (reqV, _, topics) = decodeDescribeQuorumRequest(
         encodeDescribeQuorumRequest(v, 1, "cli"))
       assert(reqV === v)

@@ -101,7 +101,7 @@ class IdempotentProducerSpec extends AnyFunSuite {
       val apis = decodeApiVersionsResponseV3(exchange(sock,
         encodeApiVersionsRequestV3(1, "cli", "graft-test", "0")))
       assert(apis.apiKeys.exists { case (k, min, max) =>
-        k === 22 && min === 0 && max === InitProducerIdMaxVersion })
+        k === 22 && min === 0 && max === InitProducerId.maxVersion })
 
       // init → fresh (pid, epoch 0)
       val (_, err0, pid, epoch) = decodeInitProducerIdResponse(4,

@@ -176,4 +176,77 @@ class KafkaWireSpec extends AnyFunSuite {
       encodeMetadataRequestV0(2, "c", None), "h", 9092, catalog))
     assert(all.topics.map(_.name) === Seq("alpha", "beta"))
   }
+
+  // --- Flexible-boundary goldens (KIP-482) ---
+  // One (api, version) pair on each side of a flexible boundary, request
+  // and response, hex-captured from the codecs and pinned here so a
+  // change to the header or the flexible switch shows as a byte diff.
+  // Below the boundary: header v1 / response header v0, INT32 arrays,
+  // INT16 strings; at it: header v2 / response header v1 (a trailing
+  // tag buffer), compact arrays and strings, per-entry tag buffers.
+
+  private def hex(s: String): Array[Byte] =
+    s.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
+
+  private def assertFrame(got: Array[Byte], want: Array[Byte]): Unit =
+    assert(got.sameElements(want),
+      s"\n got: ${got.map("%02x".format(_)).mkString}" +
+        s"\nwant: ${want.map("%02x".format(_)).mkString}")
+
+  private val deleteRecordsTopics = Seq("t" -> Seq((0, 5L), (1, -1L)))
+  private val deleteRecordsResults = Seq("t" -> Seq((0, 5L, 0), (1, 3L, 1)))
+  private val goldenDeleteRecords = Map(
+    1 -> (hex("0000003400150001000000070003636c6900000001000174000000020000" +
+      "0000000000000000000500000001ffffffffffffffff000005dc"),
+      hex("0000002f000000070000000000000001000174000000020000000000000000" +
+        "0000000500000000000100000000000000030001")),
+    2 -> (hex("0000003200150002000000070003636c6900020274030000000000000000" +
+      "000000050000000001ffffffffffffffff0000000005dc00"),
+      hex("0000002d0000000700000000000202740300000000000000000000000500" +
+        "00000000000100000000000000030001000000")))
+
+  test("DeleteRecords v1 and v2 (flexible from v2) match their golden frames") {
+    for ((v, (req, resp)) <- goldenDeleteRecords) {
+      assertFrame(encodeDeleteRecordsRequest(v, 7, "cli", deleteRecordsTopics, 1500), req)
+      assert(decodeDeleteRecordsRequest(req) ===
+        DeleteRecordsRequest(v, 7, "cli", deleteRecordsTopics, 1500))
+      assertFrame(encodeDeleteRecordsResponse(v, 7, deleteRecordsResults), resp)
+      assert(decodeDeleteRecordsResponse(v, resp) === ((7, deleteRecordsResults)))
+    }
+  }
+
+  private val goldenCreatePartitions = Map(
+    1 -> (hex("0000002100250001000000080003636c690000000100017400000003ffffffff" +
+      "000003e801"),
+      hex("0000001d0000000800000000000000020001740000ffff00017500250003626164")),
+    2 -> (hex("0000001d00250002000000080003636c6900020274000000030000000003e80100"),
+      hex("0000001a0000000800000000000302740000000002750025046261640000")))
+
+  test("CreatePartitions v1 and v2 (flexible from v2) match their golden frames") {
+    val results = Seq(("t", 0, null: String), ("u", 37, "bad"))
+    for ((v, (req, resp)) <- goldenCreatePartitions) {
+      assertFrame(encodeCreatePartitionsRequest(v, 8, "cli", Seq("t" -> 3), 1000,
+        validateOnly = true), req)
+      assert(decodeCreatePartitionsRequest(req) ===
+        CreatePartitionsRequest(v, 8, "cli", Seq(("t", 3, false)), 1000, true))
+      assertFrame(encodeCreatePartitionsResponse(v, 8, results), resp)
+      assert(decodeCreatePartitionsResponse(v, resp) === ((8, results)))
+    }
+  }
+
+  private val goldenInitProducerId = Map(
+    1 -> (hex("0000001500160001000000090003636c69000274780000ea60"),
+      hex("0000001400000009000000000000000000000000002a0003")),
+    2 -> (hex("0000001600160002000000090003636c69000374780000ea6000"),
+      hex("000000160000000900000000000000000000000000002a000300")))
+
+  test("InitProducerId v1 and v2 (flexible from v2) match their golden frames") {
+    for ((v, (req, resp)) <- goldenInitProducerId) {
+      assertFrame(encodeInitProducerIdRequest(v, 9, "cli", "tx", 60000), req)
+      assert(decodeInitProducerIdRequest(req) ===
+        InitProducerIdRequest(v, 9, "cli", "tx", 60000, -1L, -1))
+      assertFrame(encodeInitProducerIdResponse(v, 9, 0, 42L, 3), resp)
+      assert(decodeInitProducerIdResponse(v, resp) === ((9, 0, 42L, 3)))
+    }
+  }
 }

@@ -326,8 +326,8 @@ class ModernClientTraceSpec extends AnyFunSuite {
       val advertised = apis.apiKeys.map(k => k._1 -> (k._2, k._3)).toMap
       // the broker advertises the SASL pair pre-auth — the client
       // needs them to know how to proceed
-      assert(advertised(KafkaWire.SaslHandshakeApiKey) === ((0, 1)))
-      assert(advertised(KafkaWire.SaslAuthenticateApiKey) === ((0, 2)))
+      assert(advertised(KafkaWire.SaslHandshake.key) === ((0, 1)))
+      assert(advertised(KafkaWire.SaslAuthenticate.key) === ((0, 2)))
 
       val (_, hErr, mechs) = decodeSaslHandshakeResponse(exchange(sock,
         encodeSaslHandshakeRequest(1, 2, "sec-cli", "PLAIN")))
@@ -383,13 +383,13 @@ class ModernClientTraceSpec extends AnyFunSuite {
       val advertised = apis.apiKeys.map(k => k._1 -> (k._2, k._3)).toMap
       // the 4.x decision point: key 68 present → new protocol usable
       // (max = 1, the verified KIP-848 schema ceiling; see KafkaWire)
-      assert(advertised(KafkaWire.ConsumerGroupHeartbeatApiKey) === ((0, 1)))
-      assert(advertised(KafkaWire.ConsumerGroupDescribeApiKey) === ((0, 0)))
+      assert(advertised(KafkaWire.ConsumerGroupHeartbeat.key) === ((0, 1)))
+      assert(advertised(KafkaWire.ConsumerGroupDescribe.key) === ((0, 0)))
 
       // enable.metrics.push defaults to true since 3.7: the client's
       // next move after ApiVersions is the telemetry subscription
       // handshake — an empty subscription ends it cleanly (no pushes)
-      assert(advertised(KafkaWire.GetTelemetrySubscriptionsApiKey) === ((0, 0)))
+      assert(advertised(KafkaWire.GetTelemetrySubscriptions.key) === ((0, 0)))
       val (_, tErr, tIid, _, _, tIvl, _, _, tMetrics) =
         decodeGetTelemetrySubscriptionsResponse(exchange(sock,
           encodeGetTelemetrySubscriptionsRequest(90, "trace-4x",
@@ -470,9 +470,9 @@ class ModernClientTraceSpec extends AnyFunSuite {
       // the share consumer's decision point: membership + queue RPCs
       // (ShareFetch/ShareAcknowledge at the AK 4.1 maximum v1, so a
       // 4.1 share consumer negotiates v1 = min(1, 1) below)
-      assert(advertised(KafkaWire.ShareGroupHeartbeatApiKey) === ((0, 0)))
-      assert(advertised(KafkaWire.ShareFetchApiKey) === ((0, 1)))
-      assert(advertised(KafkaWire.ShareAcknowledgeApiKey) === ((0, 1)))
+      assert(advertised(KafkaWire.ShareGroupHeartbeat.key) === ((0, 0)))
+      assert(advertised(KafkaWire.ShareFetch.key) === ((0, 1)))
+      assert(advertised(KafkaWire.ShareAcknowledge.key) === ((0, 1)))
 
       // records arrive over the idempotent produce path first
       def rec(k: String, v: String) =

@@ -238,7 +238,7 @@ class ModernWireCodecSpec extends AnyFunSuite {
   // --- encode→decode round-trips across every version ---
 
   test("ListOffsets round-trips at every version") {
-    for (v <- 0 to ListOffsetsMaxVersion) {
+    for (v <- 0 to ListOffsets.maxVersion) {
       val req = decodeListOffsetsRequest(encodeListOffsetsRequest(v, 1, "cli",
         Seq(("t", Seq((0, -2L, 1), (1, 1234L, 1))))))
       assert(req.topics === Seq(("t", Seq((0, -2L, 1), (1, 1234L, 1)))), s"v$v")
@@ -250,7 +250,7 @@ class ModernWireCodecSpec extends AnyFunSuite {
   }
 
   test("OffsetCommit round-trips at every version") {
-    for (v <- 0 to OffsetCommitMaxVersion) {
+    for (v <- 0 to OffsetCommit.maxVersion) {
       val req = decodeOffsetCommitRequest(encodeOffsetCommitRequest(v, 2, "cli",
         "grp", 3, "mem", "inst", Seq(("t", Seq((0, 5L, "meta"))))))
       assert(req.group === "grp", s"v$v")
@@ -265,7 +265,7 @@ class ModernWireCodecSpec extends AnyFunSuite {
   }
 
   test("OffsetFetch round-trips at every version, including null topics and v8 batching") {
-    for (v <- 0 to OffsetFetchMaxVersion) {
+    for (v <- 0 to OffsetFetch.maxVersion) {
       val req = decodeOffsetFetchRequest(encodeOffsetFetchRequest(v, 3, "cli",
         Seq(("grp", Some(Seq(("t", Seq(0, 1))))))))
       assert(req.groups === Seq(("grp", Some(Seq(("t", Seq(0, 1)))))), s"v$v")
@@ -275,7 +275,7 @@ class ModernWireCodecSpec extends AnyFunSuite {
         Seq(("t", Seq((0, 5L, "", 0), (1, -1L, null, 0)))), s"v$v")
     }
     // null topics = "all committed" (v2+)
-    for (v <- 2 to OffsetFetchMaxVersion) {
+    for (v <- 2 to OffsetFetch.maxVersion) {
       val req = decodeOffsetFetchRequest(
         encodeOffsetFetchRequest(v, 4, "cli", Seq(("grp", None))))
       assert(req.groups === Seq(("grp", None)), s"v$v")
@@ -296,7 +296,7 @@ class ModernWireCodecSpec extends AnyFunSuite {
   }
 
   test("FindCoordinator round-trips at every version") {
-    for (v <- 0 to FindCoordinatorMaxVersion) {
+    for (v <- 0 to FindCoordinator.maxVersion) {
       val req = decodeFindCoordinatorRequest(
         encodeFindCoordinatorRequest(v, 6, "cli", 0, Seq("grp")))
       assert(req.keys === Seq("grp"), s"v$v")
@@ -308,7 +308,7 @@ class ModernWireCodecSpec extends AnyFunSuite {
   }
 
   test("JoinGroup round-trips at every version") {
-    for (v <- 0 to JoinGroupMaxVersion) {
+    for (v <- 0 to JoinGroup.maxVersion) {
       val req = decodeJoinGroupRequest(encodeJoinGroupRequest(v, 7, "cli", "grp",
         6000, 9000, "mem", "inst", "consumer",
         Seq(("range", Array[Byte](1, 2))), "why"))
@@ -331,7 +331,7 @@ class ModernWireCodecSpec extends AnyFunSuite {
   }
 
   test("SyncGroup, Heartbeat, LeaveGroup round-trip at every version") {
-    for (v <- 0 to SyncGroupMaxVersion) {
+    for (v <- 0 to SyncGroup.maxVersion) {
       val req = decodeSyncGroupRequest(encodeSyncGroupRequest(v, 8, "cli", "grp",
         1, "mem", "inst", "consumer", "range", Seq(("mem", Array[Byte](5)))))
       assert(req.group === "grp", s"v$v")
@@ -342,14 +342,14 @@ class ModernWireCodecSpec extends AnyFunSuite {
       assert(err === 0, s"v$v")
       assert(assignment.toSeq === Seq[Byte](5), s"v$v")
     }
-    for (v <- 0 to HeartbeatMaxVersion) {
+    for (v <- 0 to Heartbeat.maxVersion) {
       val req = decodeHeartbeatRequest(
         encodeHeartbeatRequest(v, 9, "cli", "grp", 4, "mem", "inst"))
       assert((req.group, req.generationId, req.memberId) === (("grp", 4, "mem")), s"v$v")
       assert(decodeHeartbeatResponse(v, encodeHeartbeatResponse(v, 9, 27)) ===
         ((9, 27)), s"v$v")
     }
-    for (v <- 0 to LeaveGroupMaxVersion) {
+    for (v <- 0 to LeaveGroup.maxVersion) {
       val req = decodeLeaveGroupRequest(encodeLeaveGroupRequest(v, 10, "cli",
         "grp", Seq(("mem", "inst", "done"))))
       assert(req.members.head._1 === "mem", s"v$v")
@@ -363,7 +363,7 @@ class ModernWireCodecSpec extends AnyFunSuite {
   test("Metadata round-trips at every version, topic_id deterministic at v10+") {
     val topics = Seq(TopicMetadata(0, "t",
       Seq(PartitionMetadata(0, 0, 0, Seq(0), Seq(0)))))
-    for (v <- 0 to MetadataMaxVersion) {
+    for (v <- 0 to Metadata.maxVersion) {
       val (dv, req) = decodeMetadataRequest(
         encodeMetadataRequest(v, 11, "cli", Some(Seq("t"))))
       assert(dv === v)
@@ -384,7 +384,7 @@ class ModernWireCodecSpec extends AnyFunSuite {
   }
 
   test("ListGroups round-trips at every version, filters from v4/v5") {
-    for (v <- 0 to ListGroupsMaxVersion) {
+    for (v <- 0 to ListGroups.maxVersion) {
       val req = decodeListGroupsRequest(encodeListGroupsRequest(v, 21, "cli",
         statesFilter = Seq("Stable", "Empty"), typesFilter = Seq("consumer")))
       assert(req.version === v && req.correlationId === 21)
@@ -404,7 +404,7 @@ class ModernWireCodecSpec extends AnyFunSuite {
   }
 
   test("DescribeGroups round-trips at every version, instance ids and ops from v3/v4") {
-    for (v <- 0 to DescribeGroupsMaxVersion) {
+    for (v <- 0 to DescribeGroups.maxVersion) {
       val req = decodeDescribeGroupsRequest(encodeDescribeGroupsRequest(v, 31,
         "cli", Seq("g1", "g2"), includeAuthorizedOperations = true))
       assert(req.version === v && req.groups === Seq("g1", "g2"))

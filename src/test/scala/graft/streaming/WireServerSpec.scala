@@ -695,7 +695,7 @@ class WireServerSpec extends AnyFunSuite {
       // connection loop itself) has a handler
       val keys = WireServer.Apis.map(_.key)
       assert(keys.distinct === keys)
-      val sasl = Set(SaslHandshakeApiKey, SaslAuthenticateApiKey)
+      val sasl = Set(SaslHandshake.key, SaslAuthenticate.key)
       r0.apiKeys.map(_._1).foreach { k =>
         assert((WireServer.Handlers(k) != null) === !sasl(k), s"api_key $k")
       }
