@@ -542,7 +542,10 @@ class Broker(spark: SparkSession, root: String) {
                   attempt += 1
                 }
               case scala.util.control.NonFatal(e) =>
-                System.err.println(s"graft produce to topic $name failed: $e")
+                Broker.log.warn(
+                  "produce failed, answering KAFKA_STORAGE_ERROR topic={} api_key={} version={} correlation_id={} error={}",
+                  Array[AnyRef](name, Int.box(KafkaWire.Produce.key), Int.box(req.version),
+                    Int.box(req.correlationId), e.toString): _*)
                 result = Left(56)
                 retrying = false
             }
@@ -2461,7 +2464,7 @@ class Broker(spark: SparkSession, root: String) {
       try { topic(name).retireHistory(); true }
       catch {
         case e: Exception =>
-          System.err.println(s"graft manifest retirement of topic $name failed: $e")
+          Broker.log.warn("manifest retirement failed topic={} error={}", name, e.toString)
           false
       }
     }
@@ -3965,6 +3968,8 @@ class Broker(spark: SparkSession, root: String) {
 }
 
 object Broker {
+  private val log = org.slf4j.LoggerFactory.getLogger(classOf[Broker])
+
   /** The principal an unauthenticated (plaintext-listener) or library
     * caller acts as — Kafka's ANONYMOUS. */
   val AnonymousPrincipal = "User:ANONYMOUS"

@@ -26,8 +26,7 @@ private[graft] final class VersionedDir(val dir: Path) {
     Files.createDirectories(dir)
     val tmp = Files.createTempFile(dir, ".tmp", ".json")
     Files.writeString(tmp, body)
-    try Files.createLink(file(v), tmp)
-    finally Files.deleteIfExists(tmp)
+    VersionedDir.linkOnce(tmp, file(v))
   }
 
   /** The versions on disk, unordered; none when the dir is absent. */
@@ -73,6 +72,14 @@ private[graft] final class VersionedDir(val dir: Path) {
 }
 
 private[graft] object VersionedDir {
+
+  /** Publish the written file `tmp` as `dst` by a hard link, then
+    * delete `tmp`: `dst` appears whole or not at all, and a `dst` that
+    * already exists fails the link with FileAlreadyExistsException and
+    * is left as it was. */
+  def linkOnce(tmp: Path, dst: Path): Unit =
+    try Files.createLink(dst, tmp)
+    finally Files.deleteIfExists(tmp)
 
   /** `N` for a file named `v<N>.json`. */
   private def versionOf(name: String): Option[Long] =

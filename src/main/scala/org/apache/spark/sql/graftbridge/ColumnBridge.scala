@@ -1,8 +1,14 @@
 package org.apache.spark.sql.graftbridge
 
+import java.io.File
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+import org.apache.spark.sql.execution.streaming.state.{StateStore, StateStoreId, StateStoreProviderId}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Column ⇄ Expression bridge. Spark 4 routes Column through
   * ColumnNode and keeps the converter `private[sql]`; extension
@@ -18,12 +24,39 @@ object ColumnBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
-  /** Unload every registered state-store provider (`private[sql]` on
-    * the StateStore object). Safe whenever the loaded stores' queries
-    * are finished and their checkpoints discarded — exactly the drain
-    * pattern: a fresh temp checkpoint per drain means no later query
-    * can ever reuse the providers, yet the registry would hold their
-    * in-memory state maps until the next maintenance tick. */
-  def unloadAllStateStores(): Unit =
-    org.apache.spark.sql.execution.streaming.state.StateStore.unloadAll()
+  /** The state-store providers a streaming query registered, one per
+    * operator × partition × store: rebuilt from its checkpoint's
+    * `state/<op>/<part>[/<store>]` layout and its run id, exactly as
+    * Spark keys its executor-side provider registry. A directory holds
+    * a store when it holds one of the store's own version files
+    * (HDFS-backed `.delta`/`.snapshot`, RocksDB `.zip`/`.changelog`);
+    * RocksDB's `SSTs` dir and `.crc` checksum files do not count.
+    * Read it before the checkpoint is deleted. */
+  def stateStoreIds(q: StreamingQuery): Seq[StateStoreProviderId] = {
+    val run = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+    val state = new Path(new Path(run.resolvedCheckpointRoot), "state")
+    def children(d: File) = Option(d.listFiles).toSeq.flatten.filter(_.isDirectory)
+    def numbered(d: File) = children(d).filter(_.getName.forall(_.isDigit))
+    def holdsStore(d: File) = Option(d.list).exists(_.exists(n =>
+      StoreFileSuffixes.exists(n.endsWith)))
+    for {
+      op <- numbered(new File(state.toUri.getPath))
+      part <- numbered(op)
+      store <- (if (holdsStore(part)) Seq(StateStoreId.DEFAULT_STORE_NAME) else Nil) ++
+        children(part).filter(holdsStore).map(_.getName)
+    } yield StateStoreProviderId(
+      StateStoreId(state.toString, op.getName.toLong, part.getName.toInt, store), run.runId)
+  }
+
+  private val StoreFileSuffixes = Seq(".delta", ".snapshot", ".zip", ".changelog")
+
+  def isStateStoreLoaded(id: StateStoreProviderId): Boolean = StateStore.isLoaded(id)
+
+  /** Unload and close the given state-store providers. A drain runs on
+    * a fresh temp checkpoint that no later query can reuse, yet the
+    * registry would hold its providers (and their in-memory state
+    * maps) until the next maintenance tick; other queries' providers
+    * stay loaded. */
+  def unloadStateStores(ids: Seq[StateStoreProviderId]): Unit =
+    ids.foreach(StateStore.removeFromLoadedProvidersAndClose(_))
 }
