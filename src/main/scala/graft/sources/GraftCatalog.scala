@@ -109,13 +109,9 @@ class GraftCatalog extends TableCatalog {
       schema == graft.streaming.TopicLog.tableSchema,
       "graft topics have a fixed record schema; omit the column list")
     val n = Option(properties.get("partitions")).map(_.toInt).getOrElse(8)
-    // no SparkSession needed just to lay out the dirs — mirror
-    // TopicLog.create's on-disk contract
+    // no SparkSession needed just to lay out the dirs
     val dir = Paths.get(s"$root/${ident.name}")
-    require(!Files.exists(dir.resolve("_meta.json")), s"topic ${ident.name} already exists")
-    Files.createDirectories(dir)
-    Files.createDirectories(dir.resolve("_groups"))
-    Files.writeString(dir.resolve("_meta.json"), s"""{"numPartitions":$n}""")
+    graft.streaming.TopicLog.createMeta(dir, n)
     new GraftTopicTable(dir.toString)
   }
 

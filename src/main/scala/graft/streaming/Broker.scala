@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{FileAlreadyExistsException, Files, NoSuchFileException, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -241,19 +241,13 @@ class Broker(spark: SparkSession, root: String) {
 
   def topicExists(name: String): Boolean = TopicLog.exists(root, name)
 
-  /** The TopicLog if the topic exists AND opens. Admin handlers use
-    * this instead of a topicExists-then-topic two-step: a concurrent
-    * deleteTopic between the check and the open must degrade to the
-    * per-partition error-3 answer, not an exception that kills the
-    * whole connection. */
+  /** The TopicLog if the topic opens: the one way a handler reaches a
+    * log. One `_meta.json` read whose failure means absent, so a
+    * racing deleteTopic answers the handler's unknown-topic code
+    * instead of killing the connection. */
   def topicOpt(name: String): Option[TopicLog] =
-    try { if (topicExists(name)) Some(topic(name)) else None }
+    try Some(topic(name))
     catch { case scala.util.control.NonFatal(_) => None }
-
-  /** Partition count, or `orElse` when the topic is unknown — including
-    * when a racing delete wins between existence check and open. */
-  def partitionCountOr(name: String, orElse: Int): Int =
-    topicOpt(name).map(_.numPartitions).getOrElse(orElse)
 
   def listTopics(): Seq[String] = {
     val p = Paths.get(root)
@@ -434,179 +428,178 @@ class Broker(spark: SparkSession, root: String) {
       // learns 29, not whether the topic exists
       if (!authz(Acls.OpWrite, Acls.ResTopic, name))
         (name, parts.map { case (p, _) => (p, 29, -1L) })
-      else if (!topicExists(name))
-        (name, parts.map { case (p, _) => (p, 3, -1L) })
-      else {
-        val log = topic(name)
-        // Phase −1 — the size gate: `max.message.bytes` (dynamic
-        // topic config) bounds each partition entry's ON-WIRE payload
-        // — the same quantity Kafka's broker checks, measured before
-        // decompression. An oversized entry is emptied (nothing must
-        // reach the idempotence gate) and answers MESSAGE_TOO_LARGE
-        // (10) below.
-        val maxMsgBytes = TopicLog.configOverrides(root, name)
-          .get("max.message.bytes")
-          .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
-          .getOrElse(Broker.DefaultMaxMessageBytes.toLong)
-        def oversized(idx: Int): Boolean =
-          req.payloadSizes.getOrElse((name, idx), 0) > maxMsgBytes
-        val sized = parts.zipWithIndex.map { case ((p, batches), idx) =>
-          if (oversized(idx)) (p, Seq.empty[KafkaWire.ProducedBatch])
-          else (p, batches)
-        }
-        // Phase 0 — the transaction gate: a TRANSACTIONAL batch must
-        // come from a known transactional pid at the current epoch
-        // with its partition registered via AddPartitionsToTxn. A
-        // failing entry is emptied here (it must not advance the
-        // idempotence gate's provisional sequences) and answers its
-        // error below — same pattern as payload decode errors.
-        val txnErrs: Seq[Option[Int]] = sized.map { case (p, batches) =>
-          batches.iterator.filter(_.transactional)
-            .map(b => txnProduceError(name, p, b))
-            .collectFirst { case Some(err) => err }
-        }
-        val gated = sized.zip(txnErrs).map { case ((p, batches), err) =>
-          if (err.isDefined) (p, Seq.empty[KafkaWire.ProducedBatch])
-          else (p, batches)
-        }
-        // Phase 1 — the idempotence gate: pure in-memory metadata, so
-        // every partition entry resolves to Append / Duplicate /
-        // Reject BEFORE any row lands. A rejected or duplicate entry
-        // writes nothing; the rest of the request proceeds. Entries
-        // validate in ONE pass sharing provisional sequence state, so
-        // a request listing a partition twice with chained sequences
-        // (entry B continuing where entry A ends) is accepted — the
-        // same contract the base-offset accounting below supports.
-        val decisions: Seq[Broker.ProduceDecision] =
-          validateProducerEntries(name, log.numPartitions, gated)
-        val appending = gated.zip(decisions).collect {
-          case ((p, batches), Broker.Append) => (p, batches)
-        }
-        val rows = appending.flatMap { case (p, batches) =>
-          batches.flatMap(_.records).map { r =>
-            val hdrs = if (r.headers.isEmpty) null else r.headers.toMap
-            val ts = if (r.timestampMs >= 0) new java.sql.Timestamp(r.timestampMs)
-              else appendTime
-            (r.key, r.value, hdrs, ts, p)
+      else topicOpt(name) match {
+        case None => (name, parts.map { case (p, _) => (p, 3, -1L) })
+        case Some(log) =>
+          // Phase −1 — the size gate: `max.message.bytes` (dynamic
+          // topic config) bounds each partition entry's ON-WIRE payload
+          // — the same quantity Kafka's broker checks, measured before
+          // decompression. An oversized entry is emptied (nothing must
+          // reach the idempotence gate) and answers MESSAGE_TOO_LARGE
+          // (10) below.
+          val maxMsgBytes = TopicLog.configOverrides(root, name)
+            .get("max.message.bytes")
+            .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
+            .getOrElse(Broker.DefaultMaxMessageBytes.toLong)
+          def oversized(idx: Int): Boolean =
+            req.payloadSizes.getOrElse((name, idx), 0) > maxMsgBytes
+          val sized = parts.zipWithIndex.map { case ((p, batches), idx) =>
+            if (oversized(idx)) (p, Seq.empty[KafkaWire.ProducedBatch])
+            else (p, batches)
           }
-        }
-        // Phase 1.5 — reserve the LSO floor BEFORE any row lands: the
-        // append (TopicLog.produceDirect, no Spark job) commits its
-        // manifest before the exact range registration below, and a
-        // concurrent read_committed fetch landing in between must not
-        // see this transaction's records.
-        // The floor (the pre-produce log end) is ≤ the eventual base
-        // offset, so the reservation is conservative; recordTxnAppend
-        // replaces it with the exact first offset, and reservations
-        // that never materialize (timeout, fence) release at the end
-        // of the request.
-        val txnPids: Seq[(Int, Long)] = appending.flatMap { case (p, batches) =>
-          batches.filter(b => b.transactional && b.records.nonEmpty)
-            .map(b => (p, b.producerId))
-        }.distinct
-        if (txnPids.nonEmpty) {
-          val floors = log.logEndOffsets()
-          txnPids.foreach { case (p, pid) =>
-            txnReserve(name, p, pid, floors.getOrElse(p, 0L))
+          // Phase 0 — the transaction gate: a TRANSACTIONAL batch must
+          // come from a known transactional pid at the current epoch
+          // with its partition registered via AddPartitionsToTxn. A
+          // failing entry is emptied here (it must not advance the
+          // idempotence gate's provisional sequences) and answers its
+          // error below — same pattern as payload decode errors.
+          val txnErrs: Seq[Option[Int]] = sized.map { case (p, batches) =>
+            batches.iterator.filter(_.transactional)
+              .map(b => txnProduceError(name, p, b))
+              .collectFirst { case Some(err) => err }
           }
-        }
-        // The manifest CAS can lose to a concurrent producer on an
-        // overlapping partition; produce()'s contract is that the
-        // CALLER retries (offsets re-derive from the fresh manifest).
-        // A Kafka broker serializes appends internally — a wire client
-        // never sees the storage-layer race — so the broker IS that
-        // caller: retry with capped backoff until the request's own
-        // timeout, then answer REQUEST_TIMED_OUT (7) per partition
-        // instead of failing the connection. Any other append failure
-        // answers KAFKA_STORAGE_ERROR (56), as Kafka does for a log
-        // directory it cannot write.
-        def produceWithRetry(): Either[Int, Map[Int, Long]] = {
-          val deadline = System.nanoTime() +
-            math.max(req.timeoutMs, 1000).toLong * 1000000L
-          val direct = rows.map { case (k, v, h, ts, p) => (p, k, v, h, ts.getTime) }
-          var attempt = 0
-          var result: Either[Int, Map[Int, Long]] = Left(7)
-          var retrying = true
-          while (retrying)
-            try {
-              // driver-direct append (no Spark job), committed together
-              // with the topic's other in-flight wire produces — see
-              // appendGrouped
-              result = Right(appendGrouped(name, log, direct))
-              retrying = false
-            } catch {
-              case _: TopicLog.ConcurrentProduceException =>
-                if (System.nanoTime() > deadline) retrying = false
-                else {
-                  Thread.sleep(math.min(200L, 2L << math.min(attempt, 6)))
-                  attempt += 1
-                }
-              case scala.util.control.NonFatal(e) =>
-                Broker.log.warn(
-                  "produce failed, answering KAFKA_STORAGE_ERROR topic={} api_key={} version={} correlation_id={} error={}",
-                  Array[AnyRef](name, Int.box(KafkaWire.Produce.key), Int.box(req.version),
-                    Int.box(req.correlationId), e.toString): _*)
-                result = Left(56)
-                retrying = false
+          val gated = sized.zip(txnErrs).map { case ((p, batches), err) =>
+            if (err.isDefined) (p, Seq.empty[KafkaWire.ProducedBatch])
+            else (p, batches)
+          }
+          // Phase 1 — the idempotence gate: pure in-memory metadata, so
+          // every partition entry resolves to Append / Duplicate /
+          // Reject BEFORE any row lands. A rejected or duplicate entry
+          // writes nothing; the rest of the request proceeds. Entries
+          // validate in ONE pass sharing provisional sequence state, so
+          // a request listing a partition twice with chained sequences
+          // (entry B continuing where entry A ends) is accepted — the
+          // same contract the base-offset accounting below supports.
+          val decisions: Seq[Broker.ProduceDecision] =
+            validateProducerEntries(name, log.numPartitions, gated)
+          val appending = gated.zip(decisions).collect {
+            case ((p, batches), Broker.Append) => (p, batches)
+          }
+          val rows = appending.flatMap { case (p, batches) =>
+            batches.flatMap(_.records).map { r =>
+              val hdrs = if (r.headers.isEmpty) null else r.headers.toMap
+              val ts = if (r.timestampMs >= 0) new java.sql.Timestamp(r.timestampMs)
+                else appendTime
+              (r.key, r.value, hdrs, ts, p)
             }
-          result
-        }
-        val appended: Either[Int, Map[Int, Long]] =
-          if (rows.isEmpty) Right(log.logEndOffsets())
-          else produceWithRetry()
-        val after: Map[Int, Long] = appended.getOrElse(Map.empty)
-        // Base offsets derive from the COMMITTED ends the produce
-        // returned, not a pre-produce snapshot: a snapshot is stale
-        // under concurrent producers and wrong when one request lists
-        // a partition twice. Appended entries are scanned in request
-        // order, each claiming its records' range below the next.
-        val written = scala.collection.mutable.Map.empty[Int, Long]
-        appending.foreach { case (p, batches) =>
-          written(p) = written.getOrElse(p, 0L) +
-            batches.iterator.map(_.records.length.toLong).sum
-        }
-        val consumedSoFar = scala.collection.mutable.Map.empty[Int, Long]
-        val answers =
-          (name, gated.zip(decisions).zip(txnErrs).zipWithIndex.map {
-            // an oversized payload answers first: the entry was
-            // emptied before any gate saw it, and nothing appended
-            case ((((p, _), _), _), idx) if oversized(idx) => (p, 10, -1L)
-            // a transaction-gate failure (49/47/48) answers next —
-            // the entry was emptied above, so nothing downstream saw it
-            case ((((p, _), _), Some(err)), _) => (p, err, -1L)
-            // a payload that failed decode (76 = unsupported codec,
-            // 2 = corrupt) answers its error and appended nothing —
-            // the key is the ENTRY index, so a valid entry for the
-            // same partition id in the same request still acks
-            case ((((p, _), _), _), idx)
-                if req.decodeErrors.contains((name, idx)) =>
-              (p, req.decodeErrors((name, idx)), -1L)
-            case ((((p, _), Broker.Reject(err)), _), _) => (p, err, -1L)
-            case ((((p, _), Broker.Duplicate(base)), _), _) => (p, 0, base)
-            // the append never landed (7: the CAS never won within the
-            // request timeout; 56: storage error): nothing appended,
-            // no sequence state advanced — the client's retry (same
-            // sequences) is exactly a fresh attempt
-            case ((((p, _), Broker.Append), _), _) if appended.isLeft =>
-              (p, appended.swap.getOrElse(7), -1L)
-            case ((((p, batches), Broker.Append), _), _) =>
-              val nRecs = batches.iterator.map(_.records.length.toLong).sum
-              val firstBase = after.getOrElse(p, 0L) - written.getOrElse(p, 0L)
-              val base = firstBase + consumedSoFar.getOrElse(p, 0L)
-              consumedSoFar(p) = consumedSoFar.getOrElse(p, 0L) + nRecs
-              // Phase 2 — the append committed; remember each batch's
-              // sequence span + base offset for duplicate detection,
-              // and a transactional batch's range under its open txn.
-              recordProducerBatches(name, p, batches, base)
-              recordTxnAppend(name, p, batches, base)
-              (p, 0, base)
-          })
-        // release LSO reservations the append never turned into exact
-        // ranges (timed out, failed, or the txn was fenced mid-request)
-        txnPids.foreach { case (p, pid) =>
-          txnReleaseUnmaterialized(name, p, pid)
-        }
-        answers
+          }
+          // Phase 1.5 — reserve the LSO floor BEFORE any row lands: the
+          // append (TopicLog.produceDirect, no Spark job) commits its
+          // manifest before the exact range registration below, and a
+          // concurrent read_committed fetch landing in between must not
+          // see this transaction's records.
+          // The floor (the pre-produce log end) is ≤ the eventual base
+          // offset, so the reservation is conservative; recordTxnAppend
+          // replaces it with the exact first offset, and reservations
+          // that never materialize (timeout, fence) release at the end
+          // of the request.
+          val txnPids: Seq[(Int, Long)] = appending.flatMap { case (p, batches) =>
+            batches.filter(b => b.transactional && b.records.nonEmpty)
+              .map(b => (p, b.producerId))
+          }.distinct
+          if (txnPids.nonEmpty) {
+            val floors = log.logEndOffsets()
+            txnPids.foreach { case (p, pid) =>
+              txnReserve(name, p, pid, floors.getOrElse(p, 0L))
+            }
+          }
+          // The manifest CAS can lose to a concurrent producer on an
+          // overlapping partition; produce()'s contract is that the
+          // CALLER retries (offsets re-derive from the fresh manifest).
+          // A Kafka broker serializes appends internally — a wire client
+          // never sees the storage-layer race — so the broker IS that
+          // caller: retry with capped backoff until the request's own
+          // timeout, then answer REQUEST_TIMED_OUT (7) per partition
+          // instead of failing the connection. Any other append failure
+          // answers KAFKA_STORAGE_ERROR (56), as Kafka does for a log
+          // directory it cannot write.
+          def produceWithRetry(): Either[Int, Map[Int, Long]] = {
+            val deadline = System.nanoTime() +
+              math.max(req.timeoutMs, 1000).toLong * 1000000L
+            val direct = rows.map { case (k, v, h, ts, p) => (p, k, v, h, ts.getTime) }
+            var attempt = 0
+            var result: Either[Int, Map[Int, Long]] = Left(7)
+            var retrying = true
+            while (retrying)
+              try {
+                // driver-direct append (no Spark job), committed together
+                // with the topic's other in-flight wire produces — see
+                // appendGrouped
+                result = Right(appendGrouped(name, log, direct))
+                retrying = false
+              } catch {
+                case _: TopicLog.ConcurrentProduceException =>
+                  if (System.nanoTime() > deadline) retrying = false
+                  else {
+                    Thread.sleep(math.min(200L, 2L << math.min(attempt, 6)))
+                    attempt += 1
+                  }
+                case scala.util.control.NonFatal(e) =>
+                  Broker.log.warn(
+                    "produce failed, answering KAFKA_STORAGE_ERROR topic={} api_key={} version={} correlation_id={} error={}",
+                    Array[AnyRef](name, Int.box(KafkaWire.Produce.key), Int.box(req.version),
+                      Int.box(req.correlationId), e.toString): _*)
+                  result = Left(56)
+                  retrying = false
+              }
+            result
+          }
+          val appended: Either[Int, Map[Int, Long]] =
+            if (rows.isEmpty) Right(log.logEndOffsets())
+            else produceWithRetry()
+          val after: Map[Int, Long] = appended.getOrElse(Map.empty)
+          // Base offsets derive from the COMMITTED ends the produce
+          // returned, not a pre-produce snapshot: a snapshot is stale
+          // under concurrent producers and wrong when one request lists
+          // a partition twice. Appended entries are scanned in request
+          // order, each claiming its records' range below the next.
+          val written = scala.collection.mutable.Map.empty[Int, Long]
+          appending.foreach { case (p, batches) =>
+            written(p) = written.getOrElse(p, 0L) +
+              batches.iterator.map(_.records.length.toLong).sum
+          }
+          val consumedSoFar = scala.collection.mutable.Map.empty[Int, Long]
+          val answers =
+            (name, gated.zip(decisions).zip(txnErrs).zipWithIndex.map {
+              // an oversized payload answers first: the entry was
+              // emptied before any gate saw it, and nothing appended
+              case ((((p, _), _), _), idx) if oversized(idx) => (p, 10, -1L)
+              // a transaction-gate failure (49/47/48) answers next —
+              // the entry was emptied above, so nothing downstream saw it
+              case ((((p, _), _), Some(err)), _) => (p, err, -1L)
+              // a payload that failed decode (76 = unsupported codec,
+              // 2 = corrupt) answers its error and appended nothing —
+              // the key is the ENTRY index, so a valid entry for the
+              // same partition id in the same request still acks
+              case ((((p, _), _), _), idx)
+                  if req.decodeErrors.contains((name, idx)) =>
+                (p, req.decodeErrors((name, idx)), -1L)
+              case ((((p, _), Broker.Reject(err)), _), _) => (p, err, -1L)
+              case ((((p, _), Broker.Duplicate(base)), _), _) => (p, 0, base)
+              // the append never landed (7: the CAS never won within the
+              // request timeout; 56: storage error): nothing appended,
+              // no sequence state advanced — the client's retry (same
+              // sequences) is exactly a fresh attempt
+              case ((((p, _), Broker.Append), _), _) if appended.isLeft =>
+                (p, appended.swap.getOrElse(7), -1L)
+              case ((((p, batches), Broker.Append), _), _) =>
+                val nRecs = batches.iterator.map(_.records.length.toLong).sum
+                val firstBase = after.getOrElse(p, 0L) - written.getOrElse(p, 0L)
+                val base = firstBase + consumedSoFar.getOrElse(p, 0L)
+                consumedSoFar(p) = consumedSoFar.getOrElse(p, 0L) + nRecs
+                // Phase 2 — the append committed; remember each batch's
+                // sequence span + base offset for duplicate detection,
+                // and a transactional batch's range under its open txn.
+                recordProducerBatches(name, p, batches, base)
+                recordTxnAppend(name, p, batches, base)
+                (p, 0, base)
+            })
+          // release LSO reservations the append never turned into exact
+          // ranges (timed out, failed, or the txn was fenced mid-request)
+          txnPids.foreach { case (p, pid) =>
+            txnReleaseUnmaterialized(name, p, pid)
+          }
+          answers
       }
     }
     // wake long-polling fetches: something may now satisfy min_bytes
@@ -747,7 +740,7 @@ class Broker(spark: SparkSession, root: String) {
     // entries/batches of THIS request
     val provisional = scala.collection.mutable.Map.empty[(Int, Long), Int]
     entries.map { case (p, batches) =>
-      if (p < 0 || p >= numPartitions) Broker.Reject(3)
+      if (!TopicLog.hasPartition(p, numPartitions)) Broker.Reject(3)
       else {
         val entryUpdates = scala.collection.mutable.Map.empty[(Int, Long), Int]
         var verdict: Broker.ProduceDecision = Broker.Append
@@ -1088,9 +1081,8 @@ class Broker(spark: SparkSession, root: String) {
         st.pendingOffsets.toSeq.map { case (group, offs) =>
           val byTopic = offs.groupBy(_._1._1)
           () => byTopic.foreach { case (t, m) =>
-            if (topicExists(t))
-              topic(t).commit(group,
-                m.map { case ((_, p), (off, _)) => p -> off }.toMap)
+            topicOpt(t).foreach(_.commit(group,
+              m.map { case ((_, p), (off, _)) => p -> off }.toMap))
           }
         }
       else Seq.empty
@@ -1186,8 +1178,8 @@ class Broker(spark: SparkSession, root: String) {
     // and read_committed fetches that share the lock
     val validated: Seq[(String, Seq[(Int, Boolean)])] =
       req.topics.map { case (name, parts) =>
-        val n = partitionCountOr(name, 0)
-        (name, parts.map(p => (p, p >= 0 && p < n)))
+        val log = topicOpt(name)
+        (name, parts.map(p => (p, log.exists(_.hasPartition(p)))))
       }
     val topicDenied: Set[String] = req.topics.map(_._1)
       .filterNot(t => authz(Acls.OpWrite, Acls.ResTopic, t)).toSet
@@ -1296,9 +1288,9 @@ class Broker(spark: SparkSession, root: String) {
     // topic checks outside txnLock, as in handleAddPartitionsToTxn
     val validated: Seq[(String, Seq[(Int, Long, String, Boolean)])] =
       req.topics.map { case (name, parts) =>
-        val n = partitionCountOr(name, 0)
+        val log = topicOpt(name)
         (name, parts.map { case (p, off, meta) =>
-          (p, off, meta, p >= 0 && p < n)
+          (p, off, meta, log.exists(_.hasPartition(p)))
         })
       }
     val txnTopicDenied: Set[String] = req.topics.map(_._1)
@@ -1341,11 +1333,11 @@ class Broker(spark: SparkSession, root: String) {
     import KafkaWire._
     val (correlationId, topics) = decodeDescribeProducersRequest(requestBytes)
     val results = topics.map { case (name, parts) =>
-      val n = partitionCountOr(name, -1)
+      val log = topicOpt(name)
       val denied = !authz(Acls.OpRead, Acls.ResTopic, name)
       (name, parts.map { p =>
         if (denied) (p, 29, Seq.empty[ActiveProducer])
-        else if (n < 0 || p < 0 || p >= n) (p, 3, Seq.empty[ActiveProducer])
+        else if (!log.exists(_.hasPartition(p))) (p, 3, Seq.empty[ActiveProducer])
         else {
           // sequence states first, then txn starts — the two locks
           // never nest anywhere, keep it that way
@@ -1443,7 +1435,7 @@ class Broker(spark: SparkSession, root: String) {
     }.map { case (name, parts, tl) =>
       val asked =
         if (parts == null) None
-        else Some(parts.filter(p => p >= 0 && p < tl.numPartitions).toSet)
+        else Some(parts.filter(tl.hasPartition).toSet)
       val sizes = tl.partitionSizes(asked)
       (name, sizes.keys.toSeq.sorted
         .map(p => (p, sizes.getOrElse(p, 0L), 0L, false)))
@@ -1566,11 +1558,11 @@ class Broker(spark: SparkSession, root: String) {
     val results =
       if (topics == null) Seq.empty
       else topics.map { case (name, parts) =>
-        val n = partitionCountOr(name, -1)
+        val log = topicOpt(name)
         (name, parts.map { p =>
           if (!clusterAlter)
             (p, 31, "principal is not authorized to elect leaders")
-          else if (n < 0 || p < 0 || p >= n)
+          else if (!log.exists(_.hasPartition(p)))
             (p, 3, "unknown topic or partition")
           else (p, 84, "Leader election not needed")
         })
@@ -1591,11 +1583,11 @@ class Broker(spark: SparkSession, root: String) {
     val reassignAllowed =
       authz(Acls.OpAlter, Acls.ResCluster, Acls.ClusterResourceName)
     val results = topics.map { case (name, parts) =>
-      val n = partitionCountOr(name, -1)
+      val log = topicOpt(name)
       (name, parts.map { case (p, replicas) =>
         if (!reassignAllowed)
           (p, 31, "principal is not authorized to reassign partitions")
-        else if (n < 0 || p < 0 || p >= n)
+        else if (!log.exists(_.hasPartition(p)))
           (p, 3, "unknown topic or partition")
         else if (replicas == null)
           (p, 85, "No reassignment is in progress")
@@ -1764,9 +1756,9 @@ class Broker(spark: SparkSession, root: String) {
     val throttleMs = quotaThrottle(Quotas.ConsumerByteRate, req.clientId,
       servedBytes)
     quotaHold(throttleMs)
-    encodeFetchResponse(req.version, req.correlationId, out, 0, sessionId,
-      if (req.version >= 4) fetchCompression else KafkaWire.CompressionNone,
-      lsoMap, codecByTopic, throttleMs)
+    encodeFetchResponse(req.version, req.correlationId, out,
+      sessionId = sessionId, lso = lsoMap, compressionByTopic = codecByTopic,
+      throttleTimeMs = throttleMs)
   }
 
   /** Signaled after every wire produce that appended records — the
@@ -1810,104 +1802,103 @@ class Broker(spark: SparkSession, root: String) {
         // before the existence check: unauthorized consumers learn 29
         (name, parts.map { case (p, _, _) =>
           (p, 29, -1L, Seq.empty[(Long, WireRecordV2)]) })
-      else if (!topicExists(name))
-        (name, parts.map { case (p, _, _) =>
+      else topicOpt(name) match {
+        case None => (name, parts.map { case (p, _, _) =>
           (p, 3, -1L, Seq.empty[(Long, WireRecordV2)]) })
-      else {
-        val log = topic(name)
-        val manifest = log.currentManifest()
-        val ends = manifest.map(_.ends).getOrElse(log.logEndOffsets())
-        (name, parts.map { case (p, off, maxBytes) =>
-          val end = ends.getOrElse(p, 0L)
-          // read_committed (isolation 1, v4+): nothing at or past the
-          // LSO is decided yet, and aborted records are filtered out
-          // of the response below (offset gaps, the compaction shape —
-          // SURVEY §4 documents the no-control-records design)
-          val readCommitted = req.version >= 4 && req.isolationLevel == 1
-          val lsoCap = if (readCommitted) lastStableOffset(name, p, end) else end
-          val aborted: Seq[(Long, Long)] =
-            if (readCommitted) abortedSnapshot(name, p) else Seq.empty
-          if (p < 0 || p >= log.numPartitions)
-            (p, 3, -1L, Seq.empty[(Long, WireRecordV2)])
-          else if (off > end) (p, 1, end, Seq.empty[(Long, WireRecordV2)])
-          else if (off == end || off >= lsoCap)
-            // caught up (or at the undecided region): provably no
-            // rows to serve — no Spark job, which keeps the long-poll
-            // wakeup loop at manifest-read cost
-            (p, 0, end, Seq.empty[(Long, WireRecordV2)])
-          else {
-            // bound the collect: per-record wire overhead is ≥ 12
-            // bytes + key + value, so limit/12 over-covers the count;
-            // the remaining request budget tightens the bound further
-            val collectCap =
-              math.min(maxBytes.toLong, math.max(respBudget - respUsed, 1L))
-            // size model per the SHIPPED format: v0–v3 message sets
-            // cost 26 B/record + payload; v4+ magic-2 batches cost a
-            // 61 B batch header ONCE plus ~10 B of varints per record
-            // + payload + ~2 B per header entry — so the encoded
-            // response respects max_bytes beyond the first record
-            // (only the first may exceed it, per the Kafka contract)
-            val batchOverhead = if (req.version >= 4) 61 else 0
-            val perRecordOverhead = if (req.version >= 4) 10 else 26
-            var used = batchOverhead
-            val picked = Seq.newBuilder[(Long, WireRecordV2)]
-            var taken = 0
-            var full = false
-            // The collect WINDOW advances while everything in it was
-            // filtered (an aborted range wider than one window would
-            // otherwise return an empty response at an unmoved
-            // position — a permanent read_committed stall, unlike
-            // compaction, which physically removes rows). Each pass
-            // strictly advances fromOff, so the loop terminates at
-            // the first kept record, the LSO, or the log end.
-            var fromOff = off
-            var morePasses = true
-            while (!full && taken == 0 && morePasses) {
-            // direct parquet range read — no Spark job per fetch
-            // (manifest file ranges prune; legacy topics fall back)
-            val rows = log.consumeForWireIn(manifest, p, fromOff,
-              (collectCap / 12 + 1).toInt, Long.MaxValue)
-            morePasses = rows.nonEmpty
-            if (rows.nonEmpty)
-              fromOff = rows.last.offset + 1
-            // STOP at the first record that doesn't fit — including a
-            // later smaller one would leave an offset GAP the consumer
-            // silently skips past (permanent message loss). The first
-            // record always ships so one large record can't stall.
-            rows.iterator.takeWhile(_ => !full).foreach { r =>
-              val recOffset = r.offset
-              if (recOffset >= lsoCap) full = true // undecided region
-              else if (aborted.exists { case (lo, hi) =>
-                recOffset >= lo && recOffset <= hi }) {
-                () // aborted record: omitted, an offset gap
-              } else {
-                val k = r.key
-                val v = r.value
-                val hdrs = r.headers
-                val ts = r.timestampMs
-                val sz = perRecordOverhead + (if (k == null) 0 else k.length) +
-                  (if (v == null) 0 else v.length) +
-                  hdrs.map { case (hk, hv) =>
-                    hk.length + (if (hv == null) 0 else hv.length) + 2
-                  }.sum
-                val fitsPartition = taken == 0 || used + sz <= maxBytes
-                // first record of the whole RESPONSE is exempt from the
-                // request budget, per the contract
-                val fitsRequest = respTaken == 0 || respUsed + sz <= respBudget
-                if (fitsPartition && fitsRequest) {
-                  picked += ((recOffset, WireRecordV2(ts, k, v, hdrs)))
-                  used += sz
-                  taken += 1
-                  if (taken == 1) respUsed += batchOverhead
-                  respUsed += sz
-                  respTaken += 1
-                } else full = true
+        case Some(log) =>
+          val manifest = log.currentManifest()
+          val ends = manifest.map(_.ends).getOrElse(log.logEndOffsets())
+          (name, parts.map { case (p, off, maxBytes) =>
+            val end = ends.getOrElse(p, 0L)
+            // read_committed (isolation 1, v4+): nothing at or past the
+            // LSO is decided yet, and aborted records are filtered out
+            // of the response below (offset gaps, the compaction shape —
+            // SURVEY §4 documents the no-control-records design)
+            val readCommitted = req.version >= 4 && req.isolationLevel == 1
+            val lsoCap = if (readCommitted) lastStableOffset(name, p, end) else end
+            val aborted: Seq[(Long, Long)] =
+              if (readCommitted) abortedSnapshot(name, p) else Seq.empty
+            if (!log.hasPartition(p))
+              (p, 3, -1L, Seq.empty[(Long, WireRecordV2)])
+            else if (off > end) (p, 1, end, Seq.empty[(Long, WireRecordV2)])
+            else if (off == end || off >= lsoCap)
+              // caught up (or at the undecided region): provably no
+              // rows to serve — no Spark job, which keeps the long-poll
+              // wakeup loop at manifest-read cost
+              (p, 0, end, Seq.empty[(Long, WireRecordV2)])
+            else {
+              // bound the collect: per-record wire overhead is ≥ 12
+              // bytes + key + value, so limit/12 over-covers the count;
+              // the remaining request budget tightens the bound further
+              val collectCap =
+                math.min(maxBytes.toLong, math.max(respBudget - respUsed, 1L))
+              // size model per the SHIPPED format: v0–v3 message sets
+              // cost 26 B/record + payload; v4+ magic-2 batches cost a
+              // 61 B batch header ONCE plus ~10 B of varints per record
+              // + payload + ~2 B per header entry — so the encoded
+              // response respects max_bytes beyond the first record
+              // (only the first may exceed it, per the Kafka contract)
+              val batchOverhead = if (req.version >= 4) 61 else 0
+              val perRecordOverhead = if (req.version >= 4) 10 else 26
+              var used = batchOverhead
+              val picked = Seq.newBuilder[(Long, WireRecordV2)]
+              var taken = 0
+              var full = false
+              // The collect WINDOW advances while everything in it was
+              // filtered (an aborted range wider than one window would
+              // otherwise return an empty response at an unmoved
+              // position — a permanent read_committed stall, unlike
+              // compaction, which physically removes rows). Each pass
+              // strictly advances fromOff, so the loop terminates at
+              // the first kept record, the LSO, or the log end.
+              var fromOff = off
+              var morePasses = true
+              while (!full && taken == 0 && morePasses) {
+              // direct parquet range read — no Spark job per fetch
+              // (manifest file ranges prune; legacy topics fall back)
+              val rows = log.consumeForWireIn(manifest, p, fromOff,
+                (collectCap / 12 + 1).toInt, Long.MaxValue)
+              morePasses = rows.nonEmpty
+              if (rows.nonEmpty)
+                fromOff = rows.last.offset + 1
+              // STOP at the first record that doesn't fit — including a
+              // later smaller one would leave an offset GAP the consumer
+              // silently skips past (permanent message loss). The first
+              // record always ships so one large record can't stall.
+              rows.iterator.takeWhile(_ => !full).foreach { r =>
+                val recOffset = r.offset
+                if (recOffset >= lsoCap) full = true // undecided region
+                else if (aborted.exists { case (lo, hi) =>
+                  recOffset >= lo && recOffset <= hi }) {
+                  () // aborted record: omitted, an offset gap
+                } else {
+                  val k = r.key
+                  val v = r.value
+                  val hdrs = r.headers
+                  val ts = r.timestampMs
+                  val sz = perRecordOverhead + (if (k == null) 0 else k.length) +
+                    (if (v == null) 0 else v.length) +
+                    hdrs.map { case (hk, hv) =>
+                      hk.length + (if (hv == null) 0 else hv.length) + 2
+                    }.sum
+                  val fitsPartition = taken == 0 || used + sz <= maxBytes
+                  // first record of the whole RESPONSE is exempt from the
+                  // request budget, per the contract
+                  val fitsRequest = respTaken == 0 || respUsed + sz <= respBudget
+                  if (fitsPartition && fitsRequest) {
+                    picked += ((recOffset, WireRecordV2(ts, k, v, hdrs)))
+                    used += sz
+                    taken += 1
+                    if (taken == 1) respUsed += batchOverhead
+                    respUsed += sz
+                    respTaken += 1
+                  } else full = true
+                }
               }
+              } // advancing-window loop
+              (p, 0, end, picked.result())
             }
-            } // advancing-window loop
-            (p, 0, end, picked.result())
-          }
-        })
+          })
       }
     }
     // session bookkeeping + the KIP-227 response-side omission: an
@@ -1940,9 +1931,10 @@ class Broker(spark: SparkSession, root: String) {
         }
       }.toMap
     // a topic's `compression.type` override picks its serving codec
-    // (v4+ magic-2 only); "producer" — the default — falls through to
-    // the broker-level knob ("as produced" has no meaning here: graft
-    // re-encodes from the columnar log at fetch time)
+    // (v4+ magic-2 only); "producer", the default, serves uncompressed
+    // (graft re-encodes from the columnar log at fetch time). Byte
+    // accounting above sizes the uncompressed form, which a codec only
+    // shrinks, so max_bytes holds.
     val codecByTopic: Map[String, Int] =
       if (req.version < 4) Map.empty
       else out.flatMap { case (name, _) =>
@@ -1959,14 +1951,6 @@ class Broker(spark: SparkSession, root: String) {
       }.sum
     (servedBytes, out, lsoMap, codecByTopic)
   }
-
-  /** Codec for v4+ fetch-response batches (none by default; gzip is
-    * the implemented alternative — java.util.zip, no new deps). A
-    * real broker returns batches as stored; graft re-encodes at fetch
-    * time from the columnar log, so the wire codec is a serving
-    * choice. Byte accounting above sizes the UNCOMPRESSED form, which
-    * gzip only shrinks — max_bytes stays respected. */
-  @volatile var fetchCompression: Int = KafkaWire.CompressionNone
 
   // --- wire-level group membership (JoinGroup/SyncGroup/Heartbeat/
   // LeaveGroup v0) over the metadata-only [[GroupCoordinator]]: the
@@ -2102,8 +2086,9 @@ class Broker(spark: SparkSession, root: String) {
         if (assignedParts > 0) assignedParts
         else if (t.numPartitions == -1) 1
         else t.numPartitions
-      val err: (Int, String) =
-        if (topicExists(t.name)) (36, s"topic '${t.name}' already exists")
+      val alreadyExists = (36, s"topic '${t.name}' already exists")
+      val checked: (Int, String) =
+        if (topicExists(t.name)) alreadyExists
         else if (t.assignments.nonEmpty && t.numPartitions > 0)
           (42, "num_partitions and replica assignments are exclusive")
         else if (t.assignments.nonEmpty &&
@@ -2119,21 +2104,23 @@ class Broker(spark: SparkSession, root: String) {
           case Some(msg) => (42, msg)
           case None => (0, null)
         }
-      if (err._1 == 0 && !req.validateOnly) {
-        createTopic(t.name, numPartitions)
-        val overrides = t.configs.filter(_._2 != null).toMap
-        if (overrides.nonEmpty)
-          TopicLog.writeConfigOverrides(root, t.name, overrides)
-      }
+      val overrides = t.configs.filter(_._2 != null).toMap
+      // a rival CreateTopics can win between the check above and the
+      // create: its `_meta.json` link stands, this one answers 36
+      val err =
+        if (checked._1 != 0 || req.validateOnly) checked
+        else try {
+          createTopic(t.name, numPartitions)
+          if (overrides.nonEmpty)
+            TopicLog.writeConfigOverrides(root, t.name, overrides)
+          checked
+        } catch { case _: FileAlreadyExistsException => alreadyExists }
       val configs =
         if (err._1 != 0) null
-        else {
-          val overrides = t.configs.filter(_._2 != null).toMap
-          Broker.TopicConfigDefaults.map { case (n, d) =>
-            overrides.get(n) match {
-              case Some(v) => (n, v, 1) // dynamic topic config
-              case None => (n, d, 5) // default
-            }
+        else Broker.TopicConfigDefaults.map { case (n, d) =>
+          overrides.get(n) match {
+            case Some(v) => (n, v, 1) // dynamic topic config
+            case None => (n, d, 5) // default
           }
         }
       CreatedTopic(t.name, err._1, err._2,
@@ -2189,25 +2176,24 @@ class Broker(spark: SparkSession, root: String) {
     val results = req.topics.map { case (name, parts) =>
       if (!authz(Acls.OpDelete, Acls.ResTopic, name))
         (name, parts.map { case (p, _) => (p, -1L, 29) })
-      else if (!topicExists(name))
-        (name, parts.map { case (p, _) => (p, -1L, 3) })
-      else {
-        val log = topic(name)
-        val ends = log.logEndOffsets() // one manifest read per topic
-        (name, parts.map { case (p, off) =>
-          if (p < 0 || p >= log.numPartitions) (p, -1L, 3)
-          else {
-            val end = ends.getOrElse(p, 0L)
-            val target = if (off == -1L) end else off
-            if (target > end) (p, -1L, 1) // OFFSET_OUT_OF_RANGE
+      else topicOpt(name) match {
+        case None => (name, parts.map { case (p, _) => (p, -1L, 3) })
+        case Some(log) =>
+          val ends = log.logEndOffsets() // one manifest read per topic
+          (name, parts.map { case (p, off) =>
+            if (!log.hasPartition(p)) (p, -1L, 3)
             else {
-              log.truncateBefore(p, target)
-              // re-read: the truncate just advanced this partition's
-              // start, and earlier iterations may have advanced others
-              (p, log.logStartOffsets().getOrElse(p, 0L), 0)
+              val end = ends.getOrElse(p, 0L)
+              val target = if (off == -1L) end else off
+              if (target > end) (p, -1L, 1) // OFFSET_OUT_OF_RANGE
+              else {
+                log.truncateBefore(p, target)
+                // re-read: the truncate just advanced this partition's
+                // start, and earlier iterations may have advanced others
+                (p, log.logStartOffsets().getOrElse(p, 0L), 0)
+              }
             }
-          }
-        })
+          })
       }
     }
     encodeDeleteRecordsResponse(req.version, req.correlationId, results)
@@ -2476,29 +2462,35 @@ class Broker(spark: SparkSession, root: String) {
     * topics answer 3, manual broker assignments answer
     * INVALID_REQUEST 42 (meaningless on a single broker),
     * validate_only checks without applying. Expansion is an atomic
-    * _meta.json rewrite; new partitions start empty at offset 0. */
+    * _meta.json rewrite; new partitions start empty at offset 0.
+    * Expansions serialize, so a racing smaller count answers 37. */
   def handleCreatePartitions(requestBytes: Array[Byte]): Array[Byte] = {
     import KafkaWire._
     val req = decodeCreatePartitionsRequest(requestBytes)
     val results = req.topics.map { case (name, count, manualAssign) =>
       if (!authz(Acls.OpAlter, Acls.ResTopic, name))
         (name, 29, "principal is not authorized to alter")
-      else if (!topicExists(name))
-        (name, 3, s"topic '$name' not found")
-      else if (manualAssign)
-        (name, 42, "manual assignments are not supported on a single broker")
-      else {
-        val cur = topic(name).numPartitions
-        if (count <= cur)
-          (name, 37, s"topic '$name' already has $cur partitions")
-        else {
-          if (!req.validateOnly) TopicLog.expandPartitions(root, name, count)
-          (name, 0, null: String)
+      else expansionLock.synchronized {
+        topicOpt(name) match {
+          case None => (name, 3, s"topic '$name' not found")
+          case Some(_) if manualAssign =>
+            (name, 42, "manual assignments are not supported on a single broker")
+          case Some(log) if count <= log.numPartitions =>
+            (name, 37, s"topic '$name' already has ${log.numPartitions} partitions")
+          case Some(_) =>
+            // a DeleteTopics can still land after the lookup
+            try {
+              if (!req.validateOnly) TopicLog.expandPartitions(root, name, count)
+              (name, 0, null: String)
+            } catch { case _: NoSuchFileException => (name, 3, s"topic '$name' not found") }
         }
       }
     }
     encodeCreatePartitionsResponse(req.version, req.correlationId, results)
   }
+
+  /** Serializes CreatePartitions' read-compare-rewrite of `_meta.json`. */
+  private val expansionLock = new Object
 
   /** OffsetDelete v0: drop a group's committed offsets for named
     * partitions — kafka-consumer-groups.sh --delete-offsets. A group
@@ -2523,11 +2515,12 @@ class Broker(spark: SparkSession, root: String) {
     val topicsOut = req.topics.map { case (tName, parts) =>
       if (!authz(Acls.OpRead, Acls.ResTopic, tName))
         (tName, parts.map(p => (p, 29)))
-      else if (!topicExists(tName)) (tName, parts.map(p => (p, 3)))
-      else if (live) (tName, parts.map(p => (p, 86)))
-      else {
-        topic(tName).deleteOffsets(req.group, parts)
-        (tName, parts.map(p => (p, 0)))
+      else topicOpt(tName) match {
+        case None => (tName, parts.map(p => (p, 3)))
+        case Some(_) if live => (tName, parts.map(p => (p, 86)))
+        case Some(log) =>
+          log.deleteOffsets(req.group, parts)
+          (tName, parts.map(p => (p, 0)))
       }
     }
     encodeOffsetDeleteResponse(req.correlationId, 0, topicsOut)
@@ -2548,11 +2541,11 @@ class Broker(spark: SparkSession, root: String) {
     val results = groupIds.map { g =>
       if (!authz(Acls.OpDelete, Acls.ResGroup, g)) (g, 30)
       else {
-      val offsetTopics = listTopics().filter(t => topic(t).listGroups().contains(g))
-      if (offsetTopics.isEmpty && coordinator.describe(g).isEmpty) (g, 69)
+      val offsetLogs = listTopics().flatMap(topicOpt).filter(_.listGroups().contains(g))
+      if (offsetLogs.isEmpty && coordinator.describe(g).isEmpty) (g, 69)
       else if (!coordinator.removeGroup(g)) (g, 68)
       else {
-        offsetTopics.foreach(t => topic(t).deleteGroup(g))
+        offsetLogs.foreach(_.deleteGroup(g))
         (g, 0)
       }
       }
@@ -2575,17 +2568,16 @@ class Broker(spark: SparkSession, root: String) {
     val topicsOut = req.topics.map { case (name, parts) =>
       if (!authz(Acls.OpDescribe, Acls.ResTopic, name))
         (name, parts.map { case (p, _, _) => (29, p, -1, -1L) })
-      else if (!topicExists(name))
-        (name, parts.map { case (p, _, _) => (3, p, -1, -1L) })
-      else {
-        val log = topic(name)
-        val ends = log.logEndOffsets()
-        (name, parts.map { case (p, curEpoch, epoch) =>
-          if (p < 0 || p >= log.numPartitions) (3, p, -1, -1L)
-          else if (curEpoch > 0) (75, p, -1, -1L)
-          else if (epoch == 0) (0, p, 0, ends.getOrElse(p, 0L))
-          else (0, p, -1, -1L)
-        })
+      else topicOpt(name) match {
+        case None => (name, parts.map { case (p, _, _) => (3, p, -1, -1L) })
+        case Some(log) =>
+          val ends = log.logEndOffsets()
+          (name, parts.map { case (p, curEpoch, epoch) =>
+            if (!log.hasPartition(p)) (3, p, -1, -1L)
+            else if (curEpoch > 0) (75, p, -1, -1L)
+            else if (epoch == 0) (0, p, 0, ends.getOrElse(p, 0L))
+            else (0, p, -1, -1L)
+          })
       }
     }
     encodeOffsetForLeaderEpochResponse(req.version, req.correlationId,
@@ -3287,78 +3279,78 @@ class Broker(spark: SparkSession, root: String) {
     // per-partition byte cap
     var recordBudget = if (req.version >= 1) req.maxRecords else Int.MaxValue
     val results = req.topics.map { case (name, parts) =>
-      if (isUnknownIdName(name) || !topicExists(name))
-        (name, parts.map(p => ShareFetchPartResp(p.partition, 100,
-          "unknown topic id", 0, null, Seq.empty, Seq.empty)))
-      else if (!authz(Acls.OpRead, Acls.ResTopic, name))
-        (name, parts.map(p => ShareFetchPartResp(p.partition, 29,
-          "principal is not authorized to read this topic", 0, null,
-          Seq.empty, Seq.empty)))
-      else {
-        val log = topic(name)
-        val sg = shareGroup(name, group)
-        // one manifest resolve serves the pass: every partition's
-        // acquisition window and range reads come from it. Both must:
-        // an offset acquired past this manifest's end would read as a
-        // hole and be archived undelivered
-        val manifest = log.currentManifest()
-        val ends = manifest.map(_.ends).getOrElse(log.logEndOffsets())
-        // phase 1 — METADATA: every partition's acknowledgements and
-        // acquisitions land as ONE durability unit (a single CAS
-        // snapshot per request, the per-request share-state write a
-        // broker does), with the group's monitor held only here
-        val phase1: Seq[Either[ShareFetchPartResp,
-            (Int, Int, String, Seq[ShareGroup.AcquiredRecord])]] =
-          sg.batched {
-            parts.map { p =>
-              if (p.partition < 0 || p.partition >= log.numPartitions)
-                Left(ShareFetchPartResp(p.partition, 3,
-                  s"partition ${p.partition} not found", 0, null,
-                  Seq.empty, Seq.empty))
-              else {
-                val (ackErr, ackMsg) =
-                  applyShareAcks(sg, p.partition, p.acks, now, member)
-                if (closing)
-                  Left(ShareFetchPartResp(p.partition, 0, null, ackErr,
-                    ackMsg, Seq.empty, Seq.empty))
-                else if (recordBudget <= 0)
-                  // v1 request budget spent: acks still applied above,
-                  // nothing more acquires this pass
-                  Left(ShareFetchPartResp(p.partition, 0, null, ackErr,
-                    ackMsg, Seq.empty, Seq.empty))
+      (if (isUnknownIdName(name)) None else topicOpt(name)) match {
+        case None =>
+          (name, parts.map(p => ShareFetchPartResp(p.partition, 100,
+            "unknown topic id", 0, null, Seq.empty, Seq.empty)))
+        case Some(_) if !authz(Acls.OpRead, Acls.ResTopic, name) =>
+          (name, parts.map(p => ShareFetchPartResp(p.partition, 29,
+            "principal is not authorized to read this topic", 0, null,
+            Seq.empty, Seq.empty)))
+        case Some(log) =>
+          val sg = shareGroup(name, group)
+          // one manifest resolve serves the pass: every partition's
+          // acquisition window and range reads come from it. Both must:
+          // an offset acquired past this manifest's end would read as a
+          // hole and be archived undelivered
+          val manifest = log.currentManifest()
+          val ends = manifest.map(_.ends).getOrElse(log.logEndOffsets())
+          // phase 1 — METADATA: every partition's acknowledgements and
+          // acquisitions land as ONE durability unit (a single CAS
+          // snapshot per request, the per-request share-state write a
+          // broker does), with the group's monitor held only here
+          val phase1: Seq[Either[ShareFetchPartResp,
+              (Int, Int, String, Seq[ShareGroup.AcquiredRecord])]] =
+            sg.batched {
+              parts.map { p =>
+                if (!log.hasPartition(p.partition))
+                  Left(ShareFetchPartResp(p.partition, 3,
+                    s"partition ${p.partition} not found", 0, null,
+                    Seq.empty, Seq.empty))
                 else {
-                  // records cost ≥ ~12 wire bytes each; the cap
-                  // over-covers the byte budget like handleFetch's
-                  val maxRecs =
-                    if (req.version >= 1)
-                      math.max(1, math.min(sg.maxInFlightRecords,
-                        math.min(req.batchSize, recordBudget)))
-                    else math.max(1, math.min(
-                      sg.maxInFlightRecords, p.partitionMaxBytes / 12))
-                  val acq = sg.acquireBelow(p.partition,
-                    ends.getOrElse(p.partition, 0L), maxRecs, now, member)
-                  if (req.version >= 1) recordBudget -= acq.size
-                  Right((p.partition, ackErr, ackMsg, acq))
+                  val (ackErr, ackMsg) =
+                    applyShareAcks(sg, p.partition, p.acks, now, member)
+                  if (closing)
+                    Left(ShareFetchPartResp(p.partition, 0, null, ackErr,
+                      ackMsg, Seq.empty, Seq.empty))
+                  else if (recordBudget <= 0)
+                    // v1 request budget spent: acks still applied above,
+                    // nothing more acquires this pass
+                    Left(ShareFetchPartResp(p.partition, 0, null, ackErr,
+                      ackMsg, Seq.empty, Seq.empty))
+                  else {
+                    // records cost ≥ ~12 wire bytes each; the cap
+                    // over-covers the byte budget like handleFetch's
+                    val maxRecs =
+                      if (req.version >= 1)
+                        math.max(1, math.min(sg.maxInFlightRecords,
+                          math.min(req.batchSize, recordBudget)))
+                      else math.max(1, math.min(
+                        sg.maxInFlightRecords, p.partitionMaxBytes / 12))
+                    val acq = sg.acquireBelow(p.partition,
+                      ends.getOrElse(p.partition, 0L), maxRecs, now, member)
+                    if (req.version >= 1) recordBudget -= acq.size
+                    Right((p.partition, ackErr, ackMsg, acq))
+                  }
                 }
               }
             }
-          }
-        // phase 2 — DATA: read the acquired records outside the
-        // monitor; holes the log can no longer serve (compaction /
-        // retention inside the in-flight window) archive so the SPSO
-        // advances instead of redelivering a gap
-        (name, phase1.map {
-          case Left(resp) => resp
-          case Right((partition, ackErr, ackMsg, acq)) =>
-            val (records, runs, gaps) =
-              readAcquired(log, manifest, partition, acq.toArray)
-            if (gaps.nonEmpty)
-              sg.acknowledge(partition,
-                gaps.map(_ -> (ShareGroup.Reject: ShareGroup.AckType)),
-                now, member)
-            ShareFetchPartResp(partition, 0, null, ackErr, ackMsg,
-              records, runs)
-        })
+          // phase 2 — DATA: read the acquired records outside the
+          // monitor; holes the log can no longer serve (compaction /
+          // retention inside the in-flight window) archive so the SPSO
+          // advances instead of redelivering a gap
+          (name, phase1.map {
+            case Left(resp) => resp
+            case Right((partition, ackErr, ackMsg, acq)) =>
+              val (records, runs, gaps) =
+                readAcquired(log, manifest, partition, acq.toArray)
+              if (gaps.nonEmpty)
+                sg.acknowledge(partition,
+                  gaps.map(_ -> (ShareGroup.Reject: ShareGroup.AckType)),
+                  now, member)
+              ShareFetchPartResp(partition, 0, null, ackErr, ackMsg,
+                records, runs)
+          })
       }
     }
     // any partition-level error (unknown topic/partition, authz,
@@ -3449,26 +3441,26 @@ class Broker(spark: SparkSession, root: String) {
         else s"invalid share session epoch ${req.sessionEpoch}",
         Seq.empty, 0, advertisedHost, advertisedPort)
     val results = req.topics.map { case (name, parts) =>
-      if (isUnknownIdName(name) || !topicExists(name))
-        (name, parts.map { case (p, _) => (p, 100, "unknown topic id") })
-      else if (!authz(Acls.OpRead, Acls.ResTopic, name))
-        (name, parts.map { case (p, _) =>
-          (p, 29, "principal is not authorized to read this topic") })
-      else {
-        val log = topic(name)
-        val sg = shareGroup(name, group)
-        // all partitions' acks land as one durability unit, as in
-        // handleShareFetch's phase 1
-        (name, sg.batched {
-          parts.map { case (p, acks) =>
-            if (p < 0 || p >= log.numPartitions)
-              (p, 3, s"partition $p not found")
-            else {
-              val (err, msg) = applyShareAcks(sg, p, acks, now, member)
-              (p, err, msg)
+      (if (isUnknownIdName(name)) None else topicOpt(name)) match {
+        case None =>
+          (name, parts.map { case (p, _) => (p, 100, "unknown topic id") })
+        case Some(_) if !authz(Acls.OpRead, Acls.ResTopic, name) =>
+          (name, parts.map { case (p, _) =>
+            (p, 29, "principal is not authorized to read this topic") })
+        case Some(log) =>
+          val sg = shareGroup(name, group)
+          // all partitions' acks land as one durability unit, as in
+          // handleShareFetch's phase 1
+          (name, sg.batched {
+            parts.map { case (p, acks) =>
+              if (!log.hasPartition(p))
+                (p, 3, s"partition $p not found")
+              else {
+                val (err, msg) = applyShareAcks(sg, p, acks, now, member)
+                (p, err, msg)
+              }
             }
-          }
-        })
+          })
       }
     }
     encodeShareAcknowledgeResponse(req.correlationId, 0, null, results,
@@ -3532,18 +3524,17 @@ class Broker(spark: SparkSession, root: String) {
             (tName, partsOpt.getOrElse(Seq(-1)).map(p =>
               ShareOffsetRow(p, -1L, -1, 29,
                 "principal is not authorized to describe this topic")))
-          else if (!topicExists(tName))
-            (tName, partsOpt.getOrElse(Seq(-1)).map(p =>
+          else topicOpt(tName) match {
+            case None => (tName, partsOpt.getOrElse(Seq(-1)).map(p =>
               ShareOffsetRow(p, -1L, -1, 3, s"unknown topic '$tName'")))
-          else {
-            val log = topic(tName)
-            val sg = shareGroup(tName, g)
-            val parts = partsOpt.getOrElse(0 until log.numPartitions)
-            (tName, parts.map { p =>
-              if (p < 0 || p >= log.numPartitions)
-                ShareOffsetRow(p, -1L, -1, 3, s"partition $p not found")
-              else ShareOffsetRow(p, sg.startOffset(p), 0, 0, null)
-            })
+            case Some(log) =>
+              val sg = shareGroup(tName, g)
+              val parts = partsOpt.getOrElse(0 until log.numPartitions)
+              (tName, parts.map { p =>
+                if (!log.hasPartition(p))
+                  ShareOffsetRow(p, -1L, -1, 3, s"partition $p not found")
+                else ShareOffsetRow(p, sg.startOffset(p), 0, 0, null)
+              })
           }
         }
         (g, 0, null: String, rows)
@@ -3575,20 +3566,20 @@ class Broker(spark: SparkSession, root: String) {
       if (!authz(Acls.OpRead, Acls.ResTopic, tName))
         (tName, parts.map { case (p, _) =>
           (p, 29, "principal is not authorized to read this topic") })
-      else if (!topicExists(tName))
-        (tName, parts.map { case (p, _) => (p, 3, s"unknown topic '$tName'") })
-      else {
-        val log = topic(tName)
-        val sg = shareGroup(tName, g)
-        (tName, sg.batched {
-          parts.map { case (p, off) =>
-            if (p < 0 || p >= log.numPartitions)
-              (p, 3, s"partition $p not found")
-            else if (off < 0)
-              (p, 42, s"start offset $off is negative")
-            else { sg.resetStartOffset(p, off); (p, 0, null: String) }
-          }
-        })
+      else topicOpt(tName) match {
+        case None =>
+          (tName, parts.map { case (p, _) => (p, 3, s"unknown topic '$tName'") })
+        case Some(log) =>
+          val sg = shareGroup(tName, g)
+          (tName, sg.batched {
+            parts.map { case (p, off) =>
+              if (!log.hasPartition(p))
+                (p, 3, s"partition $p not found")
+              else if (off < 0)
+                (p, 42, s"start offset $off is negative")
+              else { sg.resetStartOffset(p, off); (p, 0, null: String) }
+            }
+          })
       }
     }
     encodeAlterShareGroupOffsetsResponse(corr, 0, null, out)
@@ -3610,12 +3601,14 @@ class Broker(spark: SparkSession, root: String) {
       tsMs: Long): Seq[(Int, Int, Long)] = {
     if (!authz(Acls.OpRead, Acls.ResGroup, g)) return Seq((-1, 30, -1L))
     if (shareGroupBusy(g)) return Seq((-1, 68, -1L))
-    if (!topicExists(tName)) return Seq((-1, 3, -1L))
+    val log = topicOpt(tName) match {
+      case None => return Seq((-1, 3, -1L))
+      case Some(l) => l
+    }
     if (tsMs < 0 || tsMs > Long.MaxValue / 1000) return Seq((-1, 42, -1L))
     val rl = maintenanceLock.readLock()
     rl.lock()
     try {
-      val log = topic(tName)
       val ends = log.logEndOffsets()
       val byPart = log.read()
         .filter(col("ts") >= new java.sql.Timestamp(tsMs))
@@ -3733,88 +3726,87 @@ class Broker(spark: SparkSession, root: String) {
       if (!authz(Acls.OpDescribe, Acls.ResTopic, name))
         (name, parts.map { case (p, _, _) =>
           (p, 29, -1L, -1L, Seq.empty[Long]) })
-      else if (!topicExists(name))
-        (name, parts.map { case (p, _, _) =>
+      else topicOpt(name) match {
+        case None => (name, parts.map { case (p, _, _) =>
           (p, 3, -1L, -1L, Seq.empty[Long]) })
-      else {
-        val log = topic(name)
-        val ends = log.logEndOffsets()
-        val starts = log.logStartOffsets()
-        // concrete timestamps: ONE grouped Spark job per distinct
-        // timestamp answers every partition asking for it (a per-
-        // partition query would re-plan the whole scan O(partitions)
-        // times). Clamped at BOTH Long extremes: Spark timestamps are
-        // microsecond longs, and either overflow direction previously
-        // killed the connection instead of answering. min_by rides
-        // along so v1+ can report the located record's timestamp.
-        val maxMs = Long.MaxValue / 1000
-        val concreteTs = parts.collect {
-          case (p, t, maxN) if maxN > 0 && t >= 0 && t <= maxMs &&
-            p >= 0 && p < log.numPartitions => t
-        }.distinct
-        val byTs: Map[Long, Map[Int, (Long, Long)]] = concreteTs.map { t =>
-          t -> log.read()
-            .filter(col("ts") >= new java.sql.Timestamp(t))
-            .groupBy("partition")
-            .agg(min("offset").as("o"), expr("min_by(ts, offset)").as("t"))
-            .collect()
-            .map(r => r.getInt(0) ->
-              (r.getLong(1), r.getTimestamp(2).getTime)).toMap
-        }.toMap
-        // MAX_TIMESTAMP (-3, the v7 addition): the offset OF the
-        // record with the largest timestamp — ties break to the
-        // earliest such offset, per the protocol. One bounded agg for
-        // the whole topic, computed only when some partition asks.
-        lazy val byMaxTs: Map[Int, (Long, Long)] =
-          if (!parts.exists { case (p, t, maxN) =>
-            t == -3L && maxN > 0 && p >= 0 && p < log.numPartitions })
-            Map.empty
-          else log.read()
-            .groupBy("partition")
-            .agg(expr("min_by(offset, struct(unix_micros(ts) * -1, offset))").as("o"),
-              max("ts").as("t"))
-            .collect()
-            .map(r => r.getInt(0) ->
-              (r.getLong(1), r.getTimestamp(2).getTime)).toMap
-        (name, parts.map { case (p, ts, maxN) =>
-          def v1(tsOff: (Long, Long), v0: Seq[Long]) =
-            (p, 0, tsOff._1, tsOff._2, v0)
-          if (p < 0 || p >= log.numPartitions) (p, 3, -1L, -1L, Seq.empty[Long])
-          else if (maxN <= 0) (p, 0, -1L, -1L, Seq.empty[Long])
-          else ts match {
-            // LATEST under read_committed (isolation 1, v2+) answers
-            // the LSO — a transactional consumer seeking to "the end"
-            // must not land inside an open transaction
-            case -1L =>
-              val end = ends.getOrElse(p, 0L)
-              val off =
-                if (req.version >= 2 && req.isolationLevel == 1)
-                  lastStableOffset(name, p, end)
-                else end
-              (p, 0, -1L, off, Seq(off))
-            case -3L => byMaxTs.get(p) match {
-              case Some((off, recTs)) => (p, 0, recTs, off, Seq(off))
-              case None => v1(none, Seq.empty[Long]) // empty partition
+        case Some(log) =>
+          val ends = log.logEndOffsets()
+          val starts = log.logStartOffsets()
+          // concrete timestamps: ONE grouped Spark job per distinct
+          // timestamp answers every partition asking for it (a per-
+          // partition query would re-plan the whole scan O(partitions)
+          // times). Clamped at BOTH Long extremes: Spark timestamps are
+          // microsecond longs, and either overflow direction previously
+          // killed the connection instead of answering. min_by rides
+          // along so v1+ can report the located record's timestamp.
+          val maxMs = Long.MaxValue / 1000
+          val concreteTs = parts.collect {
+            case (p, t, maxN) if maxN > 0 && t >= 0 && t <= maxMs &&
+              log.hasPartition(p) => t
+          }.distinct
+          val byTs: Map[Long, Map[Int, (Long, Long)]] = concreteTs.map { t =>
+            t -> log.read()
+              .filter(col("ts") >= new java.sql.Timestamp(t))
+              .groupBy("partition")
+              .agg(min("offset").as("o"), expr("min_by(ts, offset)").as("t"))
+              .collect()
+              .map(r => r.getInt(0) ->
+                (r.getLong(1), r.getTimestamp(2).getTime)).toMap
+          }.toMap
+          // MAX_TIMESTAMP (-3, the v7 addition): the offset OF the
+          // record with the largest timestamp — ties break to the
+          // earliest such offset, per the protocol. One bounded agg for
+          // the whole topic, computed only when some partition asks.
+          lazy val byMaxTs: Map[Int, (Long, Long)] =
+            if (!parts.exists { case (p, t, maxN) =>
+              t == -3L && maxN > 0 && log.hasPartition(p) })
+              Map.empty
+            else log.read()
+              .groupBy("partition")
+              .agg(expr("min_by(offset, struct(unix_micros(ts) * -1, offset))").as("o"),
+                max("ts").as("t"))
+              .collect()
+              .map(r => r.getInt(0) ->
+                (r.getLong(1), r.getTimestamp(2).getTime)).toMap
+          (name, parts.map { case (p, ts, maxN) =>
+            def v1(tsOff: (Long, Long), v0: Seq[Long]) =
+              (p, 0, tsOff._1, tsOff._2, v0)
+            if (!log.hasPartition(p)) (p, 3, -1L, -1L, Seq.empty[Long])
+            else if (maxN <= 0) (p, 0, -1L, -1L, Seq.empty[Long])
+            else ts match {
+              // LATEST under read_committed (isolation 1, v2+) answers
+              // the LSO — a transactional consumer seeking to "the end"
+              // must not land inside an open transaction
+              case -1L =>
+                val end = ends.getOrElse(p, 0L)
+                val off =
+                  if (req.version >= 2 && req.isolationLevel == 1)
+                    lastStableOffset(name, p, end)
+                  else end
+                (p, 0, -1L, off, Seq(off))
+              case -3L => byMaxTs.get(p) match {
+                case Some((off, recTs)) => (p, 0, recTs, off, Seq(off))
+                case None => v1(none, Seq.empty[Long]) // empty partition
+              }
+              // LATEST_TIERED (-5, v9 / KIP-1005): the last offset in
+              // REMOTE storage — graft tiers nothing, so the answer is
+              // the protocol's "no tiered data" pair (-1, -1)
+              case -5L if req.version >= 9 => v1(none, Seq.empty[Long])
+              // EARLIEST_LOCAL (-4, v8 / KIP-405): first offset still in
+              // LOCAL storage — with no tiering that IS the log start,
+              // so it intentionally falls through to the earliest arm
+              // EARLIEST = first offset that still EXISTS (retention may
+              // have truncated the front — 0 would name a removed record)
+              case t if t == -2L || t < 0L =>
+                val off = starts.getOrElse(p, 0L)
+                (p, 0, -1L, off, Seq(off))
+              case t if t > maxMs => v1(none, Seq.empty[Long]) // beyond any record
+              case t => byTs(t).get(p) match {
+                case Some((off, recTs)) => (p, 0, recTs, off, Seq(off))
+                case None => v1(none, Seq.empty[Long])
+              }
             }
-            // LATEST_TIERED (-5, v9 / KIP-1005): the last offset in
-            // REMOTE storage — graft tiers nothing, so the answer is
-            // the protocol's "no tiered data" pair (-1, -1)
-            case -5L if req.version >= 9 => v1(none, Seq.empty[Long])
-            // EARLIEST_LOCAL (-4, v8 / KIP-405): first offset still in
-            // LOCAL storage — with no tiering that IS the log start,
-            // so it intentionally falls through to the earliest arm
-            // EARLIEST = first offset that still EXISTS (retention may
-            // have truncated the front — 0 would name a removed record)
-            case t if t == -2L || t < 0L =>
-              val off = starts.getOrElse(p, 0L)
-              (p, 0, -1L, off, Seq(off))
-            case t if t > maxMs => v1(none, Seq.empty[Long]) // beyond any record
-            case t => byTs(t).get(p) match {
-              case Some((off, recTs)) => (p, 0, recTs, off, Seq(off))
-              case None => v1(none, Seq.empty[Long])
-            }
-          }
-        })
+          })
       }
     }
     encodeListOffsetsResponse(req.version, req.correlationId, results)
@@ -3844,17 +3836,16 @@ class Broker(spark: SparkSession, root: String) {
       else req.topics.map { case (name, parts) =>
         if (!authz(Acls.OpRead, Acls.ResTopic, name))
           (name, parts.map { case (p, _, _) => (p, 29) })
-        else if (!topicExists(name))
-          (name, parts.map { case (p, _, _) => (p, 3) })
-        else {
-          val log = topic(name)
-          val valid = parts.collect {
-            case (p, off, _) if p >= 0 && p < log.numPartitions => p -> off
-          }.toMap
-          if (valid.nonEmpty) log.commit(req.group, valid)
-          (name, parts.map { case (p, _, _) =>
-            (p, if (valid.contains(p)) 0 else 3)
-          })
+        else topicOpt(name) match {
+          case None => (name, parts.map { case (p, _, _) => (p, 3) })
+          case Some(log) =>
+            val valid = parts.collect {
+              case (p, off, _) if log.hasPartition(p) => p -> off
+            }.toMap
+            if (valid.nonEmpty) log.commit(req.group, valid)
+            (name, parts.map { case (p, _, _) =>
+              (p, if (valid.contains(p)) 0 else 3)
+            })
         }
       }
     encodeOffsetCommitResponse(req.version, req.correlationId, results)
@@ -3939,7 +3930,7 @@ class Broker(spark: SparkSession, root: String) {
           listTopics()
             .filter(t => authz(Acls.OpDescribe, Acls.ResTopic, t))
             .flatMap { t =>
-            val committed = topic(t).committed(group)
+            val committed = topicOpt(t).map(_.committed(group)).getOrElse(Map.empty)
             if (committed.isEmpty) None
             else Some((t, committed.keys.toSeq.sorted, Some(committed)))
           }
@@ -3947,17 +3938,17 @@ class Broker(spark: SparkSession, root: String) {
       val results = wanted.map { case (name, parts, preRead) =>
         if (!authz(Acls.OpDescribe, Acls.ResTopic, name))
           (name, parts.map(p => (p, -1L, null: String, 29)))
-        else if (!topicExists(name)) (name, parts.map(p => (p, -1L, null: String, 3)))
-        else {
-          val log = topic(name)
-          val committed = preRead.getOrElse(log.committed(group))
-          (name, parts.map { p =>
-            if (p < 0 || p >= log.numPartitions) (p, -1L, null: String, 3)
-            else committed.get(p) match {
-              case Some(off) => (p, off, "", 0)
-              case None => (p, -1L, null: String, 0)
-            }
-          })
+        else topicOpt(name) match {
+          case None => (name, parts.map(p => (p, -1L, null: String, 3)))
+          case Some(log) =>
+            val committed = preRead.getOrElse(log.committed(group))
+            (name, parts.map { p =>
+              if (!log.hasPartition(p)) (p, -1L, null: String, 3)
+              else committed.get(p) match {
+                case Some(off) => (p, off, "", 0)
+                case None => (p, -1L, null: String, 0)
+              }
+            })
         }
       }
       (group, 0, results)
@@ -4091,7 +4082,7 @@ object Broker {
   val DefaultMaxMessageBytes: Int = 64 * 1024 * 1024
 
   /** The `compression.type` value set, mapped to wire codec ids;
-    * "producer" (−1) defers to the broker-level serving knob. */
+    * "producer" (−1) serves fetches uncompressed. */
   val CompressionTypes: Map[String, Int] = Map(
     "producer" -> -1,
     "uncompressed" -> KafkaWire.CompressionNone,

@@ -93,7 +93,7 @@ final class ShareGroup(log: TopicLog, val groupId: String,
     case Some((v, st)) =>
       version = v
       st.foreach { p =>
-        if (p.partition >= 0 && p.partition < log.numPartitions) {
+        if (log.hasPartition(p.partition)) {
           spso(p.partition) = p.spso
           acquired(p.partition) ++= p.acquired
           available(p.partition) ++= p.available

@@ -61,6 +61,7 @@ class TopicLog private (
 
   def topicDir: String = s"$root/$topic"
   def dataDir: String = s"$topicDir/data"
+  def hasPartition(p: Int): Boolean = TopicLog.hasPartition(p, numPartitions)
 
   private def offsetsFile = Paths.get(s"$topicDir/_offsets.json")
   private def groupFile(group: String) = Paths.get(s"$topicDir/_groups/$group.json")
@@ -181,7 +182,7 @@ class TopicLog private (
       Map[String, Array[Byte]], Long)]): Map[Int, Long] = {
     val m0 = ensureManifest()
     if (rows.isEmpty) return m0.ends
-    val bad = rows.iterator.map(_._1).filter(p => p < 0 || p >= numPartitions)
+    val bad = rows.iterator.map(_._1).filter(p => !hasPartition(p))
       .toSeq.distinct
     require(bad.isEmpty,
       s"produceDirect routed to nonexistent partition(s) " +
@@ -1713,22 +1714,38 @@ object TopicLog {
     case f => f
   })
 
+  /** Create `topic` with `numPartitions` partitions. Throws
+    * FileAlreadyExistsException when the topic exists. */
   def create(spark: SparkSession, root: String, topic: String, numPartitions: Int): TopicLog = {
-    val dir = Paths.get(s"$root/$topic")
-    require(!Files.exists(dir.resolve("_meta.json")), s"topic $topic already exists")
-    Files.createDirectories(dir)
-    Files.createDirectories(dir.resolve("_groups"))
-    Files.writeString(dir.resolve("_meta.json"), s"""{"numPartitions":$numPartitions}""")
+    createMeta(Paths.get(s"$root/$topic"), numPartitions)
     new TopicLog(spark, root, topic, numPartitions)
   }
 
-  def open(spark: SparkSession, root: String, topic: String): TopicLog = {
-    val meta = Files.readString(Paths.get(s"$root/$topic/_meta.json"))
-    val n = NumPartitionsField.findFirstMatchIn(meta)
+  /** Lay out a topic dir and publish its `_meta.json` by a hard link
+    * ([[VersionedDir.linkOnce]]): of two racing creators exactly one
+    * wins, the other gets FileAlreadyExistsException, and a concurrent
+    * [[open]] never reads a torn file. */
+  private[graft] def createMeta(dir: Path, numPartitions: Int): Unit = {
+    Files.createDirectories(dir.resolve("_groups"))
+    VersionedDir.linkOnce(metaTemp(dir, numPartitions), dir.resolve("_meta.json"))
+  }
+
+  private def metaTemp(dir: Path, numPartitions: Int): Path =
+    Files.writeString(Files.createTempFile(dir, ".meta", ".json"),
+      s"""{"numPartitions":$numPartitions}""")
+
+  /** The one partition-range check: `p` in `[0, numPartitions)`. */
+  def hasPartition(p: Int, numPartitions: Int): Boolean =
+    p >= 0 && p < numPartitions
+
+  def open(spark: SparkSession, root: String, topic: String): TopicLog =
+    new TopicLog(spark, root, topic, partitionCount(root, topic))
+
+  /** The partition count in `topic`'s `_meta.json`. */
+  private def partitionCount(root: String, topic: String): Int =
+    NumPartitionsField.findFirstMatchIn(Files.readString(Paths.get(s"$root/$topic/_meta.json")))
       .map(_.group(1).toInt)
       .getOrElse(throw new IllegalStateException(s"bad _meta.json for $topic"))
-    new TopicLog(spark, root, topic, n)
-  }
 
   // `_meta.json` and `_config.json` fields, compiled once: a wire
   // produce opens its topic and reads its overrides on every request
@@ -1749,17 +1766,11 @@ object TopicLog {
     * re-open. */
   def expandPartitions(root: String, topic: String, newCount: Int): Unit = {
     val dir = Paths.get(s"$root/$topic")
-    val meta = Files.readString(dir.resolve("_meta.json"))
-    val cur = NumPartitionsField.findFirstMatchIn(meta)
-      .map(_.group(1).toInt)
-      .getOrElse(throw new IllegalStateException(s"bad _meta.json for $topic"))
+    val cur = partitionCount(root, topic)
     require(newCount > cur,
       s"topic $topic has $cur partitions; new count must exceed it, got $newCount")
-    val tmp = Files.createTempFile(dir, ".meta", ".json")
-    Files.writeString(tmp, s"""{"numPartitions":$newCount}""")
-    Files.move(tmp, dir.resolve("_meta.json"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    Files.move(metaTemp(dir, newCount), dir.resolve("_meta.json"),
+      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
   /** Dynamic per-topic config overrides (`_config.json`, flat

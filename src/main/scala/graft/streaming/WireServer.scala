@@ -425,7 +425,7 @@ class WireServer(private val broker: Broker,
 
   private def handleMetadata(framed: Array[Byte]): Array[Byte] = {
     val topics = broker.listTopics()
-      .map(t => t -> broker.topic(t).numPartitions).toMap
+      .flatMap(t => broker.topicOpt(t).map(t -> _.numPartitions)).toMap
     KafkaWire.handleMetadata(framed, advertisedHost, boundPort, topics,
       describeAuth = name => broker.authz(Acls.OpDescribe, Acls.ResTopic, name))
   }

@@ -198,10 +198,14 @@ class CompressionSpec extends AnyFunSuite {
       assert(plainTopics.head._2.head._4.map(r =>
         new String(r._2.value, "UTF-8")) === allValues)
 
-      // fetch with the broker re-serving each codec: same records, and
-      // the raw payload's batch really carries the codec bits
-      for (codec <- Seq(CompressionGzip, CompressionZstd)) {
-        broker.fetchCompression = codec
+      // fetch with the topic's `compression.type` (set through
+      // IncrementalAlterConfigs) re-serving each codec: same records
+      // and headers
+      for (codec <- Seq("gzip", "zstd")) {
+        val (_, set) = decodeIncrementalAlterConfigsResponse(1, exchange(
+          encodeIncrementalAlterConfigsRequest(1, 3, "cli",
+            Seq((ConfigResourceTopic, "gz", Seq(("compression.type", 0, codec)))))))
+        assert(set.head._1 === 0)
         val raw = exchange(encodeFetchRequest(12, 3, "cli", 100, 1, 1 << 20,
           Seq(("gz", Seq((0, 0L, 1 << 20))))))
         val (_, codecTopics) = decodeFetchResponse(12, raw)
@@ -210,7 +214,6 @@ class CompressionSpec extends AnyFunSuite {
         assert(codecTopics.head._2.head._4.head._2.headers.map { case (k, v) =>
           (k, new String(v, "UTF-8")) } === Seq("h" -> "w"))
       }
-      broker.fetchCompression = CompressionNone
 
       // a produce flagging a RESERVED codec id (5) answers 76 for that
       // partition IN-BAND; the connection then serves the next request
